@@ -43,7 +43,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
-    val results = SparkEntry.queries
+    val outcomesByQuery = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .map { case (name, fn) =>
       // a thrown run is NOT eligible for the best-of-N minimum: a fast
@@ -51,8 +51,9 @@ object Bench {
       // fix, r20 — the r18/r19 verdicts documented crashed reruns
       // poisoning per-query minima). Same timed region and estimator
       // otherwise; a query that fails EVERY run aborts the bench
-      // loudly instead of reading as fast.
-      val timings = (1 to runs).flatMap { _ =>
+      // loudly instead of reading as fast. Failed runs are COUNTED per
+      // query (BENCH_DETAIL and the sidecar), never silently dropped.
+      val outcomes = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -60,17 +61,23 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         if (ok) Some(dt) else None
       }
+      val timings = outcomes.flatten
       if (timings.isEmpty)
         throw new RuntimeException(
           s"bench query '$name' failed on all $runs runs")
-      name -> timings.min
+      name -> (timings.min, outcomes.count(_.isEmpty))
     }
+    val failedRuns = outcomesByQuery.map { case (k, (_, n)) => k -> n }
+    val results = outcomesByQuery.map { case (k, (v, _)) => k -> v }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     def fmt(v: Double) = f"$v%.3f"
+    val failedJson = failedRuns.toSeq.sortBy(_._1)
+      .map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     // full per-query detail, prefixed so it is never mistaken for the
-    // machine-readable headline line below
-    println("BENCH_DETAIL " + results.map { case (k, v) => s"\"$k\":$v" }
-      .mkString("{", ",", "}"))
+    // machine-readable headline line below; failed_runs counts the
+    // runs per query that threw (excluded from the minimum)
+    println("BENCH_DETAIL " + (results.map { case (k, v) => s"\"$k\":$v" } ++
+      Seq(s""""failed_runs":$failedJson""")).mkString("{", ",", "}"))
     // The harness captures only the LAST ~2000 characters of output and
     // parses the headline JSON line out of that window; at 75+ queries a
     // full-precision map exceeds it and the line truncates mid-JSON.
@@ -91,14 +98,20 @@ object Bench {
     // sibling artifact with ALL per-query timings: the headline line
     // truncates to the slowest ~keep for the output window, which made
     // sub-cutoff movers invisible round-over-round — the full map goes
-    // to a file the driver commits alongside BENCH_r{N}.json
-    try {
+    // to a sidecar file kept alongside BENCH_r{N}.json. A subset run
+    // (SPARK_GRAFT_BENCH_ONLY) never writes it: its partial map would
+    // overwrite the full-corpus record.
+    if (only.nonEmpty)
+      println("bench: subset run, full per-query sidecar not written")
+    else try {
       val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_PATH",
         "/root/repo/bench_full_latest.json")
       val full = s"""{"total":${fmt(total)},"n_queries":${results.size}""" +
         s""","sf":"$sfDir","runs":$runs,"queries":""" +
         bySlowest.map { case (k, v) => s""""$k":${fmt(v)}""" }
-          .mkString("{", ",", "}") + "}\n"
+          .mkString("{", ",", "}") +
+        s""","failed_runs":$failedJson""" +
+        s""","failed_runs_total":${failedRuns.values.sum}}""" + "\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
         full.getBytes("UTF-8"))
     } catch { case _: Throwable => () }

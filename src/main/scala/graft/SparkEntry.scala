@@ -365,7 +365,8 @@ object SparkEntry {
       val proto =
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
       def add(p: String) = s"""{"add":{"path":${jstr(p)},""" +
-        """"partitionValues":{},"size":10,"dataChange":true}}"""
+        s""""partitionValues":{},"size":${new java.io.File(s"$table/$p")
+          .length},"dataChange":true}}"""
       val f1 = land(col("n_regionkey") <= 1)
       new java.io.File(s"$table/_delta_log").mkdirs()
       commit(0L, Seq(proto, meta, add(f1)))
@@ -429,7 +430,8 @@ object SparkEntry {
       val proto =
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
       def add(p: String) = s"""{"add":{"path":${jstr(p)},""" +
-        """"partitionValues":{},"size":10,"dataChange":true}}"""
+        s""""partitionValues":{},"size":${new java.io.File(s"$table/$p")
+          .length},"dataChange":true}}"""
       val f1 = land(col("n_regionkey") <= 1)
       new java.io.File(s"$table/_delta_log").mkdirs()
       commit(0L, Seq(proto, meta, add(f1)))
@@ -475,7 +477,8 @@ object SparkEntry {
         """"minWriterVersion":7,"readerFeatures":["deletionVectors",""" +
         """"timestampNtz"],"writerFeatures":["deletionVectors"]}}"""
       def add(p: String) = s"""{"add":{"path":${jstr(p)},""" +
-        """"partitionValues":{},"size":10,"dataChange":true}}"""
+        s""""partitionValues":{},"size":${new java.io.File(s"$table/$p")
+          .length},"dataChange":true}}"""
       val f1 = land(col("n_regionkey") <= 1)
       new java.io.File(s"$table/_delta_log").mkdirs()
       commit(0L, Seq(proto, meta, add(f1)))

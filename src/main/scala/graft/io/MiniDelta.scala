@@ -89,6 +89,17 @@ object MiniDelta {
       s"$table: cannot reconstruct version $version — the pre-checkpoint " +
         "JSON history was removed by log retention cleanup")
 
+  /** A commit file holds a line that does not parse as a JSON action —
+    * a torn or truncated write. Skipping the line would drop its action
+    * (a torn `remove` brings deleted rows back), so both replay arms
+    * refuse by name: corrupt log state fails loudly, the Delta
+    * protocol's rule. */
+  final class MalformedCommitException(table: String, version: Long,
+                                       line: String)
+    extends RuntimeException(
+      s"$table: commit $version holds a malformed action line: " +
+        line.take(200))
+
   /** Reader features (protocol minReaderVersion 3) this engine honors.
     * deletionVectors masks are READ (u/i/p roaring forms decoded by
     * [[RoaringDv]]; only unknown storage forms are refused).
@@ -172,26 +183,7 @@ object MiniDelta {
     * delta-rs `add.path` semantics); relative paths resolve under the
     * table directory as usual. */
   private def resolvePath(table: String, rel: String): String =
-    if (rel.startsWith("/") || rel.contains("://")) rel
-    else s"$table/$rel"
-
-  /** Directory-inference base for a data file: everything before the
-    * first `k=v` path segment (Spark derives partition columns from the
-    * segments after the base). Files under the table root use the table
-    * itself; external (absolute, shallow-cloned) paths derive their own
-    * source root so partition inference still works. */
-  private def inferenceBase(table: String, file: String): String =
-    if (file.startsWith(s"$table/")) table
-    else {
-      // partition dirs are the CONTIGUOUS k=v suffix of directories
-      // right above the file — walk up from the file, not down from the
-      // root, so a '=' in the source table's own path (/data/run=5/src)
-      // never truncates the base
-      val segs = file.split("/")
-      var j = segs.length - 2
-      while (j >= 0 && segs(j).contains("=")) j -= 1
-      segs.take(j + 1).mkString("/")
-    }
+    LogFileIndex.resolve(table, rel)
 
   /** True once the table has a `_delta_log` directory (first commit). */
   def tableExists(spark: SparkSession, table: String): Boolean =
@@ -1301,10 +1293,8 @@ object MiniDelta {
     * them (the spec's rule, and [[readCdf]]'s) — so the DML sites must
     * put the commit's COMPLETE change set into the cdc files. */
   private def cdcLine(rel: String, size: Long): String = {
-    val parts = partitionSegments(rel).map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      s"${jstr(k)}:${jstr(v)}"
-    }.mkString(",")
+    val parts = pathPartitionValues(rel)
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
     s"""{"cdc":{"path":${jstr(rel)},"partitionValues":{$parts},""" +
       s""""size":$size,"dataChange":false}}"""
   }
@@ -1424,7 +1414,7 @@ object MiniDelta {
     if (files.isEmpty)
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), logSchema)
-    else spark.read.schema(logSchema).json(files.toIndexedSeq: _*)
+    else logDFIn(spark, table, files).drop("version")
   }
 
   /** (version, path) of the JSON commits in [`fromInclusive`,
@@ -1468,13 +1458,38 @@ object MiniDelta {
         ((got.head to got.last).toSet -- got.toSet).min)
   }
 
-  /** The listed log files as action rows, with their commit version. */
-  private def logDFIn(spark: SparkSession,
-                      files: Seq[String]): DataFrame =
-    spark.read.schema(logSchema).json(files.toIndexedSeq: _*)
-      .withColumn("version",
-        regexp_extract(input_file_name(), "([0-9]{20})\\.json", 1)
-          .cast("long"))
+  /** The listed log files as action rows, with their commit version.
+    * A line that does not parse fails the read with
+    * [[MalformedCommitException]]: a nondeterministic filter right
+    * above the scan, so no caller's filter merges into it or moves below
+    * it to drop a torn line unseen, while callers still read only the
+    * columns they select. It names `protocol` too (cheap, null on nearly
+    * every line): Spark refuses a JSON scan of the corrupt column alone. */
+  private def logDFIn(spark: SparkSession, table: String,
+                      files: Seq[String]): DataFrame = {
+    val corrupt = col("_corrupt_record")
+    val version = regexp_extract(input_file_name(), "([0-9]{20})\\.json", 1)
+      .cast("long")
+    spark.read
+      .schema(logSchema.add("_corrupt_record",
+        org.apache.spark.sql.types.StringType))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .json(files.toIndexedSeq: _*)
+      .where(corrupt.isNull ||
+        malformedCommitUdf(lit(table), version, corrupt, col("protocol")))
+      .drop("_corrupt_record")
+      .withColumn("version", version)
+  }
+
+  /** Raises [[MalformedCommitException]] inside the distributed log
+    * read; evaluated only for lines that failed to parse. */
+  private lazy val malformedCommitUdf =
+    udf((table: String, version: java.lang.Long, line: String,
+         _: org.apache.spark.sql.Row) =>
+      (throw new MalformedCommitException(table,
+        Option(version).fold(-1L)(_.longValue), line)): Boolean)
+      .asNondeterministic()
 
   // memo: (table, version) -> declared schema, the [[tableConfigMemo]]
   // twin — without it every write and read-shape build re-ran the
@@ -1545,9 +1560,7 @@ object MiniDelta {
       if (!txt.contains("\"metaData\"")) Iterator.empty
       else txt.linesIterator.filter(_.contains("\"metaData\"")).flatMap {
         line =>
-          val node =
-            try om.readTree(line) catch { case _: Exception => null }
-          val md = if (node == null) null else node.get("metaData")
+          val md = parseAction(om, p, line).get("metaData")
           val v = if (md == null || md.isNull) null else md.get(field)
           if (v == null || v.isNull) Iterator.empty
           else if (field == "configuration") {
@@ -4934,9 +4947,7 @@ object MiniDelta {
         val txt = new String(bytes, "UTF-8")
         if (txt.contains("\"protocol\""))
           txt.linesIterator.filter(_.nonEmpty).foreach { line =>
-            val node =
-              try om.readTree(line) catch { case _: Exception => null }
-            val proto = if (node == null) null else node.get("protocol")
+            val proto = parseAction(om, path, line).get("protocol")
             if (proto != null && !proto.isNull) {
               def feats(k: String): Seq[String] = {
                 val a = proto.get(k)
@@ -5339,7 +5350,7 @@ object MiniDelta {
           if (rem.isEmpty && txn.isEmpty) None else Some((rem, txn))
         }
         case None =>
-          actionsOf(logDFIn(spark, tailVP.map(_._2)),
+          actionsOf(logDFIn(spark, table, tailVP.map(_._2)),
             withCommitVersion = true)
       }
     val tailRemoves: Seq[(String, Option[Long])] = tailActions.flatMap(_._1)
@@ -5636,6 +5647,20 @@ object MiniDelta {
   private def partitionSegments(rel: String): Array[String] =
     rel.split("/").takeRight(dvKeyDepth(rel)).dropRight(1)
 
+  /** The partition values a Hive-layout path encodes, UNESCAPED the way
+    * Spark escaped them into the directory name (`a/b` lands as
+    * `k=a%2Fb`): the log records the value itself — the Delta protocol's
+    * partitionValues, and what [[LogFileIndex]] types the scan's
+    * partition columns from. A null value keeps Spark's
+    * `__HIVE_DEFAULT_PARTITION__` marker, which the index reads as
+    * null. */
+  private def pathPartitionValues(rel: String): Seq[(String, String)] =
+    partitionSegments(rel).toSeq.map { seg =>
+      val Array(k, v) = seg.split("=", 2)
+      (k, org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(v))
+    }
+
   /** A snapshot row's carried modificationTime (None on legacy adds). */
   private def mtOf(r: org.apache.spark.sql.Row): Option[Long] = {
     val i = r.fieldIndex("modificationTime")
@@ -5665,11 +5690,8 @@ object MiniDelta {
     val parts = partitionValues match {
       case Some(pv) => pv.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
-      case None => partitionSegments(rel)
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          s"${jstr(k)}:${jstr(v)}"
-        }.mkString(",")
+      case None => pathPartitionValues(rel)
+        .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
     }
     val statsField = stats.fold("") { s =>
       // protocol shape: the stats JSON is carried as an escaped string
@@ -5749,7 +5771,7 @@ object MiniDelta {
     // DV-aware: masked rows never enter the rewrite, and the rewritten
     // adds carry no DV — OPTIMIZE is how deletion vectors MATERIALIZE
     val read = readFilesWithDv(spark, table,
-      dvPairsOf(current.toIndexedSeq), latestSchema(spark, table))
+      LogFile.of(current.toIndexedSeq), latestSchema(spark, table))
     // clustered table (delta.clustering domain, late r13): a bare
     // OPTIMIZE honors the DECLARED layout — multi-column layouts
     // z-order, single-column layouts range-cluster — so `CALL
@@ -5872,30 +5894,28 @@ object MiniDelta {
     * exclude the predicate never decompress), projecting only the file
     * name; the collect is metadata-scale (file paths, not rows). */
   private def matchingFiles(spark: SparkSession, table: String,
-                            pairs: Seq[(String, Option[String])],
+                            pairs: Seq[LogFile],
                             declared: Option[org.apache.spark.sql.types.StructType],
                             hit: DataFrame => DataFrame)
-      : Seq[(String, Option[String])] = {
+      : Seq[LogFile] = {
     if (pairs.isEmpty) return Nil
-    if (pairs.exists(_._2.isDefined)) {
+    if (pairs.exists(_.dv.isDefined)) {
       // DV-bearing snapshot: discover over the MASKED view — a masked
       // row must neither mark its file touched nor survive the rewrite
       // (the old refuse-and-compact-first behavior is gone; the rewrite
       // read applies the mask, Delta's own CoW-over-DV rule)
       val fnames = hit(withRowIdentity(spark, table, pairs, declared))
         .select("__fname").distinct().collect().map(_.getString(0)).toSet
-      pairs.filter(p => fnames.contains(dvKeyOf(p._1)))
+      pairs.filter(p => fnames.contains(dvKeyOf(p.path)))
     } else {
-      val paths = pairs.map(_._1)
-      val base = readFilesAs(spark, table,
-        paths.map(resolvePath(table, _)), declared)
+      val base = readFilesAs(spark, table, pairs, declared)
       require(!base.columns.contains("__file"),
         "table has a '__file' column, which collides with the " +
           "copy-on-write file-discovery temp column")
       val abs = hit(base.withColumn("__file", input_file_name()))
         .select("__file").distinct().collect()
         .map(r => decodeFileUri(r.getString(0)))
-      pairs.filter(p => abs.exists(_.endsWith(p._1)))
+      pairs.filter(p => abs.exists(_.endsWith(p.path)))
     }
   }
 
@@ -6201,7 +6221,7 @@ object MiniDelta {
       case None =>
         val ts = coalesce(col("commitInfo.inCommitTimestamp"),
           col("commitInfo.timestamp"))
-        val rows = logDFIn(spark, vps.map(_._2))
+        val rows = logDFIn(spark, table, vps.map(_._2))
           .where(col("commitInfo").isNotNull && ts.isNotNull && ts <= tsMs)
           .agg(max(col("version"))).collect()
         if (rows.isEmpty || rows(0).isNullAt(0)) None
@@ -6236,7 +6256,7 @@ object MiniDelta {
       case None =>
         val ts = coalesce(col("commitInfo.inCommitTimestamp"),
           col("commitInfo.timestamp"))
-        logDFIn(spark, vps.map(_._2))
+        logDFIn(spark, table, vps.map(_._2))
           .where(col("commitInfo").isNotNull && ts.isNotNull)
           .select(col("version"), ts).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -6256,7 +6276,7 @@ object MiniDelta {
     * The caller re-runs against the fresh snapshot. */
   private def copyOnWrite(spark: SparkSession, table: String,
                           readVersion: Long,
-                          touched: Seq[(String, Option[String])],
+                          touched: Seq[LogFile],
                           declared: Option[org.apache.spark.sql.types.StructType],
                           rewrite: DataFrame => DataFrame,
                           partitionBy: Seq[String], operation: String,
@@ -6308,7 +6328,7 @@ object MiniDelta {
     val now = System.currentTimeMillis()
     beforeDmlCommitHook()
     val allLines = cdcLines ++ extraLines ++
-      touched.map(_._1).sorted.map(p =>
+      touched.map(_.path).sorted.map(p =>
         removeLine(p, dataChange = dataChange, now)) ++
       added.map { case (p, s, m) =>
         addLine(p, s, stats.get(p), modTime = Some(m),
@@ -6338,10 +6358,10 @@ object MiniDelta {
     // DV-bearing files only (the op's blast radius by definition);
     // counted in dmlManifestRows like every other DML discovery so the
     // driver-memory audit stays uniform
-    val touched = collected(snapshotFilesAt(spark, table, readVersion)
+    val touched = LogFile.of(collected(
+      snapshotFilesAt(spark, table, readVersion)
         .where(col("dv_path").isNotNull)
-        .select("path", "dv_path").collect().toIndexedSeq)
-      .map(r => (r.getString(0), Option(r.getString(1)))).toIndexedSeq
+        .select(LogFile.columns: _*).collect().toIndexedSeq))
     if (touched.isEmpty) return readVersion // nothing masked: no commit
     // same resolution posture as OPTIMIZE: a physical rewrite never
     // depends on concurrently-appended files, so only removes of its
@@ -6713,8 +6733,8 @@ object MiniDelta {
     val snap = collected(dmlCandidates(
         snapshotFilesAt(spark, table, readVersion), predicate, partitionBy,
         declared)
-      .select("path", "dv_path").collect().toIndexedSeq)
-    val touched = matchingFiles(spark, table, dvPairsOf(snap), declared,
+      .select(LogFile.columns: _*).collect().toIndexedSeq)
+    val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
       _.where(predicate))
     if (touched.isEmpty) return readVersion
     // CDF: the commit's feed = exactly the deleted rows (the touched
@@ -6732,14 +6752,18 @@ object MiniDelta {
   }
 
   /** DELETE via deletion vectors: one narrow predicate scan over the
-    * live rows collects (file, row index) masks, which are written as a
-    * parquet sidecar under `_delta_log/_dv/` and attached to the
-    * touched files' RE-ADDED actions (path/size/stats unchanged —
-    * min/max stay valid bounds, numRecords becomes an upper bound, the
-    * Delta DV contract). Files whose every live row matched are plainly
-    * removed. No data file is rewritten: the commit is the sidecar plus
-    * metadata, so a selective delete on a 100 TB table writes KBs.
-    * Read-set pinned at `readVersion + 1` like all DML. */
+    * live rows collects (file, row index) masks ([[dvMaskActions]]).
+    * Each surviving touched file's mask (old mask ∪ new rows) is
+    * encoded as a portable roaring bitmap and packed into one
+    * `deletion_vector_<uuid>.bin` file under the table root; the file
+    * is RE-ADDED with a real Delta `deletionVector` descriptor
+    * (storageType `u`, offset, size, cardinality) and its path, size
+    * and stats unchanged — min/max stay valid bounds, numRecords
+    * becomes an upper bound, the Delta DV contract. Files whose every
+    * live row matched are plainly removed. No data file is rewritten:
+    * the commit is the bin plus metadata, so a selective delete on a
+    * 100 TB table writes KBs. Read-set pinned at `readVersion + 1`
+    * like all DML. */
   private def deleteWithDv(spark: SparkSession, table: String,
                            predicate: org.apache.spark.sql.Column,
                            readVersion: Long,
@@ -6750,7 +6774,7 @@ object MiniDelta {
         declared)
       .collect().toIndexedSeq)
     if (snap.isEmpty) return readVersion
-    val pairs = dvPairsOf(snap)
+    val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
       .persist() // consumed twice: per-file counts + the sidecar write
@@ -6794,7 +6818,7 @@ object MiniDelta {
         declared)
       .collect().toIndexedSeq)
     if (snap.isEmpty) return readVersion
-    val pairs = dvPairsOf(snap)
+    val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
       .persist() // counts + sidecar + the updated-image write
@@ -6858,7 +6882,7 @@ object MiniDelta {
                             declared: Option[org.apache.spark.sql.types.StructType],
                             snap: Seq[org.apache.spark.sql.Row],
                             matchedRows: DataFrame): Option[Seq[String]] = {
-    val pairs = dvPairsOf(snap)
+    val pairs = LogFile.of(snap)
     val byFname = snap.map(r => dvKeyOf(r.getString(0)) -> r).toMap
     val matched = matchedRows
       .select(col("__fname").as("fname"), col("__ri").as("row_index"))
@@ -6873,7 +6897,7 @@ object MiniDelta {
     // third-party writer, a descriptor without cardinality) fall back
     // to the verbatim distributed count.
     val touchedPairs = pairs.filter(p =>
-      matchedCounts.contains(dvKeyOf(p._1)))
+      matchedCounts.contains(dvKeyOf(p.path)))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     def liveOf(r: org.apache.spark.sql.Row): Option[Long] = {
       val si = r.fieldIndex("stats")
@@ -6897,7 +6921,7 @@ object MiniDelta {
     val totalsLocal: Option[Map[String, Long]] =
       try {
         val per = touchedPairs.map(p =>
-          liveOf(byFname(dvKeyOf(p._1))).map(dvKeyOf(p._1) -> _))
+          liveOf(byFname(dvKeyOf(p.path))).map(dvKeyOf(p.path) -> _))
         if (per.forall(_.isDefined)) Some(per.flatten.toMap) else None
       } catch { case _: Exception => None } // projected snap rows etc.
     val totals = totalsLocal.getOrElse(
@@ -6906,11 +6930,11 @@ object MiniDelta {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     val fullyGone = matchedCounts.filter { case (f, n) => totals(f) == n }.keySet
     val surviving = touchedPairs.filterNot(p =>
-      fullyGone.contains(dvKeyOf(p._1)))
+      fullyGone.contains(dvKeyOf(p.path)))
     // the new mask per surviving file = old mask ∪ newly matched rows
     // (old masks load through maskDF: legacy parquet sidecars and real
     // descriptors both resolve)
-    val oldPairs = surviving.collect { case (rel, Some(d)) => (rel, d) }
+    val oldPairs = surviving.flatMap(f => f.dv.map(f.path -> _))
     val oldRows =
       if (oldPairs.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -6921,7 +6945,7 @@ object MiniDelta {
               org.apache.spark.sql.types.LongType))))
       else maskDF(spark, table, oldPairs)
         .select(col("__dv_fname").as("fname"), col("__dv_ri").as("row_index"))
-    val survivingF = surviving.map(p => dvKeyOf(p._1)).toSet
+    val survivingF = surviving.map(p => dvKeyOf(p.path)).toSet
     val perFile = matched.where(!col("fname").isin(fullyGone.toSeq: _*))
       .unionByName(oldRows.where(col("fname").isin(survivingF.toSeq: _*)))
       .distinct()
@@ -6939,8 +6963,8 @@ object MiniDelta {
         table, perFile.map(p => p._1 -> p._2).toIndexedSeq)
     val cards = perFile.map(p => p._1 -> p._3).toMap
     val now = System.currentTimeMillis()
-    Some((touchedPairs.map(p => removeLine(p._1, dataChange = true, now)) ++
-      surviving.map { case (rel, _) =>
+    Some((touchedPairs.map(p => removeLine(p.path, dataChange = true, now)) ++
+      surviving.map(_.path).map { rel =>
         val r = byFname(dvKeyOf(rel))
         val (off, sz) = frames(dvKeyOf(rel))
         val marker = RealDvPrefix + s"u\u0000$dvId\u0000$off\u0000$sz"
@@ -6957,7 +6981,7 @@ object MiniDelta {
   /** DV-masked read that KEEPS each row's (filename, row index)
     * identity — the discovery scan of [[deleteWithDv]]. */
   private def withRowIdentity(spark: SparkSession, table: String,
-                              files: Seq[(String, Option[String])],
+                              files: Seq[LogFile],
                               declared: Option[org.apache.spark.sql.types.StructType])
       : DataFrame = {
     if (files.isEmpty)
@@ -6965,21 +6989,9 @@ object MiniDelta {
         declared.getOrElse(org.apache.spark.sql.types.StructType(Nil))
           .add("__fname", org.apache.spark.sql.types.StringType)
           .add("__ri", org.apache.spark.sql.types.LongType))
-    val cleanDeclared = declared.map(dropFieldIds) // as in readFilesAs
-    val groups = files.map(p => (p._1, resolvePath(table, p._1), p._2))
-      .groupBy(p => inferenceBase(table, p._2)).toSeq.sortBy(_._1)
-    val raw = groups.map { case (bp, fs2) =>
-      val reader = spark.read.option("basePath", bp)
-      val df = cleanDeclared.fold(reader)(reader.schema)
-        .parquet(fs2.map(_._2).toIndexedSeq: _*)
-      val cols = declared.map(_.fieldNames.toSeq).getOrElse(df.columns.toSeq)
-      val depth = dvKeyDepth(fs2.head._1) // log-recorded path, as above
-      df.withColumn("__fname",
-          substring_index(col("_metadata.file_path"), "/", -depth))
-        .withColumn("__ri", col("_metadata.row_index"))
-        .select((cols.map(col) ++ Seq(col("__fname"), col("__ri"))): _*)
-    }.reduce(_.unionByName(_))
-    val masked = files.collect { case (p, Some(d)) => (p, d) }
+    // unmapped scan, field ids sanitized as in readFilesAs
+    val raw = scanWithIdentity(spark, table, files, declared.map(dropFieldIds))
+    val masked = files.flatMap(f => f.dv.map(f.path -> _))
     if (masked.isEmpty) raw
     else {
       val dv = maskDF(spark, table, masked)
@@ -7031,8 +7043,8 @@ object MiniDelta {
     val snap = collected(dmlCandidates(
         snapshotFilesAt(spark, table, readVersion), predicate, partitionBy,
         declared)
-      .select("path", "dv_path").collect().toIndexedSeq)
-    val touched = matchingFiles(spark, table, dvPairsOf(snap), declared,
+      .select(LogFile.columns: _*).collect().toIndexedSeq)
+    val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
       _.where(predicate))
     if (touched.isEmpty) return readVersion
     // CDF: pre/post images of exactly the matched rows (the SET applied
@@ -7215,12 +7227,12 @@ object MiniDelta {
         collected(snapDF.collect().toIndexedSeq), schemaOverride,
         resolveConflicts = idFields.isEmpty, readCond = fileKeyCond)
     val snap = collected(snapDF
-      .select("path", "dv_path").collect().toIndexedSeq)
+      .select(LogFile.columns: _*).collect().toIndexedSeq)
     // identity merges already discovered the touched set inside the
     // fused candidate read (same semi join, same DV-masked view) —
     // re-running matchingFiles would re-read every candidate file
     val touched = idTouched.getOrElse(
-      matchingFiles(spark, table, dvPairsOf(snap), declared,
+      matchingFiles(spark, table, LogFile.of(snap), declared,
         _.join(srcKeys, keys, "left_semi")))
     // CDF: the upsert's feed = matched target rows (update_preimage),
     // their source replacements (update_postimage), and the unmatched
@@ -7443,7 +7455,7 @@ object MiniDelta {
     if (cfg.get("delta.enableDeletionVectors").contains("true")) {
       val snap = collected(snapDF.collect().toIndexedSeq)
       if (snap.isEmpty) return readVersion
-      val matched = hit(withRowIdentity(spark, table, dvPairsOf(snap),
+      val matched = hit(withRowIdentity(spark, table, LogFile.of(snap),
         declared)).persist()
       try {
         dvMaskActions(spark, table, readVersion, declared, snap, matched)
@@ -7470,8 +7482,8 @@ object MiniDelta {
       } finally { matched.unpersist(); () }
     } else {
       val snap = collected(
-        snapDF.select("path", "dv_path").collect().toIndexedSeq)
-      val touched = matchingFiles(spark, table, dvPairsOf(snap), declared,
+        snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
+      val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
         hit)
       if (touched.isEmpty) return readVersion
       val cdc =
@@ -7527,7 +7539,7 @@ object MiniDelta {
       // fused candidate read computed it (Some), None when the caller
       // must run its own [[matchingFiles]] discovery (mapped/id-mode
       // tables, empty-schema edge)
-      : (DataFrame, Seq[String], Option[Seq[(String, Option[String])]]) = {
+      : (DataFrame, Seq[String], Option[Seq[LogFile]]) = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val start = f.metadata.getLong(IdentityStartKey)
     val step =
@@ -7548,8 +7560,8 @@ object MiniDelta {
     require(!source.columns.contains("__tgt_id"),
       "merge source has a '__tgt_id' column, which collides with the " +
         "identity-resolution temp column")
-    val pairs = dvPairsOf(
-      snapDF.select("path", "dv_path").collect().toIndexedSeq)
+    val pairs = LogFile.of(
+      snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
     def emptyIds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(srcKeys.schema.fields :+
@@ -7569,7 +7581,7 @@ object MiniDelta {
     val fused = declared.isDefined && !declared.exists(isColumnMapped) &&
       !idReadMode(spark, table, declared)
     val (tgtIds, touched): (DataFrame,
-        Option[Seq[(String, Option[String])]]) =
+        Option[Seq[LogFile]]) =
       if (pairs.isEmpty) (emptyIds, Some(Nil))
       else if (fused) {
         val semiRows = withRowIdentity(spark, table, pairs, declared)
@@ -7579,7 +7591,7 @@ object MiniDelta {
           .collect().map(_.getString(0)).toSet
         val ids = semiRows.groupBy(keys.map(col): _*)
           .agg(min(col(s"`${f.name}`")).cast(LongType).as("__tgt_id"))
-        (ids, Some(pairs.filter(p => fnames.contains(dvKeyOf(p._1)))))
+        (ids, Some(pairs.filter(p => fnames.contains(dvKeyOf(p.path)))))
       } else {
         val tgt0 = readFilesWithDv(spark, table, pairs, declared)
         if (tgt0.columns.isEmpty) // empty table: every row inserts
@@ -7655,7 +7667,7 @@ object MiniDelta {
                           readCond: Option[
                             org.apache.spark.sql.Column] = None)
       : Long = {
-    val matched = withRowIdentity(spark, table, dvPairsOf(snap), declared)
+    val matched = withRowIdentity(spark, table, LogFile.of(snap), declared)
       .join(srcKeys, keys, "left_semi")
       .persist() // mask counts + sidecar write
     val cfg = tableConfig(spark, table, readVersion)
@@ -8075,7 +8087,7 @@ object MiniDelta {
       // covers the full table, and persisting that would cache the
       // table instead of the blast radius
       val snap = collected(snapDF.collect().toIndexedSeq)
-      val tgt = withRowIdentity(spark, table, dvPairsOf(snap), declared)
+      val tgt = withRowIdentity(spark, table, LogFile.of(snap), declared)
       val j = joined(tgt).where(affected).persist()
       try {
         val doomed = j
@@ -8153,8 +8165,8 @@ object MiniDelta {
       // FIRES; pass-through rows ride along, inserts land in the same
       // commit
       val snap = collected(
-        snapDF.select("path", "dv_path").collect().toIndexedSeq)
-      val touched = matchingFiles(spark, table, dvPairsOf(snap), declared,
+        snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
+      val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
         hit)
       val (insertsOpt, idMeta) =
         if (notMatched.isEmpty) (None, Seq.empty[String])
@@ -8163,11 +8175,11 @@ object MiniDelta {
           // key — the range-pruned candidate files, NOT just the
           // touched set (a key can match a row no clause fires on)
           val candPairs =
-            if (bySource.isEmpty) dvPairsOf(snap)
-            else dvPairsOf(collected(
+            if (bySource.isEmpty) LogFile.of(snap)
+            else LogFile.of(collected(
               pruneByKeyRanges(snapAll, srcKeys, keys, partitionBy,
                 declared)
-                .select("path", "dv_path").collect().toIndexedSeq))
+                .select(LogFile.columns: _*).collect().toIndexedSeq))
           val unmatchedSrc =
             if (candPairs.isEmpty) source
             else source.join(
@@ -8951,8 +8963,8 @@ object MiniDelta {
           val fileCond = dmlFileCondition(spark, c, partitionBy, declared)
           val snapRW = collected(dmlCandidates(
             snapshotFilesAt(spark, table, readVersion), c, partitionBy,
-            declared).select("path", "dv_path").collect().toIndexedSeq)
-          val touched = matchingFiles(spark, table, dvPairsOf(snapRW),
+            declared).select(LogFile.columns: _*).collect().toIndexedSeq)
+          val touched = matchingFiles(spark, table, LogFile.of(snapRW),
             declared, _.where(coalesce(c, lit(false))))
           def alignNew(d2: DataFrame): DataFrame =
             d2.select(newSchema.fields.map { f =>
@@ -9138,7 +9150,7 @@ object MiniDelta {
           }.asJava
         spark.createDataFrame(rows, historySchema)
       case None =>
-        val log = logDFIn(spark, vps.map(_._2))
+        val log = logDFIn(spark, table, vps.map(_._2))
         val ops = log.where(col("commitInfo").isNotNull)
           .select(col("version"),
             col("commitInfo.operation").as("operation"))
@@ -9567,36 +9579,33 @@ object MiniDelta {
         if (txt.contains("\"protocol\"") || txt.contains("deletionVector") ||
             txt.contains("columnMapping") || txt.contains("\"metaData\""))
           txt.linesIterator.filter(_.nonEmpty).foreach { line =>
-            val node =
-              try om.readTree(line) catch { case _: Exception => null }
-            if (node != null) {
-              val proto = node.get("protocol")
-              if (proto != null && !proto.isNull) {
-                minReader = Option(proto.get("minReaderVersion"))
-                  .map(_.asInt()).getOrElse(minReader)
-                val rf = proto.get("readerFeatures")
-                readerFeats =
-                  if (rf == null || rf.isNull) Nil
-                  else (0 until rf.size()).map(rf.get(_).asText())
+            val node = parseAction(om, path, line)
+            val proto = node.get("protocol")
+            if (proto != null && !proto.isNull) {
+              minReader = Option(proto.get("minReaderVersion"))
+                .map(_.asInt()).getOrElse(minReader)
+              val rf = proto.get("readerFeatures")
+              readerFeats =
+                if (rf == null || rf.isNull) Nil
+                else (0 until rf.size()).map(rf.get(_).asText())
+            }
+            val add = node.get("add")
+            if (add != null && !add.isNull) {
+              val dv = add.get("deletionVector")
+              if (dv != null && !dv.isNull) {
+                val st = Option(dv.get("storageType"))
+                  .map(_.asText()).getOrElse("<absent>")
+                if (!supportedDvStorage(st)) badDvTypes += st
               }
-              val add = node.get("add")
-              if (add != null && !add.isNull) {
-                val dv = add.get("deletionVector")
-                if (dv != null && !dv.isNull) {
-                  val st = Option(dv.get("storageType"))
-                    .map(_.asText()).getOrElse("<absent>")
-                  if (!supportedDvStorage(st)) badDvTypes += st
-                }
-              }
-              val md = node.get("metaData")
-              if (md != null && !md.isNull) {
-                val cfg = md.get("configuration")
-                // null configuration = legacy "not stated" (keep the
-                // prior resolution); an explicit map replaces it
-                if (cfg != null && !cfg.isNull)
-                  cmMode = Option(cfg.get("delta.columnMapping.mode"))
-                    .map(_.asText())
-              }
+            }
+            val md = node.get("metaData")
+            if (md != null && !md.isNull) {
+              val cfg = md.get("configuration")
+              // null configuration = legacy "not stated" (keep the
+              // prior resolution); an explicit map replaces it
+              if (cfg != null && !cfg.isNull)
+                cmMode = Option(cfg.get("delta.columnMapping.mode"))
+                  .map(_.asText())
             }
           }
       }
@@ -9691,12 +9700,28 @@ object MiniDelta {
     try in.readFully(bytes) finally in.close()
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val nodes = new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
-      .flatMap { line =>
-        try Some(om.readTree(line)) catch { case _: Exception => None }
-      }.toIndexedSeq
+      .map(line => parseAction(om, p, line)).toIndexedSeq
     if (commitNodesMemo.size > 8192) commitNodesMemo.clear()
     commitNodesMemo.putIfAbsent(key, nodes)
     nodes
+  }
+
+  /** One commit line as a JSON action object, or
+    * [[MalformedCommitException]] naming the commit's table and version
+    * (both derived from the commit file path). */
+  private def parseAction(om: com.fasterxml.jackson.databind.ObjectMapper,
+      commitFile: String, line: String)
+      : com.fasterxml.jackson.databind.JsonNode = {
+    val node = try om.readTree(line) catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException => null
+    }
+    if (node == null || !node.isObject) {
+      val log = math.max(0, commitFile.lastIndexOf("/_delta_log/"))
+      val version = new Path(commitFile).getName.stripSuffix(".json")
+      throw new MalformedCommitException(commitFile.substring(0, log),
+        version.toLongOption.getOrElse(-1L), line)
+    }
+    node
   }
 
   /** (version, path, length, mtime) of the given commit files — one
@@ -10022,7 +10047,7 @@ object MiniDelta {
       }
     val tailFiles = tailVP.map(_._2)
     val log =
-      if (tailFiles.nonEmpty) logDFIn(spark, tailFiles)
+      if (tailFiles.nonEmpty) logDFIn(spark, table, tailFiles)
       else spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         logSchema.add("version", org.apache.spark.sql.types.LongType))
@@ -10150,20 +10175,6 @@ object MiniDelta {
       (mx >= lo && mn <= hi))
   }
 
-  /** Read `files` of `table` under the table's DECLARED schema (latest
-    * metaData action): files written before a column was appended read
-    * it as null — Delta's schema-evolution read semantics. Tables with
-    * no metaData in the log (pre-evolution) fall back to parquet
-    * self-description. Empty file sets keep the declared schema so
-    * downstream projections still resolve. */
-  private def readFiles(spark: SparkSession, table: String,
-                        files: Seq[String],
-                        schemaAsOf: Long = Long.MaxValue): DataFrame =
-    readFilesAs(spark, table, files, latestSchema(spark, table, schemaAsOf))
-
-  /** [[readFiles]] with the declared schema already resolved — DML
-    * operations resolve it ONCE and thread it through their scan,
-    * rewrite, and alignment steps instead of re-replaying the log. */
   /** Write-side schema gate. Column-mapped tables are writable in BOTH
     * modes: [[writeAndCapture]] lands PHYSICAL-named parquet
     * ([[toPhysical]]) with `parquet.field.id` footer metadata whenever
@@ -10463,7 +10474,7 @@ object MiniDelta {
   /** The same type with every level nullable — a CAST target that
     * never trips Spark's nullable→non-null struct-field refusal.
     * Field metadata (parquet field ids) is preserved. */
-  private def nullify(dt: org.apache.spark.sql.types.DataType)
+  private[io] def nullify(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     dt match {
@@ -10515,52 +10526,43 @@ object MiniDelta {
       col(s"`${physicalNameOf(lf)}`").cast(lf.dataType).as(lf.name)
     }.toIndexedSeq: _*)
 
+  /** A table read's read schema, mapped schema and session. Mapped
+    * tables scan PHYSICAL columns (`name` mode by name, `id` mode by
+    * footer field_id, always applied in id mode); unmapped reads drop
+    * stray field ids, which field-id resolution would otherwise match
+    * against id-less files. Id mode reads on the flag-enabled CLONED
+    * session, so the caller's conf never changes. */
+  private def scanShape(spark: SparkSession, table: String,
+      declared: Option[org.apache.spark.sql.types.StructType])
+      : (Option[org.apache.spark.sql.types.StructType],
+         Option[org.apache.spark.sql.types.StructType], SparkSession) = {
+    val idMode = idReadMode(spark, table, declared)
+    val mapped = declared.filter(st => isColumnMapped(st) || idMode)
+    val readSchema = mapped.map(physicalStruct(_, idMode))
+      .orElse(declared.map(dropFieldIds))
+    (readSchema, mapped, if (idMode) idReadSession(spark) else spark)
+  }
+
+  /** Read `files` of `table` under the table's DECLARED schema: files
+    * written before a column was appended read it as null (Delta's
+    * schema-evolution read semantics); tables with no metaData in the
+    * log fall back to parquet self-description. One relation over a
+    * [[LogFileIndex]] — partition values come from the log, and a
+    * snapshot mixing roots (shallow clones) is still one scan. Empty
+    * file sets keep the declared schema so downstream projections still
+    * resolve. */
   private def readFilesAs(spark: SparkSession, table: String,
-                          files: Seq[String],
+                          files: Seq[LogFile],
                           declared: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
+      : DataFrame =
     if (files.isEmpty)
       declared.fold(spark.emptyDataFrame)(s =>
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s))
     else {
-      // column mapping: scan under the PHYSICAL schema, then relabel to
-      // logical. `name` mode matches file columns by physical name; `id`
-      // mode by parquet footer field_id (the read schema carries the ids
-      // and Spark's field-id resolution does the matching — file column
-      // NAMES are free to differ, which is the whole point of id mode).
-      val idMode = idReadMode(spark, table, declared)
-      // in id mode the physical schema is ALWAYS applied, physicalName
-      // metadata or not (ids alone identify the columns; logical names
-      // are a legal physical fallback) — filtering on physicalName only
-      // would silently degrade an id-bearing schema to name matching
-      val mapped = declared.filter(st => isColumnMapped(st) || idMode)
-      // unmapped reads sanitize stray parquet.field.id metadata: with
-      // the session-wide field-id resolution enabled by some id-mode
-      // read, those ids would otherwise be MATCHED against engine-
-      // written files that carry no footer ids — and fail the scan
-      val readSchema = mapped.map(physicalStruct(_, idMode))
-        .orElse(declared.map(dropFieldIds))
-      // a snapshot can mix files under the table root with ABSOLUTE
-      // (shallow-cloned) paths rooted in the source table — Spark's
-      // basePath must prefix every path in a scan, so group by
-      // inference base and union (one scan per root, normally one)
-      val groups = files.groupBy(inferenceBase(table, _)).toSeq.sortBy(_._1)
-      // field-id resolution rides the id-mode relations only — they are
-      // built through the flag-enabled CLONED session, so the caller's
-      // conf never changes and unrelated co-resident reads keep
-      // matching by name
-      val session = if (idMode) idReadSession(spark) else spark
-      val out = groups.map { case (base, fs) =>
-        val reader = session.read.option("basePath", base)
-        val df = readSchema.fold(reader)(reader.schema)
-          .parquet(fs.toIndexedSeq: _*)
-        // partitioned reads surface partition columns LAST regardless of
-        // the declared schema — restore the declared column order
-        readSchema.fold(df)(s => df.select(s.fieldNames.map(col).toIndexedSeq: _*))
-      }.reduce(_.unionByName(_))
+      val (readSchema, mapped, session) = scanShape(spark, table, declared)
+      val out = LogFileIndex.scan(session, table, files, readSchema)
       attachGenMetadata(mapped.fold(out)(restoreLogical(out, _)), declared)
     }
-  }
 
   /** Re-attach `delta.generationExpression` field metadata to a read
     * frame. The parquet relation STRIPS user-schema field metadata, but
@@ -10597,9 +10599,9 @@ object MiniDelta {
     // mapped table: the stats JSON keys are physical — prune under the
     // physical name, filter under the logical one (the relabeled frame)
     val statPhys = physicalColOf(declared.filter(isColumnMapped), statCol)
-    val files = dvPairsOf(
+    val files = LogFile.of(
       filesForRange(snapshotFiles(spark, table), statPhys, lo, hi)
-        .select("path", "dv_path").collect().toIndexedSeq)
+        .select(LogFile.columns: _*).collect().toIndexedSeq)
     val base = readFilesWithDv(spark, table, files, declared)
     if (files.isEmpty) base // zero files: the predicate is vacuous (and
     else base.where(col(statCol) >= lo && col(statCol) <= hi) // may not resolve)
@@ -10636,15 +10638,14 @@ object MiniDelta {
   private def dvKeyOf(p: String): String =
     p.split("/").takeRight(dvKeyDepth(p)).mkString("/")
 
-  /** (path, dv path) pairs of a snapshot/file frame that carries
-    * `dv_path` — the argument shape of [[readFilesWithDv]]. */
-  private def dvPairsOf(rows: Seq[org.apache.spark.sql.Row])
-      : Seq[(String, Option[String])] =
-    rows.map { r =>
-      val dvIdx = r.fieldIndex("dv_path")
-      (r.getString(r.fieldIndex("path")),
-        if (r.isNullAt(dvIdx)) None else Some(r.getString(dvIdx)))
-    }
+  /** [[LogFile.addColumns]] of a parsed add node: the driver-arm twin. */
+  private def addScanValues(
+      add: Option[com.fasterxml.jackson.databind.JsonNode]): Seq[Any] = Seq(
+    add.flatMap(jnode(_, "size"))
+      .map(n => java.lang.Long.valueOf(n.asLong())).orNull,
+    add.flatMap(jnode(_, "modificationTime"))
+      .map(n => java.lang.Long.valueOf(n.asLong())).orNull,
+    add.map(pvOfNode(_, "partitionValues")).orNull)
 
   // a REAL Delta DV descriptor carried through the snapshot's dv_path
   // column: "rdv\0storageType\0pathOrInlineDv\0offset\0sizeInBytes".
@@ -10737,50 +10738,23 @@ object MiniDelta {
   }
 
   /** [[readFilesAs]] with deletion vectors applied: each file pairs
-    * with the optional DV sidecar masking its deleted rows. DV'd files
-    * are read with their identity and row index (`_metadata.file_path`
-    * filename + `_metadata.row_index` — filenames carry write UUIDs, so
-    * they are unique per table and survive table relocation) and
-    * anti-joined against the union of their sidecars. Plain files take
-    * the ordinary scan; a table with no DVs pays nothing. */
+    * with the optional DV masking its deleted rows. DV'd files are read
+    * with their identity ([[scanWithIdentity]]) and anti-joined against
+    * the union of their masks. Plain files take the ordinary scan; a
+    * table with no DVs pays nothing. Column-mapped DV'd files scan
+    * under the physical schema and relabel AFTER the anti-join (the
+    * join keys are the appended __fname/__ri, untouched by the
+    * relabel). */
   private def readFilesWithDv(spark: SparkSession, table: String,
-                              files: Seq[(String, Option[String])],
+                              files: Seq[LogFile],
                               declared: Option[org.apache.spark.sql.types.StructType])
       : DataFrame = {
-    val plain = files.collect { case (p, None) => resolvePath(table, p) }
-    val dvd = files.collect { case (p, Some(d)) =>
-      (p, resolvePath(table, p), d) }
+    val (plain, dvd) = files.partition(_.dv.isEmpty)
     val base = readFilesAs(spark, table, plain, declared)
     if (dvd.isEmpty) return base
-    // column mapping: the DV'd files are scanned under the physical
-    // schema (name- or field-id-resolved, same rules as
-    // [[readFilesAs]], malformed-mapping guard included) and relabeled
-    // AFTER the mask anti-join (the join keys are the appended
-    // __fname/__ri, untouched by the relabel)
-    val idMode = idReadMode(spark, table, declared)
-    val mapped = declared.filter(st => isColumnMapped(st) || idMode)
-    val readSchema = mapped.map(physicalStruct(_, idMode))
-      .orElse(declared.map(dropFieldIds)) // same sanitation as readFilesAs
-    val dv = maskDF(spark, table, dvd.map(t => (t._1, t._3)))
-    val groups = dvd.groupBy(t => inferenceBase(table, t._2))
-      .toSeq.sortBy(_._1)
-    // id-mode scans ride the flag-enabled cloned session, exactly as in
-    // readFilesAs
-    val session = if (idMode) idReadSession(spark) else spark
-    val masked = groups.map { case (bp, fs2) =>
-      val reader = session.read.option("basePath", bp)
-      val df = readSchema.fold(reader)(reader.schema)
-        .parquet(fs2.map(_._2).toIndexedSeq: _*)
-      val cols = readSchema.map(_.fieldNames.toSeq).getOrElse(df.columns.toSeq)
-      // depth from the LOG-RECORDED path, not the resolved one — a
-      // table root containing '=' must not inflate the key depth (the
-      // build side keys on log-relative paths)
-      val depth = dvKeyDepth(fs2.head._1)
-      df.withColumn("__fname",
-          substring_index(col("_metadata.file_path"), "/", -depth))
-        .withColumn("__ri", col("_metadata.row_index"))
-        .select((cols.map(col) ++ Seq(col("__fname"), col("__ri"))): _*)
-    }.reduce(_.unionByName(_))
+    val (readSchema, mapped, session) = scanShape(spark, table, declared)
+    val dv = maskDF(spark, table, dvd.map(f => (f.path, f.dv.get)))
+    val masked = scanWithIdentity(session, table, dvd, readSchema)
     val visible0 = masked.join(dv,
         masked("__fname") === dv("__dv_fname") &&
           masked("__ri") === dv("__dv_ri"), "left_anti")
@@ -10789,6 +10763,23 @@ object MiniDelta {
     if (plain.isEmpty && declared.isEmpty) visible
     else base.unionByName(visible)
   }
+
+  /** The scan of `files` with each row's DV identity appended:
+    * `__fname` (the file's [[dvKeyOf]] key, cut from
+    * `_metadata.file_path`) and `__ri` (`_metadata.row_index`). The
+    * key depth comes from the LOG-RECORDED path — a table root
+    * containing '=' must not inflate it (masks key on log paths) — so
+    * files of different depths scan as one relation per depth (one for
+    * every uniform layout). */
+  private def scanWithIdentity(session: SparkSession, table: String,
+      files: Seq[LogFile],
+      readSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    files.groupBy(f => dvKeyDepth(f.path)).toSeq.sortBy(_._1).map {
+      case (depth, fs2) => LogFileIndex.scan(session, table, fs2, readSchema,
+        Seq(substring_index(col("_metadata.file_path"), "/", -depth)
+            .as("__fname"),
+          col("_metadata.row_index").as("__ri")))
+    }.reduce(_.unionByName(_))
 
   /** Read the table THROUGH the pruned file set: scan only the files the
     * filters resolve to (the reference's authorize-then-fetch, J2+S6).
@@ -10809,8 +10800,8 @@ object MiniDelta {
       val m = st.fields.map(f => f.name -> physicalNameOf(f)).toMap
       filters.map(_.map { case (k, v) => (m.getOrElse(k, k), v) })
     }
-    val files = dvPairsOf(filesForFilters(snap, physFilters)
-      .select("path", "dv_path").collect().toIndexedSeq)
+    val files = LogFile.of(filesForFilters(snap, physFilters)
+      .select(LogFile.columns: _*).collect().toIndexedSeq)
     readFilesWithDv(spark, table, files, declared)
   }
 
@@ -10906,7 +10897,7 @@ object MiniDelta {
                 (if (deliverRemoves)
                   col("remove").isNotNull && col("remove.dataChange")
                  else lit(false))
-              logDFIn(spark, vps.map(_._2))
+              logDFIn(spark, table, vps.map(_._2))
                 .where(delivers).limit(1).collect().nonEmpty
           }
       }
@@ -10983,7 +10974,7 @@ object MiniDelta {
             jnode(node, "txn").flatMap(jnode(_, "version"))
               .map(_.asLong()).getOrElse(-1L)
         }
-        case None => logDFIn(spark, tailVP.map(_._2))
+        case None => logDFIn(spark, table, tailVP.map(_._2))
           .where(col("txn.appId") === appId)
           .orderBy(col("version").desc).limit(1)
           .select(col("txn.version").cast("long"))
@@ -11095,11 +11086,13 @@ object MiniDelta {
     // one census for both the changed-version screen and the adds
     // (r18 — was two jobs per streaming micro-batch poll; r19 — a
     // metadata-scale window folds on the DRIVER, zero jobs)
+    val schema = LogFile.feedSchema("version BIGINT, path STRING, " +
+      "adc BOOLEAN, dv_path STRING, rdc BOOLEAN, ms STRING")
     val acts: Array[org.apache.spark.sql.Row] =
       localActions(spark, table, tailV) match {
         case Some(list) => list.map { case (v, node) =>
           val add = jnode(node, "add")
-          org.apache.spark.sql.Row(
+          LogFile.feedRow(schema, Seq(
             java.lang.Long.valueOf(v),
             add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             add.flatMap(jnode(_, "dataChange"))
@@ -11108,13 +11101,13 @@ object MiniDelta {
             jnode(node, "remove").flatMap(jnode(_, "dataChange"))
               .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
             jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
-              .map(_.asText()).orNull)
+              .map(_.asText()).orNull) ++ addScanValues(add))
         }.toArray
-        case None => logDFIn(spark, tail).select(col("version"),
-            col("add.path").as("ap"), col("add.dataChange").as("adc"),
-            coalesce(col("add.dv.path"), realDvMarker).as("adv"),
+        case None => logDFIn(spark, table, tail).select(Seq(col("version"),
+            col("add.path").as("path"), col("add.dataChange").as("adc"),
+            coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
             col("remove.dataChange").as("rdc"),
-            col("metaData.schemaString").as("ms"))
+            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
           .collect()
       }
     // the streaming source rides this feed: a mid-window column DROP
@@ -11131,10 +11124,9 @@ object MiniDelta {
           s"$toVersion] (data-changing removes at ${changed.toSeq.sorted
             .mkString(", ")}); stream the change feed instead, or set " +
           "skipChangeCommits to drop those commits whole")
-    val adds = acts.filter(r => !r.isNullAt(1) && !r.isNullAt(2) &&
-        r.getBoolean(2) && !changed(r.getLong(0)))
-      .map(r => (r.getString(1),
-        if (r.isNullAt(3)) None else Some(r.getString(3)))).toSeq
+    val adds = LogFile.of(acts.filter(r => !r.isNullAt(1) &&
+        !r.isNullAt(2) && r.getBoolean(2) && !changed(r.getLong(0)))
+      .toIndexedSeq)
     if (adds.isEmpty) empty
     else readFilesWithDv(spark, table, adds, declared)
   }
@@ -11167,13 +11159,16 @@ object MiniDelta {
     // files; each cost a full job + driver gap on every CDF read.
     // r19 — a metadata-scale window folds on the DRIVER, zero jobs).
     // Every log line holds one action, so the row count is unchanged.
+    val schema = LogFile.feedSchema("version BIGINT, op STRING, " +
+      "path STRING, adc BOOLEAN, dv_path STRING, rp STRING, rdc BOOLEAN, " +
+      "cp STRING, cpv MAP<STRING, STRING>, ms STRING")
     val acts: Array[org.apache.spark.sql.Row] =
       localActions(spark, table, tailV) match {
         case Some(list) => list.map { case (v, node) =>
           val add = jnode(node, "add")
           val rem = jnode(node, "remove")
           val cdc = jnode(node, "cdc")
-          org.apache.spark.sql.Row(
+          LogFile.feedRow(schema, Seq(
             java.lang.Long.valueOf(v),
             jnode(node, "commitInfo").flatMap(jnode(_, "operation"))
               .map(_.asText()).orNull,
@@ -11187,15 +11182,15 @@ object MiniDelta {
             cdc.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             cdc.map(pvOfNode(_, "partitionValues")).orNull,
             jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
-              .map(_.asText()).orNull)
+              .map(_.asText()).orNull) ++ addScanValues(add))
         }.toArray
-        case None => logDFIn(spark, tail).select(col("version"),
+        case None => logDFIn(spark, table, tail).select(Seq(col("version"),
             col("commitInfo.operation").as("op"),
-            col("add.path").as("ap"), col("add.dataChange").as("adc"),
-            coalesce(col("add.dv.path"), realDvMarker).as("adv"),
+            col("add.path").as("path"), col("add.dataChange").as("adc"),
+            coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
             col("remove.path").as("rp"), col("remove.dataChange").as("rdc"),
             col("cdc.path").as("cp"), col("cdc.partitionValues").as("cpv"),
-            col("metaData.schemaString").as("ms"))
+            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
           .collect()
       }
     // a metaData action inside the window that DROPPED columns makes
@@ -11211,8 +11206,9 @@ object MiniDelta {
     // adds carry their own DV; a removed path's prior content is read
     // under the DV in effect BEFORE the commit (resolved lazily from
     // the v-1 snapshot, metadata-scale)
-    val addDv = addRows.map(r => (r.getLong(0), r.getString(2)) ->
-      (if (r.isNullAt(4)) None else Some(r.getString(4)))).toMap
+    val addFiles = addRows.map(r => (r.getLong(0), r.getString(2)))
+      .zip(LogFile.of(addRows.toIndexedSeq)).toMap
+    val addDv = addFiles.view.mapValues(_.dv).toMap
     val adds: Map[Long, Seq[String]] = addRows.groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getString(2)).toSeq).toMap
     val removes: Map[Long, Seq[String]] = acts.filter(r =>
@@ -11265,17 +11261,19 @@ object MiniDelta {
         .toSeq.sorted.map { v =>
       val a = adds.getOrElse(v, Seq.empty)
       val r = removes.getOrElse(v, Seq.empty)
-      lazy val priorDv: Map[String, Option[String]] =
+      lazy val prior: Map[String, LogFile] = LogFile.of(
         snapshotFilesAt(spark, table, v - 1)
-          .select("path", "dv_path").collect()
-          .map(row => row.getString(0) ->
-            (if (row.isNullAt(1)) None else Some(row.getString(1)))).toMap
+          .select(LogFile.columns: _*).collect().toIndexedSeq)
+        .map(lf => lf.path -> lf).toMap
       def readAdds(paths: Seq[String]) = readFilesWithDv(spark, table,
-        paths.map(p => (p, addDv.getOrElse((v, p), None))), declared)
+        paths.map(p => addFiles((v, p))), declared)
       def readRems(paths: Seq[String]) = {
-        val pairs = paths.map(p => (p, priorDv.getOrElse(p, None)))
-        requireDvRefs(pairs.flatMap(_._2))
-        readFilesWithDv(spark, table, pairs, declared)
+        // a path the prior snapshot lacks has no add to plan from: the
+        // index stats it
+        val files = paths.map(p =>
+          prior.getOrElse(p, LogFile(p, None, None, None, Map.empty)))
+        requireDvRefs(files.flatMap(_.dv))
+        readFilesWithDv(spark, table, files, declared)
       }
       val (preLabel, postLabel) = ops.getOrElse(v, "WRITE") match {
         case "DELETE" => ("delete", "insert")
@@ -11418,6 +11416,8 @@ object MiniDelta {
     // one census serves both the incremental adds and the schema-loss
     // screen (metaData rows pass the relaxed filter, dropped
     // driver-side); metadata-scale windows fold on the DRIVER (r19)
+    val schema = LogFile.feedSchema(
+      "path STRING, version BIGINT, dv_path STRING, ms STRING")
     val acts: Array[org.apache.spark.sql.Row] =
       localActions(spark, table, tailV) match {
         case Some(list) => list.flatMap { case (v, node) =>
@@ -11426,18 +11426,18 @@ object MiniDelta {
           val ms = jnode(node, "metaData")
             .flatMap(jnode(_, "schemaString")).map(_.asText())
           if (add.isEmpty && ms.isEmpty) None
-          else Some(org.apache.spark.sql.Row(
+          else Some(LogFile.feedRow(schema, Seq(
             add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             java.lang.Long.valueOf(v),
             add.map(advOfNode).orNull,
-            ms.orNull))
+            ms.orNull) ++ addScanValues(add)))
         }.toArray
-        case None => logDFIn(spark, tail)
+        case None => logDFIn(spark, table, tail)
           .where((col("add").isNotNull && col("add.dataChange")) ||
             col("metaData").isNotNull)
-          .select(col("add.path").as("path"), col("version"),
+          .select(Seq(col("add.path").as("path"), col("version"),
             coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
-            col("metaData.schemaString").as("ms"))
+            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
           .collect()
       }
     // same refusal as readCdf/readAppends: a mid-window column DROP
@@ -11467,9 +11467,7 @@ object MiniDelta {
     // "rewrites re-deliver survivors" contract documented for CoW DML
     changed.groupBy(_.getLong(1)).toSeq.sortBy(_._1).map { case (v, rows) =>
       readFilesWithDv(spark, table,
-        rows.map(r => (r.getString(0),
-          if (r.isNullAt(2)) None else Some(r.getString(2)))).toIndexedSeq,
-        declared)
+        LogFile.of(rows.toIndexedSeq), declared)
         .withColumn("_commit_version", lit(v))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }

@@ -1736,6 +1736,13 @@ class MiniDeltaSpec extends AnyFunSuite {
     com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
       .writeValueAsString(s)
 
+  /** A landed file's length: the `size` a writer logs for it (scans
+    * plan their splits from it). */
+  private def sizeOf(t: String, rel: String): Long = {
+    val f = new java.io.File(rel)
+    (if (f.isAbsolute) f else new java.io.File(t, rel)).length()
+  }
+
   /** Write `lines` as a raw real-format commit (no commitInfo shim). */
   private def rawCommit(t: String, v: Long, lines: Seq[String]): Unit = {
     val dir = new java.io.File(s"$t/_delta_log")
@@ -1761,10 +1768,10 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":100,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     val f2 = landParquet(Seq((3L, "c"), (4L, "d"), (5L, "e")))
     rawCommit(t, 1L, Seq(
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":100,"dataChange":true}}""",
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(t, f2)},"dataChange":true}}""",
       s"""{"remove":{"path":${jsonStr(f1)},"dataChange":true,"deletionTimestamp":1}}"""))
     // REAL-shape checkpoint at v1: protocol/metaData/add as COLUMNS of a
     // SINGLE parquet file (no sidecars, no directory manifest)
@@ -1772,7 +1779,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     val cpLines = Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{"k":"v"}}}""",
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":100,"dataChange":true}}""")
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(t, f2)},"dataChange":true}}""")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$cpTmp/cp.json"),
       cpLines.mkString("\n").getBytes("UTF-8"))
     spark.read.schema(MiniDelta.logSchema).json(s"$cpTmp/cp.json")
@@ -1789,7 +1796,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     // a JSON tail commit AFTER the checkpoint
     val f3 = landParquet(Seq((6L, "f")))
     rawCommit(t, 2L, Seq(
-      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":100,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":${sizeOf(t, f3)},"dataChange":true}}"""))
     // snapshot = checkpoint adds + tail adds; f1 stays dead
     val got = MiniDelta.readFiltered(spark, t, Seq.empty)
     assert(got.columns.toSeq == Seq("id", "v"))
@@ -1813,7 +1820,7 @@ class MiniDeltaSpec extends AnyFunSuite {
       val schemaJson = jsonStr(Seq((1L, "a")).toDF("id", "v").schema.json)
       rawCommit(t, 0L, lines ++ Seq(
         s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
-        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
       t
     }
     // supported: v3 with features this engine honors
@@ -1844,7 +1851,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(cm, 0L, Seq(
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       s"""{"metaData":{"schemaString":$cmSchema,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id"}}}""",
-      s"""{"add":{"path":${jsonStr(cmF)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(cmF)},"partitionValues":{},"size":${sizeOf(cm, cmF)},"dataChange":true}}"""))
     intercept[MiniDelta.ColumnMappingUnsupportedException] {
       MiniDelta.readFiltered(spark, cm, Seq.empty).count()
     }
@@ -1854,7 +1861,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     val dvF = new java.io.File(dvT).listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).head
     rawCommit(dvT, 1L, Seq(
-      s"""{"add":{"path":${jsonStr(dvF)},"partitionValues":{},"size":10,"dataChange":true,"deletionVector":{"storageType":"x","pathOrInlineDv":"whoknows","offset":1,"sizeInBytes":36,"cardinality":2}}}"""))
+      s"""{"add":{"path":${jsonStr(dvF)},"partitionValues":{},"size":${sizeOf(dvT, dvF)},"dataChange":true,"deletionVector":{"storageType":"x","pathOrInlineDv":"whoknows","offset":1,"sizeInBytes":36,"cardinality":2}}}"""))
     val e2 = intercept[MiniDelta.UnsupportedTableFeatureException] {
       MiniDelta.readFiltered(spark, dvT, Seq.empty).count()
     }
@@ -2317,7 +2324,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":["timestampNtz"]}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     MiniDelta.append(spark, Seq((2L, "b")).toDF("id", "v"), t, Seq.empty) // v1
     // ten engine commits must NOT erode the declared contract
     MiniDelta.writeCheckpoint(spark, t, 1L)
@@ -2400,8 +2407,8 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":100,"dataChange":true}}""",
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":100,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}""",
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(t, f2)},"dataChange":true}}"""))
     val cpTmp = Files.createTempDirectory("mpcp").toString
     def part(lines: Seq[String], i: Int): Unit = {
       java.nio.file.Files.write(
@@ -2419,9 +2426,9 @@ class MiniDeltaSpec extends AnyFunSuite {
     part(Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{"k":"v"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":100,"dataChange":false}}"""), 1)
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":false}}"""), 1)
     part(Seq(
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":100,"dataChange":false}}"""), 2)
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(t, f2)},"dataChange":false}}"""), 2)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$t/_delta_log/_last_checkpoint"),
       """{"version":0,"size":4,"parts":2}""".getBytes("UTF-8"))
@@ -2434,7 +2441,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     // a tail commit on top of the parts still replays
     val f3 = landParquet(Seq((4L, "d")))
     rawCommit(t, 1L, Seq(
-      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":100,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":${sizeOf(t, f3)},"dataChange":true}}"""))
     assert(MiniDelta.readFiltered(spark, t, Seq.empty).count() == 4)
   }
 
@@ -2447,7 +2454,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     intercept[MiniDelta.ColumnMappingUnsupportedException] {
       MiniDelta.readFiltered(spark, t, Seq.empty).count()
     }
@@ -2484,7 +2491,7 @@ class MiniDeltaSpec extends AnyFunSuite {
         """"partitionColumns":[],"configuration":{""" +
         """"delta.columnMapping.mode":"name",""" +
         """"delta.columnMapping.maxColumnId":"4"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     val got = MiniDelta.readFiltered(spark, t, Seq.empty)
     assert(got.columns.toSeq == Seq("id", "payload"))
     assert(got.schema("payload").dataType.asInstanceOf[StructType]
@@ -2555,7 +2562,7 @@ class MiniDeltaSpec extends AnyFunSuite {
         """"partitionColumns":[],"configuration":{""" +
         """"delta.columnMapping.mode":"id",""" +
         """"delta.columnMapping.maxColumnId":"2"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     val got = MiniDelta.readFiltered(spark, t, Seq.empty)
     assert(got.columns.toSeq == Seq("id", "name"))
     assert(got.orderBy("id").as[(Long, String)].collect().toSeq ==
@@ -2609,7 +2616,7 @@ class MiniDeltaSpec extends AnyFunSuite {
         """"partitionColumns":[],"configuration":{""" +
         """"delta.columnMapping.mode":"id",""" +
         """"delta.columnMapping.maxColumnId":"2"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
 
     // a dedicated caller session so release can't disturb other specs
     val caller = spark.newSession()
@@ -2659,7 +2666,7 @@ class MiniDeltaSpec extends AnyFunSuite {
         """"partitionColumns":[],"configuration":{""" +
         """"delta.columnMapping.mode":"id",""" +
         """"delta.columnMapping.maxColumnId":"2"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     val ex = intercept[MiniDelta.ColumnMappingUnsupportedException] {
       MiniDelta.readFiltered(spark, t, Seq.empty).count()
     }
@@ -2686,7 +2693,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       s"""{"metaData":{"schemaString":${jsonStr(declared.json)},""" +
         """"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     val prior = spark.conf.getOption("spark.sql.parquet.fieldId.read.enabled")
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     try {
@@ -2755,7 +2762,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t3, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["icebergCompatV2"]}}""",
       s"""{"metaData":{"schemaString":$schema3,"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f3)},"partitionValues":{},"size":${sizeOf(t3, f3)},"dataChange":true}}"""))
     assert(MiniDelta.readFiltered(spark, t3, Seq.empty).count() == 1)
     val e3 = intercept[MiniDelta.UnsupportedTableFeatureException] {
       MiniDelta.append(spark, Seq((2L, "b")).toDF("id", "v"), t3, Seq.empty)
@@ -2778,7 +2785,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t4, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
       s"""{"metaData":{"schemaString":${jsonStr(gen.json)},"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f4)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f4)},"partitionValues":{},"size":${sizeOf(t4, f4)},"dataChange":true}}"""))
     assert(MiniDelta.readFiltered(spark, t4, Seq.empty).count() == 1)
     // mismatching provided value refuses with the validation error
     val e4 = intercept[IllegalArgumentException] {
@@ -2812,7 +2819,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":100,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     // v1: rewrite f1 -> f2 changing ONLY id=1; the cdc file records
     // exactly that one pre/post pair (id=2 rode along unchanged — the
     // reconstruction would misreport nothing here, but only the cdc
@@ -2827,8 +2834,8 @@ class MiniDeltaSpec extends AnyFunSuite {
       .filter(_.endsWith(".parquet")).head
     rawCommit(t, 1L, Seq(
       s"""{"commitInfo":{"operation":"UPDATE","version":1,"timestamp":2}}""",
-      s"""{"cdc":{"path":${jsonStr(s"_change_data/$cdcName")},"partitionValues":{},"size":10,"dataChange":false}}""",
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":100,"dataChange":true}}""",
+      s"""{"cdc":{"path":${jsonStr(s"_change_data/$cdcName")},"partitionValues":{},"size":${sizeOf(t, s"_change_data/$cdcName")},"dataChange":false}}""",
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(t, f2)},"dataChange":true}}""",
       s"""{"remove":{"path":${jsonStr(f1)},"dataChange":true,"deletionTimestamp":2}}"""))
     val feed = MiniDelta.readCdf(spark, t, fromVersion = -1)
       .select("id", "v", "_change_type", "_commit_version")
@@ -2863,7 +2870,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     val proto = """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["v2Checkpoint"],"writerFeatures":["v2Checkpoint"]}}"""
     val meta = s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{"k2":"v2"}}}"""
     def add(p: String) =
-      s"""{"add":{"path":${jsonStr(p)},"partitionValues":{},"size":100,"dataChange":true}}"""
+      s"""{"add":{"path":${jsonStr(p)},"partitionValues":{},"size":${sizeOf(t, p)},"dataChange":true}}"""
     rawCommit(t, 0L, Seq(proto, meta, add(f1)))
     rawCommit(t, 1L, Seq(add(f2)))
     // sidecar: the two live adds as parquet action rows
@@ -2932,7 +2939,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     rawCommit(t, 0L, Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
       s"""{"metaData":{"schemaString":${jsonStr(schema3.json)},"partitionColumns":["year"],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{"year":"2023"},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{"year":"2023"},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     // v1: a cdc-carrying commit whose change-data file LACKS 'year'
     new java.io.File(s"$t/_change_data").mkdirs()
     Seq((1L, "EDITED", "update_postimage"), (1L, "a", "update_preimage"))
@@ -2946,8 +2953,8 @@ class MiniDeltaSpec extends AnyFunSuite {
       .map(_.getName).filter(n => n.endsWith(".parquet") &&
         s"year=2023/$n" != f1).head
     rawCommit(t, 1L, Seq(
-      s"""{"cdc":{"path":${jsonStr(s"_change_data/$cdcName")},"partitionValues":{"year":"2023"},"size":10,"dataChange":false}}""",
-      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{"year":"2023"},"size":10,"dataChange":true}}""",
+      s"""{"cdc":{"path":${jsonStr(s"_change_data/$cdcName")},"partitionValues":{"year":"2023"},"size":${sizeOf(t, s"_change_data/$cdcName")},"dataChange":false}}""",
+      s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{"year":"2023"},"size":${sizeOf(t, f2)},"dataChange":true}}""",
       s"""{"remove":{"path":${jsonStr(f1)},"dataChange":true,"deletionTimestamp":2}}"""))
     val v1 = MiniDelta.readCdf(spark, t, fromVersion = 0L)
       .select("id", "v", "year", "_change_type")
@@ -3003,8 +3010,8 @@ class MiniDeltaSpec extends AnyFunSuite {
       s"""{"metaData":{"schemaString":${jsonStr(logical.json)},""" +
         """"partitionColumns":["col-p"],"configuration":{""" +
         """"delta.columnMapping.mode":"name"}}}""",
-      s"""{"add":{"path":${jsonStr(fileIn("2023"))},"partitionValues":{"col-p":"2023"},"size":10,"dataChange":true}}""",
-      s"""{"add":{"path":${jsonStr(fileIn("2024"))},"partitionValues":{"col-p":"2024"},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(fileIn("2023"))},"partitionValues":{"col-p":"2023"},"size":${sizeOf(t, fileIn("2023"))},"dataChange":true}}""",
+      s"""{"add":{"path":${jsonStr(fileIn("2024"))},"partitionValues":{"col-p":"2024"},"size":${sizeOf(t, fileIn("2024"))},"dataChange":true}}"""))
     // LOGICAL filter key must prune on the PHYSICAL partitionValues
     val got = MiniDelta.readFiltered(spark, t, Seq(Map("year" -> "2023")))
     assert(got.columns.toSeq == Seq("id", "year"))
@@ -3095,7 +3102,7 @@ class MiniDeltaSpec extends AnyFunSuite {
       """{"commitInfo":{"operation":"WRITE","version":0,"timestamp":999999,"inCommitTimestamp":1000}}""",
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""",
-      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true}}"""))
+      s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true}}"""))
     assert(MiniDelta.versionAtTimestamp(spark, t, 1000L) == 0L)
     intercept[IllegalArgumentException] {
       // the drifted wall clock (999999) must NOT make 5000 miss v0...

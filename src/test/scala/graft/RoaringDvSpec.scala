@@ -60,6 +60,13 @@ class RoaringDvSpec extends AnyFunSuite {
     com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
       .writeValueAsString(s)
 
+  /** A landed file's length: the `size` a writer logs for it (scans
+    * plan their splits from it). */
+  private def sizeOf(t: String, rel: String): Long = {
+    val f = new java.io.File(rel)
+    (if (f.isAbsolute) f else new java.io.File(t, rel)).length()
+  }
+
   /** A real-format table: one 10-row parquet file + raw JSON commits. */
   private def realTable(): (String, String, String) = {
     val t = Files.createTempDirectory("realdv").toString + "/t"
@@ -199,7 +206,7 @@ class RoaringDvSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(f"$t%s/_delta_log/${0L}%020d.json"),
       (s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""" + "\n" +
-        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true,"deletionVector":{"storageType":"i","pathOrInlineDv":${jsonStr(inline)},"sizeInBytes":${padded.length},"cardinality":3}}}""")
+        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true,"deletionVector":{"storageType":"i","pathOrInlineDv":${jsonStr(inline)},"sizeInBytes":${padded.length},"cardinality":3}}}""")
         .getBytes("UTF-8"))
     val got = MiniDelta.readFiltered(spark, t, Seq.empty)
       .select("id").as[Long].collect().sorted.toSeq
@@ -219,7 +226,7 @@ class RoaringDvSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(f"$t%s/_delta_log/${0L}%020d.json"),
       (s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""" + "\n" +
-        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":10,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(id)},"offset":$offset,"sizeInBytes":$size,"cardinality":2}}}""")
+        s"""{"add":{"path":${jsonStr(f1)},"partitionValues":{},"size":${sizeOf(t, f1)},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(id)},"offset":$offset,"sizeInBytes":$size,"cardinality":2}}}""")
         .getBytes("UTF-8"))
     val got = MiniDelta.readFiltered(spark, t, Seq.empty)
       .select("id").as[Long].collect().sorted.toSeq
@@ -236,7 +243,7 @@ class RoaringDvSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(f"$bad%s/_delta_log/${0L}%020d.json"),
       (s"""{"metaData":{"schemaString":${jsonStr(df2.schema.json)},"partitionColumns":[],"configuration":{}}}""" + "\n" +
-        s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":10,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(id2)},"offset":$off2,"sizeInBytes":${size2 + 1},"cardinality":2}}}""")
+        s"""{"add":{"path":${jsonStr(f2)},"partitionValues":{},"size":${sizeOf(bad, f2)},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${jsonStr(id2)},"offset":$off2,"sizeInBytes":${size2 + 1},"cardinality":2}}}""")
         .getBytes("UTF-8"))
     val e = intercept[Exception] {
       MiniDelta.readFiltered(spark, bad, Seq.empty).collect()
