@@ -1080,10 +1080,10 @@ object SparkEntry {
     "j5_db_permissions" -> ((s, d) => {
       // J3/J4 against a REAL database: permission rows live in an
       // embedded Derby DB (the reference's SQLite/sea-orm store,
-      // /root/reference/src/database.rs:33-52) read through Spark's JDBC
-      // source with the (user, table) predicate pushed into the DB's
-      // WHERE clause, then merged with the config statics and applied as
-      // a partition ACL — the full config->DB->merge->prune chain.
+      // reference src/database.rs:33-52) read by one parameterized
+      // (user, table) query over JDBC on the driver, then merged with
+      // the config statics and applied as a partition ACL — the full
+      // config->DB->merge->prune chain.
       val cfg = graft.catalog.GraftConfig(
         databaseEnabled = true,
         database = graft.catalog.DatabaseConfig(derbyPermsFixture()),

@@ -1,7 +1,6 @@
 package graft.acl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 
 import graft.catalog.GraftConfig
 
@@ -15,16 +14,16 @@ import graft.catalog.GraftConfig
   * config's static filters before resolving the allowed file set
   * (/root/reference/src/main.rs:555-574).
   *
-  * Spark-first restatement: the permissions table is read through
-  * Spark's JDBC source — the (user, table) equality predicates are
-  * PUSHED DOWN into the database query (the JDBC source translates
-  * EqualTo filters into the WHERE clause), so the engine fetches only
-  * the rows for the requesting principal, exactly like the reference's
-  * filtered sea-orm find. Results flow into the SAME
-  * [[PartitionAcl.parsePermissions]]/[[PartitionAcl.filtersFor]]/
-  * [[PartitionAcl.merge]] chain the in-memory path uses, memoized per
-  * (user, table) in [[AclCaches.dbPerms]] (the reference's `cached`
-  * macro, LRU 100).
+  * Restatement: on a memo miss the driver runs the reference's one
+  * filtered query over plain JDBC — `SELECT partition_filters FROM
+  * permissions WHERE user_id = ? AND table_name = ? ORDER BY id`,
+  * parameterized, one connection per lookup, closed after it — and
+  * decodes each row's JSON with [[PartitionAcl.decodeFilters]]. A NULL
+  * or malformed row fails the lookup by name rather than reading as
+  * allow-all. The result feeds the same [[PartitionAcl.merge]] chain
+  * the in-memory path uses, memoized per (user, table) in
+  * [[AclCaches.dbPerms]] (the reference's `cached` macro, LRU 100). No
+  * Spark job runs: the grant rows are a handful of bytes.
   *
   * Scale: permission rows are catalog-scale metadata (bytes per user ×
   * table) — a driver-side lookup memoized across queries, never a join
@@ -42,21 +41,32 @@ object DbPermissions {
   def jdbcUrl(uri: String): String =
     if (uri.startsWith("jdbc:")) uri else s"jdbc:$uri"
 
-  /** Known embedded-driver classes by scheme — Spark's JDBC source needs
-    * the driver class when DriverManager's autoloading races executor
-    * classloaders. Unlisted schemes rely on JDBC 4 autoloading. */
+  /** Known embedded-driver classes by scheme, loaded before connecting
+    * so DriverManager sees them whatever classloader the caller runs
+    * under. Unlisted schemes rely on JDBC 4 autoloading. */
   private def driverFor(url: String): Option[String] =
     if (url.startsWith("jdbc:derby:")) Some("org.apache.derby.jdbc.EmbeddedDriver")
     else if (url.startsWith("jdbc:sqlite:")) Some("org.sqlite.JDBC")
     else None
 
-  /** The raw `permissions` table as a DataFrame (one row per grant). */
-  def permissionsDF(spark: SparkSession, uri: String): DataFrame = {
+  /** The decoded grants of (user, table), in row-id order: one
+    * parameterized query on the driver. */
+  private def lookup(uri: String, user: String,
+                     table: String): PartitionAcl.Filters = {
     val url = jdbcUrl(uri)
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", "permissions")
-    driverFor(url).fold(reader)(d => reader.option("driver", d)).load()
+    driverFor(url).foreach(Class.forName)
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.prepareStatement("SELECT partition_filters FROM " +
+        "permissions WHERE user_id = ? AND table_name = ? ORDER BY id")
+      st.setString(1, user)
+      st.setString(2, table)
+      val rs = st.executeQuery()
+      val out = Seq.newBuilder[Map[String, String]]
+      while (rs.next())
+        out ++= PartitionAcl.decodeFilters(rs.getString(1), user, table)
+      out.result()
+    } finally conn.close()
   }
 
   /** DB filters for (user, table): empty when `databaseEnabled` is off
@@ -69,15 +79,8 @@ object DbPermissions {
     // a DIFFERENT permissions DB must never serve the old DB's grants
     // (the memo has no TTL; staleness within ONE database is the
     // reference's documented LRU behavior, cross-database is not)
-    else AclCaches.permsFor(s"${cfg.database.uri}#$user", table) {
-      // the where() lands in the database's WHERE clause (JDBC filter
-      // pushdown) — only this principal's rows cross the wire
-      PartitionAcl.filtersFor(
-        PartitionAcl.parsePermissions(
-          permissionsDF(spark, cfg.database.uri)
-            .where(col("user_id") === user && col("table_name") === table)),
-        user, table)
-    }
+    else AclCaches.permsFor(s"${cfg.database.uri}#$user", table)(
+      lookup(cfg.database.uri, user, table))
 
   /** Drop the memoized grants for (user, table) under this config's
     * database — the immediate-revocation hook (the memo has no TTL). */

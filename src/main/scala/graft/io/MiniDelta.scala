@@ -5912,10 +5912,16 @@ object MiniDelta {
       require(!base.columns.contains("__file"),
         "table has a '__file' column, which collides with the " +
           "copy-on-write file-discovery temp column")
-      val abs = hit(base.withColumn("__file", input_file_name()))
+      // keyed exactly on the qualified path the scan read: a relative
+      // path that is a suffix of another file's must not match it
+      val touched = hit(base.withColumn("__file", input_file_name()))
         .select("__file").distinct().collect()
-        .map(r => decodeFileUri(r.getString(0)))
-      pairs.filter(p => abs.exists(_.endsWith(p.path)))
+        .map(r => new Path(new java.net.URI(r.getString(0)))).toSet
+      val conf = spark.sparkContext.hadoopConfiguration
+      pairs.filter { p =>
+        val raw = new Path(resolvePath(table, p.path))
+        touched.contains(raw.getFileSystem(conf).makeQualified(raw))
+      }
     }
   }
 
@@ -11131,6 +11137,42 @@ object MiniDelta {
     else readFilesWithDv(spark, table, adds, declared)
   }
 
+  /** The change-data files of cdc-served version `v`: the data columns
+    * plus the writer-computed `_change_type`, as one scan over a
+    * [[LogFileIndex]] under the table's read schema (declared types, so
+    * cdc files written before a widening upcast and columns a file
+    * predates null-fill; physical names on mapped tables, relabelled to
+    * logical after). Partition columns live in each cdc action's
+    * partitionValues, not in the files: the index types them and reads
+    * a null value as null, as for table reads. */
+  private def readCdcFiles(spark: SparkSession, table: String, v: Long,
+      files: Seq[LogFile],
+      shape: (Option[org.apache.spark.sql.types.StructType],
+              Option[org.apache.spark.sql.types.StructType], SparkSession))
+      : DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val (readSchema, mapped, session) = shape
+    // a cdc action of a partitioned table must carry every partition
+    // value: the scan null-fills columns the files lack, so a malformed
+    // action (missing partitionValues key) would otherwise surface as
+    // silent nulls in the feed — refuse loudly instead
+    val partCols = partitionColumns(spark, table)
+      .map(pc => mapped.fold(pc)(st => physicalColOf(Some(st), pc)))
+    files.foreach { f =>
+      val missing = partCols.filterNot(f.partitionValues.contains)
+      if (missing.nonEmpty)
+        throw new IllegalStateException(
+          s"change feed at version $v: cdc action is missing " +
+            s"partitionValues for column(s) ${missing.mkString(", ")} — " +
+            "malformed log entry (or the feed window spans a " +
+            "partition-layout change; read the eras separately)")
+    }
+    val ct = StructField("_change_type", StringType)
+    val df = LogFileIndex.scan(session, table, files,
+      Some(StructType(readSchema.fold(Seq(ct))(_.fields.toSeq :+ ct))))
+    mapped.fold(df)(st => restoreLogical(df, StructType(st.fields :+ ct)))
+  }
+
   def readCdf(spark: SparkSession, table: String, fromVersion: Long,
               toVersion: Long = Long.MaxValue): DataFrame = {
     val declared = latestSchema(spark, table,
@@ -11140,9 +11182,8 @@ object MiniDelta {
       "table columns collide with the __cdf_ temp namespace")
     // column-mapped table: cdc-bearing commits' change-data files use
     // the physical schema exactly like the data files — resolve the
-    // mapping once for every cdc-served version in the window
-    val cdfIdMode = idReadMode(spark, table, declared)
-    val cdfMapped = declared.filter(st => isColumnMapped(st) || cdfIdMode)
+    // read shape once for every cdc-served version in the window
+    lazy val cdcShape = scanShape(spark, table, declared)
     def emptyFeed = {
       val base = declared.fold(spark.emptyDataFrame)(s =>
         spark.createDataFrame(
@@ -11161,7 +11202,7 @@ object MiniDelta {
     // Every log line holds one action, so the row count is unchanged.
     val schema = LogFile.feedSchema("version BIGINT, op STRING, " +
       "path STRING, adc BOOLEAN, dv_path STRING, rp STRING, rdc BOOLEAN, " +
-      "cp STRING, cpv MAP<STRING, STRING>, ms STRING")
+      "cp STRING, cpv MAP<STRING, STRING>, ms STRING, csz BIGINT")
     val acts: Array[org.apache.spark.sql.Row] =
       localActions(spark, table, tailV) match {
         case Some(list) => list.map { case (v, node) =>
@@ -11182,7 +11223,10 @@ object MiniDelta {
             cdc.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             cdc.map(pvOfNode(_, "partitionValues")).orNull,
             jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
-              .map(_.asText()).orNull) ++ addScanValues(add))
+              .map(_.asText()).orNull,
+            cdc.flatMap(jnode(_, "size"))
+              .map(n => java.lang.Long.valueOf(n.asLong())).orNull) ++
+            addScanValues(add))
         }.toArray
         case None => logDFIn(spark, table, tail).select(Seq(col("version"),
             col("commitInfo.operation").as("op"),
@@ -11190,7 +11234,8 @@ object MiniDelta {
             coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
             col("remove.path").as("rp"), col("remove.dataChange").as("rdc"),
             col("cdc.path").as("cp"), col("cdc.partitionValues").as("cpv"),
-            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
+            col("metaData.schemaString").as("ms"),
+            col("cdc.size").as("csz")) ++ LogFile.addColumns: _*)
           .collect()
       }
     // a metaData action inside the window that DROPPED columns makes
@@ -11220,9 +11265,10 @@ object MiniDelta {
     // _change_type rows a real writer computed — e.g. MERGE pre/post
     // pairs); the add/remove multiset reconstruction is only the
     // fallback for commits without them
-    val cdcFiles: Map[Long, Seq[(String, Map[String, String])]] =
+    val cdcFiles: Map[Long, Seq[LogFile]] =
       acts.filter(!_.isNullAt(7)).groupBy(_.getLong(0)).view
-        .mapValues(_.map(r => (r.getString(7),
+        .mapValues(_.map(r => LogFile(r.getString(7), None,
+          if (r.isNullAt(10)) None else Some(r.getLong(10)), None,
           if (r.isNullAt(8)) Map.empty[String, String]
           else r.getMap[String, String](8).toMap)).toSeq).toMap
     if (adds.isEmpty && removes.isEmpty && cdcFiles.isEmpty)
@@ -11250,7 +11296,7 @@ object MiniDelta {
     // still exist on disk
     val cdcServed = cdcFiles.keySet
     requireFeedPaths(
-      cdcFiles.values.flatten.map(_._1) ++
+      cdcFiles.values.flatten.map(_.path) ++
         (adds.toSeq ++ removes.toSeq).collect {
           case (v, ps) if !cdcServed(v) => ps }.flatten,
       "file(s)")
@@ -11282,85 +11328,7 @@ object MiniDelta {
       }
       val changed =
         if (cdcServed(v))
-          // the change-data files carry the data columns plus the
-          // writer-computed _change_type; PARTITION columns live in
-          // the cdc action's partitionValues, not in the files — fill
-          // them per partition group or a partitioned CDF table would
-          // fail to resolve its partition columns
-          cdcFiles(v).groupBy(_._2).toSeq
-            .sortBy(_._1.toSeq.sorted.mkString("\u0001"))
-            .map { case (pv, fs2) =>
-              // a cdc action of a partitioned table must carry every
-              // partition value: the declared-schema scan below
-              // null-fills columns the files lack, so a malformed
-              // action (missing partitionValues key) would otherwise
-              // surface as silent nulls in the feed — refuse loudly
-              // instead (the pre-r18 behavior for this anomaly)
-              val missingPv = partitionColumns(spark, table).filterNot(
-                pc => pv.contains(
-                  cdfMapped.fold(pc)(st => physicalColOf(Some(st), pc))))
-              if (missingPv.nonEmpty)
-                throw new IllegalStateException(
-                  s"change feed at version $v: cdc action is missing " +
-                    s"partitionValues for column(s) " +
-                    s"${missingPv.mkString(", ")} — malformed log " +
-                    "entry (or the feed window spans a " +
-                    "partition-layout change; read the eras separately)")
-              val paths = fs2.map(t2 => resolvePath(table, t2._1))
-              cdfMapped match {
-                case Some(st) =>
-                  // mapped table: cdc files store PHYSICAL names
-                  // (+ footer field_ids in id mode) exactly like the
-                  // data files, and the action's partitionValues keys
-                  // are physical too. Scan under the explicit physical
-                  // file schema (id mode resolves by footer field_id
-                  // through the cloned session; columns a file
-                  // predates null-fill — Delta's own evolution
-                  // semantics) and relabel to logical; _change_type is
-                  // not a schema column and reads by its literal name.
-                  import org.apache.spark.sql.types._
-                  val dataFields = st.fields.filterNot(f =>
-                    pv.contains(physicalNameOf(f)))
-                  val fileSchema = StructType(
-                    physicalStruct(StructType(dataFields),
-                      cdfIdMode).fields :+
-                      StructField("_change_type", StringType))
-                  val sess =
-                    if (cdfIdMode) idReadSession(spark) else spark
-                  val df = sess.read.schema(fileSchema).parquet(paths: _*)
-                  val sel = st.fields.map { f =>
-                    val pn = physicalNameOf(f)
-                    if (pv.contains(pn))
-                      lit(pv(pn)).cast(f.dataType).as(f.name)
-                    else col(s"`$pn`").cast(f.dataType).as(f.name)
-                  }
-                  df.select((sel :+ col("_change_type")).toIndexedSeq: _*)
-                case None =>
-                  // scan under the DECLARED schema (r18): cdc files
-                  // written BEFORE a type widening carry the narrow
-                  // type and upcast through this read exactly like the
-                  // data files (incl. nested widenings — the whole
-                  // declared struct shape is requested); columns a cdc
-                  // file predates null-fill, Delta's own evolution
-                  // semantics and what the mapped branch already does
-                  import org.apache.spark.sql.types._
-                  val dataFields = declared.toSeq.flatMap(_.fields)
-                    .filterNot(f => pv.contains(f.name))
-                  val fileSchema = StructType(dataFields.toIndexedSeq :+
-                    StructField("_change_type", StringType))
-                  val df = spark.read.schema(fileSchema).parquet(paths: _*)
-                  val sel = fields.map { n =>
-                    if (pv.contains(n)) {
-                      // genuinely a partition column: the action
-                      // carries it
-                      val dt = declared.map(_(n).dataType)
-                        .getOrElse(StringType)
-                      lit(pv(n)).cast(dt).as(n)
-                    } else col(s"`$n`")
-                  }
-                  df.select((sel :+ col("_change_type")): _*)
-              }
-            }.reduce(_.unionByName(_))
+          readCdcFiles(spark, table, v, cdcFiles(v), cdcShape)
         else if (r.isEmpty)
           readAdds(a).withColumn("_change_type", lit("insert"))
         else {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,5 +74,106 @@ class AclSpec extends AnyFunSuite {
     val pruned = PartitionAcl.allowedFiles(files, allow)
     assert(pruned.count() < files.count())
     assert(pruned.join(files, Seq("key"), "left_anti").count() == 0)
+  }
+
+  // ——— the two membership arms: driver-resident inputs are tested on
+  // the driver, every other input takes the broadcast join; both must
+  // give the equi-join's answer
+
+  /** The membership as the join it restates, build side deduplicated —
+    * the reference answer for every arm. */
+  private def viaJoin(req: DataFrame, alw: DataFrame, how: String) =
+    req.join(broadcast(alw.select("key").distinct()), Seq("key"), how)
+
+  /** A frame's row multiset, binary values by content. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("bin(", ",", ")")
+      case v => String.valueOf(v)
+    }.mkString("[", ",", "]")).sorted.toSeq
+
+  /** Both membership functions against the join formula on the three
+    * arm pairs of (requests, allowed): local/local, local/distributed,
+    * distributed/distributed. A repartition keeps the rows and makes the
+    * plan non-local. */
+  private def checkArms(req: DataFrame, alw: DataFrame): Unit = {
+    val ok = rows(viaJoin(req, alw, "left_semi"))
+    val no = rows(viaJoin(req, alw, "left_anti"))
+    Seq("local/local" -> (req, alw),
+      "local/distributed" -> (req, alw.repartition(2)),
+      "distributed/distributed" -> (req.repartition(2), alw.repartition(2)))
+      .foreach { case (arm, (r, a)) =>
+        assert(rows(PartitionAcl.authorize(r, a)) == ok, arm)
+        assert(rows(PartitionAcl.denied(r, a)) == no, arm)
+      }
+  }
+
+  test("both membership arms: duplicates and null keys on either side") {
+    import spark.implicits._
+    val req = Seq[(String, Int)](("a", 1), ("a", 1), ("b", 2), (null, 3),
+      ("c", 4), (null, 3), ("d", 5)).toDF("key", "n")
+    val alw = Seq[String]("a", "a", "b", null, "d", "d").toDF("key")
+    checkArms(req, alw)
+    // pinned, not only compared: duplicate requests survive, a null
+    // request key is denied, a null allowed key matches nothing
+    assert(rows(PartitionAcl.authorize(req, alw)) ==
+      Seq("[a,1]", "[a,1]", "[b,2]", "[d,5]"))
+    assert(rows(PartitionAcl.denied(req, alw)) ==
+      Seq("[c,4]", "[null,3]", "[null,3]"))
+  }
+
+  test("both membership arms: numeric and binary keys, empty allowed set") {
+    import spark.implicits._
+    checkArms(Seq[(Option[Long], String)]((Some(1L), "x"), (Some(2L), "y"),
+      (None, "z"), (Some(2L), "w")).toDF("key", "v"),
+      Seq[Option[Long]](Some(2L), None, Some(7L)).toDF("key"))
+    checkArms(Seq(Array[Byte](1, 2), Array[Byte](3)).toDF("key"),
+      Seq(Array[Byte](1, 2)).toDF("key"))
+    checkArms(Seq(-0.0d, 0.0d, Double.NaN, 1.5d).toDF("key"),
+      Seq(0.0d, Double.NaN).toDF("key"))
+    checkArms(Seq("a", "b").toDF("key"), Seq.empty[String].toDF("key"))
+  }
+
+  test("key types that differ between the frames take the join arm") {
+    import spark.implicits._
+    // an int request key against string allowed keys: the join coerces
+    // the types, the answer is the join's
+    checkArms(Seq((1, "x"), (2, "y"), (3, "z")).toDF("key", "v"),
+      Seq("1", "3", "3").toDF("key"))
+  }
+
+  test("local/local membership runs no Spark job") {
+    import spark.implicits._
+    val req = (1 to 200).map(i => s"t/part-$i.parquet").toDF("key")
+    val alw = (1 to 200 by 3).map(i => s"t/part-$i.parquet").toDF("key")
+    val sc = spark.sparkContext
+    val group = s"acl-local-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "local membership")
+      val (ok, no) =
+        try (PartitionAcl.authorize(req, alw).collect().length,
+          PartitionAcl.denied(req, alw).collect().length)
+        finally sc.clearJobGroup()
+      assert(ok == 67 && no == 133)
+      // the distributed arm in a marker group does run a job; listener
+      // events arrive in order, so once its start is seen every job
+      // started before it has been seen too
+      sc.setJobGroup(marker, "distributed membership")
+      try PartitionAcl.authorize(req.repartition(2), alw).collect()
+      finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!started.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(started.contains(marker))
+      assert(!started.contains(group), started)
+    } finally sc.removeSparkListener(listener)
   }
 }

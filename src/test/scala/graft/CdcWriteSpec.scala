@@ -447,4 +447,70 @@ class CdcWriteSpec extends AnyFunSuite {
     assert(got == Set(
       (1L, "a", "x", "delete"), (2L, "b", "x", "delete")))
   }
+
+  // ——— cdc-served versions read through the log-backed file index:
+  // partition values are typed from the declared column and a null
+  // one (logged as __HIVE_DEFAULT_PARTITION__) reads as null
+
+  /** The feed of an UPDATE of the row in the null partition of a
+    * `region`-partitioned CDF table, as (id, v, region, change type). */
+  private def nullPartitionFeed(t: String, region: String)
+      : Set[(Long, String, Option[Any], String)] = {
+    MiniDelta.invalidateSnapshot(t)
+    MiniDelta.update(spark, t, col("id") === 2L, Map("v" -> lit("B")),
+      Seq(region))
+    val last = MiniDelta.latestVersion(spark, t)
+    assert(commitText(t, last).contains("\"cdc\":"))
+    MiniDelta.readCdf(spark, t, last - 1, last)
+      .select("id", "v", region, "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)),
+        r.getString(3))).toSet
+  }
+
+  test("cdc feed: a null string partition value reads as null") {
+    val t = freshTable()
+    MiniDelta.append(spark, Seq[(Long, String, String)]((1L, "a", "r1"),
+      (2L, "b", null)).toDF("id", "v", "region"), t, Seq("region"))
+    MiniDelta.setTableProperties(spark, t,
+      Map("delta.enableChangeDataFeed" -> "true"))
+    assert(nullPartitionFeed(t, "region") == Set(
+      (2L, "b", None, "update_preimage"),
+      (2L, "B", None, "update_postimage")))
+  }
+
+  test("cdc feed: a null int partition value reads as null, typed") {
+    val t = freshTable()
+    MiniDelta.append(spark, Seq[(Long, String, Option[Int])]((1L, "a",
+      Some(1)), (2L, "b", None)).toDF("id", "v", "region"), t,
+      Seq("region"))
+    MiniDelta.setTableProperties(spark, t,
+      Map("delta.enableChangeDataFeed" -> "true"))
+    assert(nullPartitionFeed(t, "region") == Set(
+      (2L, "b", None, "update_preimage"),
+      (2L, "B", None, "update_postimage")))
+    // the non-null partition keeps its declared int type
+    MiniDelta.update(spark, t, col("id") === 1L, Map("v" -> lit("A")),
+      Seq("region"))
+    val last = MiniDelta.latestVersion(spark, t)
+    val feed = MiniDelta.readCdf(spark, t, last - 1, last)
+    assert(feed.schema("region").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(feed.select("region").distinct().collect().map(_.getInt(0))
+      .toSeq == Seq(1))
+  }
+
+  test("cdc feed on a name-mapped table: null partition value reads as null") {
+    import org.apache.spark.sql.types._
+    val t = freshTable()
+    MiniDelta.createTable(spark, t, StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType),
+      StructField("region", StringType))), partitionBy = Seq("region"),
+      properties = Map("delta.columnMapping.mode" -> "name",
+        "delta.enableChangeDataFeed" -> "true"))
+    MiniDelta.append(spark, Seq[(Long, String, String)]((1L, "a", "r1"),
+      (2L, "b", null)).toDF("id", "v", "region"), t, Seq("region"))
+    assert(nullPartitionFeed(t, "region") == Set(
+      (2L, "b", None, "update_preimage"),
+      (2L, "B", None, "update_postimage")))
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.acl.{AclCaches, DbPermissions}
+import graft.acl.{AclCaches, DbPermissions, PartitionAcl}
 import graft.catalog.{DatabaseConfig, GraftConfig}
 
 /** Live DB-backed permission store (reference src/database.rs:28-52)
@@ -117,5 +117,72 @@ class DbPermissionsSpec extends AnyFunSuite {
     assert(DbPermissions.mergedFilters(spark, cfg, "alice", "trades") ==
       Seq(Map("region" -> "eu"), Map("year" -> "2023"),
         Map("year" -> "2024")))
+  }
+
+  /** A database whose `partition_filters` column admits NULL, holding
+    * one row per (user, value); a None value is stored as NULL. */
+  private def dbWithRows(rows: Seq[(String, Option[String])]): String = {
+    System.setProperty("derby.stream.error.file", "/tmp/graft_derby.log")
+    val dir = Files.createTempDirectory("graftdb").toString + "/perms"
+    val conn = java.sql.DriverManager
+      .getConnection(s"jdbc:derby:$dir;create=true")
+    try {
+      conn.createStatement().executeUpdate(
+        "CREATE TABLE permissions (id INT PRIMARY KEY, " +
+          "user_id VARCHAR(64) NOT NULL, table_name VARCHAR(64) NOT NULL, " +
+          "partition_filters VARCHAR(1024))")
+      val st = conn.prepareStatement(
+        "INSERT INTO permissions VALUES (?, ?, 'trades', ?)")
+      rows.zipWithIndex.foreach { case ((user, json), i) =>
+        st.setInt(1, i + 1)
+        st.setString(2, user)
+        st.setString(3, json.orNull)
+        st.executeUpdate()
+      }
+      st.close()
+    } finally conn.close()
+    dir
+  }
+
+  test("a malformed or NULL grant fails closed by name; [] is allow-all") {
+    val dir = dbWithRows(Seq(
+      "dave" -> Some("""[{"region":"r1"}"""),     // truncated: his only row
+      "erin" -> None,                              // NULL
+      "finn" -> Some("""{"region":"r1"}"""),      // not a list
+      "gail" -> Some("""[{"region":1}]"""),       // a non-string value
+      "hugo" -> Some("""[{"region":"r1"}] x"""),  // trailing garbage
+      "kate" -> Some("""[{"region":"r1","region":"r2"}]"""), // duplicate key
+      "ivan" -> Some("[]"),                        // P7: allow-all
+      "jill" -> Some("""[{"region":"r2"}]"""),
+      "jill" -> Some("[]")))                       // adds nothing
+    val cfg = GraftConfig(databaseEnabled = true,
+      database = DatabaseConfig(s"derby:$dir"))
+    AclCaches.dbPerms.clear()
+    Seq("dave", "erin", "finn", "gail", "hugo", "kate").foreach { user =>
+      val e = intercept[PartitionAcl.MalformedGrantException](
+        DbPermissions.filtersFor(spark, cfg, user, "trades"))
+      assert(e.getMessage.contains(s"user '$user'") &&
+        e.getMessage.contains("table 'trades'"), e.getMessage)
+      // a failed lookup is not memoized as "no grants"
+      assert(AclCaches.dbPerms.get(
+        AclCaches.cacheKey(s"${cfg.database.uri}#$user", "trades")).isEmpty)
+    }
+    assert(DbPermissions.filtersFor(spark, cfg, "ivan", "trades").isEmpty)
+    assert(DbPermissions.filtersFor(spark, cfg, "jill", "trades") ==
+      Seq(Map("region" -> "r2")))
+  }
+
+  test("parsePermissions fails closed on a malformed or NULL grant") {
+    import spark.implicits._
+    def lookup(json: String) = PartitionAcl.filtersFor(
+      PartitionAcl.parsePermissions(Seq((1, "dave", "trades", json))
+        .toDF("id", "user_id", "table_name", "partition_filters")),
+      "dave", "trades")
+    val nul = intercept[Exception](lookup(null))
+    assert(nul.getMessage.contains("user 'dave'") &&
+      nul.getMessage.contains("table 'trades'"), nul.getMessage)
+    intercept[Exception](lookup("""[{"region":"r1"}"""))
+    assert(lookup("[]").isEmpty)
+    assert(lookup("""[{"region":"r1"}]""") == Seq(Map("region" -> "r1")))
   }
 }

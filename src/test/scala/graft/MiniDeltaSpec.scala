@@ -3419,4 +3419,40 @@ class MiniDeltaSpec extends AnyFunSuite {
     assert(MiniDelta.snapshotFiles(spark, t).count() == 0) // plain remove
     assert(MiniDelta.readFiltered(spark, t, Seq.empty).count() == 0)
   }
+
+  test("copy-on-write discovery keys touched files exactly, not by suffix") {
+    val t = freshTable()
+    // two files whose relative paths differ only by a prefix: one
+    // path is a suffix of the other's
+    def land(rel: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = Files.createTempDirectory("cowland").toString + "/out"
+      rows.toDF("id", "v").coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(t, rel)
+      dst.getParentFile.mkdirs()
+      Files.move(part.toPath, dst.toPath)
+    }
+    land("a/part-0.parquet", Seq((1L, "a"), (2L, "b")))
+    land("xa/part-0.parquet", Seq((3L, "c"), (4L, "d")))
+    val schemaJson = jsonStr(Seq((1L, "a")).toDF("id", "v").schema.json)
+    rawCommit(t, 0L, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"schemaString":$schemaJson,"partitionColumns":[],"configuration":{}}}""") ++
+      Seq("a/part-0.parquet", "xa/part-0.parquet").map(f =>
+        s"""{"add":{"path":${jsonStr(f)},"partitionValues":{},"size":${sizeOf(t, f)},"dataChange":true}}"""))
+    // the DELETE hits rows of xa/part-0.parquet only
+    MiniDelta.delete(spark, t, col("id") === 3L, Seq.empty)
+    val c1 = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      f"$t%s/_delta_log/${1L}%020d.json")), "UTF-8")
+    val removed = """"remove":\{"path":"([^"]+)"""".r
+      .findAllMatchIn(c1).map(_.group(1)).toSeq
+    assert(removed == Seq("xa/part-0.parquet"), c1)
+    MiniDelta.invalidateSnapshot(t)
+    assert(MiniDelta.snapshotFiles(spark, t).select("path").collect()
+      .map(_.getString(0)).contains("a/part-0.parquet"))
+    assert(MiniDelta.readFiltered(spark, t, Seq.empty).orderBy("id")
+      .as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "b"), (4L, "d")))
+  }
 }
