@@ -542,7 +542,7 @@ object SparkEntry {
     }),
     "s25_deletion_vectors" -> ((s, d) => {
       // deletion-vector DELETE end to end: enable DVs, delete qty=1 —
-      // rows are MASKED by a sidecar, no data file rewritten. The read
+      // rows are MASKED by a deletion vector, no data file rewritten. The read
       // back must equal the copy-on-write result exactly, and every
       // partition that had a qty=1 row must carry exactly one DV'd file
       // (single-file-per-partition appends make that deterministic).

@@ -100,6 +100,15 @@ object MiniDelta {
       s"$table: commit $version holds a malformed action line: " +
         line.take(200))
 
+  /** A selected checkpoint carries no `protocol` row. The Delta
+    * protocol requires one (and a `metaData` row) in every checkpoint;
+    * guessing the contract could skip a feature gate, so the table
+    * refuses by name. */
+  final class MalformedCheckpointException(table: String, version: Long)
+    extends RuntimeException(
+      s"$table: checkpoint $version carries no protocol action; the " +
+        "Delta protocol requires one in every checkpoint")
+
   /** Reader features (protocol minReaderVersion 3) this engine honors.
     * deletionVectors masks are READ (u/i/p roaring forms decoded by
     * [[RoaringDv]]; only unknown storage forms are refused).
@@ -1331,16 +1340,10 @@ object MiniDelta {
         StructField("dataChange", BooleanType),
         // Delta protocol: per-file stats ride as a JSON-escaped STRING
         StructField("stats", StringType),
-        // deletion vector attached to this file (Delta DV shape,
-        // restated): path of the row-index sidecar + how many rows it
-        // masks; null = no DV
-        StructField("dv", StructType(Seq(
-          StructField("path", StringType),
-          StructField("cardinality", LongType)))),
-        // the REAL Delta protocol's DV descriptor (roaring bitmap,
-        // inline or file storage) — parsed so tables written by real
-        // Delta clients are DETECTED and refused loudly instead of
-        // silently resurrecting deleted rows (see requireReadable)
+        // the Delta protocol's DV descriptor (roaring bitmap, inline or
+        // file storage); an unknown storage form is refused loudly
+        // instead of silently resurrecting deleted rows (see
+        // requireReadable)
         StructField("deletionVector", StructType(Seq(
           StructField("storageType", StringType),
           StructField("pathOrInlineDv", StringType),
@@ -1407,8 +1410,7 @@ object MiniDelta {
   }
 
   /** S5: the raw log as a DataFrame (one row per action). Reads the
-    * listed commit files only — the checkpoint schema sidecar also
-    * lives in `_delta_log` with a .json suffix and is NOT an action. */
+    * commit files only. */
   def logDF(spark: SparkSession, table: String): DataFrame = {
     val files = logJsonVersions(spark, table).map(_._2)
     if (files.isEmpty)
@@ -1464,20 +1466,29 @@ object MiniDelta {
     * above the scan, so no caller's filter merges into it or moves below
     * it to drop a torn line unseen, while callers still read only the
     * columns they select. It names `protocol` too (cheap, null on nearly
-    * every line): Spark refuses a JSON scan of the corrupt column alone. */
+    * every line): Spark refuses a JSON scan of the corrupt column alone.
+    * An add carrying the legacy `dv` field fails the same way
+    * ([[legacyDvRefusal]]); the field is read only to refuse it. */
   private def logDFIn(spark: SparkSession, table: String,
                       files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructType}
     val corrupt = col("_corrupt_record")
     val version = regexp_extract(input_file_name(), "([0-9]{20})\\.json", 1)
       .cast("long")
+    val readSchema = StructType(logSchema.map {
+      case a if a.name == "add" => a.copy(dataType =
+        a.dataType.asInstanceOf[StructType].add("dv", StringType))
+      case f => f
+    }).add("_corrupt_record", StringType)
     spark.read
-      .schema(logSchema.add("_corrupt_record",
-        org.apache.spark.sql.types.StringType))
+      .schema(readSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(files.toIndexedSeq: _*)
       .where(corrupt.isNull ||
         malformedCommitUdf(lit(table), version, corrupt, col("protocol")))
+      .where(col("add.dv").isNull || legacyDvUdf(lit(table)))
+      .withColumn("add", col("add").dropFields("dv"))
       .drop("_corrupt_record")
       .withColumn("version", version)
   }
@@ -1491,6 +1502,22 @@ object MiniDelta {
         Option(version).fold(-1L)(_.longValue), line)): Boolean)
       .asNondeterministic()
 
+  /** Raises [[legacyDvRefusal]] inside the distributed log read. */
+  private lazy val legacyDvUdf =
+    udf((table: String) => (throw legacyDvRefusal(table)): Boolean)
+      .asNondeterministic()
+
+  /** An add action carrying `dv` (a parquet-sidecar deletion vector
+    * under `_delta_log/_dv/`, the form early versions of this engine
+    * wrote) or a checkpoint add row with a non-null `dv.path`. The form
+    * is no longer read, and replaying the add without its mask would
+    * bring the masked rows back, so every reader refuses it by name. */
+  private def legacyDvRefusal(table: String) =
+    new UnsupportedTableFeatureException(
+      s"$table carries legacy parquet-sidecar deletion vectors (add.dv), " +
+        "a form this engine no longer reads; reading past them would " +
+        "resurrect deleted rows")
+
   // memo: (table, version) -> declared schema, the [[tableConfigMemo]]
   // twin — without it every write and read-shape build re-ran the
   // JSON-tail collect once per consulting call site
@@ -1502,7 +1529,7 @@ object MiniDelta {
     * simply lack newer columns and read as null). None before the first
     * commit or on pre-metaData tables.
     *
-    * Scale: resolved from the checkpoint's schema sidecar plus the JSON
+    * Scale: resolved from the checkpoint's metaData row plus the JSON
     * tail after it — O(since-last-checkpoint), not O(history), same as
     * snapshot replay — and memoized per (table, effective version)
     * like [[tableConfig]], cleared via [[invalidateSnapshot]]. */
@@ -1523,11 +1550,8 @@ object MiniDelta {
                                   atMost: Long)
       : Option[org.apache.spark.sql.types.StructType] = {
     val cp = latestCheckpoint(spark, table, atMost)
-    // own checkpoints carry the schema in a sidecar; REAL Delta
-    // checkpoints carry it in their metaData action row
-    val base = cp.flatMap(v => readSchemaSidecar(spark, table, v)
-      .orElse(readCheckpointMetaData(spark, table, v)
-        .map(m => parseSchema(m._1))))
+    val base = cp.flatMap(v => readCheckpointMetaData(spark, table, v)
+      .map(m => parseSchema(m._1)))
     val from = if (base.isDefined) cp.get else -1L
     // the tail is O(since-last-checkpoint) SMALL files: parse them on
     // the driver (newest metaData wins) — a Spark JSON job here cost
@@ -1584,39 +1608,21 @@ object MiniDelta {
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  private def schemaSidecarPath(table: String, version: Long): String =
-    f"${logDir(table)}%s/$version%020d.checkpoint.schema.json"
-
-  private def readSchemaSidecar(spark: SparkSession, table: String,
-                                version: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(schemaSidecarPath(table, version))
-    val f = fs(spark, table)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      Some(parseSchema(new String(bytes, "UTF-8")))
-    } finally in.close()
-  }
-
   // a named checkpoint file is immutable, so its metaData row memoizes
   // forever — schema/config resolution on a checkpointed table costs a
-  // hashmap lookup in steady state, like the sidecar read it replaced
+  // hashmap lookup in steady state
   private val cpMetaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), Option[(String, Option[Map[String, String]])]]()
 
-  /** metaData row of an action-shape checkpoint (real writers and this
-    * engine's own since r6 — schema/config as checkpoint COLUMNS, no
-    * sidecars): (schemaString, configuration). None when the
-    * checkpoint is the legacy directory-manifest shape or carries no
-    * metaData row. */
+  /** metaData row of a checkpoint (schema/config as checkpoint
+    * COLUMNS, the Delta protocol's shape): (schemaString,
+    * configuration). None when the checkpoint carries no metaData
+    * row. */
   private def readCheckpointMetaData(spark: SparkSession, table: String,
                                      version: Long)
       : Option[(String, Option[Map[String, String]])] =
     cpMetaCache.computeIfAbsent((table, version), { _ =>
-      checkpointActionDF(spark, table, version)
+      Some(checkpointActionDF(spark, table, version))
         .filter(_.columns.contains("metaData"))
         .flatMap(_.where(col("metaData.schemaString").isNotNull)
           .select(col("metaData.schemaString"), col("metaData.configuration"))
@@ -1626,40 +1632,11 @@ object MiniDelta {
             else Some(r.getMap[String, String](1).toMap))))
     })
 
-  private def configSidecarPath(table: String, version: Long): String =
-    f"${logDir(table)}%s/$version%020d.checkpoint.config.json"
-
-  /** Table configuration at a checkpoint — written alongside the schema
-    * sidecar so replaying from the checkpoint resolves table properties
-    * (constraints!) without scanning pre-checkpoint JSON. `None` when
-    * the file is missing (legacy or hand-cleaned checkpoint) — the
-    * caller must fall back to a full log scan, NOT assume empty: a
-    * lost sidecar silently disarming constraints would be a data-
-    * integrity hole. */
-  private def readConfigSidecar(spark: SparkSession, table: String,
-                                version: Long): Option[Map[String, String]] = {
-    val p = new Path(configSidecarPath(table, version))
-    val f = fs(spark, table)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val txt =
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8")
-      } finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-    val it = node.fieldNames()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) { val k = it.next(); b += k -> node.get(k).asText() }
-    Some(b.result())
-  }
-
   // memo: (table, version) -> resolved configuration. The log below a
   // version is immutable, so the entry never goes stale for a live
   // table; a table REPLACED at the same path clears through
   // [[invalidateSnapshot]] like every other permanent memo. Without
-  // this, every commit re-resolved the config (a sidecar read + a
+  // this, every commit re-resolved the config (a checkpoint read + a
   // Spark collect over the JSON tail) once per consulting call site —
   // the per-write fixed cost that dominated the write-lifecycle bench.
   private val tableConfigMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -1667,9 +1644,10 @@ object MiniDelta {
 
   /** The table's configuration (properties map) as of `atMost` — the
     * latest metaData action's `configuration`, resolved like
-    * [[latestSchema]]: checkpoint config sidecar + JSON tail, falling
-    * back to the full-history scan when the sidecar is missing (same
-    * degradation rule as the schema sidecar). Memoized per
+    * [[latestSchema]]: the checkpoint's metaData row + JSON tail,
+    * falling back to the full-history scan when the checkpoint's
+    * metaData states no configuration (a null map is "not stated",
+    * never "empty"). Memoized per
     * (table, effective version) — the effective version pins the
     * resolution, so repeat calls pay a hashmap lookup, not IO. */
   def tableConfig(spark: SparkSession, table: String,
@@ -1689,12 +1667,12 @@ object MiniDelta {
   private def tableConfigResolve(spark: SparkSession, table: String,
                                  atMost: Long): Map[String, String] = {
     val cp = latestCheckpoint(spark, table, atMost)
-    val base = cp.flatMap(v => readConfigSidecar(spark, table, v)
-      .orElse(readCheckpointMetaData(spark, table, v).flatMap(_._2)))
+    val base = cp.flatMap(v =>
+      readCheckpointMetaData(spark, table, v).flatMap(_._2))
     val from = if (base.isDefined) cp.get else -1L
     // a legacy-format metaData with NULL configuration is "not stated",
     // not "explicitly empty" — treating it as empty would silently
-    // disarm CHECK constraints carried by the sidecar/older metaData.
+    // disarm CHECK constraints carried by the checkpoint/older metaData.
     // Scan back (driver-parsed, the latestSchemaResolve discipline) to
     // the newest metaData that CARRIES a configuration (an explicit {}
     // still overrides; it deserializes as an empty map, not null).
@@ -4269,13 +4247,14 @@ object MiniDelta {
       if (created) {
         // OUTSIDE the conflict try: a failed checkpoint job must not be
         // misread as a commit conflict (the commit itself persisted) —
-        // and a partial checkpoint is never selected because
-        // latestCheckpoint requires the writer's _SUCCESS marker
+        // and a partial checkpoint is never selected: a single file is
+        // renamed into place whole, and only complete part sets count
+        // ([[checkpointComplete]])
         if ((v + 1) % checkpointEvery(spark, table) == 0)
           try writeCheckpoint(spark, table, v) catch {
             case e: Exception => // non-fatal: the commit persisted and a
-              // partial checkpoint is never selected (no _SUCCESS);
-              // snapshots fall back to full JSON replay
+              // partial checkpoint is never selected; snapshots replay
+              // from the previous checkpoint
               System.err.println(
                 s"[minidelta] checkpoint at v=$v failed (non-fatal): $e")
           }
@@ -4634,14 +4613,15 @@ object MiniDelta {
     raw"[0-9]{20}\.checkpoint\.([0-9]{10})\.([0-9]{10})\.parquet".r
 
   /** V2 checkpoint manifest naming (Delta spec): `<v>.checkpoint.
-    * <uniqueStr>.{json|parquet}` — one UUID-suffixed MANIFEST whose
-    * rows are protocol/metaData/checkpointMetadata/sidecar actions;
-    * the add/remove bulk lives in parquet files under
+    * <uuid>.{json|parquet}` — one UUID-suffixed MANIFEST whose rows
+    * are protocol/metaData/checkpointMetadata/sidecar actions; the
+    * add/remove bulk lives in parquet files under
     * `_delta_log/_sidecars/` that the sidecar actions name. The
-    * unique suffix makes the
-    * write atomic-by-naming (never a partial multi-part set). */
+    * unique suffix makes the write atomic-by-naming (never a partial
+    * multi-part set). Only a UUID suffix names a manifest. */
   private val checkpointV2Name =
-    raw"[0-9]{20}\.checkpoint\.([^.]+)\.(json|parquet)".r
+    ("[0-9]{20}\\.checkpoint\\.[0-9a-fA-F]{8}(?:-[0-9a-fA-F]{4}){3}" +
+      "-[0-9a-fA-F]{12}\\.(json|parquet)").r
 
   /** The v2 manifest file for `version`, if one exists. One listing,
     * only reached when the classic single file is absent. */
@@ -4653,8 +4633,7 @@ object MiniDelta {
     val prefix = f"$version%020d.checkpoint."
     f.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith(prefix))
-      .collect { case nm @ checkpointV2Name(u, _)
-          if !u.forall(_.isDigit) => nm } // digits = multi-part naming
+      .collect { case nm @ checkpointV2Name(_) => nm }
       .sorted.headOption // deterministic if several writers raced
       .map(nm => s"${logDir(table)}/$nm")
   }
@@ -4720,35 +4699,33 @@ object MiniDelta {
     }
   }
 
-  /** Action-shape checkpoint rows at `version`: the classic single FILE
-    * or the union of a complete multi-part set. None for legacy
-    * directory manifests (callers keep their sidecar fallback) and
-    * absent checkpoints. */
+  /** Checkpoint action rows at `version`, for every shape
+    * [[latestCheckpoint]] selects: the classic single FILE, the union
+    * of a complete multi-part set, or a v2 manifest with its sidecars.
+    * A directory at `<v>.checkpoint.parquet` is not a checkpoint. */
   private def checkpointActionDF(spark: SparkSession, table: String,
-                                 version: Long): Option[DataFrame] = {
-    val f = fs(spark, table)
-    val single = new Path(checkpointPath(table, version))
-    val st =
-      try Some(f.getFileStatus(single))
-      catch { case _: java.io.FileNotFoundException => None }
-    st match {
-      case Some(s) if s.isFile =>
-        Some(spark.read.parquet(checkpointPath(table, version)))
-      case Some(_) => None // legacy directory manifest
-      case None =>
-        val parts = checkpointMultiParts(spark, table, version)
-        if (parts.nonEmpty) Some(spark.read.parquet(parts: _*))
-        else checkpointV2Manifest(spark, table, version)
-          .map(v2CheckpointActionDF(spark, table, _))
+                                 version: Long): DataFrame = {
+    val single = checkpointPath(table, version)
+    if (isFile(fs(spark, table), single)) spark.read.parquet(single)
+    else {
+      val parts = checkpointMultiParts(spark, table, version)
+      if (parts.nonEmpty) spark.read.parquet(parts: _*)
+      else checkpointV2Manifest(spark, table, version)
+        .map(v2CheckpointActionDF(spark, table, _))
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"$table: no checkpoint at version $version"))
     }
   }
 
-  /** Only COMPLETE checkpoints are ever selected: a crashed legacy
-    * checkpoint job leaves a directory without the _SUCCESS marker, a
-    * crashed multi-part writer leaves a partial part set — replaying
-    * either would silently drop live files from every subsequent
-    * snapshot. A classic single-file checkpoint is an atomically-
-    * renamed FILE, complete by construction. */
+  private def isFile(f: org.apache.hadoop.fs.FileSystem, p: String) =
+    try f.getFileStatus(new Path(p)).isFile
+    catch { case _: java.io.FileNotFoundException => false }
+
+  /** Only COMPLETE checkpoints are ever selected: a crashed multi-part
+    * writer leaves a partial part set, and replaying it would silently
+    * drop live files from every subsequent snapshot. A classic
+    * single-file checkpoint is an atomically-renamed FILE and a v2
+    * manifest one UUID-named file, complete by construction. */
   // memo: ONLY completeness=true is recorded (a complete checkpoint
   // is immutable until log cleanup deletes it — cleanupLogs and
   // invalidateSnapshot both clear the table's entries). The absent
@@ -4759,14 +4736,8 @@ object MiniDelta {
   private def checkpointComplete(spark: SparkSession, table: String,
                                  v: Long): Boolean = {
     if (cpCompleteMemo.containsKey((table, v))) return true
-    val f = fs(spark, table)
-    val p = new Path(checkpointPath(table, v))
-    val ok =
-      f.exists(new Path(s"${checkpointPath(table, v)}/_SUCCESS")) ||
-      (try f.getFileStatus(p).isFile
-       catch { case _: java.io.FileNotFoundException => false }) ||
+    val ok = isFile(fs(spark, table), checkpointPath(table, v)) ||
       checkpointMultiParts(spark, table, v).nonEmpty ||
-      // a v2 manifest is one UUID-named file: complete by construction
       checkpointV2Manifest(spark, table, v).isDefined
     if (ok) cpCompleteMemo.put((table, v), java.lang.Boolean.TRUE)
     ok
@@ -4789,9 +4760,7 @@ object MiniDelta {
     // version on every snapshot load — and missing a foreign
     // checkpoint ahead of the pointer only lengthens the JSON tail,
     // never wrongs the replay.
-    def singleFileAt(v: Long) =
-      try f.getFileStatus(new Path(checkpointPath(table, v))).isFile
-      catch { case _: java.io.FileNotFoundException => false }
+    def singleFileAt(v: Long) = isFile(f, checkpointPath(table, v))
     readLastCheckpoint(spark, table) match {
       case Some(p) if p <= atMost && complete(p) =>
         var best = p
@@ -4810,22 +4779,13 @@ object MiniDelta {
           names.collect { // multi-part names carry the version up front
             case nm @ checkpointPartName(_, _) => nm.take(20).toLong } ++
           names.collect { // v2 manifests: UUID-suffixed single files
-            case nm @ checkpointV2Name(u, _)
-                if !u.forall(_.isDigit) => nm.take(20).toLong })
+            case nm @ checkpointV2Name(_) => nm.take(20).toLong })
           .distinct
           .filter(_ <= atMost)
           .filter(complete)
         if (vs.isEmpty) None else Some(vs.max)
     }
   }
-
-  /** The newest checkpoint, when it is action-shape (this engine's r6+
-    * single file, a real writer's, or a multi-part set) — None for
-    * checkpoint-less tables and legacy directory manifests. */
-  private def latestFileCheckpoint(spark: SparkSession, table: String)
-      : Option[(Long, DataFrame)] =
-    latestCheckpoint(spark, table, Long.MaxValue).flatMap(v =>
-      checkpointActionDF(spark, table, v).map((v, _)))
 
   /** A resolved `protocol` action. Rendering follows the Delta rule
     * that the feature lists exist only at versions that support them
@@ -4899,36 +4859,35 @@ object MiniDelta {
   /** The table's protocol contract as of `version`: the LATEST protocol
     * action, folded from the newest checkpoint at or below `cpAtMost`
     * plus the JSON tail after it — the same replay window snapshots
-    * use. Own pre-r6 directory-shape checkpoints carry no protocol row;
-    * if neither base nor tail yields one, the full (existence-filtered)
-    * JSON history is scanned so the v0 action is never missed. Pure
-    * driver metadata, substring-screened like [[requireReadable]]. */
+    * use. A checkpoint without a protocol row raises
+    * [[MalformedCheckpointException]]. The tail is driver metadata,
+    * substring-screened like [[requireReadable]]. */
   private def resolveProtocol(spark: SparkSession, table: String,
                               version: Long, cpAtMost: Long)
       : Option[ProtocolAction] = {
-    val f = fs(spark, table)
     val cp = if (cpAtMost < 0) None
              else latestCheckpoint(spark, table, cpAtMost)
-    val base: Option[ProtocolAction] = cp.flatMap { v =>
-      checkpointActionDF(spark, table, v).flatMap { raw =>
-        if (!raw.columns.contains("protocol")) None
-        else raw.where(col("protocol.minReaderVersion").isNotNull)
-          .select(col("protocol.minReaderVersion").cast("int"),
-            col("protocol.minWriterVersion").cast("int"),
-            col("protocol.readerFeatures").cast("array<string>"),
-            col("protocol.writerFeatures").cast("array<string>"))
-          .collect().headOption.map { r =>
-            ProtocolAction(r.getInt(0), r.getInt(1),
-              if (r.isNullAt(2)) Nil else r.getSeq[String](2),
-              if (r.isNullAt(3)) Nil else r.getSeq[String](3))
-          }
-      }
-    }
-    val tail = scanProtocolRange(spark, table, cp.getOrElse(-1L) + 1, version)
-    tail.orElse(base)
-      .orElse(if (cp.isDefined) scanProtocolRange(spark, table, 0L, cp.get)
-              else None)
+    val base = cp.map(v =>
+      checkpointProtocol(checkpointActionDF(spark, table, v), table, v))
+    scanProtocolRange(spark, table, cp.getOrElse(-1L) + 1, version)
+      .orElse(base)
   }
+
+  /** The protocol row of checkpoint `v`'s action rows `raw`; none
+    * raises [[MalformedCheckpointException]]. */
+  private def checkpointProtocol(raw: DataFrame, table: String,
+                                 v: Long): ProtocolAction =
+    Some(raw).filter(_.columns.contains("protocol"))
+      .flatMap(_.where(col("protocol.minReaderVersion").isNotNull)
+        .select(col("protocol.minReaderVersion").cast("int"),
+          col("protocol.minWriterVersion").cast("int"),
+          col("protocol.readerFeatures").cast("array<string>"),
+          col("protocol.writerFeatures").cast("array<string>"))
+        .collect().headOption)
+      .map(r => ProtocolAction(r.getInt(0), r.getInt(1),
+        if (r.isNullAt(2)) Nil else r.getSeq[String](2),
+        if (r.isNullAt(3)) Nil else r.getSeq[String](3)))
+      .getOrElse(throw new MalformedCheckpointException(table, v))
 
   /** The LATEST protocol action in commit JSONs `[from, to]`, if any —
     * substring-screened driver reads, no Spark jobs. */
@@ -5093,8 +5052,7 @@ object MiniDelta {
     * past `maxActionsPerPart` actions it splits into the Delta
     * multi-part naming (`<v>.checkpoint.<i>.<n>.parquet`) — the
     * 10^7-file regime — which [[checkpointActionDF]] reads back as a
-    * union. Sidecar files from older checkpoints remain readable; new
-    * checkpoints stop writing them. */
+    * union. */
   /** Snapshots past this action count render their checkpoint bulk as
     * a DISTRIBUTED job (manifest rows → add-action JSON lines → parquet
     * parts, no driver materialization) instead of the driver-side
@@ -5329,10 +5287,8 @@ object MiniDelta {
           (rem, txn)
         }.toSeq
     }
-    val prevActions = cpPrev.toSeq.flatMap { v =>
-      checkpointActionDF(spark, table, v)
-        .map(actionsOf(_, withCommitVersion = false)).getOrElse(Seq.empty)
-    }
+    val prevActions = cpPrev.toSeq.flatMap(v =>
+      actionsOf(checkpointActionDF(spark, table, v), withCommitVersion = false))
     val prevRemoves: Seq[(String, Option[Long])] = prevActions.flatMap(_._1)
     val tailVP = logJsonVersions(spark, table,
       cpPrev.getOrElse(-1L) + 1, version)
@@ -5516,8 +5472,7 @@ object MiniDelta {
       if (f.exists(dir0))
         f.listStatus(dir0).map(_.getPath).foreach { pp =>
           pp.getName match {
-            case nm @ checkpointV2Name(u, _)
-                if nm.startsWith(stalePrefix) && !u.forall(_.isDigit) =>
+            case nm @ checkpointV2Name(_) if nm.startsWith(stalePrefix) =>
               f.delete(pp, false); ()
             case _ => ()
           }
@@ -5698,16 +5653,12 @@ object MiniDelta {
       s""","stats":${jstr(s)}"""
     }
     val dvField = dv.fold("") { case (p, card) =>
-      // an "rdv" marker renders as the REAL protocol descriptor (what
-      // this engine's own DV writes produce — consumable by real Delta
-      // readers); legacy parquet-sidecar masks keep the custom field
-      if (p.startsWith(RealDvPrefix)) {
-        val Array(_, st, pod, off, size) = p.split("\u0000", -1)
-        val offField = if (off == "-1") "" else s""""offset":$off,"""
-        s""","deletionVector":{"storageType":${jstr(st)},""" +
-          s""""pathOrInlineDv":${jstr(pod)},$offField""" +
-          s""""sizeInBytes":$size,"cardinality":$card}"""
-      } else s""","dv":{"path":${jstr(p)},"cardinality":$card}"""
+      // an "rdv" marker renders as the protocol's descriptor
+      val Array(_, st, pod, off, size) = p.split("\u0000", -1)
+      val offField = if (off == "-1") "" else s""""offset":$off,"""
+      s""","deletionVector":{"storageType":${jstr(st)},""" +
+        s""""pathOrInlineDv":${jstr(pod)},$offField""" +
+        s""""sizeInBytes":$size,"cardinality":$card}"""
     }
     val mtField = modTime.fold("")(m => s""","modificationTime":$m""")
     val ridField = rowIds.fold("") { case (b, d) =>
@@ -5987,14 +5938,13 @@ object MiniDelta {
         .reduceOption((_, b) => b) // newest line in the file wins
     }.nextOption()
     fromTail.orElse(cp.flatMap { v =>
-      checkpointActionDF(spark, table, v).flatMap { df =>
-        if (!df.columns.contains("domainMetadata")) None
-        else df.where(col("domainMetadata").isNotNull &&
-            col("domainMetadata.domain") === ClusteringDomain)
-          .select("domainMetadata.configuration").collect().headOption
-          .flatMap(r => Option(r.getString(0)))
-          .map(parseClusteringCols)
-      }
+      val df = checkpointActionDF(spark, table, v)
+      if (!df.columns.contains("domainMetadata")) None
+      else df.where(col("domainMetadata").isNotNull &&
+          col("domainMetadata.domain") === ClusteringDomain)
+        .select("domainMetadata.configuration").collect().headOption
+        .flatMap(r => Option(r.getString(0)))
+        .map(parseClusteringCols)
     })
   }
 
@@ -6074,14 +6024,13 @@ object MiniDelta {
         .reduceOption((a: Long, b: Long) => math.max(a, b))
     }.nextOption()
     fromTail.orElse(cp.flatMap { v =>
-      checkpointActionDF(spark, table, v).flatMap { df =>
-        if (!df.columns.contains("domainMetadata")) None
-        else df.where(col("domainMetadata").isNotNull &&
-            col("domainMetadata.domain") === RowTrackingDomain)
-          .select("domainMetadata.configuration").collect().headOption
-          .flatMap(r => Option(r.getString(0)))
-          .flatMap(c => HwmRe.findFirstMatchIn(c).map(_.group(1).toLong))
-      }
+      val df = checkpointActionDF(spark, table, v)
+      if (!df.columns.contains("domainMetadata")) None
+      else df.where(col("domainMetadata").isNotNull &&
+          col("domainMetadata.domain") === RowTrackingDomain)
+        .select("domainMetadata.configuration").collect().headOption
+        .flatMap(r => Option(r.getString(0)))
+        .flatMap(c => HwmRe.findFirstMatchIn(c).map(_.group(1).toLong))
     }).getOrElse(-1L)
   }
 
@@ -6729,7 +6678,7 @@ object MiniDelta {
     requireMappingWritable(latestSchema(spark, table), table, spark)
     val readVersion = latestVersion(spark, table)
     // delta.enableDeletionVectors routes DELETE through the DV path:
-    // deleted rows are MASKED by a row-index sidecar instead of
+    // deleted rows are MASKED by a deletion vector instead of
     // rewriting every touched file — the Delta DV trade (tiny writes
     // now, a mask probe per read until OPTIMIZE materializes)
     val cfg0 = tableConfig(spark, table, readVersion)
@@ -6783,7 +6732,7 @@ object MiniDelta {
     val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
-      .persist() // consumed twice: per-file counts + the sidecar write
+      .persist() // consumed twice: per-file counts + the mask write
     try {
       dvMaskActions(spark, table, readVersion, declared, snap, matched)
         .fold(readVersion) { lines =>
@@ -6827,7 +6776,7 @@ object MiniDelta {
     val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
-      .persist() // counts + sidecar + the updated-image write
+      .persist() // counts + mask + the updated-image write
     try {
       dvMaskActions(spark, table, readVersion, declared, snap, matched)
         .fold(readVersion) { maskLines =>
@@ -6938,8 +6887,7 @@ object MiniDelta {
     val surviving = touchedPairs.filterNot(p =>
       fullyGone.contains(dvKeyOf(p.path)))
     // the new mask per surviving file = old mask ∪ newly matched rows
-    // (old masks load through maskDF: legacy parquet sidecars and real
-    // descriptors both resolve)
+    // (old masks load through maskDF)
     val oldPairs = surviving.flatMap(f => f.dv.map(f.path -> _))
     val oldRows =
       if (oldPairs.isEmpty)
@@ -7675,7 +7623,7 @@ object MiniDelta {
       : Long = {
     val matched = withRowIdentity(spark, table, LogFile.of(snap), declared)
       .join(srcKeys, keys, "left_semi")
-      .persist() // mask counts + sidecar write
+      .persist() // mask counts + mask write
     val cfg = tableConfig(spark, table, readVersion)
     val incoming = align(source)
     // constraint check + parquet write = two evaluations of the
@@ -8432,18 +8380,16 @@ object MiniDelta {
     // tombstones, and without them vacuum would fall back to file
     // mtime and delete inside the retention horizon.
     val cpRemoves: Option[DataFrame] =
-      latestFileCheckpoint(spark, table).flatMap { case (_, raw) =>
-        if (raw.columns.contains("remove")) Some(
-          raw.select(col("remove.path").as("path"),
-            col("remove.deletionTimestamp").cast("long").as("ts")))
-        else None
-      }
-    // ONE driver parse of the (metadata-scale) JSON log serves all
-    // three vacuum passes below — tombstones, DV-sidecar de-refs, and
-    // real-DV bin de-refs were three separate distributed scans over
-    // the same files (r19 opt). Logs past the size threshold keep the
-    // distributed shape; checkpoint remove rows stay a (single) parquet
-    // collect either way.
+      latestCheckpoint(spark, table, Long.MaxValue)
+        .map(checkpointActionDF(spark, table, _))
+        .filter(_.columns.contains("remove"))
+        .map(_.select(col("remove.path").as("path"),
+          col("remove.deletionTimestamp").cast("long").as("ts")))
+    // ONE driver parse of the (metadata-scale) JSON log serves both
+    // vacuum passes below — tombstones and DV bin de-refs were separate
+    // distributed scans over the same files (r19 opt). Logs past the
+    // size threshold keep the distributed shape; checkpoint remove rows
+    // stay a (single) parquet collect either way.
     val localActs = localActions(spark, table, logJsonVersions(spark, table))
     val jsonRemovePairs: Seq[(String, Long)] = localActs match {
       case Some(acts) => acts.flatMap { case (_, node) =>
@@ -8499,64 +8445,18 @@ object MiniDelta {
       if (dryRun) existingDataFiles(spark, table, dead,
         screenNeeded = lite)
       else deleteDataFiles(spark, table, dead)
-    // orphaned deletion-vector sidecars: a DV dir no live add references
-    // (OPTIMIZE materialized it, or its masked files were removed) is
-    // dead weight; age it on its mtime under the same horizon. Live
-    // masks and the external sidecars of clones are never candidates
-    // (only THIS table's _dv dir is listed).
-    val liveDv = snapRows.collect {
-      case r if !r.isNullAt(1) => r.getString(1) }.toSet
-    // a sidecar's de-reference moment: when a DV'd add is superseded
-    // (OPTIMIZE, DV swap, delete), the path's remove tombstone is
-    // written — the NEWEST tombstone across the files that ever
-    // referenced the sidecar is when the mask stopped mattering. Aging
-    // on sidecar mtime (creation) would kill masks still inside the
-    // retention window (a mask created on day 0 and materialized on
-    // day 10 must survive until day 10 + horizon). Fallback: mtime,
-    // for sidecars whose referencing adds never got a tombstone.
-    val dvAddPairs: Seq[(String, String)] = localActs match {
-      case Some(acts) => acts.flatMap { case (_, node) =>
-        jnode(node, "add").flatMap { add =>
-          for {
-            d <- jnode(add, "dv").flatMap(jnode(_, "path")).map(_.asText())
-            p <- jnode(add, "path").map(_.asText())
-          } yield (d, p)
-        }
-      }
-      case None => logDF(spark, table)
-        .where(col("add").isNotNull && col("add.dv.path").isNotNull)
-        .select(col("add.dv.path").as("d"), col("add.path").as("p"))
-        .distinct() // executor-side dedup before the collect
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    }
-    val dvDeref: Map[String, Long] = dvAddPairs
-      .groupBy(_._1)
-      .view.mapValues(_.flatMap(r => tombstones.get(r._2)))
-      .collect { case (d, ts) if ts.nonEmpty => d -> ts.max }.toMap
-    val dvRoot = new Path(s"${logDir(table)}/_dv")
-    // LITE sidecars: log-derived like the data candidates — a sidecar
-    // with no de-reference tombstone is retained (fail-safe), and the
-    // existence screen is mask-count-scale, never table-scale
-    val deadDv =
-      if (lite) dvDeref.collect {
-        case (rel, ts) if !liveDv.contains(rel) && ts <= cutoff &&
-          !rel.startsWith("/") && !rel.contains("://") &&
-          f.exists(new Path(s"$table/$rel")) => rel
-      }.toSeq.sorted
-      else if (!f.exists(dvRoot)) Seq.empty[String]
-      else f.listStatus(dvRoot).toSeq.collect {
-        case st if {
-          val rel = s"_delta_log/_dv/${st.getPath.getName}"
-          !liveDv.contains(rel) &&
-            dvDeref.getOrElse(rel, st.getModificationTime) <= cutoff
-        } => s"_delta_log/_dv/${st.getPath.getName}"
-      }
-    if (!dryRun) deadDv.foreach(p => f.delete(new Path(s"$table/$p"), true))
-    // real-format DV bins (this engine's own DV writes pack per-file
-    // roaring bitmaps into deletion_vector_<uuid>.bin at the root):
-    // same life rule as sidecars, keyed by the bin name the 'u'
-    // descriptor resolves to. Clone-produced 'p' markers point at the
-    // SOURCE's root and are never candidates (only THIS root is listed).
+    // deletion-vector bins (this engine's DV writes pack per-file
+    // roaring bitmaps into deletion_vector_<uuid>.bin at the root) no
+    // live add references are dead weight, keyed by the bin name the
+    // 'u' descriptor resolves to. A bin's de-reference moment: when a
+    // DV'd add is superseded (OPTIMIZE, DV swap, delete), the path's
+    // remove tombstone is written — the NEWEST tombstone across the
+    // files that ever referenced the bin is when the mask stopped
+    // mattering (aging on bin mtime, its creation, would kill masks
+    // still inside the retention window). Fallback: mtime, for bins
+    // whose referencing adds never got a tombstone. Clone-produced 'p'
+    // markers point at the SOURCE's root and are never candidates
+    // (only THIS root is listed).
     def binOf(marker: String): Option[String] =
       marker.split("\u0000", -1) match {
         case Array(_, "u", pod, _, _) => Some(RoaringDv
@@ -8564,8 +8464,7 @@ object MiniDelta {
         case _ => None
       }
     val liveBins = snapRows.collect {
-      case r if !r.isNullAt(1) &&
-        r.getString(1).startsWith(RealDvPrefix) => binOf(r.getString(1))
+      case r if !r.isNullAt(1) => binOf(r.getString(1))
     }.flatten.toSet
     val binAddPairs: Seq[(String, String)] = localActs match {
       case Some(acts) => acts.flatMap { case (_, node) =>
@@ -8593,7 +8492,9 @@ object MiniDelta {
       .view.mapValues(_.flatMap(r => tombstones.get(r._2)))
       .collect { case (d, ts) if ts.nonEmpty => d -> ts.max }.toMap
     // LITE bins: log-derived (the root listing is O(first-level
-    // entries), which for an unpartitioned table IS O(table files))
+    // entries), which for an unpartitioned table IS O(table files)); a
+    // bin with no de-reference tombstone is retained (fail-safe), and
+    // the existence screen is mask-count-scale, never table-scale
     val deadBins =
       if (lite) binDeref.collect {
         case (n, ts) if !liveBins.contains(n) && ts <= cutoff &&
@@ -8608,7 +8509,7 @@ object MiniDelta {
         } => st.getPath.getName
       }
     if (!dryRun) deadBins.foreach(p => f.delete(new Path(s"$table/$p"), false))
-    deadDeleted ++ deadDv ++ deadBins
+    deadDeleted ++ deadBins
   }
 
   /** Vacuum deletes past this count fan out over the cluster instead
@@ -8631,8 +8532,8 @@ object MiniDelta {
     * Small sets delete driver-side; larger ones parallelize with one
     * FileSystem per executor partition, the driver conf shipped
     * through [[org.apache.spark.sql.graft.HadoopConfBridge]]. The DV
-    * sidecar/bin sets stay driver-side — they are mask-count-scale,
-    * never table-scale. */
+    * bin sets stay driver-side — they are mask-count-scale, never
+    * table-scale. */
   private def deleteDataFiles(spark: SparkSession, table: String,
                               rels: Seq[String]): Seq[String] = {
     if (rels.isEmpty) return Seq.empty
@@ -8689,7 +8590,7 @@ object MiniDelta {
     * (default 30 days; mtime-aged like real Delta). Safe only because
     * checkpoints now carry unexpired remove tombstones — vacuum's
     * horizon survives the JSON deletion ([[writeCheckpoint]]); the one
-    * degradation is sidecar-mask aging for files tombstoned before the
+    * degradation is DV-bin aging for files tombstoned before the
     * horizon, which falls back to mtime (fail-safe, may RETAIN longer).
     * Time travel below the horizon throws [[HistoryCleanedException]]
     * instead of replaying a partial tail. Returns the deleted
@@ -8712,10 +8613,10 @@ object MiniDelta {
     val deadJson = logJsonVersions(spark, table, 0L, cp - 1)
       .collect { case (v, p) if aged(new Path(p)) =>
         f.delete(new Path(p), false); f"$v%020d.json" }
-    // superseded checkpoints (single-file, legacy directory manifests,
-    // and complete multi-part sets — all-or-none, so a partial deletion
-    // can never masquerade as a complete set) age out under the same
-    // horizon; the NEWEST checkpoint always survives
+    // superseded checkpoints (single-file, complete multi-part sets —
+    // all-or-none, so a partial deletion can never masquerade as a
+    // complete set — and any other entry under a checkpoint name) age
+    // out under the same horizon; the NEWEST checkpoint always survives
     // ONE listing serves every checkpoint-shape lookup — the
     // per-version helpers would re-list _delta_log O(cp) times.
     // Iteration runs over checkpoint names actually present, so the
@@ -9068,7 +8969,7 @@ object MiniDelta {
     // re-adding with the target's dv (or none) overrides on replay
     val addRows = diff.filter(in(_, "__in_tgt"))
       .sortBy(_.getString(0))
-    // vacuumed data files AND vacuumed DV sidecars both make the target
+    // vacuumed data files AND vacuumed DV bins both make the target
     // state unreconstructable — fail before committing anything
     val missing = addRows.filterNot(in(_, "__in_cur")).map(_.getString(0))
       .filterNot(p => f.exists(new Path(resolvePath(table, p)))) ++
@@ -9176,8 +9077,8 @@ object MiniDelta {
     * `numRecords` stats (null when any live file lacks stats — a
     * partial sum would read as exact), the table properties, and the
     * protocol floor with its feature list. Pure log metadata for a
-    * governed table: one cached snapshot replay plus the metadata
-    * sidecars, no data IO — O(snapshot), never O(data), exactly the
+    * governed table: one cached snapshot replay plus the log's
+    * metadata, no data IO — O(snapshot), never O(data), exactly the
     * introspection cost profile Delta documents. A raw parquet
     * directory (an alias serving passthrough reads before
     * convertToDelta) reports format `parquet` with listing-derived
@@ -9321,7 +9222,7 @@ object MiniDelta {
     val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
       "partitionColumns").map(_.asInstanceOf[Seq[String]])
     fromTail.orElse(cp.flatMap { v =>
-      checkpointActionDF(spark, table, v)
+      Some(checkpointActionDF(spark, table, v))
         .filter(_.columns.contains("metaData"))
         .flatMap(_.where(col("metaData.partitionColumns").isNotNull)
           .select("metaData.partitionColumns").collect().headOption
@@ -9496,6 +9397,41 @@ object MiniDelta {
   private val cpGates =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), CpGate]()
 
+  /** The [[requireReadable]] facts of the checkpoint at `v`: its
+    * protocol row, column-mapping mode and DV storage forms, memoized
+    * per (table, version) — a named checkpoint is immutable, so steady
+    * state pays a hashmap lookup, not Spark jobs. A checkpoint without
+    * a protocol row raises [[MalformedCheckpointException]]; one whose
+    * add rows carry a non-null legacy `dv.path` raises
+    * [[legacyDvRefusal]] (this engine's older checkpoints carry the
+    * column all-null). Neither outcome is memoized. */
+  private def cpGate(spark: SparkSession, table: String, v: Long): CpGate =
+    cpGates.computeIfAbsent((table, v), { _ =>
+      val raw = checkpointActionDF(spark, table, v)
+      val proto = checkpointProtocol(raw, table, v)
+      val cm = readCheckpointMetaData(spark, table, v).flatMap(_._2)
+        .flatMap(_.get("delta.columnMapping.mode"))
+      val addT = Some(raw.schema).filter(_.fieldNames.contains("add"))
+        .map(_("add").dataType
+          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
+        .getOrElse(Array.empty[String])
+      val storage =
+        if (addT.contains("deletionVector"))
+          col("add.deletionVector.storageType")
+        else lit(null).cast("string")
+      val legacy =
+        if (addT.contains("dv")) col("add.dv.path").isNotNull else lit(false)
+      val dvRows =
+        if (!addT.contains("deletionVector") && !addT.contains("dv"))
+          Array.empty[org.apache.spark.sql.Row]
+        else raw.where(storage.isNotNull || legacy)
+          .select(storage, legacy).distinct().collect()
+      if (dvRows.exists(_.getBoolean(1))) throw legacyDvRefusal(table)
+      CpGate(proto.minReader, proto.readerFeats, cm,
+        dvRows.collect { case r if !r.isNullAt(0) => r.getString(0) }
+          .filterNot(supportedDvStorage).toSet)
+    })
+
   /** The Delta protocol's client contract, enforced before any replay:
     * a reader must check the table's `protocol` action (reader version
     * + v3 reader features), refuse column-mapped tables it cannot
@@ -9504,13 +9440,16 @@ object MiniDelta {
     * returns WRONG data, not degraded data. Tables this engine writes
     * itself never trip the gate.
     *
-    * Scale/cost: pure driver metadata. The checkpoint side runs only
-    * when the checkpoint is a real-Delta single FILE (ours are
-    * directory manifests — screened by one getFileStatus). The tail
-    * side driver-reads the O(since-last-checkpoint) commit JSONs once
-    * per NEW version (memoized in [[readableThrough]]) with substring
-    * screens, so self-written tables pay zero JSON parses and zero
-    * Spark jobs. */
+    * An add carrying the legacy `dv` field, in the tail or in the
+    * checkpoint, raises [[legacyDvRefusal]]; a checkpoint without a
+    * protocol row raises [[MalformedCheckpointException]].
+    *
+    * Scale/cost: pure driver metadata. The checkpoint side parses once
+    * per (table, checkpoint version) — checkpoints are immutable once
+    * named, so [[cpGates]] memoizes it. The tail side driver-reads the
+    * O(since-last-checkpoint) commit JSONs once per NEW version
+    * (memoized in [[readableThrough]]) with substring screens, so
+    * self-written tables pay few JSON parses and zero Spark jobs. */
   private def requireReadable(spark: SparkSession, table: String,
                               atMost: Long): Unit = {
     val hi = math.min(latestVersion(spark, table), atMost)
@@ -9524,51 +9463,11 @@ object MiniDelta {
     var cmMode: Option[String] = None
     val badDvTypes = scala.collection.mutable.Set.empty[String]
     cp.foreach { v =>
-      if (checkpointActionDF(spark, table, v).isDefined) {
-        // action-shape checkpoint (real writers AND this engine's own,
-        // single-file or multi-part): the files are immutable once
-        // named, so the gate parse memoizes per (table, version) —
-        // steady state pays a hashmap lookup, not Spark jobs
-        val gate = cpGates.computeIfAbsent((table, v), { _ =>
-          var mr = -1
-          var feats: Seq[String] = Nil
-          var cm: Option[String] = None
-          var bad = Set.empty[String]
-          val raw = checkpointActionDF(spark, table, v).get
-          if (raw.columns.contains("protocol"))
-            raw.where(col("protocol.minReaderVersion").isNotNull)
-              .select(col("protocol.minReaderVersion").cast("int"),
-                col("protocol.readerFeatures").cast("array<string>"))
-              .collect().headOption.foreach { r =>
-                mr = r.getInt(0)
-                feats = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-              }
-          if (raw.columns.contains("metaData"))
-            readCheckpointMetaData(spark, table, v).flatMap(_._2).foreach {
-              cfg => cm = cfg.get("delta.columnMapping.mode")
-            }
-          val addReal = raw.columns.contains("add") &&
-            raw.schema("add").dataType
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-              .fieldNames.contains("deletionVector")
-          if (addReal)
-            bad = raw
-              .where(col("add.deletionVector.storageType").isNotNull)
-              .select("add.deletionVector.storageType").distinct()
-              .collect().map(_.getString(0))
-              .filterNot(supportedDvStorage).toSet
-          CpGate(mr, feats, cm, bad)
-        })
-        minReader = gate.minReader
-        readerFeats = gate.feats
-        cmMode = gate.cmMode
-        badDvTypes ++= gate.badDv
-      } else
-        // own checkpoint shape: the config sidecar can still carry a
-        // mapped mode (e.g. set through a cloned table's properties)
-        readConfigSidecar(spark, table, v).foreach { cfg =>
-          cmMode = cfg.get("delta.columnMapping.mode")
-        }
+      val gate = cpGate(spark, table, v)
+      minReader = gate.minReader
+      readerFeats = gate.feats
+      cmMode = gate.cmMode
+      badDvTypes ++= gate.badDv
     }
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     logJsonVersions(spark, table, cp.getOrElse(-1L) + 1, hi)
@@ -9582,8 +9481,11 @@ object MiniDelta {
         // metaData commit that clears delta.columnMapping.mode contains
         // none of the other substrings, and skipping it would pin a
         // stale checkpoint-derived cmMode refusal forever
+        // "dv" parses the lines that may carry a legacy DV, which
+        // [[parseAction]] refuses
         if (txt.contains("\"protocol\"") || txt.contains("deletionVector") ||
-            txt.contains("columnMapping") || txt.contains("\"metaData\""))
+            txt.contains("columnMapping") || txt.contains("\"metaData\"") ||
+            txt.contains("\"dv\""))
           txt.linesIterator.filter(_.nonEmpty).foreach { line =>
             val node = parseAction(om, path, line)
             val proto = node.get("protocol")
@@ -9714,19 +9616,23 @@ object MiniDelta {
 
   /** One commit line as a JSON action object, or
     * [[MalformedCommitException]] naming the commit's table and version
-    * (both derived from the commit file path). */
+    * (both derived from the commit file path). An add carrying the
+    * legacy `dv` field raises [[legacyDvRefusal]]. */
   private def parseAction(om: com.fasterxml.jackson.databind.ObjectMapper,
       commitFile: String, line: String)
       : com.fasterxml.jackson.databind.JsonNode = {
     val node = try om.readTree(line) catch {
       case _: com.fasterxml.jackson.core.JsonProcessingException => null
     }
+    def table = commitFile.substring(0,
+      math.max(0, commitFile.lastIndexOf("/_delta_log/")))
     if (node == null || !node.isObject) {
-      val log = math.max(0, commitFile.lastIndexOf("/_delta_log/"))
       val version = new Path(commitFile).getName.stripSuffix(".json")
-      throw new MalformedCommitException(commitFile.substring(0, log),
+      throw new MalformedCommitException(table,
         version.toLongOption.getOrElse(-1L), line)
     }
+    if (jnode(node, "add").exists(jnode(_, "dv").isDefined))
+      throw legacyDvRefusal(table)
     node
   }
 
@@ -9779,12 +9685,6 @@ object MiniDelta {
       case _ => null
     }
 
-  /** `coalesce(add.dv.path, realDvMarker)` on a parsed add node. */
-  private def advOfNode(
-      add: com.fasterxml.jackson.databind.JsonNode): String =
-    jnode(add, "dv").flatMap(jnode(_, "path")).map(_.asText())
-      .getOrElse(rdvMarkerOfNode(add))
-
   /** Parsed partitionValues object → scala map (JSON null values stay
     * null, like the distributed MapType read). Null when absent. */
   private def pvOfNode(n: com.fasterxml.jackson.databind.JsonNode,
@@ -9798,76 +9698,48 @@ object MiniDelta {
 
   /** The checkpoint at `v` normalized to the manifest shape (+ a
     * `version` column pinned at `v`) — the folded snapshot base the
-    * replay layers its JSON tail onto. Handles the action-shape REAL
-    * Delta checkpoint (single file or multi-part) and this engine's
-    * own manifest shape. */
+    * replay layers its JSON tail onto. */
   private def checkpointBaseDF(spark: SparkSession, table: String,
                                v: Long): DataFrame = {
-    // action-shape (single file OR multi-part union); legacy directory
-    // manifests fall through to the parquet-dir read below
     val raw = checkpointActionDF(spark, table, v)
-      .getOrElse(spark.read.parquet(checkpointPath(table, v)))
-    if (raw.columns.contains("add")) {
-      // REAL Delta checkpoint: one row per action, live adds ride as
-      // a nullable struct column. A real-DV descriptor becomes the
-      // same "rdv" marker the JSON tail produces.
-      val addT = raw.schema("add").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val stats =
-        if (addT.fieldNames.contains("stats")) col("add.stats")
-        else lit(null).cast("string")
-      // a real descriptor rides as a marker; this engine's own
-      // checkpoints may ALSO carry legacy parquet-sidecar refs in the
-      // custom dv field — coalesce both forms
-      val hasReal = addT.fieldNames.contains("deletionVector")
-      val hasCustom = addT.fieldNames.contains("dv")
-      val (dvPath, dvCard) = (hasReal, hasCustom) match {
-        case (true, true) =>
-          (coalesce(col("add.dv.path"), realDvMarker),
-            coalesce(col("add.dv.cardinality"),
-              col("add.deletionVector.cardinality")))
-        case (true, false) =>
-          (realDvMarker, col("add.deletionVector.cardinality"))
-        case (false, true) =>
-          (col("add.dv.path"), col("add.dv.cardinality"))
-        case _ => (lit(null).cast("string"), lit(null).cast("long"))
-      }
-      val mt =
-        if (addT.fieldNames.contains("modificationTime"))
-          col("add.modificationTime").cast("long")
-        else lit(null).cast("long")
-      // rowTracking ids ride the snapshot so re-adds (DV swaps,
-      // RESTORE) and checkpoint folding PRESERVE them
-      val (brid, dcv) =
-        if (addT.fieldNames.contains("baseRowId"))
-          (col("add.baseRowId").cast("long"),
-            col("add.defaultRowCommitVersion").cast("long"))
-        else (lit(null).cast("long"), lit(null).cast("long"))
-      raw.where(col("add").isNotNull).select(
-        col("add.path").as("path"),
-        col("add.partitionValues").as("partitionValues"),
-        col("add.size").cast("long").as("size"),
-        mt.as("modificationTime"),
-        stats.as("stats"),
-        dvPath.as("dv_path"),
-        dvCard.cast("long").as("dv_card"),
-        brid.as("base_row_id"),
-        dcv.as("default_row_commit"),
-        lit(v).as("version"))
-    } else {
-      // this engine's own manifest shape; pre-DV checkpoints lack the
-      // dv columns: null-fill them
-      val withDv =
-        if (raw.columns.contains("dv_path")) raw
-        else raw.withColumn("dv_path", lit(null).cast("string"))
-          .withColumn("dv_card", lit(null).cast("long"))
-      withDv.select(col("path"), col("partitionValues"), col("size"),
-        lit(null).cast("long").as("modificationTime"),
-        col("stats"), col("dv_path"), col("dv_card"),
-        lit(null).cast("long").as("base_row_id"),
-        lit(null).cast("long").as("default_row_commit"),
-        lit(v).as("version"))
-    }
+    // one row per action, live adds ride as a nullable struct column.
+    // A DV descriptor becomes the same "rdv" marker the JSON tail
+    // produces.
+    val addT = raw.schema("add").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    // this engine's older checkpoints carry a legacy `dv` column: the
+    // gate proves it all-null or refuses (a time-travel replay may
+    // fold a checkpoint older than the one [[requireReadable]] saw)
+    if (addT.fieldNames.contains("dv")) cpGate(spark, table, v)
+    val stats =
+      if (addT.fieldNames.contains("stats")) col("add.stats")
+      else lit(null).cast("string")
+    val (dvPath, dvCard) =
+      if (addT.fieldNames.contains("deletionVector"))
+        (realDvMarker, col("add.deletionVector.cardinality"))
+      else (lit(null).cast("string"), lit(null).cast("long"))
+    val mt =
+      if (addT.fieldNames.contains("modificationTime"))
+        col("add.modificationTime").cast("long")
+      else lit(null).cast("long")
+    // rowTracking ids ride the snapshot so re-adds (DV swaps,
+    // RESTORE) and checkpoint folding PRESERVE them
+    val (brid, dcv) =
+      if (addT.fieldNames.contains("baseRowId"))
+        (col("add.baseRowId").cast("long"),
+          col("add.defaultRowCommitVersion").cast("long"))
+      else (lit(null).cast("long"), lit(null).cast("long"))
+    raw.where(col("add").isNotNull).select(
+      col("add.path").as("path"),
+      col("add.partitionValues").as("partitionValues"),
+      col("add.size").cast("long").as("size"),
+      mt.as("modificationTime"),
+      stats.as("stats"),
+      dvPath.as("dv_path"),
+      dvCard.cast("long").as("dv_card"),
+      brid.as("base_row_id"),
+      dcv.as("default_row_commit"),
+      lit(v).as("version"))
   }
 
   // (table, checkpoint version, file length, file mtime) -> the
@@ -9980,19 +9852,13 @@ object MiniDelta {
             if (add != null && !add.isNull) {
               val path = strOf(add, "path")
               val pv = pvOfNode(add, "partitionValues")
-              val dv = add.get("dv")
-              // a REAL descriptor rides as the same "rdv" marker the
+              // a DV descriptor rides as the same "rdv" marker the
               // distributed replay renders ([[rdvMarkerOfNode]])
-              val dvPath = advOfNode(add)
-              val dvCard: java.lang.Long =
-                if (dv != null && !dv.isNull &&
-                    longOf(dv, "cardinality") != null)
-                  longOf(dv, "cardinality")
-                else jnode(add, "deletionVector")
-                  .map(r => longOf(r, "cardinality")).orNull
+              val dvCard: java.lang.Long = jnode(add, "deletionVector")
+                .map(r => longOf(r, "cardinality")).orNull
               val row = org.apache.spark.sql.Row(path, pv,
                 longOf(add, "size"), longOf(add, "modificationTime"),
-                strOf(add, "stats"), dvPath, dvCard,
+                strOf(add, "stats"), rdvMarkerOfNode(add), dvCard,
                 longOf(add, "baseRowId"),
                 longOf(add, "defaultRowCommitVersion"))
               val prev = adds.get(path)
@@ -10066,11 +9932,10 @@ object MiniDelta {
         col("add.size").as("size"),
         col("add.modificationTime").as("modificationTime"),
         col("add.stats").as("stats"),
-        // own sidecar DV first; a REAL descriptor rides as an "rdv"
-        // marker the mask loader decodes ([[maskDF]])
-        coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
-        coalesce(col("add.dv.cardinality"),
-          col("add.deletionVector.cardinality")).as("dv_card"),
+        // a DV descriptor rides as an "rdv" marker the mask loader
+        // decodes ([[maskDF]])
+        realDvMarker.as("dv_path"),
+        col("add.deletionVector.cardinality").as("dv_card"),
         col("add.baseRowId").as("base_row_id"),
         col("add.defaultRowCommitVersion").as("default_row_commit"),
         col("version"))
@@ -10653,10 +10518,10 @@ object MiniDelta {
       .map(n => java.lang.Long.valueOf(n.asLong())).orNull,
     add.map(pvOfNode(_, "partitionValues")).orNull)
 
-  // a REAL Delta DV descriptor carried through the snapshot's dv_path
+  // a Delta DV descriptor carried through the snapshot's dv_path
   // column: "rdv\0storageType\0pathOrInlineDv\0offset\0sizeInBytes".
-  // NUL never appears in our sidecar paths ("_delta_log/_dv/...") or in
-  // descriptor fields, so the marker cannot collide or mis-split.
+  // NUL never appears in descriptor fields, so the marker cannot
+  // mis-split.
   private val RealDvPrefix = "rdv\u0000"
 
   private def realDvMarker: org.apache.spark.sql.Column =
@@ -10671,76 +10536,50 @@ object MiniDelta {
   private lazy val decodeDvUdf =
     udf((b: Array[Byte]) => RoaringDv.decode(b))
 
-  /** Does a dv ref (legacy sidecar path or "rdv" marker) still
-    * resolve? The vacuum-horizon guards of the change feeds use this —
-    * an inline ('i') mask rides in the log itself and never vacuums. */
+  /** Does a dv ref ("rdv" marker) still resolve? The vacuum-horizon
+    * guards of the change feeds use this — an inline ('i') mask rides
+    * in the log itself and never vacuums. */
   private def dvRefExists(f: org.apache.hadoop.fs.FileSystem,
                           table: String, ref: String): Boolean =
-    if (ref.startsWith(RealDvPrefix))
-      ref.split("\u0000", -1) match {
-        case Array(_, "i", _, _, _) => true
-        case Array(_, st, pod, _, _) =>
-          f.exists(new Path(RoaringDv.dvFileOf(table, st, pod)))
-        case _ => false
-      }
-    else f.exists(new Path(resolvePath(table, ref)))
+    ref.split("\u0000", -1) match {
+      case Array(_, "i", _, _, _) => true
+      case Array(_, st, pod, _, _) =>
+        f.exists(new Path(RoaringDv.dvFileOf(table, st, pod)))
+      case _ => false
+    }
 
   /** A dv ref rebased for a shallow CLONE whose data stays under the
-    * SOURCE root: 'u' markers become absolute 'p' markers, sidecar
-    * paths become absolute; 'p' and inline 'i' are location-free. */
+    * SOURCE root: 'u' markers become absolute 'p' markers; 'p' and
+    * inline 'i' are location-free. */
   private def dvRefForClone(source: String, ref: String): String =
-    if (ref.startsWith(RealDvPrefix))
-      ref.split("\u0000", -1) match {
-        case Array(_, "u", pod, off, sz) =>
-          RealDvPrefix +
-            Seq("p", RoaringDv.dvFileOf(source, "u", pod), off, sz)
-              .mkString("\u0000")
-        case _ => ref
-      }
-    else resolvePath(source, ref)
+    ref.split("\u0000", -1) match {
+      case Array(_, "u", pod, off, sz) =>
+        RealDvPrefix +
+          Seq("p", RoaringDv.dvFileOf(source, "u", pod), off, sz)
+            .mkString("\u0000")
+      case _ => ref
+    }
 
-  /** The mask relation (`__dv_fname`, `__dv_ri`) for (data path, dv
-    * ref) pairs: sidecar refs load as a distributed parquet scan; real
-    * Delta descriptors ("rdv" markers) have their compressed bitmap
-    * BYTES fetched driver-side (KBs — a million masked rows is ~100 KB
+  /** The mask relation (`__dv_fname`, `__dv_ri`) for (data path, "rdv"
+    * marker) pairs: each descriptor's compressed bitmap BYTES are
+    * fetched driver-side (KBs — a million masked rows is ~100 KB
     * roaring) and exploded to row indexes in executors, so the mask
-    * join itself stays distributed either way. */
+    * join itself stays distributed. */
   private def maskDF(spark: SparkSession, table: String,
                      pairs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val (real, side) = pairs.partition(_._2.startsWith(RealDvPrefix))
-    val sideDf =
-      if (side.isEmpty) None
-      else Some(spark.read
-        .parquet(side.map(p => resolvePath(table, p._2))
-          .distinct.toIndexedSeq: _*)
-        .select(col("fname").as("__dv_fname"),
-          col("row_index").as("__dv_ri")))
-    val realDf =
-      if (real.isEmpty) None
-      else Some {
-        val f = fs(spark, table)
-        val rows = real.distinct.map { case (p, marker) =>
-          marker.split("\u0000", -1) match {
-            case Array(_, st, pod, off, size) =>
-              (dvKeyOf(p),
-                RoaringDv.fetch(f, table, st, pod, off.toInt, size.toInt))
-            case _ => throw new RoaringDv.DvFormatException(
-              s"malformed DV marker on $p")
-          }
-        }
-        rows.toDF("__dv_fname", "__b")
-          .select(col("__dv_fname"),
-            explode(decodeDvUdf(col("__b"))).as("__dv_ri"))
+    val f = fs(spark, table)
+    pairs.distinct.map { case (p, marker) =>
+      marker.split("\u0000", -1) match {
+        case Array(_, st, pod, off, size) =>
+          (dvKeyOf(p),
+            RoaringDv.fetch(f, table, st, pod, off.toInt, size.toInt))
+        case _ => throw new RoaringDv.DvFormatException(
+          s"malformed DV marker on $p")
       }
-    (sideDf, realDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => spark.emptyDataFrame
-        .withColumn("__dv_fname", lit(null).cast("string"))
-        .withColumn("__dv_ri", lit(null).cast("long"))
-    }
+    }.toDF("__dv_fname", "__b")
+      .select(col("__dv_fname"),
+        explode(decodeDvUdf(col("__b"))).as("__dv_ri"))
   }
 
   /** [[readFilesAs]] with deletion vectors applied: each file pairs
@@ -10960,7 +10799,7 @@ object MiniDelta {
                      appId: String): Long = {
     if (!tableExists(spark, table)) return -1L
     val cp = latestCheckpoint(spark, table, Long.MaxValue)
-    val base: Long = cp.flatMap(v => checkpointActionDF(spark, table, v))
+    val base: Long = cp.map(checkpointActionDF(spark, table, _))
       .filter(_.columns.contains("txn"))
       .map(df => df.where(col("txn.appId") === appId)
         .agg(max(col("txn.version").cast("long"))).collect()(0))
@@ -11103,7 +10942,7 @@ object MiniDelta {
             add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             add.flatMap(jnode(_, "dataChange"))
               .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            add.map(advOfNode).orNull,
+            add.map(rdvMarkerOfNode).orNull,
             jnode(node, "remove").flatMap(jnode(_, "dataChange"))
               .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
             jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
@@ -11111,7 +10950,7 @@ object MiniDelta {
         }.toArray
         case None => logDFIn(spark, table, tail).select(Seq(col("version"),
             col("add.path").as("path"), col("add.dataChange").as("adc"),
-            coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
+            realDvMarker.as("dv_path"),
             col("remove.dataChange").as("rdc"),
             col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
           .collect()
@@ -11216,7 +11055,7 @@ object MiniDelta {
             add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             add.flatMap(jnode(_, "dataChange"))
               .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            add.map(advOfNode).orNull,
+            add.map(rdvMarkerOfNode).orNull,
             rem.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             rem.flatMap(jnode(_, "dataChange"))
               .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
@@ -11231,7 +11070,7 @@ object MiniDelta {
         case None => logDFIn(spark, table, tail).select(Seq(col("version"),
             col("commitInfo.operation").as("op"),
             col("add.path").as("path"), col("add.dataChange").as("adc"),
-            coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
+            realDvMarker.as("dv_path"),
             col("remove.path").as("rp"), col("remove.dataChange").as("rdc"),
             col("cdc.path").as("cp"), col("cdc.partitionValues").as("cpv"),
             col("metaData.schemaString").as("ms"),
@@ -11397,14 +11236,14 @@ object MiniDelta {
           else Some(LogFile.feedRow(schema, Seq(
             add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
             java.lang.Long.valueOf(v),
-            add.map(advOfNode).orNull,
+            add.map(rdvMarkerOfNode).orNull,
             ms.orNull) ++ addScanValues(add)))
         }.toArray
         case None => logDFIn(spark, table, tail)
           .where((col("add").isNotNull && col("add.dataChange")) ||
             col("metaData").isNotNull)
           .select(Seq(col("add.path").as("path"), col("version"),
-            coalesce(col("add.dv.path"), realDvMarker).as("dv_path"),
+            realDvMarker.as("dv_path"),
             col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
           .collect()
       }

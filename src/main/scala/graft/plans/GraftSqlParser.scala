@@ -354,7 +354,7 @@ case class GraftVacuumCommand(table: String, readOnly: Boolean,
 
 /** `VACUUM graft.t [RETAIN n HOURS] DRY RUN` — Delta's dry-run form:
   * report the table-relative paths vacuum WOULD delete (data files,
-  * DV sidecars, roaring bins) without touching storage. Legal on
+  * roaring DV bins) without touching storage. Legal on
   * read-only aliases — it reads. Same default horizon and retention
   * rules as the real run, minus the below-horizon refusal (reporting
   * an aggressive horizon's candidates is the point of a dry run). */

@@ -1121,6 +1121,72 @@ class MiniDeltaSpec extends AnyFunSuite {
     assert(MiniDelta.snapshotFiles(spark, t).count() == full) // ignored
   }
 
+  test("a leftover directory manifest and its sidecars are ignored") {
+    val t = freshTable()
+    MiniDelta.append(spark, sample("2023", 2), t, Seq("year"))   // v0
+    MiniDelta.addConstraint(spark, t, "id_pos", "id > 0")         // v1
+    MiniDelta.append(spark, sample("2024", 1), t, Seq("year"))   // v2
+    // the pre-r6 checkpoint shape at v2, complete by its old rule
+    // (_SUCCESS), with stale contents: the v0 manifest, a one-column
+    // schema sidecar and an empty config sidecar
+    val dir = f"$t%s/_delta_log/${2L}%020d.checkpoint.parquet"
+    MiniDelta.snapshotFilesAt(spark, t, 0L, useCheckpoint = false)
+      .write.parquet(dir)
+    assert(new java.io.File(dir, "_SUCCESS").exists())
+    def put(name: String, txt: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        f"$t%s/_delta_log/${2L}%020d.$name"), txt.getBytes("UTF-8"))
+      ()
+    }
+    put("checkpoint.schema.json", sample("2023", 1).select("id").schema.json)
+    put("checkpoint.config.json", "{}")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$t/_delta_log/_last_checkpoint"),
+      """{"version":2}""".getBytes("UTF-8"))
+    MiniDelta.invalidateSnapshot(t)
+    // the answer is the pure JSON replay's
+    def paths(df: org.apache.spark.sql.DataFrame) =
+      df.select("path").as[String].collect().sorted.toSeq
+    assert(paths(MiniDelta.snapshotFiles(spark, t)) ==
+      paths(MiniDelta.snapshotFilesAt(spark, t, 2L, useCheckpoint = false)))
+    assert(MiniDelta.readFiltered(spark, t, Seq.empty).count() == 3)
+    assert(MiniDelta.latestSchema(spark, t).get.fieldNames.toSeq ==
+      Seq("id", "year", "payload"))
+    assert(MiniDelta.constraintsOf(MiniDelta.tableConfig(spark, t)) ==
+      Map("id_pos" -> "id > 0"))
+    intercept[MiniDelta.ConstraintViolationException] {
+      MiniDelta.append(spark,
+        Seq((-1L, "2023", "bad")).toDF("id", "year", "payload"),
+        t, Seq("year"))
+    }
+  }
+
+  test("a checkpoint without a protocol row is refused by name") {
+    val t = freshTable()
+    MiniDelta.append(spark, sample("2023", 2), t, Seq("year"))   // v0
+    MiniDelta.writeCheckpoint(spark, t, 0L)
+    // rewrite the checkpoint without its protocol row
+    val cp = f"$t%s/_delta_log/${0L}%020d.checkpoint.parquet"
+    val tmp = Files.createTempDirectory("noproto").toString
+    spark.read.parquet(cp).where(col("protocol").isNull)
+      .coalesce(1).write.parquet(s"$tmp/out")
+    val pf = new java.io.File(s"$tmp/out").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).head
+    new java.io.File(f"$t%s/_delta_log/.${0L}%020d.checkpoint.parquet.crc")
+      .delete()
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/out/$pf"),
+      java.nio.file.Paths.get(cp),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    MiniDelta.invalidateSnapshot(t)
+    val e = intercept[MiniDelta.MalformedCheckpointException] {
+      MiniDelta.readFiltered(spark, t, Seq.empty).collect()
+    }
+    assert(e.getMessage.contains(s"$t: checkpoint 0 "), e.getMessage)
+    intercept[MiniDelta.MalformedCheckpointException] {
+      MiniDelta.append(spark, sample("2024", 1), t, Seq("year"))
+    }
+  }
+
   test("snapshot cache honors configured capacity") {
     import graft.catalog.CacheConfig
     MiniDelta.configureSnapshotCache(CacheConfig(1, 0L)) // LRU of 1
@@ -2104,7 +2170,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     // valid writes proceed
     MiniDelta.append(spark, sample("2024", 2), t, Seq("year"))        // v2
     // drive past the checkpoint interval so resolution must go through
-    // the config sidecar, then enforce again
+    // the checkpoint's metaData row, then enforce again
     (1 to MiniDelta.checkpointInterval).foreach { i =>
       MiniDelta.append(spark,
         Seq((100L + i, "2025", s"p$i")).toDF("id", "year", "payload"),

@@ -141,7 +141,7 @@ class RoaringDvSpec extends AnyFunSuite {
       forkV0.contains(""""readerFeatures":["deletionVectors"]"""), forkV0)
   }
 
-  test("own checkpoints are real-shape single files; legacy dirs still read") {
+  test("own checkpoints are real-shape single files; legacy dirs are ignored") {
     import org.apache.spark.sql.functions.{col => c}
     val t = Files.createTempDirectory("realcpown").toString + "/t"
     MiniDelta.append(spark,
@@ -173,24 +173,147 @@ class RoaringDvSpec extends AnyFunSuite {
     assert(MiniDelta.readFiltered(spark, t, Seq.empty)
       .select("id").as[Long].collect().sorted.toSeq ==
       Seq(0L, 2L, 3L, 4L, 5L))
-    // legacy DIRECTORY manifest (pre-r6 shape + sidecars) at a LATER
-    // version still replays — the pointer moves to it and the dir
-    // branch + sidecar fallback resolve schema and files
+    // a leftover DIRECTORY manifest (the pre-r6 shape) at a LATER
+    // version, with its schema sidecar and the pointer moved to it, is
+    // not a checkpoint: rows and schema come from the checkpoint at
+    // version 2 + the JSON tail. Its contents are deliberately stale (the v0
+    // snapshot, a one-column schema), so reading either would show.
     MiniDelta.append(spark,
       Seq((6L, "p6")).toDF("id", "payload"), t, Seq.empty) // v3
     val legacyDir = f"$t%s/_delta_log/${3L}%020d.checkpoint.parquet"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacyDir))
-    MiniDelta.snapshotFilesAt(spark, t, 3L, useCheckpoint = false)
+    MiniDelta.snapshotFilesAt(spark, t, 0L, useCheckpoint = false)
       .write.parquet(legacyDir)
-    val schemaOut = f"$t%s/_delta_log/${3L}%020d.checkpoint.schema.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(schemaOut),
-      MiniDelta.latestSchema(spark, t).get.json.getBytes("UTF-8"))
+    assert(new java.io.File(legacyDir, "_SUCCESS").exists())
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(
+        f"$t%s/_delta_log/${3L}%020d.checkpoint.schema.json"),
+      Seq((0L, 0)).toDF("id", "x").select("id").schema.json
+        .getBytes("UTF-8"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$t/_delta_log/_last_checkpoint"),
       """{"version":3}""".getBytes("UTF-8"))
+    MiniDelta.invalidateSnapshot(t)
+    def paths(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "dv_path").collect().map(_.toString).sorted.toSeq
+    assert(paths(MiniDelta.snapshotFiles(spark, t)) ==
+      paths(MiniDelta.snapshotFilesAt(spark, t, 3L, useCheckpoint = false)))
+    assert(MiniDelta.latestSchema(spark, t).get.fieldNames.toSeq ==
+      Seq("id", "payload"))
     assert(MiniDelta.readFiltered(spark, t, Seq.empty)
       .select("id").as[Long].collect().sorted.toSeq ==
       Seq(0L, 2L, 3L, 4L, 5L, 6L))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** Every file under `t`, relative, with its length. */
+  private def tree(t: String): Seq[(String, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(t)
+    val w = java.nio.file.Files.walk(root)
+    try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => (root.relativize(p).toString, p.toFile.length())).toSeq.sorted
+    finally w.close()
+  }
+
+  /** A legacy parquet-sidecar mask of `rel`'s row 1 under
+    * `_delta_log/_dv/`, and the add field that references it. */
+  private def legacyDvField(t: String, rel: String): String = {
+    val dvRel = "_delta_log/_dv/" + java.util.UUID.randomUUID()
+    Seq((rel, 1L)).toDF("fname", "row_index").coalesce(1)
+      .write.parquet(s"$t/$dvRel")
+    s""""dv":{"path":${jsonStr(dvRel)},"cardinality":1}"""
+  }
+
+  test("a legacy dv add in the JSON tail is refused by name; vacuum deletes nothing") {
+    val t = Files.createTempDirectory("legacydvtail").toString + "/t"
+    val rows = (0L until 6L).map(i => (i, s"p$i")).toDF("id", "payload")
+    MiniDelta.append(spark, rows.coalesce(1), t, Seq.empty)            // v0
+    MiniDelta.append(spark, rows.coalesce(1), t, Seq.empty)            // v1
+    MiniDelta.compact(spark, t, Seq.empty)                             // v2
+    val live = MiniDelta.snapshotFiles(spark, t)
+      .select("path", "size").collect().head
+    val rel = live.getString(0)
+    // an early engine's DV delete: remove + re-add carrying `dv`
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"$t%s/_delta_log/${3L}%020d.json"),
+      Seq(s"""{"commitInfo":{"operation":"DELETE","version":3,"timestamp":1}}""",
+        s"""{"remove":{"path":${jsonStr(rel)},"dataChange":true,"deletionTimestamp":1}}""",
+        s"""{"add":{"path":${jsonStr(rel)},"partitionValues":{},"size":${live.getLong(1)},"dataChange":true,${legacyDvField(t, rel)}}}""")
+        .mkString("\n").getBytes("UTF-8"))
+    MiniDelta.invalidateSnapshot(t)
+    val e = intercept[MiniDelta.UnsupportedTableFeatureException] {
+      MiniDelta.readFiltered(spark, t, Seq.empty).collect()
+    }
+    assert(e.getMessage.contains(t) && e.getMessage.contains("add.dv"),
+      e.getMessage)
+    // the two compacted-away files are past any horizon, yet vacuum
+    // refuses before it deletes anything
+    val before = tree(t)
+    val future = System.currentTimeMillis() + 30L * 86400000
+    val ve = intercept[MiniDelta.UnsupportedTableFeatureException] {
+      MiniDelta.vacuum(spark, t, nowMs = () => future)
+    }
+    assert(ve.getMessage.contains(t), ve.getMessage)
+    assert(tree(t) == before)
+    // the change feeds refuse too, on the driver and the distributed arm
+    def refused(read: => Any): Boolean = causes(intercept[Exception](read))
+      .exists(_.isInstanceOf[MiniDelta.UnsupportedTableFeatureException])
+    assert(refused(MiniDelta.readChanges(spark, t, 2L).collect()))
+    spark.conf.set("spark.graft.snapshot.localReplayMaxBytes", "0")
+    try {
+      assert(refused(MiniDelta.readChanges(spark, t, 2L).collect()))
+      assert(refused(MiniDelta.logDF(spark, t).count()))
+    } finally spark.conf.unset("spark.graft.snapshot.localReplayMaxBytes")
+  }
+
+  test("a checkpoint add with a legacy dv path is refused by name") {
+    import org.apache.spark.sql.types._
+    val t = Files.createTempDirectory("legacydvcp").toString + "/t"
+    MiniDelta.append(spark,
+      (0L until 6L).map(i => (i, s"p$i")).toDF("id", "payload")
+        .coalesce(1), t, Seq.empty)                                    // v0
+    val v0 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f"$t%s/_delta_log/${0L}%020d.json")), "UTF-8")
+    val rel = MiniDelta.snapshotFiles(spark, t).select("path").head.getString(0)
+    // an early engine's single-file checkpoint: its add rows carry the
+    // `dv` struct, here non-null
+    val lines = v0.linesIterator.filterNot(_.contains("\"commitInfo\""))
+      .map(l => if (!l.startsWith("{\"add\"")) l
+        else l.replace("\"dataChange\":true",
+          "\"dataChange\":false," + legacyDvField(t, rel))).toSeq
+    val addT = MiniDelta.logSchema("add").dataType.asInstanceOf[StructType]
+      .add("dv", StructType(Seq(StructField("path", StringType),
+        StructField("cardinality", LongType))))
+    val cpSchema = StructType(MiniDelta.logSchema.map(f =>
+      if (f.name == "add") f.copy(dataType = addT) else f))
+    val tmp = Files.createTempDirectory("legacydvcpbuild").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/cp.json"),
+      lines.mkString("\n").getBytes("UTF-8"))
+    spark.read.schema(cpSchema).json(s"$tmp/cp.json").drop("commitInfo")
+      .coalesce(1).write.parquet(s"$tmp/out")
+    val pf = new java.io.File(s"$tmp/out").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).head
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/out/$pf"),
+      java.nio.file.Paths.get(f"$t%s/_delta_log/${0L}%020d.checkpoint.parquet"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$t/_delta_log/_last_checkpoint"),
+      """{"version":0}""".getBytes("UTF-8"))
+    MiniDelta.invalidateSnapshot(t)
+    val e = intercept[MiniDelta.UnsupportedTableFeatureException] {
+      MiniDelta.readFiltered(spark, t, Seq.empty).collect()
+    }
+    assert(e.getMessage.contains(t) && e.getMessage.contains("add.dv"),
+      e.getMessage)
+    val before = tree(t)
+    val future = System.currentTimeMillis() + 30L * 86400000
+    val ve = intercept[MiniDelta.UnsupportedTableFeatureException] {
+      MiniDelta.vacuum(spark, t, nowMs = () => future)
+    }
+    assert(ve.getMessage.contains(t), ve.getMessage)
+    assert(tree(t) == before)
   }
 
   test("inline ('i') deletion vector masks rows on read") {
