@@ -1,12 +1,12 @@
 package graft.acl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.DatasetShim
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType,
   DateType, DoubleType, FloatType, MapType, NumericType, StringType,
   TimestampNTZType, TimestampType}
+
+import graft.util.DriverRows
 
 /** Partition-filter ACL algebra.
   *
@@ -70,8 +70,8 @@ object PartitionAcl {
     * the allowed keys, with equi-join semantics: a null key matches
     * nothing on either side.
     *
-    * When both optimized plans are a `LocalRelation` (the rows already
-    * sit in the driver, as for a frame built from a `Seq`) and the key
+    * When both frames are driver rows ([[DriverRows.of]]: the rows
+    * already sit in the driver, as for a frame built from a `Seq`) and the key
     * types are equal, the test is a hash-set lookup over those rows and
     * the answer is again a local frame: zero Spark jobs. Every other
     * input is a broadcast left semi/anti join against the allowed keys —
@@ -83,10 +83,8 @@ object PartitionAcl {
                          key: String, keep: Boolean): DataFrame = {
     val keys = allowed.select(key)
     val resolver = requests.sparkSession.sessionState.conf.resolver
-    val local = (requests.queryExecution.optimizedPlan,
-        keys.queryExecution.optimizedPlan) match {
-      case (req: LocalRelation, alw: LocalRelation)
-          if !req.isStreaming && !alw.isStreaming =>
+    val local = (DriverRows.of(requests), DriverRows.of(keys)) match {
+      case (Some(req), Some(alw)) =>
         val dt = alw.output.head.dataType
         req.output.zipWithIndex.filter(x => resolver(x._1.name, key)) match {
           case Seq((a, i)) if a.dataType == dt && driverComparable(dt) =>
@@ -95,8 +93,7 @@ object PartitionAcl {
             val rows = req.data.filter(r =>
               if (r.isNullAt(i)) !keep
               else allowedSet.contains(r.get(i, dt)) == keep)
-            Some(DatasetShim.ofRows(requests.sparkSession,
-              LocalRelation(req.output, rows)))
+            Some(DriverRows.frame(requests.sparkSession, req.output, rows))
           case _ => None
         }
       case _ => None

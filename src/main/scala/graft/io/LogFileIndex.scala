@@ -48,6 +48,13 @@ object LogFile {
   def feedRow(schema: StructType, values: Seq[Any]): Row =
     new GenericRowWithSchema(values.toArray, schema)
 
+  /** The files of a frame that carries [[columns]]: driver rows (the
+    * driver replay's snapshot and what [[MiniDelta.filesForFilters]]
+    * keeps of it) are read in place, any other frame is collected. */
+  def ofFrame(df: DataFrame): Seq[LogFile] =
+    of(graft.util.DriverRows.of(df).fold[Seq[Row]](
+      df.select(columns: _*).collect().toIndexedSeq)(graft.util.DriverRows.rows))
+
   /** The files of rows that carry [[columns]], found by name: snapshot
     * and manifest rows, and the change feeds' action rows. */
   def of(rows: Seq[Row]): Seq[LogFile] = rows.map { r =>

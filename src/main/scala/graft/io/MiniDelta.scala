@@ -3,8 +3,11 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.acl.PartitionAcl
+import graft.util.DriverRows
 
 /** A minimal Delta-style transaction log: versioned JSON commits of
   * add-file actions over a Hive-partitioned parquet layout, plus a
@@ -7514,8 +7517,7 @@ object MiniDelta {
     require(!source.columns.contains("__tgt_id"),
       "merge source has a '__tgt_id' column, which collides with the " +
         "identity-resolution temp column")
-    val pairs = LogFile.of(
-      snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
+    val pairs = LogFile.ofFrame(snapDF)
     def emptyIds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(srcKeys.schema.fields :+
@@ -9987,16 +9989,13 @@ object MiniDelta {
     val cache = snapshotCache
     val df = cache.getOrElseUpdate(table) {
       val snap = snapshotFiles(spark, table)
-      // a LocalRelation manifest ([[localReplay]]) is already driver
-      // rows: persisting it would wrap it in an InMemoryRelation,
-      // BLOCKING Catalyst's ConvertToLocalRelation fold that makes
-      // downstream pruning collects job-free (and wasting block-manager
-      // copies). Distributed manifests keep the persist — replaying a
-      // big log once per TTL window is the cache's whole point.
-      if (snap.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
-            .LocalRelation]) snap
-      else snap.persist()
+      // a manifest of driver rows ([[localReplay]]) stays one:
+      // persisting it would wrap it in an InMemoryRelation, hiding the
+      // rows the driver arms of pruning read in place (and wasting
+      // block-manager copies). Distributed manifests keep the persist —
+      // replaying a big log once per TTL window is the cache's whole
+      // point.
+      if (DriverRows.of(snap).isDefined) snap else snap.persist()
     }
     // configureSnapshotCache may have swapped the cache mid-miss; clear
     // the orphaned instance (again) so the raced persist is released
@@ -10470,9 +10469,8 @@ object MiniDelta {
     // mapped table: the stats JSON keys are physical — prune under the
     // physical name, filter under the logical one (the relabeled frame)
     val statPhys = physicalColOf(declared.filter(isColumnMapped), statCol)
-    val files = LogFile.of(
-      filesForRange(snapshotFiles(spark, table), statPhys, lo, hi)
-        .select(LogFile.columns: _*).collect().toIndexedSeq)
+    val files = LogFile.ofFrame(
+      filesForRange(snapshotFiles(spark, table), statPhys, lo, hi))
     val base = readFilesWithDv(spark, table, files, declared)
     if (files.isEmpty) base // zero files: the predicate is vacuous (and
     else base.where(col(statCol) >= lo && col(statCol) <= hi) // may not resolve)
@@ -10481,15 +10479,41 @@ object MiniDelta {
   /** P5: resolve OR-of-ANDs string-equality partition filters against the
     * snapshot — predicate to file set with zero data IO, the reference's
     * central query (src/main.rs:402-405). Empty list / all-empty maps =
-    * allow all (P7). */
+    * allow all (P7). A map entry matches as `element_at` does: a missing
+    * key or a null value matches nothing. A snapshot of driver rows (the
+    * driver replay's) is filtered on the driver and the kept rows are
+    * again a local frame of the same schema; a distributed or persisted
+    * manifest takes the `where`. */
   def filesForFilters(snapshot: DataFrame,
                       filters: PartitionAcl.Filters): DataFrame = {
-    val conj = filters.filter(_.nonEmpty).map { m =>
-      m.map { case (k, v) =>
-        element_at(col("partitionValues"), k) === lit(v)
-      }.reduce(_ && _)
-    }
-    if (conj.isEmpty) snapshot else snapshot.where(conj.reduce(_ || _))
+    val maps = filters.filter(_.nonEmpty)
+    if (maps.isEmpty) return snapshot
+    val resolver = snapshot.sparkSession.sessionState.conf.resolver
+    DriverRows.of(snapshot).flatMap { l =>
+      l.output.zipWithIndex.filter(a => resolver(a._1.name, "partitionValues")) match {
+        case Seq((a, i)) if a.dataType == MapType(StringType, StringType) =>
+          val wanted = maps.map(_.toSeq.map { case (k, v) =>
+            (UTF8String.fromString(k), UTF8String.fromString(v)) })
+          Some(DriverRows.frame(snapshot.sparkSession, l.output,
+            l.data.filter(r => !r.isNullAt(i) &&
+              wanted.exists(_.forall { case (k, v) =>
+                v != null && v == valueAt(r.getMap(i), k) }))))
+        case _ => None
+      }
+    }.getOrElse(snapshot.where(maps.map(_.map { case (k, v) =>
+      element_at(col("partitionValues"), k) === lit(v)
+    }.reduce(_ && _)).reduce(_ || _)))
+  }
+
+  /** `element_at(m, k)` over a string map's driver form: the value of
+    * the first entry keyed `k`, null when there is none. */
+  private def valueAt(m: org.apache.spark.sql.catalyst.util.MapData,
+                      k: UTF8String): UTF8String = {
+    val keys = m.keyArray()
+    var j = 0
+    while (j < m.numElements() && keys.getUTF8String(j) != k) j += 1
+    if (j == m.numElements() || m.valueArray().isNullAt(j)) null
+    else m.valueArray().getUTF8String(j)
   }
 
   /** DV row identity = the PARTITION-RELATIVE tail of a file's path
@@ -10645,8 +10669,7 @@ object MiniDelta {
       val m = st.fields.map(f => f.name -> physicalNameOf(f)).toMap
       filters.map(_.map { case (k, v) => (m.getOrElse(k, k), v) })
     }
-    val files = LogFile.of(filesForFilters(snap, physFilters)
-      .select(LogFile.columns: _*).collect().toIndexedSeq)
+    val files = LogFile.ofFrame(filesForFilters(snap, physFilters))
     readFilesWithDv(spark, table, files, declared)
   }
 
@@ -11146,9 +11169,8 @@ object MiniDelta {
         .toSeq.sorted.map { v =>
       val a = adds.getOrElse(v, Seq.empty)
       val r = removes.getOrElse(v, Seq.empty)
-      lazy val prior: Map[String, LogFile] = LogFile.of(
-        snapshotFilesAt(spark, table, v - 1)
-          .select(LogFile.columns: _*).collect().toIndexedSeq)
+      lazy val prior: Map[String, LogFile] = LogFile.ofFrame(
+        snapshotFilesAt(spark, table, v - 1))
         .map(lf => lf.path -> lf).toMap
       def readAdds(paths: Seq[String]) = readFilesWithDv(spark, table,
         paths.map(p => addFiles((v, p))), declared)

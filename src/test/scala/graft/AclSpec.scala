@@ -146,34 +146,13 @@ class AclSpec extends AnyFunSuite {
     import spark.implicits._
     val req = (1 to 200).map(i => s"t/part-$i.parquet").toDF("key")
     val alw = (1 to 200 by 3).map(i => s"t/part-$i.parquet").toDF("key")
-    val sc = spark.sparkContext
-    val group = s"acl-local-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "local membership")
-      val (ok, no) =
-        try (PartitionAcl.authorize(req, alw).collect().length,
-          PartitionAcl.denied(req, alw).collect().length)
-        finally sc.clearJobGroup()
-      assert(ok == 67 && no == 133)
-      // the distributed arm in a marker group does run a job; listener
-      // events arrive in order, so once its start is seen every job
-      // started before it has been seen too
-      sc.setJobGroup(marker, "distributed membership")
-      try PartitionAcl.authorize(req.repartition(2), alw).collect()
-      finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000
-      while (!started.contains(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(started.contains(marker))
-      assert(!started.contains(group), started)
-    } finally sc.removeSparkListener(listener)
+    val (counts, jobs) = TestSpark.jobsDuring(
+      (PartitionAcl.authorize(req, alw).collect().length,
+        PartitionAcl.denied(req, alw).collect().length))
+    assert(counts == ((67, 133)))
+    assert(jobs.isEmpty, jobs)
+    // the distributed arm does run a job
+    assert(TestSpark.jobsDuring(
+      PartitionAcl.authorize(req.repartition(2), alw).collect())._2.nonEmpty)
   }
 }

@@ -90,4 +90,63 @@ class ListingSpec extends AnyFunSuite {
       .orderBy("rn").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(got.sameElements(ref))
   }
+
+  /** A driver-rows listing with edge-case keys: a supplementary
+    * character (U+10000) and U+FFFD, which UTF-8 and UTF-16 order
+    * differently, and a null key. */
+  private lazy val edgeListing = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("key", StringType),
+      StructField("size", LongType), StructField("etag", StringType),
+      StructField("last_modified", TimestampType),
+      StructField("storage_class", StringType)))
+    val keys = Seq("a/\uD800\uDC00/x.bin", "a/\uFFFD/y.bin", "a/b/z.bin",
+      "a/top.bin", null, "b/c/d.bin", "a/\uD800\uDC00/w.bin",
+      "a/\uD800\uDC00/q/r.bin")
+    val rows = keys.zipWithIndex.map { case (k, i) =>
+      Row(k, i.toLong, s"e$i", new java.sql.Timestamp(1000L * i), "STANDARD") }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("list/commonPrefixes/page: driver and distributed arms agree") {
+    val local = edgeListing
+    val dist = edgeListing.repartition(3)
+    def same(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val (l, d) = (f(local), f(dist))
+      assert(isLocal(l) && !isLocal(d))
+      val (lr, dr) = (l.collect().toSeq, d.collect().toSeq)
+      assert(lr == dr)
+      lr
+    }
+    val all = same(ObjectListing.list(_, "", None, 100)).map(_.getString(0))
+    // UTF-8 binary order: U+FFFD sorts before the supplementary character
+    assert(all == Seq("a/b/z.bin", "a/top.bin", "a/\uFFFD/y.bin",
+      "a/\uD800\uDC00/q/r.bin", "a/\uD800\uDC00/w.bin", "a/\uD800\uDC00/x.bin", "b/c/d.bin"))
+    same(ObjectListing.list(_, "a/", Some("a/\uFFFD/y.bin"), 2))
+    same(ObjectListing.list(_, "a/\uD800\uDC00/", None, 10))
+    assert(same(ObjectListing.list(_, "", Some("z"), 10)).isEmpty)
+    assert(same(ObjectListing.list(_, "a/", None, 0)).isEmpty)
+    assert(same(ObjectListing.commonPrefixes(_, "a/")).map(_.getString(0)) ==
+      Seq("a/b/", "a/\uFFFD/", "a/\uD800\uDC00/"))
+    assert(same(ObjectListing.commonPrefixes(_, "")).map(_.getString(0)) ==
+      Seq("a/", "b/"))
+    // the prefix is cut by characters, not UTF-16 units
+    assert(same(ObjectListing.commonPrefixes(_, "a/\uD800\uDC00/"))
+      .map(_.getString(0)) == Seq("a/\uD800\uDC00/q/"))
+    // page numbers the null key first, as the ascending sort does
+    for (p <- 1 to 3) same(ObjectListing.page(_, 3, p))
+    assert(same(ObjectListing.page(_, 3, 1)).head.isNullAt(0))
+    for (in <- Seq(local, dist))
+      assert(intercept[IllegalArgumentException](
+        ObjectListing.list(in, "", None, -1)).getMessage.contains("maxKeys"))
+    // the driver arm runs no Spark job
+    val (_, jobs) = TestSpark.jobsDuring(
+      ObjectListing.list(local, "a/", None, 3).collect())
+    assert(jobs.isEmpty, jobs)
+  }
 }

@@ -276,33 +276,12 @@ class LogFileIndexSpec extends AnyFunSuite {
       t, Seq("k"))
     MiniDelta.invalidateSnapshot(t)
     assert(liveFiles(t).size == 40)
-    val group = s"lfi-listing-${System.nanoTime()}"
-    val descs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          descs.put(e.jobId, String.valueOf(
-            e.properties.getProperty("spark.job.description")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "log-backed read")
-      try assert(MiniDelta.readFiltered(spark, t, Seq.empty)
-        .agg(sum("id")).head().getLong(0) == 820L)
-      finally sc.clearJobGroup()
-      // listener events arrive asynchronously: wait until every job of
-      // the group has been seen
-      val ran = sc.statusTracker.getJobIdsForGroup(group).length
-      val deadline = System.currentTimeMillis() + 10000
-      while (descs.size < ran && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(ran > 0 && descs.size == ran)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    assert(!descs.values.asScala.exists(_.startsWith("Listing leaf files")),
-      descs)
+    val (total, jobs) = TestSpark.jobsDuring(
+      MiniDelta.readFiltered(spark, t, Seq.empty)
+        .agg(sum("id")).head().getLong(0))
+    assert(total == 820L)
+    assert(jobs.nonEmpty && !jobs.exists(_.startsWith("Listing leaf files")),
+      jobs)
   }
 
   /** v0 writes two files, v1 appends; v2 is a torn commit whose only
@@ -349,5 +328,57 @@ class LogFileIndexSpec extends AnyFunSuite {
       assert(refused(MiniDelta.logDF(spark, t).count()))
       assert(refused(MiniDelta.lastTxnVersion(spark, t, "app")))
     }
+  }
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("readFiltered/filesForFilters: driver and distributed replay arms agree") {
+    // null partition values and a deletion-vectored file
+    val t = freshTable()
+    MiniDelta.append(spark, Seq[(Long, String, String)]((1L, "a", "x"),
+      (2L, "b", null), (3L, "c", "x"), (4L, "d", "y")).toDF("id", "v", "p")
+      .coalesce(1), t, Seq("p"))
+    MiniDelta.setTableProperties(spark, t,
+      Map("delta.enableDeletionVectors" -> "true"))
+    MiniDelta.delete(spark, t, col("id") === 3L, Seq("p"))
+    MiniDelta.invalidateSnapshot(t)
+    // a name-mapped table: partitionValues are keyed by physical names,
+    // the filters by logical ones
+    val m = freshTable()
+    MiniDelta.createTable(spark, m, org.apache.spark.sql.types.StructType
+      .fromDDL("id BIGINT, p STRING"), partitionBy = Seq("p"),
+      properties = Map("delta.columnMapping.mode" -> "name"))
+    MiniDelta.append(spark, Seq[(Long, String)]((1L, "x"), (2L, null),
+      (3L, "y")).toDF("id", "p"), m, Seq("p"))
+    MiniDelta.invalidateSnapshot(m)
+    val filterSets: Seq[Seq[Map[String, String]]] = Seq(Seq.empty,
+      Seq(Map("p" -> "x")), Seq(Map("nope" -> "x")),
+      Seq(Map("nope" -> "x"), Map("p" -> "y")), Seq(Map("p" -> null)),
+      Seq(Map("p" -> "x", "nope" -> "x")), Seq(Map.empty, Map("p" -> "y")))
+    def answers(): Seq[Seq[String]] = for (tbl <- Seq(t, m);
+                                           fs <- filterSets) yield
+      rowsOf(MiniDelta.readFiltered(spark, tbl, fs).select("id"))
+    def files(): Seq[Seq[String]] = filterSets.map(fs => rowsOf(
+      MiniDelta.filesForFilters(MiniDelta.snapshotFiles(spark, t), fs)
+        .select("path", "dv_path", "partitionValues")))
+    val snap = MiniDelta.snapshotFiles(spark, t)
+    assert(isLocal(snap) &&
+      isLocal(MiniDelta.filesForFilters(snap, Seq(Map("p" -> "x")))))
+    val (driver, driverFiles) = (answers(), files())
+    val (dist, distFiles) =
+      withSessionConf("spark.graft.snapshot.localReplayMaxBytes", "0") {
+        assert(!isLocal(MiniDelta.snapshotFiles(spark, t)))
+        (answers(), files())
+      }
+    assert(driver == dist)
+    assert(driverFiles == distFiles)
+    assert(driver.take(filterSets.size) == Seq(Seq("1", "2", "4"), Seq("1"),
+      Seq(), Seq("4"), Seq(), Seq(), Seq("4")))
+    assert(driver.drop(filterSets.size) == Seq(Seq("1", "2", "3"), Seq("1"),
+      Seq(), Seq("3"), Seq(), Seq(), Seq("3")))
+    // the deletion-vectored file keeps its ref through the prune
+    assert(driverFiles(1).size == 1 && !driverFiles(1).head.contains("|null|"))
   }
 }
