@@ -1542,11 +1542,9 @@ object MiniDelta {
     if (!tableExists(spark, table)) return None
     val eff = math.min(latestVersion(spark, table), atMost)
     if (eff < 0) return None
-    val hit = latestSchemaMemo.get((table, eff))
-    if (hit != null) return hit
-    val s = latestSchemaResolve(spark, table, eff)
-    latestSchemaMemo.put((table, eff), s)
-    s
+    memoized(latestSchemaMemo, (table, eff)) {
+      latestSchemaResolve(spark, table, eff)
+    }
   }
 
   private def latestSchemaResolve(spark: SparkSession, table: String,
@@ -1556,56 +1554,26 @@ object MiniDelta {
     val base = cp.flatMap(v => readCheckpointMetaData(spark, table, v)
       .map(m => parseSchema(m._1)))
     val from = if (base.isDefined) cp.get else -1L
-    // the tail is O(since-last-checkpoint) SMALL files: parse them on
-    // the driver (newest metaData wins) — a Spark JSON job here cost
-    // ~100 ms of per-job overhead on EVERY new version's first resolve,
-    // the dominant fixed cost of the write lifecycle
-    val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
-      "schemaString").collectFirst { case s: String => s }
-    fromTail.map(parseSchema).orElse(base)
+    // the tail is O(since-last-checkpoint) SMALL files, read on the
+    // driver through the shared commit reader (newest metaData wins;
+    // commits the replay already parsed are memo hits) — a Spark JSON
+    // job here cost ~100 ms of per-job overhead on EVERY new version's
+    // first resolve, the dominant fixed cost of the write lifecycle
+    newestMetaDataField(spark, table, from + 1, atMost, "schemaString")
+      .map(n => parseSchema(n.asText())).orElse(base)
   }
 
   /** Newest metaData action's `field` inside the JSON tail
-    * [fromInclusive, atMost], driver-parsed newest-first: None when no
-    * tail commit carries a metaData with a NON-NULL `field` (the
-    * legacy-format null-vs-stated distinction both consumers need).
-    * Returns the Jackson-decoded value: String for schemaString,
-    * Map[String, String] for configuration. */
+    * [fromInclusive, atMost], read newest-first through [[logActions]]:
+    * None when no tail commit carries a metaData with a NON-NULL
+    * `field` (the legacy-format null-vs-stated distinction the
+    * consumers need). */
   private def newestMetaDataField(spark: SparkSession, table: String,
-                                  fromInclusive: Long, atMost: Long,
-                                  field: String): Option[Any] = {
-    val tail = logJsonVersions(spark, table, fromInclusive, atMost)
-    if (tail.isEmpty) return None
-    val f = fs(spark, table)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    tail.reverseIterator.flatMap { case (_, p) =>
-      val pp = new Path(p)
-      val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-      val in = f.open(pp)
-      try in.readFully(bytes) finally in.close()
-      val txt = new String(bytes, "UTF-8")
-      if (!txt.contains("\"metaData\"")) Iterator.empty
-      else txt.linesIterator.filter(_.contains("\"metaData\"")).flatMap {
-        line =>
-          val md = parseAction(om, p, line).get("metaData")
-          val v = if (md == null || md.isNull) null else md.get(field)
-          if (v == null || v.isNull) Iterator.empty
-          else if (field == "configuration") {
-            val it = v.fieldNames()
-            val b = Map.newBuilder[String, String]
-            while (it.hasNext) {
-              val k = it.next(); b += k -> v.get(k).asText()
-            }
-            Iterator.single(b.result(): Any)
-          } else if (field == "partitionColumns") {
-            val b = Seq.newBuilder[String]
-            val it = v.elements()
-            while (it.hasNext) b += it.next().asText()
-            Iterator.single(b.result(): Any)
-          } else Iterator.single(v.asText(): Any)
-      }
-    }.nextOption()
-  }
+      fromInclusive: Long, atMost: Long, field: String)
+      : Option[com.fasterxml.jackson.databind.JsonNode] =
+    logActions(spark, table, fromInclusive, atMost, newestFirst = true)
+      .flatMap { case (_, n) => jnode(n, "metaData").flatMap(jnode(_, field)) }
+      .nextOption()
 
   private def parseSchema(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
@@ -1624,7 +1592,7 @@ object MiniDelta {
   private def readCheckpointMetaData(spark: SparkSession, table: String,
                                      version: Long)
       : Option[(String, Option[Map[String, String]])] =
-    cpMetaCache.computeIfAbsent((table, version), { _ =>
+    memoized(cpMetaCache, (table, version)) {
       Some(checkpointActionDF(spark, table, version))
         .filter(_.columns.contains("metaData"))
         .flatMap(_.where(col("metaData.schemaString").isNotNull)
@@ -1633,7 +1601,7 @@ object MiniDelta {
           .map(r => (r.getString(0),
             if (r.isNullAt(1)) None
             else Some(r.getMap[String, String](1).toMap))))
-    })
+    }
 
   // memo: (table, version) -> resolved configuration. The log below a
   // version is immutable, so the entry never goes stale for a live
@@ -1660,11 +1628,9 @@ object MiniDelta {
     // "latest" calls share the pinned calls' memo entries
     val eff = math.min(latestVersion(spark, table), atMost)
     if (eff < 0) return Map.empty
-    val hit = tableConfigMemo.get((table, eff))
-    if (hit != null) return hit
-    val cfg = tableConfigResolve(spark, table, eff)
-    tableConfigMemo.put((table, eff), cfg)
-    cfg
+    memoized(tableConfigMemo, (table, eff)) {
+      tableConfigResolve(spark, table, eff)
+    }
   }
 
   private def tableConfigResolve(spark: SparkSession, table: String,
@@ -1680,8 +1646,11 @@ object MiniDelta {
     // the newest metaData that CARRIES a configuration (an explicit {}
     // still overrides; it deserializes as an empty map, not null).
     val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
-      "configuration").collectFirst {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, String]] }
+      "configuration").map { n =>
+        import scala.jdk.CollectionConverters._
+        n.properties().asScala.map(e => e.getKey -> e.getValue.asText())
+          .toMap
+      }
     fromTail.orElse(base).getOrElse(Map.empty)
   }
 
@@ -2394,8 +2363,8 @@ object MiniDelta {
     * feature, and [[cleanupLogs]] always preserves the latest
     * checkpoint, so no retention wait can ever age it out (which is
     * why the message demands TRUNCATE HISTORY instead of suggesting a
-    * retry). Substring screen over driver-read JSONs, the
-    * [[requireReadable]] cost shape. */
+    * retry). The marker test runs over each parsed action's JSON text
+    * ([[logActions]]), so a torn line refuses by name. */
   private def historyTraceReason(spark: SparkSession, table: String,
                                  feature: String, version: Long)
       : Option[String] = {
@@ -2406,16 +2375,9 @@ object MiniDelta {
       case "v2Checkpoint" => Seq("v2Checkpoint", "checkpointPolicy")
       case other => Seq(other)
     }
-    val f = fs(spark, table)
-    val jsonTraced = logJsonVersions(spark, table, 0L, version)
-      .exists { case (_, p) =>
-        val pp = new Path(p)
-        val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-        val in = f.open(pp)
-        try in.readFully(bytes) finally in.close()
-        val txt = new String(bytes, "UTF-8")
-        markers.exists(txt.contains)
-      }
+    val jsonTraced = logActions(spark, table, 0L, version).exists {
+      case (_, n) => val txt = n.toString; markers.exists(txt.contains)
+    }
     if (jsonTraced)
       Some("historical log entries still reference the feature")
     else if (latestCheckpoint(spark, table, version).isDefined)
@@ -4298,7 +4260,9 @@ object MiniDelta {
     *     still conflicts, so Serializable-grade anomalies (a DELETE
     *     missing rows it should have seen) never commit silently.
     * Anything unprovable throws exactly as before — resolution only
-    * widens the commits that SUCCEED, never what they mean.
+    * widens the commits that SUCCEED, never what they mean. A winner
+    * with a torn line cannot be screened and raises
+    * [[MalformedCommitException]] by name ([[logActions]]).
     * `readCond = None` (untranslatable predicate) makes every
     * dataChange add a conflict. Winners are driver-read ONCE across
     * the whole rebase sequence, not once per attempt — `base` advances
@@ -4329,13 +4293,9 @@ object MiniDelta {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val ourRemoved: Set[String] = lines.iterator
       .filter(_.contains("\"remove\""))
-      .flatMap { l =>
-        val n = try om.readTree(l) catch { case _: Exception => null }
-        val r = if (n == null) null else n.get("remove")
-        if (r == null || r.isNull) Iterator.empty
-        else Iterator.single(r.get("path").asText())
-      }.toSet
-    val f = fs(spark, table)
+      .flatMap(l => jnode(parseAction(om, commitPath(table, version), l),
+        "remove"))
+      .map(_.get("path").asText()).toSet
     var base = version
     var attempt = 0
     while (true) {
@@ -4347,50 +4307,27 @@ object MiniDelta {
           val latest = latestVersion(spark, table)
           val addRows = scala.collection.mutable.ArrayBuffer
             .empty[org.apache.spark.sql.Row]
-          logJsonVersions(spark, table, base, latest).foreach {
-            case (wv, p) =>
+          var screened = -1L
+          logActions(spark, table, base, latest).foreach { case (wv, node) =>
+            if (wv != screened) {
               recordWinnerScreened(s"$table@$wv")
-              val pp = new Path(p)
-              val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-              val in = f.open(pp)
-              try in.readFully(bytes) finally in.close()
-              new String(bytes, "UTF-8").linesIterator
-                .filter(_.nonEmpty).foreach { line =>
-                  val node = try om.readTree(line)
-                    catch { case _: Exception => null }
-                  if (node == null) throw e // unreadable winner
-                  def has(k: String) = {
-                    val v = node.get(k); v != null && !v.isNull
-                  }
-                  if (has("metaData") || has("protocol")) throw e
-                  if (has("domainMetadata") &&
-                      node.get("domainMetadata").get("domain").asText() !=
-                        RowTrackingDomain) throw e
-                  if (has("remove") && ourRemoved.contains(
-                      node.get("remove").get("path").asText())) throw e
-                  if (has("add")) {
-                    val a = node.get("add")
-                    val dc = a.get("dataChange")
-                    if (dc == null || dc.asBoolean(true)) {
-                      if (strictSerializable || readCond.isEmpty) throw e
-                      val pvNode = a.get("partitionValues")
-                      val pv = scala.collection.mutable
-                        .Map.empty[String, String]
-                      if (pvNode != null && !pvNode.isNull) {
-                        val it = pvNode.fieldNames()
-                        while (it.hasNext) {
-                          val k = it.next()
-                          val vn = pvNode.get(k)
-                          pv += k -> (if (vn.isNull) null else vn.asText())
-                        }
-                      }
-                      val st = a.get("stats")
-                      addRows += org.apache.spark.sql.Row(
-                        pv.toMap,
-                        if (st == null || st.isNull) null else st.asText())
-                    }
-                  }
-                }
+              screened = wv
+            }
+            def has(k: String) = jnode(node, k).isDefined
+            if (has("metaData") || has("protocol")) throw e
+            if (has("domainMetadata") &&
+                node.get("domainMetadata").get("domain").asText() !=
+                  RowTrackingDomain) throw e
+            if (has("remove") && ourRemoved.contains(
+                node.get("remove").get("path").asText())) throw e
+            jnode(node, "add").foreach { a =>
+              if (jnode(a, "dataChange").forall(_.asBoolean(true))) {
+                if (strictSerializable || readCond.isEmpty) throw e
+                addRows += org.apache.spark.sql.Row(
+                  Option(pvOfNode(a, "partitionValues")).getOrElse(Map.empty),
+                  jnode(a, "stats").map(_.asText()).orNull)
+              }
+            }
           }
           if (addRows.nonEmpty) {
             import org.apache.spark.sql.types._
@@ -4864,7 +4801,7 @@ object MiniDelta {
     * plus the JSON tail after it — the same replay window snapshots
     * use. A checkpoint without a protocol row raises
     * [[MalformedCheckpointException]]. The tail is driver metadata,
-    * substring-screened like [[requireReadable]]. */
+    * read through [[logActions]] ([[scanProtocolRange]]). */
   private def resolveProtocol(spark: SparkSession, table: String,
                               version: Long, cpAtMost: Long)
       : Option[ProtocolAction] = {
@@ -4893,38 +4830,21 @@ object MiniDelta {
       .getOrElse(throw new MalformedCheckpointException(table, v))
 
   /** The LATEST protocol action in commit JSONs `[from, to]`, if any —
-    * substring-screened driver reads, no Spark jobs. */
+    * read newest-first through [[logActions]], no Spark jobs. */
   private def scanProtocolRange(spark: SparkSession, table: String,
                                 fromInclusive: Long, toInclusive: Long)
-      : Option[ProtocolAction] = {
-    val f = fs(spark, table)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    var found: Option[ProtocolAction] = None
-    logJsonVersions(spark, table, fromInclusive, toInclusive)
-      .foreach { case (_, path) =>
-        val pp = new Path(path)
-        val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-        val in = f.open(pp)
-        try in.readFully(bytes) finally in.close()
-        val txt = new String(bytes, "UTF-8")
-        if (txt.contains("\"protocol\""))
-          txt.linesIterator.filter(_.nonEmpty).foreach { line =>
-            val proto = parseAction(om, path, line).get("protocol")
-            if (proto != null && !proto.isNull) {
-              def feats(k: String): Seq[String] = {
-                val a = proto.get(k)
-                if (a == null || a.isNull) Nil
-                else (0 until a.size()).map(a.get(_).asText())
-              }
-              found = Some(ProtocolAction(
-                Option(proto.get("minReaderVersion")).map(_.asInt()).getOrElse(1),
-                Option(proto.get("minWriterVersion")).map(_.asInt()).getOrElse(2),
-                feats("readerFeatures"), feats("writerFeatures")))
-            }
-          }
+      : Option[ProtocolAction] =
+    logActions(spark, table, fromInclusive, toInclusive, newestFirst = true)
+      .flatMap { case (_, n) => jnode(n, "protocol") }.nextOption()
+      .map { proto =>
+        def feats(k: String): Seq[String] =
+          jnode(proto, k).fold(Seq.empty[String])(a =>
+            (0 until a.size()).map(a.get(_).asText()))
+        ProtocolAction(
+          jnode(proto, "minReaderVersion").map(_.asInt()).getOrElse(1),
+          jnode(proto, "minWriterVersion").map(_.asInt()).getOrElse(2),
+          feats("readerFeatures"), feats("writerFeatures"))
       }
-    found
-  }
 
   /** Writer features (protocol minWriterVersion 7) this engine's
     * commits honor: append-only + CDF gating happens in
@@ -5893,12 +5813,6 @@ object MiniDelta {
     * seam so TIMESTAMP AS OF specs can script history. */
   private[graft] var commitClock: () => Long = () => System.currentTimeMillis()
 
-  // last in-commit timestamp stamped per table (this process); first
-  // use reads the previous commit's clock so monotonicity survives
-  // restarts
-  private val lastIct =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** The Delta rowTracking feature's domainMetadata domain. */
   private[graft] val RowTrackingDomain = "delta.rowTracking"
 
@@ -5912,44 +5826,47 @@ object MiniDelta {
     s"""{"clusteringColumns":[${
       cols.map(c => s"[${jstr(c)}]").mkString(",")}]}"""
 
-  private val ClusterColsRe =
-    """"clusteringColumns"\s*:\s*\[(.*?)\]\s*}""".r
+  /** The configuration JSON of the newest `domain` domainMetadata
+    * action as of `atMost`, parsed: the JSON tail since the newest
+    * checkpoint read newest-first through [[logActions]], falling back
+    * to the checkpoint's domainMetadata row. None when no action
+    * names the domain. O(since-last-checkpoint). */
+  private def domainConfig(spark: SparkSession, table: String,
+      domain: String, atMost: Long)
+      : Option[com.fasterxml.jackson.databind.JsonNode] = {
+    if (atMost < 0) return None
+    val cp = latestCheckpoint(spark, table, atMost)
+    logActions(spark, table, cp.getOrElse(-1L) + 1, atMost,
+        newestFirst = true)
+      .flatMap { case (_, n) => jnode(n, "domainMetadata") }
+      .find(jnode(_, "domain").exists(_.asText() == domain))
+      .flatMap(jnode(_, "configuration")).map(_.asText())
+      .orElse(cp.flatMap { v =>
+        val df = checkpointActionDF(spark, table, v)
+        if (!df.columns.contains("domainMetadata")) None
+        else df.where(col("domainMetadata").isNotNull &&
+            col("domainMetadata.domain") === domain)
+          .select("domainMetadata.configuration").collect().headOption
+          .flatMap(r => Option(r.getString(0)))
+      })
+      .map(jsonTree)
+  }
+
+  private def jsonTree(json: String): com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
 
   /** The table's declared clustering layout at `atMost` (PHYSICAL
     * column names, possibly empty = CLUSTER BY NONE): the newest
-    * delta.clustering domainMetadata action, resolved from the JSON
-    * tail with the newest checkpoint's domainMetadata row as fallback
-    * (the [[rowIdHighWaterMark]] discipline). None when the table
-    * never declared clustering. */
+    * delta.clustering domainMetadata action ([[domainConfig]]). None
+    * when the table never declared clustering. */
   private def clusteringPhysicalCols(spark: SparkSession, table: String,
-      atMost: Long): Option[Seq[String]] = {
-    if (atMost < 0) return None
-    val f = fs(spark, table)
-    val cp = latestCheckpoint(spark, table, atMost)
-    val tail = logJsonVersions(spark, table, cp.getOrElse(-1L) + 1, atMost)
-    val fromTail = tail.reverseIterator.flatMap { case (_, p) =>
-      val pp = new Path(p)
-      val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-      val in = f.open(pp)
-      try in.readFully(bytes) finally in.close()
-      val txt = new String(bytes, "UTF-8")
-      if (!txt.contains(ClusteringDomain)) None
-      else txt.linesIterator
-        .filter(l => l.contains("\"domainMetadata\"") &&
-          l.contains(ClusteringDomain))
-        .map(l => parseClusteringCols(l.replace("\\\"", "\"")))
-        .reduceOption((_, b) => b) // newest line in the file wins
-    }.nextOption()
-    fromTail.orElse(cp.flatMap { v =>
-      val df = checkpointActionDF(spark, table, v)
-      if (!df.columns.contains("domainMetadata")) None
-      else df.where(col("domainMetadata").isNotNull &&
-          col("domainMetadata.domain") === ClusteringDomain)
-        .select("domainMetadata.configuration").collect().headOption
-        .flatMap(r => Option(r.getString(0)))
-        .map(parseClusteringCols)
-    })
-  }
+      atMost: Long): Option[Seq[String]] =
+    domainConfig(spark, table, ClusteringDomain, atMost).map { cfg =>
+      import scala.jdk.CollectionConverters._
+      jnode(cfg, "clusteringColumns").toSeq
+        .flatMap(_.elements().asScala).flatMap(_.elements().asScala)
+        .map(_.asText())
+    }
 
   /** The clustering columns under their LOGICAL names (Nil when not
     * clustered or CLUSTER BY NONE) — physical names relabel back
@@ -5961,11 +5878,6 @@ object MiniDelta {
     raw.map(pn => schema.flatMap(_.fields.find(fld =>
       physicalNameOf(fld) == pn)).fold(pn)(_.name))
   }
-
-  private def parseClusteringCols(txt: String): Seq[String] =
-    ClusterColsRe.findFirstMatchIn(txt).map(_.group(1)).toSeq
-      .flatMap(inner => "\"([^\"]*)\"".r.findAllMatchIn(inner)
-        .map(_.group(1)).toSeq)
 
   /** ALTER TABLE ... CLUSTER BY (cols) / CLUSTER BY NONE: one commit
     * re-stating the delta.clustering domain (empty list = NONE —
@@ -5997,45 +5909,18 @@ object MiniDelta {
       "CLUSTER BY")
   }
 
-  // matches both the bare configuration JSON ("rowIdHighWaterMark":N,
-  // as read from a checkpoint's domainMetadata column) and the
-  // escaped-inside-a-commit-line form (\"rowIdHighWaterMark\":N)
-  private val HwmRe = """\\?"rowIdHighWaterMark\\?"\s*:\s*(-?\d+)""".r
-
   /** The row-id high-water mark as of `atMost`: the LATEST
-    * delta.rowTracking domainMetadata action, resolved from the JSON
-    * tail (newest-first, substring-screened driver reads — commit files
-    * are KBs) falling back to the newest checkpoint's domainMetadata
-    * row. -1 before any assignment (the spec's initial mark; the first
-    * fresh base row id is 0). O(since-last-checkpoint). */
+    * delta.rowTracking domainMetadata action ([[domainConfig]]). -1
+    * before any assignment (the spec's initial mark; the first fresh
+    * base row id is 0). O(since-last-checkpoint). */
   private def rowIdHighWaterMark(spark: SparkSession, table: String,
-                                 atMost: Long): Long = {
-    val f = fs(spark, table)
-    val cp = latestCheckpoint(spark, table, atMost)
-    val tail = logJsonVersions(spark, table, cp.getOrElse(-1L) + 1, atMost)
-    val fromTail = tail.reverseIterator.flatMap { case (_, p) =>
-      val pp = new Path(p)
-      val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-      val in = f.open(pp)
-      try in.readFully(bytes) finally in.close()
-      val txt = new String(bytes, "UTF-8")
-      if (!txt.contains(RowTrackingDomain)) None
-      else txt.linesIterator
-        .filter(l => l.contains("\"domainMetadata\"") &&
-          l.contains(RowTrackingDomain))
-        .flatMap(l => HwmRe.findFirstMatchIn(l).map(_.group(1).toLong))
-        .reduceOption((a: Long, b: Long) => math.max(a, b))
-    }.nextOption()
-    fromTail.orElse(cp.flatMap { v =>
-      val df = checkpointActionDF(spark, table, v)
-      if (!df.columns.contains("domainMetadata")) None
-      else df.where(col("domainMetadata").isNotNull &&
-          col("domainMetadata.domain") === RowTrackingDomain)
-        .select("domainMetadata.configuration").collect().headOption
-        .flatMap(r => Option(r.getString(0)))
-        .flatMap(c => HwmRe.findFirstMatchIn(c).map(_.group(1).toLong))
-    }).getOrElse(-1L)
-  }
+                                 atMost: Long): Long =
+    domainConfig(spark, table, RowTrackingDomain, atMost)
+      .flatMap(hwmOf).getOrElse(-1L)
+
+  private def hwmOf(cfg: com.fasterxml.jackson.databind.JsonNode)
+      : Option[Long] =
+    jnode(cfg, "rowIdHighWaterMark").map(_.asLong())
 
   private def domainMetadataLine(domain: String, cfgJson: String): String =
     s"""{"domainMetadata":{"domain":${jstr(domain)},""" +
@@ -6116,8 +6001,9 @@ object MiniDelta {
     val carried = lines.filter(l =>
       l.startsWith("{\"domainMetadata\"") && l.contains(RowTrackingDomain))
     var hwm = (rowIdHighWaterMark(spark, table, v - 1) +:
-      carried.flatMap(l =>
-        HwmRe.findFirstMatchIn(l).map(_.group(1).toLong))).max
+      carried.flatMap(l => jnode(om.readTree(l), "domainMetadata")
+        .flatMap(jnode(_, "configuration"))
+        .flatMap(c => hwmOf(jsonTree(c.asText()))))).max
     val patched = lines.toArray
     adds.foreach { case (i, p, recs) =>
       val (base, dcv) = preserved.get(p) match {
@@ -6142,16 +6028,16 @@ object MiniDelta {
 
   /** The next monotonic in-commit timestamp: strictly greater than the
     * previous commit's (ICT-or-wall) clock, at least the current wall
-    * clock — Delta's ICT rule. */
+    * clock — Delta's ICT rule. Commit `v - 1` is read every time, so a
+    * commit another writer landed counts (a memo hit once any reader
+    * parsed it). */
   private def nextIct(spark: SparkSession, table: String, v: Long,
                       now: Long): Long = {
-    val prev = Option(lastIct.get(table)).map(_.longValue()).getOrElse(
+    val prev =
       if (v <= 0) 0L
       else commitTimestamps(spark, table, v - 1, v - 1).values
-        .headOption.getOrElse(0L))
-    val t = math.max(prev + 1, now)
-    lastIct.put(table, java.lang.Long.valueOf(t))
-    t
+        .headOption.getOrElse(0L)
+    math.max(prev + 1, now)
   }
 
   /** TIMESTAMP AS OF resolution: the latest version whose commit
@@ -6329,30 +6215,15 @@ object MiniDelta {
       resolveConflicts = true, readCond = Some(lit(false)))
   }
 
-  private val addSizeRe = "\"size\"\\s*:\\s*([0-9]+)".r
-
-  /** Sum of add-action data bytes in ONE commit's JSON — the budget
-    * unit for the streaming source's `maxBytesPerTrigger`. Driver-side
-    * line scan (commit files are KBs, one action per line; the stats
-    * string is escaped so `"size":` can only be the add's own field,
-    * and `"sizeInBytes"` of a DV descriptor never matches). Commit
-    * files are immutable once named — callers memoize per version. */
+  /** Sum of add-action data bytes in ONE commit — the budget unit for
+    * the streaming source's `maxBytesPerTrigger`; 0 when the commit
+    * does not exist. Read through [[logActions]], so a torn line
+    * refuses by name. */
   private[graft] def commitAddBytes(spark: SparkSession, table: String,
-                                    v: Long): Long = {
-    val p = new Path(commitPath(table, v))
-    val f = fs(spark, table)
-    if (!f.exists(p)) return 0L
-    val in = f.open(p)
-    val txt =
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8")
-      } finally in.close()
-    txt.linesIterator.filter(_.contains("\"add\""))
-      .flatMap(l => addSizeRe.findFirstMatchIn(l).map(_.group(1).toLong))
-      .sum
-  }
+                                    v: Long): Long =
+    logActions(spark, table, v, v).flatMap { case (_, n) =>
+      jnode(n, "add").flatMap(jnode(_, "size")).map(_.asLong())
+    }.sum
 
   /** Diagnostic: manifest rows collected onto the driver by DML
     * blast-radius discovery. Specs assert a partition-scoped DELETE
@@ -9197,12 +9068,12 @@ object MiniDelta {
     else {
       val eff = latestVersion(spark, table)
       if (eff < 0) Seq.empty
-      else partitionColsMemo.computeIfAbsent((table, eff), _ => {
+      else memoized(partitionColsMemo, (table, eff)) {
         val fromFiles = partitionColsOf(snapshotFilesCached(spark, table)
           .select("path").limit(1).collect().map(_.getString(0)))
         if (fromFiles.nonEmpty) fromFiles
         else metaPartitionColumns(spark, table).getOrElse(Seq.empty)
-      })
+      }
     }
 
   /** Latest metaData action's `partitionColumns`: the JSON tail since
@@ -9222,7 +9093,10 @@ object MiniDelta {
     // files never justifies a Spark job's scheduling fixed cost, and
     // this probe runs once per SQL statement
     val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
-      "partitionColumns").map(_.asInstanceOf[Seq[String]])
+      "partitionColumns").map { n =>
+        import scala.jdk.CollectionConverters._
+        n.elements().asScala.map(_.asText()).toSeq
+      }
     fromTail.orElse(cp.flatMap { v =>
       Some(checkpointActionDF(spark, table, v))
         .filter(_.columns.contains("metaData"))
@@ -9408,7 +9282,7 @@ object MiniDelta {
     * [[legacyDvRefusal]] (this engine's older checkpoints carry the
     * column all-null). Neither outcome is memoized. */
   private def cpGate(spark: SparkSession, table: String, v: Long): CpGate =
-    cpGates.computeIfAbsent((table, v), { _ =>
+    memoized(cpGates, (table, v)) {
       val raw = checkpointActionDF(spark, table, v)
       val proto = checkpointProtocol(raw, table, v)
       val cm = readCheckpointMetaData(spark, table, v).flatMap(_._2)
@@ -9432,7 +9306,7 @@ object MiniDelta {
       CpGate(proto.minReader, proto.readerFeats, cm,
         dvRows.collect { case r if !r.isNullAt(0) => r.getString(0) }
           .filterNot(supportedDvStorage).toSet)
-    })
+    }
 
   /** The Delta protocol's client contract, enforced before any replay:
     * a reader must check the table's `protocol` action (reader version
@@ -9448,17 +9322,18 @@ object MiniDelta {
     *
     * Scale/cost: pure driver metadata. The checkpoint side parses once
     * per (table, checkpoint version) — checkpoints are immutable once
-    * named, so [[cpGates]] memoizes it. The tail side driver-reads the
-    * O(since-last-checkpoint) commit JSONs once per NEW version
-    * (memoized in [[readableThrough]]) with substring screens, so
-    * self-written tables pay few JSON parses and zero Spark jobs. */
+    * named, so [[cpGates]] memoizes it. The tail side reads the
+    * O(since-last-checkpoint) commit JSONs through [[logActions]] once
+    * per NEW version (memoized in [[readableThrough]]); each commit is
+    * parsed once per process and later readers get it from the memo,
+    * so self-written tables pay one JSON parse per commit and zero
+    * Spark jobs. */
   private def requireReadable(spark: SparkSession, table: String,
                               atMost: Long): Unit = {
     val hi = math.min(latestVersion(spark, table), atMost)
     if (hi < 0) return
     val seen = readableThrough.get(table)
     if (seen != null && seen.longValue() >= hi) return
-    val f = fs(spark, table)
     val cp = latestCheckpoint(spark, table, hi)
     var minReader = -1
     var readerFeats: Seq[String] = Nil
@@ -9471,54 +9346,26 @@ object MiniDelta {
       cmMode = gate.cmMode
       badDvTypes ++= gate.badDv
     }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    logJsonVersions(spark, table, cp.getOrElse(-1L) + 1, hi)
-      .foreach { case (_, path) =>
-        val pp = new Path(path)
-        val bytes = new Array[Byte](f.getFileStatus(pp).getLen.toInt)
-        val in = f.open(pp)
-        try in.readFully(bytes) finally in.close()
-        val txt = new String(bytes, "UTF-8")
-        // "metaData" must be screened IN: a configuration-replacing
-        // metaData commit that clears delta.columnMapping.mode contains
-        // none of the other substrings, and skipping it would pin a
-        // stale checkpoint-derived cmMode refusal forever
-        // "dv" parses the lines that may carry a legacy DV, which
-        // [[parseAction]] refuses
-        if (txt.contains("\"protocol\"") || txt.contains("deletionVector") ||
-            txt.contains("columnMapping") || txt.contains("\"metaData\"") ||
-            txt.contains("\"dv\""))
-          txt.linesIterator.filter(_.nonEmpty).foreach { line =>
-            val node = parseAction(om, path, line)
-            val proto = node.get("protocol")
-            if (proto != null && !proto.isNull) {
-              minReader = Option(proto.get("minReaderVersion"))
-                .map(_.asInt()).getOrElse(minReader)
-              val rf = proto.get("readerFeatures")
-              readerFeats =
-                if (rf == null || rf.isNull) Nil
-                else (0 until rf.size()).map(rf.get(_).asText())
-            }
-            val add = node.get("add")
-            if (add != null && !add.isNull) {
-              val dv = add.get("deletionVector")
-              if (dv != null && !dv.isNull) {
-                val st = Option(dv.get("storageType"))
-                  .map(_.asText()).getOrElse("<absent>")
-                if (!supportedDvStorage(st)) badDvTypes += st
-              }
-            }
-            val md = node.get("metaData")
-            if (md != null && !md.isNull) {
-              val cfg = md.get("configuration")
-              // null configuration = legacy "not stated" (keep the
-              // prior resolution); an explicit map replaces it
-              if (cfg != null && !cfg.isNull)
-                cmMode = Option(cfg.get("delta.columnMapping.mode"))
-                  .map(_.asText())
-            }
+    logActions(spark, table, cp.getOrElse(-1L) + 1, hi).foreach {
+      case (_, node) =>
+        jnode(node, "protocol").foreach { proto =>
+          minReader = jnode(proto, "minReaderVersion")
+            .map(_.asInt()).getOrElse(minReader)
+          readerFeats = jnode(proto, "readerFeatures").fold(Seq.empty[String])(
+            rf => (0 until rf.size()).map(rf.get(_).asText()))
+        }
+        jnode(node, "add").flatMap(jnode(_, "deletionVector")).foreach { dv =>
+          val st = jnode(dv, "storageType").map(_.asText())
+            .getOrElse("<absent>")
+          if (!supportedDvStorage(st)) badDvTypes += st
+        }
+        // null configuration = legacy "not stated" (keep the prior
+        // resolution); an explicit map replaces it
+        jnode(node, "metaData").flatMap(jnode(_, "configuration"))
+          .foreach { cfg =>
+            cmMode = jnode(cfg, "delta.columnMapping.mode").map(_.asText())
           }
-      }
+    }
     if (minReader > 3)
       throw new UnsupportedTableFeatureException(
         s"$table requires minReaderVersion=$minReader; " +
@@ -9591,29 +9438,54 @@ object MiniDelta {
   // ("file:/tmp/...") while gates wipe and invalidate the PLAIN path,
   // so a table-string-keyed clear can miss — a wiped-and-recreated
   // commit then fingerprints differently instead of serving the old
-  // run's file names. The crude global bound keeps a pathological
-  // many-table session from accumulating without limit.
+  // run's file names. The global bound keeps a many-table session from
+  // accumulating without limit: past it, each miss evicts one entry,
+  // so the hot tails stay resident.
   private val commitNodesMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long),
     IndexedSeq[com.fasterxml.jackson.databind.JsonNode]]()
+
+  /** Diagnostic: commit JSON files opened and parsed on the driver
+    * (misses of [[commitNodes]], the one driver reader of commit
+    * files). Specs assert each new commit is opened once per process,
+    * however many readers consult it. */
+  private[graft] val commitFileOpens =
+    new java.util.concurrent.atomic.AtomicLong
 
   /** The parsed action nodes of one commit file, memoized per
     * (path, len, mtime). */
   private def commitNodes(f: org.apache.hadoop.fs.FileSystem,
       p: String, len: Long, mtime: Long)
-      : IndexedSeq[com.fasterxml.jackson.databind.JsonNode] = {
-    val key = (p, len, mtime)
-    val hit = commitNodesMemo.get(key)
+      : IndexedSeq[com.fasterxml.jackson.databind.JsonNode] =
+    memoized(commitNodesMemo, (p, len, mtime)) {
+      commitFileOpens.incrementAndGet()
+      val bytes = new Array[Byte](len.toInt)
+      val in = f.open(new Path(p))
+      try in.readFully(bytes) finally in.close()
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      if (commitNodesMemo.size > 8192) {
+        val it = commitNodesMemo.keySet.iterator
+        if (it.hasNext) { it.next(); it.remove() }
+      }
+      new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
+        .map(line => parseAction(om, p, line)).toIndexedSeq
+    }
+
+  /** `memo(key)`, computed and published on a miss OUTSIDE the map's
+    * bin lock: `computeIfAbsent` holds the lock for the whole
+    * computation (often a Spark job or file IO) and so serializes every
+    * concurrent caller hashing to the same bin. The values memoized
+    * this way are facts of immutable files, so a racing duplicate
+    * computation is the cheaper cost; the first published value wins,
+    * and a computation that throws publishes nothing. */
+  private def memoized[K, V <: AnyRef](
+      memo: java.util.concurrent.ConcurrentHashMap[K, V], key: K)
+      (compute: => V): V = {
+    val hit = memo.get(key)
     if (hit != null) return hit
-    val bytes = new Array[Byte](len.toInt)
-    val in = f.open(new Path(p))
-    try in.readFully(bytes) finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val nodes = new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
-      .map(line => parseAction(om, p, line)).toIndexedSeq
-    if (commitNodesMemo.size > 8192) commitNodesMemo.clear()
-    commitNodesMemo.putIfAbsent(key, nodes)
-    nodes
+    val v = compute
+    val prev = memo.putIfAbsent(key, v)
+    if (prev != null) prev else v
   }
 
   /** One commit line as a JSON action object, or
@@ -9639,31 +9511,61 @@ object MiniDelta {
   }
 
   /** (version, path, length, mtime) of the given commit files — one
-    * getFileStatus each, feeding both the fold-threshold sum and the
-    * memo fingerprint. */
+    * getFileStatus each, taken as the iterator reaches the file; it
+    * both sizes the [[localActions]] cap and fingerprints the
+    * [[commitNodes]] key. */
   private def commitStats(f: org.apache.hadoop.fs.FileSystem,
-      files: Seq[(Long, String)]): Seq[(Long, String, Long, Long)] =
+      files: Iterator[(Long, String)]): Iterator[(Long, String, Long, Long)] =
     files.map { case (v, p) =>
       val st = f.getFileStatus(new Path(p))
       (v, p, st.getLen, st.getModificationTime)
     }
 
-  /** Driver-parsed `(version, action JsonNode)` pairs of the given
-    * commit files, when their total bytes fit under
-    * [[localReplayMaxBytes]] — ONE read+parse serving every
-    * metadata-scale consumer that would otherwise run its own
-    * distributed JSON scan over the same files (vacuum's three log
-    * passes, commit timestamps). None when the log is too big for the
-    * driver; callers fall back to the distributed query. */
+  /** `(version, action)` pairs of sized commit files, in the order
+    * given; `newestFirst` also reverses each commit's lines. */
+  private def actionsIn(f: org.apache.hadoop.fs.FileSystem,
+      sized: Iterator[(Long, String, Long, Long)], newestFirst: Boolean)
+      : Iterator[(Long, com.fasterxml.jackson.databind.JsonNode)] =
+    sized.flatMap { case (v, p, len, mtime) =>
+      val nodes = commitNodes(f, p, len, mtime)
+      (if (newestFirst) nodes.reverseIterator else nodes.iterator)
+        .map(v -> _)
+    }
+
+  /** The `(version, action)` pairs of the JSON commits in
+    * [`fromInclusive`, `toInclusive`]: the driver's one reader of
+    * commit files. Every line goes through [[parseAction]] (a torn
+    * line or a legacy `dv` add raises by name) and each commit file is
+    * opened and parsed once per process ([[commitNodes]]), so every
+    * later reader of the same commit is a memo hit. `newestFirst`
+    * yields the newest action first (commits newest-first, each
+    * commit's lines last-first) and opens a commit only when the
+    * iterator reaches it, so a newest-wins reader that stops at its
+    * hit never reads older commits. */
+  private def logActions(spark: SparkSession, table: String,
+      fromInclusive: Long = 0L, toInclusive: Long = Long.MaxValue,
+      newestFirst: Boolean = false)
+      : Iterator[(Long, com.fasterxml.jackson.databind.JsonNode)] = {
+    val f = fs(spark, table)
+    val vps = logJsonVersions(spark, table, fromInclusive, toInclusive)
+    actionsIn(f, commitStats(f,
+      if (newestFirst) vps.reverseIterator else vps.iterator), newestFirst)
+  }
+
+  /** [[logActions]] over the given commit files, oldest first, when
+    * their total bytes fit under [[localReplayMaxBytes]] — ONE
+    * read+parse serving every metadata-scale consumer that would
+    * otherwise run its own distributed JSON scan over the same files
+    * (vacuum's three log passes, commit timestamps, the snapshot
+    * replay). None when the log is too big for the driver; callers
+    * fall back to the distributed query. */
   private def localActions(spark: SparkSession, table: String,
       files: Seq[(Long, String)])
       : Option[Seq[(Long, com.fasterxml.jackson.databind.JsonNode)]] = {
     val f = fs(spark, table)
-    val sized = commitStats(f, files)
-    if (sized.map(_._3).sum > localReplayMaxBytes(spark)) return None
-    Some(sized.flatMap { case (v, p, len, mtime) =>
-      commitNodes(f, p, len, mtime).map(v -> _)
-    })
+    val sized = commitStats(f, files.iterator).toSeq
+    if (sized.map(_._3).sum > localReplayMaxBytes(spark)) None
+    else Some(actionsIn(f, sized.iterator, newestFirst = false).toSeq)
   }
 
   /** Null-safe child access on a parsed action node. */
@@ -9790,22 +9692,15 @@ object MiniDelta {
   /** The checkpoint base as driver rows (manifest shape + version),
     * memoized per immutable (table, version, length, mtime); None when
     * the checkpoint is too big for the driver fold. The collect runs
-    * OUTSIDE the map's bin lock (putIfAbsent, not computeIfAbsent): a
-    * Spark job under a ConcurrentHashMap lock would serialize
-    * concurrent replays hashing to the same bin — the rare duplicate
-    * collect of an immutable checkpoint is the cheaper race. */
+    * outside the map's bin lock ([[memoized]]). */
   private def cpBaseRows(spark: SparkSession, table: String,
       v: Long): Option[Seq[org.apache.spark.sql.Row]] = {
     val (len, mtime) = cpFingerprint(spark, table, v)
-    val key = (table, v, len, mtime)
-    val hit = cpRowsMemo.get(key)
-    if (hit != null) return hit
-    val cap = localReplayMaxCpRows(spark)
-    val rows = checkpointBaseDF(spark, table, v).limit(cap + 1).collect()
-    val res: Option[Seq[org.apache.spark.sql.Row]] =
+    memoized(cpRowsMemo, (table, v, len, mtime)) {
+      val cap = localReplayMaxCpRows(spark)
+      val rows = checkpointBaseDF(spark, table, v).limit(cap + 1).collect()
       if (rows.length > cap) None else Some(rows.toIndexedSeq)
-    val prev = cpRowsMemo.putIfAbsent(key, res)
-    if (prev != null) prev else res
+    }
   }
 
   /** Driver-side fold of a JSON tail (over an optional checkpoint-base
@@ -9815,17 +9710,18 @@ object MiniDelta {
     * newest add (a same-version remove+re-add keeps the add — Delta's
     * in-commit reconciliation rule, the `rm_v <= add_v` predicate
     * below). Returns None when the tail is over the size threshold —
-    * the caller falls through to the distributed replay. Commit files
-    * are read once each and parsed with Jackson (the requireReadable
-    * discipline); the result is a LocalRelation, so downstream manifest
+    * the caller falls through to the distributed replay. The tail comes
+    * from [[localActions]] (each commit parsed once per process); the
+    * result is a LocalRelation, so downstream manifest
     * filters/collects are driver-local instead of multi-job queries. */
   private def localReplay(spark: SparkSession, table: String,
                           tail: Seq[(Long, String)],
                           base: Seq[org.apache.spark.sql.Row] = Seq.empty)
       : Option[DataFrame] = {
-    val f = fs(spark, table)
-    val sized = commitStats(f, tail)
-    if (sized.map(_._3).sum > localReplayMaxBytes(spark)) return None
+    val acts = localActions(spark, table, tail) match {
+      case Some(a) => a
+      case None => return None
+    }
     def strOf(n: com.fasterxml.jackson.databind.JsonNode,
               k: String): String = {
       val c = n.get(k)
@@ -9846,35 +9742,30 @@ object MiniDelta {
       adds.put(r.getString(0), (r.getLong(9),
         org.apache.spark.sql.Row.fromSeq(r.toSeq.take(9))))
     }
-    sized.foreach { case (v, p, len, mtime) =>
-      commitNodes(f, p, len, mtime)
-        .foreach { node =>
-          {
-            val add = node.get("add")
-            if (add != null && !add.isNull) {
-              val path = strOf(add, "path")
-              val pv = pvOfNode(add, "partitionValues")
-              // a DV descriptor rides as the same "rdv" marker the
-              // distributed replay renders ([[rdvMarkerOfNode]])
-              val dvCard: java.lang.Long = jnode(add, "deletionVector")
-                .map(r => longOf(r, "cardinality")).orNull
-              val row = org.apache.spark.sql.Row(path, pv,
-                longOf(add, "size"), longOf(add, "modificationTime"),
-                strOf(add, "stats"), rdvMarkerOfNode(add), dvCard,
-                longOf(add, "baseRowId"),
-                longOf(add, "defaultRowCommitVersion"))
-              val prev = adds.get(path)
-              if (prev == null || prev._1 <= v) adds.put(path, (v, row))
-            }
-            val rem = node.get("remove")
-            if (rem != null && !rem.isNull) {
-              val path = strOf(rem, "path")
-              val old = removes.get(path)
-              if (old == null || old.longValue() < v)
-                removes.put(path, java.lang.Long.valueOf(v))
-            }
-          }
-        }
+    acts.foreach { case (v, node) =>
+      val add = node.get("add")
+      if (add != null && !add.isNull) {
+        val path = strOf(add, "path")
+        val pv = pvOfNode(add, "partitionValues")
+        // a DV descriptor rides as the same "rdv" marker the
+        // distributed replay renders ([[rdvMarkerOfNode]])
+        val dvCard: java.lang.Long = jnode(add, "deletionVector")
+          .map(r => longOf(r, "cardinality")).orNull
+        val row = org.apache.spark.sql.Row(path, pv,
+          longOf(add, "size"), longOf(add, "modificationTime"),
+          strOf(add, "stats"), rdvMarkerOfNode(add), dvCard,
+          longOf(add, "baseRowId"),
+          longOf(add, "defaultRowCommitVersion"))
+        val prev = adds.get(path)
+        if (prev == null || prev._1 <= v) adds.put(path, (v, row))
+      }
+      val rem = node.get("remove")
+      if (rem != null && !rem.isNull) {
+        val path = strOf(rem, "path")
+        val old = removes.get(path)
+        if (old == null || old.longValue() < v)
+          removes.put(path, java.lang.Long.valueOf(v))
+      }
     }
     import scala.jdk.CollectionConverters._
     val live = adds.asScala.values.collect {
