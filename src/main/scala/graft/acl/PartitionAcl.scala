@@ -2,9 +2,7 @@ package graft.acl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType,
-  DateType, DoubleType, FloatType, MapType, NumericType, StringType,
-  TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
 
 import graft.util.DriverRows
 
@@ -87,7 +85,7 @@ object PartitionAcl {
       case (Some(req), Some(alw)) =>
         val dt = alw.output.head.dataType
         req.output.zipWithIndex.filter(x => resolver(x._1.name, key)) match {
-          case Seq((a, i)) if a.dataType == dt && driverComparable(dt) =>
+          case Seq((a, i)) if a.dataType == dt && DriverRows.comparable(dt) =>
             val allowedSet = alw.data.iterator.filterNot(_.isNullAt(0))
               .map(_.get(0, dt)).toSet
             val rows = req.data.filter(r =>
@@ -100,19 +98,6 @@ object PartitionAcl {
     }
     local.getOrElse(requests.join(broadcast(keys), Seq(key),
       if (keep) "left_semi" else "left_anti"))
-  }
-
-  /** Key types whose driver-side values compare as the equi-join
-    * compares them: strings of the default collation, integral and
-    * decimal numbers, booleans, dates, timestamps. Floats (the join
-    * normalizes -0.0 and NaN), binary (arrays compare by reference),
-    * collated strings and nested types take the join arm. */
-  private def driverComparable(dt: DataType): Boolean = dt match {
-    case FloatType | DoubleType => false
-    case _: NumericType | BooleanType | DateType | TimestampType |
-         TimestampNTZType => true
-    case s: StringType => s == StringType
-    case _ => false
   }
 
   /** J4: static config filters unioned with DB filters. */

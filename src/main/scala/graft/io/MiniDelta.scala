@@ -4643,18 +4643,39 @@ object MiniDelta {
     * [[latestCheckpoint]] selects: the classic single FILE, the union
     * of a complete multi-part set, or a v2 manifest with its sidecars.
     * A directory at `<v>.checkpoint.parquet` is not a checkpoint. */
-  private def checkpointActionDF(spark: SparkSession, table: String,
-                                 version: Long): DataFrame = {
+  private[graft] def checkpointActionDF(spark: SparkSession, table: String,
+                                        version: Long): DataFrame = {
     val single = checkpointPath(table, version)
-    if (isFile(fs(spark, table), single)) spark.read.parquet(single)
+    if (isFile(fs(spark, table), single))
+      spark.read.schema(checkpointSchema(spark, single)).parquet(single)
     else {
       val parts = checkpointMultiParts(spark, table, version)
-      if (parts.nonEmpty) spark.read.parquet(parts: _*)
+      if (parts.nonEmpty)
+        spark.read.schema(checkpointSchema(spark, parts.head))
+          .parquet(parts: _*)
       else checkpointV2Manifest(spark, table, version)
         .map(v2CheckpointActionDF(spark, table, _))
         .getOrElse(throw new java.io.FileNotFoundException(
           s"$table: no checkpoint at version $version"))
     }
+  }
+
+  /** The schema `spark.read.parquet` infers for a checkpoint file (a
+    * multi-part set infers from its first part), read from the file's
+    * footer on the driver: the reader under it runs no schema-inference
+    * job. */
+  private[graft] def checkpointSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new Path(path)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+        spark.sessionState.newHadoopConf()))
+    val footer = try r.getFooter finally r.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   private def isFile(f: org.apache.hadoop.fs.FileSystem, p: String) =
@@ -6581,7 +6602,7 @@ object MiniDelta {
   }
 
   /** DELETE via deletion vectors: one narrow predicate scan over the
-    * live rows collects (file, row index) masks ([[dvMaskActions]]).
+    * live rows feeds one mask aggregation ([[dvMaskActions]]).
     * Each surviving touched file's mask (old mask ∪ new rows) is
     * encoded as a portable roaring bitmap and packed into one
     * `deletion_vector_<uuid>.bin` file under the table root; the file
@@ -6606,9 +6627,9 @@ object MiniDelta {
     val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
-      .persist() // consumed twice: per-file counts + the mask write
+      .persist() // consumed twice: the mask pass + the cdc write
     try {
-      dvMaskActions(spark, table, readVersion, declared, snap, matched)
+      dvMaskActions(spark, table, declared, snap, matched)
         .fold(readVersion) { lines =>
           // CDF: the masked rows ARE the commit's complete change set
           val cdcLines =
@@ -6650,9 +6671,9 @@ object MiniDelta {
     val pairs = LogFile.of(snap)
     val matched = withRowIdentity(spark, table, pairs, declared)
       .where(coalesce(predicate, lit(false)))
-      .persist() // counts + mask + the updated-image write
+      .persist() // the mask pass + the updated-image write
     try {
-      dvMaskActions(spark, table, readVersion, declared, snap, matched)
+      dvMaskActions(spark, table, declared, snap, matched)
         .fold(readVersion) { maskLines =>
           // updated images: every matched row with SET applied (RHS
           // sees the PRE-update row, SQL UPDATE semantics)
@@ -6690,11 +6711,22 @@ object MiniDelta {
     } finally { matched.unpersist(); () }
   }
 
-  /** The mask step shared by DV DELETE and DV UPDATE: given the matched
-    * LIVE rows (with `__fname`/`__ri` identity), write the new masks
-    * (old ∪ matched, per file) and return the remove + re-add action
-    * lines; files whose every live row matched are plainly removed.
-    * None when nothing matched.
+  /** The mask step shared by every DV DML (DELETE, UPDATE and the
+    * MERGE forms): given the matched LIVE rows (with `__fname`/`__ri`
+    * identity), write the new masks and return the remove + re-add
+    * action lines; files whose every live row matched are plainly
+    * removed. None when nothing matched.
+    *
+    * ONE grouped pass over the matched (`__fname`, `__ri`) rows yields,
+    * per touched file, the count of newly matched rows, the encoded new
+    * mask (old mask ∪ new rows) and that mask's cardinality. Bitmaps
+    * are built per file in executors (`collect_list` bounded by one
+    * file's mask — the per-file memory a real writer holds); a file's
+    * old mask is fetched inside its own encode, from the descriptor its
+    * candidate row carries, so only touched files' masks are read; and
+    * only compressed bytes reach the driver. The driver then removes a
+    * file outright when its new-row count equals its live rows
+    * ([[liveRows]]).
     *
     * Masks are written in the REAL Delta DV format: per-file roaring
     * bitmaps packed into one `deletion_vector_<uuid>.bin` under the
@@ -6702,109 +6734,107 @@ object MiniDelta {
     * readVersion cannot clobber each other; the loser's bin is an
     * orphan for vacuum), referenced from each re-add as an add-action
     * `deletionVector` descriptor — tables this engine masks are
-    * consumable by real Delta readers. Bitmaps are built per file in
-    * executors (`collect_list` bounded by one file's mask — the same
-    * per-file memory a real writer holds) and only the compressed
-    * bytes reach the driver. */
+    * consumable by real Delta readers. */
   private def dvMaskActions(spark: SparkSession, table: String,
-                            readVersion: Long,
                             declared: Option[org.apache.spark.sql.types.StructType],
                             snap: Seq[org.apache.spark.sql.Row],
                             matchedRows: DataFrame): Option[Seq[String]] = {
     val pairs = LogFile.of(snap)
     val byFname = snap.map(r => dvKeyOf(r.getString(0)) -> r).toMap
-    val matched = matchedRows
-      .select(col("__fname").as("fname"), col("__ri").as("row_index"))
-    val matchedCounts = matched.groupBy("fname").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (matchedCounts.isEmpty) return None
-    // live-row totals for the touched files decide full-file removal.
-    // The manifest already knows them (r20, guide §1.2): live =
-    // stats.numRecords - current mask cardinality — pure driver
-    // arithmetic over the snap rows instead of a full re-read of every
-    // touched file. Files missing either piece (stats-less add from a
-    // third-party writer, a descriptor without cardinality) fall back
-    // to the verbatim distributed count.
-    val touchedPairs = pairs.filter(p =>
-      matchedCounts.contains(dvKeyOf(p.path)))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def liveOf(r: org.apache.spark.sql.Row): Option[Long] = {
-      val si = r.fieldIndex("stats")
-      val recs =
-        if (r.isNullAt(si)) None
-        else {
-          // TOP-LEVEL $.numRecords only (a data column literally named
-          // numRecords must not satisfy this — the statsPresent rule)
-          val node = om.readTree(r.getString(si)).get("numRecords")
-          if (node == null || !node.canConvertToLong) None
-          else Some(node.asLong())
-        }
-      val di = r.fieldIndex("dv_path")
-      val ci = r.fieldIndex("dv_card")
-      val card =
-        if (r.isNullAt(di)) Some(0L)
-        else if (r.isNullAt(ci)) None
-        else Some(r.getLong(ci))
-      for (n <- recs; c <- card) yield n - c
+    val oldMasks = pairs.flatMap(f => f.dv.map(dvKeyOf(f.path) -> _)).toMap
+    val h = org.apache.spark.sql.graft.HadoopConfBridge.handle(
+      spark.sparkContext.hadoopConfiguration)
+    val encode = udf { (fname: String, ris: Seq[Long]) =>
+      val fresh = ris.distinct
+      val mask = oldMasks.get(fname).fold(fresh)(m =>
+        (RoaringDv.decode(fetchMask(new Path(table).getFileSystem(h.conf),
+          table, fname, m)).toSeq ++ fresh).distinct)
+      (fresh.size.toLong, RoaringDv.encode(mask), mask.size.toLong)
     }
-    val totalsLocal: Option[Map[String, Long]] =
-      try {
-        val per = touchedPairs.map(p =>
-          liveOf(byFname(dvKeyOf(p.path))).map(dvKeyOf(p.path) -> _))
-        if (per.forall(_.isDefined)) Some(per.flatten.toMap) else None
-      } catch { case _: Exception => None } // projected snap rows etc.
-    val totals = totalsLocal.getOrElse(
-      withRowIdentity(spark, table, touchedPairs, declared)
-        .groupBy(col("__fname")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val fullyGone = matchedCounts.filter { case (f, n) => totals(f) == n }.keySet
-    val surviving = touchedPairs.filterNot(p =>
-      fullyGone.contains(dvKeyOf(p.path)))
-    // the new mask per surviving file = old mask ∪ newly matched rows
-    // (old masks load through maskDF)
-    val oldPairs = surviving.flatMap(f => f.dv.map(f.path -> _))
-    val oldRows =
-      if (oldPairs.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("fname",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("row_index",
-              org.apache.spark.sql.types.LongType))))
-      else maskDF(spark, table, oldPairs)
-        .select(col("__dv_fname").as("fname"), col("__dv_ri").as("row_index"))
-    val survivingF = surviving.map(p => dvKeyOf(p.path)).toSet
-    val perFile = matched.where(!col("fname").isin(fullyGone.toSeq: _*))
-      .unionByName(oldRows.where(col("fname").isin(survivingF.toSeq: _*)))
-      .distinct()
-      .groupBy("fname").agg(collect_list(col("row_index")).as("ris"))
-      .select(col("fname"), encodeDvUdf(col("ris")).as("bytes"),
-        size(col("ris")).cast("long").as("card"))
+    val perFile = matchedRows.groupBy(col("__fname"))
+      .agg(collect_list(col("__ri")).as("ris"))
+      .select(col("__fname"), encode(col("__fname"), col("ris")).as("m"))
       .collect()
-      .map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getLong(2)))
-      .sortBy(_._1)
+      .map { r =>
+        val m = r.getStruct(1)
+        r.getString(0) ->
+          ((m.getLong(0), m.getAs[Array[Byte]](1), m.getLong(2)))
+      }.toMap
+    if (perFile.isEmpty) return None
+    val touchedPairs = pairs.filter(p => perFile.contains(dvKeyOf(p.path)))
+    val live = liveRows(spark, table, declared, touchedPairs, byFname)
+    val surviving = touchedPairs.filter { p =>
+      val k = dvKeyOf(p.path)
+      perFile(k)._1 != live(k)
+    }
     // every-row-matched deletes leave no surviving masks: commit plain
     // removes without creating an empty orphan bin
     val (dvId, frames) =
-      if (perFile.isEmpty) ("", Map.empty[String, (Int, Int)])
-      else RoaringDv.writePackedDvFile(fs(spark, table),
-        table, perFile.map(p => p._1 -> p._2).toIndexedSeq)
-    val cards = perFile.map(p => p._1 -> p._3).toMap
+      if (surviving.isEmpty) ("", Map.empty[String, (Int, Int)])
+      else RoaringDv.writePackedDvFile(fs(spark, table), table,
+        surviving.map(p => dvKeyOf(p.path)).sorted.map(k => k -> perFile(k)._2))
     val now = System.currentTimeMillis()
-    Some((touchedPairs.map(p => removeLine(p.path, dataChange = true, now)) ++
-      surviving.map(_.path).map { rel =>
-        val r = byFname(dvKeyOf(rel))
-        val (off, sz) = frames(dvKeyOf(rel))
+    Some(touchedPairs.map(p => removeLine(p.path, dataChange = true, now)) ++
+      surviving.map { p =>
+        val k = dvKeyOf(p.path)
+        val r = byFname(k)
+        val (off, sz) = frames(k)
         val marker = RealDvPrefix + s"u\u0000$dvId\u0000$off\u0000$sz"
-        addLine(rel, r.getLong(r.fieldIndex("size")),
+        addLine(p.path, r.getLong(r.fieldIndex("size")),
           Option(r.getString(r.fieldIndex("stats"))),
-          dv = Some((marker, cards.getOrElse(dvKeyOf(rel), 0L))),
-          modTime = mtOf(r))
-      }).toSeq)
+          dv = Some((marker, perFile(k)._3)), modTime = mtOf(r))
+      })
   }
 
-  private lazy val encodeDvUdf =
-    udf((ris: Seq[Long]) => RoaringDv.encode(ris))
+  /** Live rows per touched file, keyed by [[dvKeyOf]]. The manifest
+    * already knows them: `stats.numRecords` minus the current mask's
+    * cardinality — driver arithmetic over the candidate rows, no re-read
+    * of the file. A file missing either piece (rows without a `stats` or
+    * `dv_card` column, a stats-less add from another writer, stats that
+    * do not parse or carry no top-level numRecords, a descriptor without
+    * cardinality) is counted instead, by one scan of just those
+    * files. */
+  private def liveRows(spark: SparkSession, table: String,
+                       declared: Option[org.apache.spark.sql.types.StructType],
+                       touched: Seq[LogFile],
+                       byFname: Map[String, org.apache.spark.sql.Row])
+      : Map[String, Long] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    // TOP-LEVEL $.numRecords only (a data column literally named
+    // numRecords must not satisfy this — the statsPresent rule)
+    def numRecords(stats: String): Option[Long] =
+      try {
+        val node = om.readTree(stats).get("numRecords")
+        if (node == null || !node.canConvertToLong) None
+        else Some(node.asLong())
+      } catch {
+        case _: com.fasterxml.jackson.core.JsonParseException => None
+      }
+    val manifest = byFname.values.headOption.map(_.schema).exists(st =>
+      st != null && st.fieldNames.contains("stats") &&
+        st.fieldNames.contains("dv_card"))
+    def fromStats(f: LogFile): Option[Long] =
+      if (!manifest) None
+      else {
+        val r = byFname(dvKeyOf(f.path))
+        val si = r.fieldIndex("stats")
+        val ci = r.fieldIndex("dv_card")
+        val card =
+          if (f.dv.isEmpty) Some(0L)
+          else if (r.isNullAt(ci)) None
+          else Some(r.getLong(ci))
+        for (n <- Option(r.getString(si)).flatMap(numRecords); c <- card)
+          yield n - c
+      }
+    val known = touched.map(f => dvKeyOf(f.path) -> fromStats(f)).toMap
+    val uncounted = touched.filter(f => known(dvKeyOf(f.path)).isEmpty)
+    val counted =
+      if (uncounted.isEmpty) Map.empty[String, Long]
+      else withRowIdentity(spark, table, uncounted, declared)
+        .groupBy(col("__fname")).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    known.map { case (k, n) => k -> n.getOrElse(counted.getOrElse(k, 0L)) }
+  }
 
   /** DV-masked read that KEEPS each row's (filename, row index)
     * identity — the discovery scan of [[deleteWithDv]]. */
@@ -6937,7 +6967,7 @@ object MiniDelta {
     * the Delta MERGE protocol).
     *
     * Scale: the touched-file discovery is a semi join of the table
-    * against the DISTINCT source keys — a narrow projection that AQE
+    * against the source keys — a narrow projection that AQE
     * broadcasts when the source is small (the common upsert shape), so
     * the table-side scan stays shuffle-free; only files containing a
     * matched key are rewritten, plus one new file set for the source
@@ -7020,11 +7050,13 @@ object MiniDelta {
           case None => lit(null).cast(fld.dataType).as(fld.name)
         }
       }.toIndexedSeq: _*)
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    // ONE source aggregation: the duplicate-source-key refusal (Delta's
+    // the key frame feeds only semi/anti joins, where duplicate keys
+    // cannot change the answer: a free projection, no distinct()
+    val srcKeys = source.select(keys.map(col): _*)
+    // ONE source screen: the duplicate-source-key refusal (Delta's
     // multiple-matches error) and the key-range file condition that
     // scopes discovery AND screens concurrent adds in the conflict
-    // resolver below (r19 opt: was two separate collect jobs)
+    // resolver below
     val fileKeyCond = mergeKeyScreen(source, keys, partitionBy, declared)
     val snapDF = fileKeyCond.fold(
       snapshotFilesAt(spark, table, readVersion))(
@@ -7075,7 +7107,7 @@ object MiniDelta {
         if (tgt.columns.isEmpty)
           Some(srcAligned.withColumn("_change_type", lit("insert")))
         else {
-          val tgtKeys = tgt.select(keys.map(col): _*).distinct()
+          val tgtKeys = tgt.select(keys.map(col): _*)
           Some(align(tgt.join(srcKeys, keys, "left_semi"))
             .withColumn("_change_type", lit("update_preimage"))
             .unionByName(srcAligned.join(tgtKeys, keys, "left_semi")
@@ -7157,25 +7189,16 @@ object MiniDelta {
     }
   }
 
-  /** ONE aggregation job over the merge source that both rejects
-    * duplicate source keys (Delta's multiple-matches error — ambiguous
-    * upserts) and computes the per-key [min, max] bounds feeding the
-    * file-level may-match condition. The former shape was two separate
-    * collect jobs per keyed merge (a groupBy-limit dup probe, then a
-    * range agg over the distinct keys) — min/max over the grouped keys
-    * equal min/max over the raw source, so both answers come out of one
-    * pass (guide §1.2/§2: don't launch two jobs where one suffices).
-    * Returns the same condition [[keyRangeFileCond]] would. */
+  /** ONE pass over the merge source that both rejects duplicate source
+    * keys (Delta's multiple-matches error — ambiguous upserts) and
+    * computes the per-key [min, max] bounds feeding the file-level
+    * may-match condition ([[mergeKeyBounds]]). Returns the same
+    * condition [[keyRangeFileCond]] would. */
   private def mergeKeyScreen(source: DataFrame, keys: Seq[String],
       partitionBy: Seq[String],
       declared: Option[org.apache.spark.sql.types.StructType])
       : Option[org.apache.spark.sql.Column] = {
-    val prunableKeys = prunableKeysOf(source.schema, keys)
-    val grouped = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-    val aggs = max(col("__n")).as("__dup") +: prunableKeys.flatMap(k =>
-      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-    val b = grouped.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val (prunableKeys, b) = mergeKeyBounds(source, keys)
     if (!b.isNullAt(0) && b.getLong(0) > 1)
       throw new IllegalArgumentException(
         s"merge source has duplicate keys on (${keys.mkString(", ")}): " +
@@ -7183,6 +7206,53 @@ object MiniDelta {
     if (prunableKeys.isEmpty) None
     else Some(keyRangeCondFromBounds(source.schema, prunableKeys, b, 1,
       partitionBy, declared))
+  }
+
+  /** The key screen's answer for `source`: its range-prunable key
+    * columns, and one row holding the largest source-key group's size
+    * (null for an empty source) followed by a [min, max] pair per
+    * prunable key (null when the column has no non-null key). Min/max
+    * over the grouped keys equal min/max over the raw source, so one
+    * pass answers both.
+    *
+    * A source whose key rows already sit in the driver
+    * ([[DriverRows.of]]) with every key type comparable there
+    * ([[DriverRows.comparable]]) is answered on the driver: Spark's
+    * `groupBy` semantics (null keys form one group), Catalyst's
+    * ordering, values converted as a collect converts them — no Spark
+    * job. Every other source runs the one aggregation. */
+  private[graft] def mergeKeyBounds(source: DataFrame, keys: Seq[String])
+      : (Seq[String], org.apache.spark.sql.Row) = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    val prunableKeys = prunableKeysOf(source.schema, keys)
+    val local = DriverRows.of(source.select(keys.map(col): _*))
+      .filter(_.output.forall(a => DriverRows.comparable(a.dataType)))
+    val b = local match {
+      case Some(l) =>
+        val types = l.output.map(_.dataType)
+        def value(r: org.apache.spark.sql.catalyst.InternalRow, i: Int) =
+          if (r.isNullAt(i)) null else r.get(i, types(i))
+        val groups = l.data.groupBy(r => types.indices.map(value(r, _)))
+        val dup =
+          if (groups.isEmpty) null else groups.values.map(_.size.toLong).max
+        val bounds = prunableKeys.flatMap { k =>
+          val i = keys.indexOf(k)
+          val vs = l.data.map(value(_, i)).filter(_ != null)
+          val ord = TypeUtils.getInterpretedOrdering(types(i))
+          val toScala = CatalystTypeConverters.createToScalaConverter(types(i))
+          if (vs.isEmpty) Seq(null, null)
+          else Seq(toScala(vs.min(ord)), toScala(vs.max(ord)))
+        }
+        org.apache.spark.sql.Row.fromSeq(dup +: bounds)
+      case None =>
+        val grouped = source.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("__n"))
+        val aggs = max(col("__n")).as("__dup") +: prunableKeys.flatMap(k =>
+          Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
+        grouped.agg(aggs.head, aggs.tail: _*).collect()(0)
+    }
+    (prunableKeys, b)
   }
 
   /** The file-level condition built from already-collected per-key
@@ -7262,7 +7332,8 @@ object MiniDelta {
     val declared = latestSchema(spark, table, readVersion)
     requireMappingWritable(declared, table, spark)
     val condC = cond.getOrElse(lit(true))
-    val srcKeys = source.select(keys.map(col): _*).distinct()
+    // semi/anti joins and min/max only: duplicates change no answer
+    val srcKeys = source.select(keys.map(col): _*)
     // keyed form: the key-range condition scopes discovery and screens
     // concurrent adds in the resolver. By-source is complement-shaped:
     // EVERY concurrent add may hold a row the sync should have swept
@@ -7286,7 +7357,7 @@ object MiniDelta {
       val matched = hit(withRowIdentity(spark, table, LogFile.of(snap),
         declared)).persist()
       try {
-        dvMaskActions(spark, table, readVersion, declared, snap, matched)
+        dvMaskActions(spark, table, declared, snap, matched)
           .fold(readVersion) { lines =>
             val cdcLines =
               if (!cfg.get("delta.enableChangeDataFeed").contains("true"))
@@ -7496,7 +7567,7 @@ object MiniDelta {
       : Long = {
     val matched = withRowIdentity(spark, table, LogFile.of(snap), declared)
       .join(srcKeys, keys, "left_semi")
-      .persist() // mask counts + mask write
+      .persist() // the mask pass + the cdc split
     val cfg = tableConfig(spark, table, readVersion)
     val incoming = align(source)
     // constraint check + parquet write = two evaluations of the
@@ -7507,8 +7578,8 @@ object MiniDelta {
       incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (mustCache) incoming.persist()
     try {
-      val maskLines = dvMaskActions(spark, table, readVersion, declared,
-        snap, matched).getOrElse(Seq.empty)
+      val maskLines = dvMaskActions(spark, table, declared, snap, matched)
+        .getOrElse(Seq.empty)
       enforceConstraints(incoming, cfg, declared)
       val added = writeAndCapture(spark, incoming, table, partitionBy,
         schemaOverride = schemaOverride)
@@ -7523,7 +7594,7 @@ object MiniDelta {
         else {
           val dataCols = matched.columns.filterNot(
             c => c == "__fname" || c == "__ri")
-          val tgtKeys = matched.select(keys.map(col): _*).distinct()
+          val tgtKeys = matched.select(keys.map(col): _*)
           writeCdcFiles(spark, table,
             align(matched.select(dataCols.map(col).toIndexedSeq: _*))
               .withColumn("_change_type", lit("update_preimage"))
@@ -7893,9 +7964,9 @@ object MiniDelta {
     // static check exact) — insert/by-source-only clause sets are
     // immune (duplicates cannot make a delete or an insert ambiguous).
     // The dup refusal and the range bounds come out of ONE source
-    // aggregation ([[mergeKeyScreen]], r19 opt — was two jobs); with a
-    // by-source clause the condition is discarded (complement-shaped
-    // discovery) but the dup screen still applies.
+    // screen ([[mergeKeyScreen]]); with a by-source clause the
+    // condition is discarded (complement-shaped discovery) but the dup
+    // screen still applies.
     val fileKeyCond = (matched.nonEmpty, bySource.isEmpty) match {
       case (true, true) =>
         mergeKeyScreen(source, keys, partitionBy, declared)
@@ -7923,7 +7994,7 @@ object MiniDelta {
         val (insertsOpt, idMeta) =
           if (notMatched.isEmpty) (None, Seq.empty[String])
           else {
-            val tgtKeys = tgt.select(keys.map(col): _*).distinct()
+            val tgtKeys = tgt.select(keys.map(col): _*)
             val (ins, ml) = resolveMergeInsertsIdentity(spark, table,
               source.join(tgtKeys, keys, "left_anti"), outSchema,
               notMatched, partitionBy, readVersion,
@@ -7937,8 +8008,8 @@ object MiniDelta {
           if (!evolutionNeeded || idMeta.nonEmpty) Seq.empty[String]
           else Seq(metaDataLine(table, outSchema, partitionBy,
             evolvedCfg.getOrElse(cfg)))
-        val maskLines = dvMaskActions(spark, table, readVersion, declared,
-          snap, doomed).getOrElse(Seq.empty)
+        val maskLines = dvMaskActions(spark, table, declared, snap, doomed)
+          .getOrElse(Seq.empty)
         val newData0 = insertsOpt.fold(updatedOut)(updatedOut.unionByName(_))
         val writesRows = mUpd.nonEmpty || bUpd.nonEmpty || notMatched.nonEmpty
         if (maskLines.isEmpty && (!writesRows || newData0.isEmpty))
@@ -10475,6 +10546,17 @@ object MiniDelta {
       case _ => ref
     }
 
+  /** The compressed bitmap bytes of the mask a "rdv" `marker`
+    * describes on data file `p`. */
+  private def fetchMask(f: org.apache.hadoop.fs.FileSystem, table: String,
+                        p: String, marker: String): Array[Byte] =
+    marker.split("\u0000", -1) match {
+      case Array(_, st, pod, off, size) =>
+        RoaringDv.fetch(f, table, st, pod, off.toInt, size.toInt)
+      case _ => throw new RoaringDv.DvFormatException(
+        s"malformed DV marker on $p")
+    }
+
   /** The mask relation (`__dv_fname`, `__dv_ri`) for (data path, "rdv"
     * marker) pairs: each descriptor's compressed bitmap BYTES are
     * fetched driver-side (KBs — a million masked rows is ~100 KB
@@ -10485,13 +10567,7 @@ object MiniDelta {
     import spark.implicits._
     val f = fs(spark, table)
     pairs.distinct.map { case (p, marker) =>
-      marker.split("\u0000", -1) match {
-        case Array(_, st, pod, off, size) =>
-          (dvKeyOf(p),
-            RoaringDv.fetch(f, table, st, pod, off.toInt, size.toInt))
-        case _ => throw new RoaringDv.DvFormatException(
-          s"malformed DV marker on $p")
-      }
+      (dvKeyOf(p), fetchMask(f, table, p, marker))
     }.toDF("__dv_fname", "__b")
       .select(col("__dv_fname"),
         explode(decodeDvUdf(col("__b"))).as("__dv_ri"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graft.DatasetShim
+import org.apache.spark.sql.types._
 
 /** Frames whose rows already sit in the driver.
   *
@@ -43,5 +44,19 @@ object DriverRows {
   def rows(l: LocalRelation): Seq[Row] = {
     val toRow = CatalystTypeConverters.createToScalaConverter(l.schema)
     l.data.map(r => toRow(r).asInstanceOf[Row])
+  }
+
+  /** Types whose driver-side values compare as Spark compares them, in
+    * equality (joins, grouping) and in order (min/max): strings of the
+    * default collation, integral and decimal numbers, booleans, dates,
+    * timestamps. Floats (Spark normalizes -0.0 and NaN), binary (arrays
+    * compare by reference), collated strings and nested types keep the
+    * distributed arm. */
+  def comparable(dt: DataType): Boolean = dt match {
+    case FloatType | DoubleType => false
+    case _: NumericType | BooleanType | DateType | TimestampType |
+         TimestampNTZType => true
+    case s: StringType => s == StringType
+    case _ => false
   }
 }

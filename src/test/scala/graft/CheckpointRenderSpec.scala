@@ -244,4 +244,26 @@ class CheckpointRenderSpec extends AnyFunSuite {
     assert(declaredParts == Seq("p"),
       s"expected partitionColumns [p], got $declaredParts")
   }
+
+  test("checkpoint reads take the footer schema: no inference job") {
+    for (cap <- Seq(1000000, 2)) { // a single file, then a multi-part set
+      val t = freshTable()
+      build(t)
+      val v = MiniDelta.latestVersion(spark, t)
+      MiniDelta.writeCheckpoint(spark, t, v, maxActionsPerPart = cap)
+      val parts = new java.io.File(s"$t/_delta_log").listFiles()
+        .map(_.getName)
+        .filter(n => n.contains(".checkpoint.") && n.endsWith(".parquet"))
+        .filterNot(_.startsWith("."))
+        .map(n => s"$t/_delta_log/$n").sorted.toSeq
+      assert(if (cap == 2) parts.size >= 2 else parts.size == 1, parts)
+      assert(MiniDelta.checkpointSchema(spark, parts.head) ==
+        spark.read.parquet(parts: _*).schema)
+      val (df, jobs) = TestSpark.jobsDuring(
+        MiniDelta.checkpointActionDF(spark, t, v))
+      assert(jobs.isEmpty, jobs)
+      assert(df.where(col("add").isNotNull).count() ==
+        spark.read.parquet(parts: _*).where(col("add").isNotNull).count())
+    }
+  }
 }

@@ -280,7 +280,8 @@ class LogFileIndexSpec extends AnyFunSuite {
       MiniDelta.readFiltered(spark, t, Seq.empty)
         .agg(sum("id")).head().getLong(0))
     assert(total == 820L)
-    assert(jobs.nonEmpty && !jobs.exists(_.startsWith("Listing leaf files")),
+    assert(jobs.nonEmpty &&
+      !jobs.exists(_.description.startsWith("Listing leaf files")),
       jobs)
   }
 

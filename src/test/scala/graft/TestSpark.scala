@@ -27,21 +27,49 @@ object TestSpark {
   }
   val sfTiny = "/root/testdata/sf0.001"
 
+  /** A Spark job a census saw: its description and the engine call site
+    * that launched it — the first `graft.` frame of the job's stage
+    * details or, for a job those do not name (AQE stages, broadcasts),
+    * of the SQL execution that owns it (its `spark.sql.execution.id`);
+    * "?" when neither names one. */
+  final case class CensusJob(description: String, site: String) {
+    override def toString: String = s"$description @ $site"
+  }
+
   /** Runs `body` under a fresh job group and returns its value with the
-    * descriptions of the Spark jobs it started. Listener events arrive
-    * asynchronously but in order, so one marker job run afterwards in a
-    * second group closes the census: once its start is seen, every job
-    * started before it has been seen too. */
-  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    * Spark jobs it started. Listener events arrive asynchronously but in
+    * order, so one marker job run afterwards in a second group closes the
+    * census: once its start is seen, every job started before it has
+    * been seen too. */
+  def jobsDuring[T](body: => T): (T, Seq[CensusJob]) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
     val group = s"census-${System.nanoTime()}"
     val marker = s"$group-end"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val seen =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, CensusJob)]()
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    def siteIn(details: String): Option[String] =
+      details.linesIterator.map(_.trim).find(l =>
+        l.startsWith("graft.") && !l.startsWith("graft.TestSpark"))
     val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          siteIn(s.details).foreach(execSite.put(s.executionId, _))
+        case _ => ()
+      }
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
-          String.valueOf(e.properties.getProperty("spark.job.description"))))
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = e.properties
+        val site = e.stageInfos.headOption.flatMap(st => siteIn(st.details))
+          .orElse(Option(p.getProperty("spark.sql.execution.id"))
+            .flatMap(id => Option(execSite.get(id.trim.toLong))))
+          .getOrElse("?")
+        seen.add((String.valueOf(p.getProperty("spark.jobGroup.id")),
+          CensusJob(String.valueOf(p.getProperty("spark.job.description")),
+            site)))
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -54,7 +82,7 @@ object TestSpark {
       while (!seen.asScala.exists(_._1 == marker) &&
              System.currentTimeMillis() < deadline) Thread.sleep(10)
       assert(seen.asScala.exists(_._1 == marker), "census marker job not seen")
-      (out, seen.asScala.collect { case (`group`, d) => d }.toSeq)
+      (out, seen.asScala.collect { case (`group`, j) => j }.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
