@@ -62,6 +62,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // which arm served the run's log scans (the force-distributed check)
+    System.err.println(s"[log-scans] driver " +
+      s"${graft.io.MiniDelta.driverLogScans.get()}, distributed " +
+      s"${graft.io.MiniDelta.distributedLogScans.get()}")
     spark.stop()
   }
 }

@@ -30,18 +30,10 @@ object LogFile {
     Seq("path", "dv_path", "size", "modificationTime", "partitionValues")
       .map(col)
 
-  /** The add action's size, modificationTime and partitionValues under
-    * the names of [[columns]], as the change-feed readers select them
-    * beside the add's `path` and `dv_path`. */
-  val addColumns: Seq[Column] =
-    Seq(col("add.size").as("size"),
-      col("add.modificationTime").as("modificationTime"),
-      col("add.partitionValues").as("partitionValues"))
-
-  /** The schema of action rows that end in [[addColumns]]: `ddl` names
-    * the columns before them, the add's own as `path` and `dv_path`.
-    * Rows the driver builds carry it (see [[feedRow]]), so [[of]] reads
-    * either replay arm's rows by name. */
+  /** The schema of the change feeds' action rows: `ddl` names the
+    * columns before the add's size, modificationTime and
+    * partitionValues, the add's own as `path` and `dv_path`. The rows
+    * carry it (see [[feedRow]]), so [[of]] reads them by name. */
   def feedSchema(ddl: String): StructType = StructType.fromDDL(ddl +
     ", size BIGINT, modificationTime BIGINT, partitionValues MAP<STRING, STRING>")
 

@@ -1412,16 +1412,6 @@ object MiniDelta {
         StructField("configuration", MapType(StringType, StringType)))))))
   }
 
-  /** S5: the raw log as a DataFrame (one row per action). Reads the
-    * commit files only. */
-  def logDF(spark: SparkSession, table: String): DataFrame = {
-    val files = logJsonVersions(spark, table).map(_._2)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), logSchema)
-    else logDFIn(spark, table, files).drop("version")
-  }
-
   /** (version, path) of the JSON commits in [`fromInclusive`,
     * `toInclusive`] that exist. Commit file names are a pure function of
     * the version, so the index is COMPUTED from [[latestVersion]] — no
@@ -1463,8 +1453,8 @@ object MiniDelta {
         ((got.head to got.last).toSet -- got.toSet).min)
   }
 
-  /** The listed log files as action rows, with their commit version.
-    * A line that does not parse fails the read with
+  /** S5: the raw log as a DataFrame (one row per action). Reads the
+    * commit files only. A line that does not parse fails the read with
     * [[MalformedCommitException]]: a nondeterministic filter right
     * above the scan, so no caller's filter merges into it or moves below
     * it to drop a torn line unseen, while callers still read only the
@@ -1472,9 +1462,12 @@ object MiniDelta {
     * every line): Spark refuses a JSON scan of the corrupt column alone.
     * An add carrying the legacy `dv` field fails the same way
     * ([[legacyDvRefusal]]); the field is read only to refuse it. */
-  private def logDFIn(spark: SparkSession, table: String,
-                      files: Seq[String]): DataFrame = {
+  def logDF(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructType}
+    val files = logJsonVersions(spark, table).map(_._2)
+    if (files.isEmpty)
+      return spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), logSchema)
     val corrupt = col("_corrupt_record")
     val version = regexp_extract(input_file_name(), "([0-9]{20})\\.json", 1)
       .cast("long")
@@ -1493,7 +1486,6 @@ object MiniDelta {
       .where(col("add.dv").isNull || legacyDvUdf(lit(table)))
       .withColumn("add", col("add").dropFields("dv"))
       .drop("_corrupt_record")
-      .withColumn("version", version)
   }
 
   /** Raises [[MalformedCommitException]] inside the distributed log
@@ -5206,9 +5198,9 @@ object MiniDelta {
     // separate Spark jobs per source (r7 priced that as the s10/s19-s25
     // write-lifecycle creep), and at metadata scale the job launch, not
     // the rows, is the cost.
-    // (path, deletionTimestamp, txnAppId, txnVersion, commitVersion)
-    def actionsOf(df: DataFrame, withCommitVersion: Boolean)
-        : Seq[(Option[(String, Option[Long])], Option[(String, Long, Long)])] = {
+    // ((path, deletionTimestamp), (txnAppId, txnVersion)) per action
+    def actionsOf(df: DataFrame)
+        : Seq[(Option[(String, Option[Long])], Option[(String, Long)])] = {
       val cols = df.columns.toSet
       val rm = cols.contains("remove")
       val tx = cols.contains("txn")
@@ -5219,40 +5211,34 @@ object MiniDelta {
       val txApp = if (tx) col("txn.appId") else lit(null).cast("string")
       val txVer = if (tx) col("txn.version").cast("long")
         else lit(null).cast("long")
-      val cv = if (withCommitVersion) col("version") else lit(0L)
       df.where(rmPath.isNotNull || txApp.isNotNull)
-        .select(rmPath, rmTs, txApp, txVer, cv)
+        .select(rmPath, rmTs, txApp, txVer)
         .collect().map { r =>
           val rem = if (r.isNullAt(0)) None
             else Some((r.getString(0),
               if (r.isNullAt(1)) None else Some(r.getLong(1))))
           val txn = if (r.isNullAt(2)) None
-            else Some((r.getString(2), r.getLong(3), r.getLong(4)))
+            else Some((r.getString(2), r.getLong(3)))
           (rem, txn)
         }.toSeq
     }
     val prevActions = cpPrev.toSeq.flatMap(v =>
-      actionsOf(checkpointActionDF(spark, table, v), withCommitVersion = false))
+      actionsOf(checkpointActionDF(spark, table, v)))
     val prevRemoves: Seq[(String, Option[Long])] = prevActions.flatMap(_._1)
     val tailVP = logJsonVersions(spark, table,
       cpPrev.getOrElse(-1L) + 1, version)
-    val tailActions =
-      if (tailVP.isEmpty) Seq.empty
-      // metadata-scale tails fold on the driver (r19 opt)
-      else localActions(spark, table, tailVP) match {
-        case Some(acts) => acts.flatMap { case (v, node) =>
-          val rem = jnode(node, "remove").flatMap(r =>
-            jnode(r, "path").map(_.asText()).map(p =>
-              (p, jnode(r, "deletionTimestamp").map(_.asLong()))))
-          val txn = jnode(node, "txn").flatMap(t =>
-            jnode(t, "appId").map(_.asText()).map(a =>
-              (a, jnode(t, "version").map(_.asLong()).getOrElse(0L), v)))
-          if (rem.isEmpty && txn.isEmpty) None else Some((rem, txn))
-        }
-        case None =>
-          actionsOf(logDFIn(spark, table, tailVP.map(_._2)),
-            withCommitVersion = true)
+    // the tail's actions in commit order, on either log-scan arm
+    val tailActions = logScan(spark, table, tailVP) { (_, nodes) =>
+      nodes.iterator.flatMap { node =>
+        val rem = jnode(node, "remove").flatMap(r =>
+          jnode(r, "path").map(_.asText()).map(p =>
+            (p, jnode(r, "deletionTimestamp").map(_.asLong()))))
+        val txn = jnode(node, "txn").flatMap(t =>
+          jnode(t, "appId").map(_.asText()).map(a =>
+            (a, jnode(t, "version").map(_.asLong()).getOrElse(0L))))
+        if (rem.isEmpty && txn.isEmpty) None else Some((rem, txn))
       }
+    }
     val tailRemoves: Seq[(String, Option[Long])] = tailActions.flatMap(_._1)
     val reconciled = (prevRemoves ++ tailRemoves)
       .groupBy(_._1).view
@@ -5285,15 +5271,11 @@ object MiniDelta {
     // exactly-once position once log cleanup removes the JSON tail.
     // Delta replay rule: the txn action from the LATEST commit wins
     // per appId (its version may legitimately be LOWER — a writer can
-    // reset its sequence), so the tail folds by commit order and any
-    // tail entry overrides the previous checkpoint's.
-    val prevTxns: Seq[(String, Long)] =
-      prevActions.flatMap(_._2).map { case (a, v, _) => (a, v) }
-    val tailTxns: Map[String, Long] = tailActions.flatMap(_._2)
-      .groupBy(_._1).view
-      .mapValues(rs => rs.maxBy(_._3)._2).toMap
-    val prevLatest: Map[String, Long] =
-      prevTxns.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+    // reset its sequence), so the tail's last entry per appId (it is
+    // in commit order) overrides the previous checkpoint's.
+    val tailTxns: Map[String, Long] = tailActions.flatMap(_._2).toMap
+    val prevLatest: Map[String, Long] = prevActions.flatMap(_._2)
+      .groupMapReduce(_._1)(_._2)(math.max)
     val txnLines = (prevLatest ++ tailTxns).toSeq.sortBy(_._1)
       .map { case (a, v) =>
         s"""{"txn":{"appId":${jstr(a)},"version":$v}}""" }
@@ -6073,25 +6055,10 @@ object MiniDelta {
     require(vps.nonEmpty, s"$table has no commits")
     // inCommitTimestamp (when a real writer recorded one) is the
     // commit's authoritative clock; the plain timestamp is the fallback.
-    // Metadata-scale logs resolve on the driver (r19 opt — one parse,
-    // no Spark job); oversized logs keep the distributed scan.
-    val hit: Option[Long] = localActions(spark, table, vps) match {
-      case Some(acts) =>
-        val vs = acts.flatMap { case (v, node) =>
-          jnode(node, "commitInfo").flatMap(ci =>
-            jnode(ci, "inCommitTimestamp").orElse(jnode(ci, "timestamp"))
-              .map(_.asLong())).filter(_ <= tsMs).map(_ => v)
-        }
-        if (vs.isEmpty) None else Some(vs.max)
-      case None =>
-        val ts = coalesce(col("commitInfo.inCommitTimestamp"),
-          col("commitInfo.timestamp"))
-        val rows = logDFIn(spark, table, vps.map(_._2))
-          .where(col("commitInfo").isNotNull && ts.isNotNull && ts <= tsMs)
-          .agg(max(col("version"))).collect()
-        if (rows.isEmpty || rows(0).isNullAt(0)) None
-        else Some(rows(0).getLong(0))
-    }
+    val hit = logScan(spark, table, vps) { (v, nodes) =>
+      nodes.iterator.flatMap(commitTimestampOf).filter(_ <= tsMs)
+        .map(_ => v)
+    }.maxOption
     hit.getOrElse(throw new IllegalArgumentException(
       s"no commit at or before timestamp $tsMs in $table"))
   }
@@ -6105,28 +6072,25 @@ object MiniDelta {
   /** Commit timestamps (ms) of the versions in `[fromV, toV]`, from
     * commitInfo — inCommitTimestamp preferred, like
     * [[versionAtTimestamp]]. Versions without a timestamped commitInfo
-    * are absent from the map. O(window) driver-side log reads,
+    * are absent from the map. One O(window) [[logScan]],
     * metadata-scale (the `table_changes` SQL surface joins this against
     * the change feed). */
   def commitTimestamps(spark: SparkSession, table: String, fromV: Long,
                        toV: Long): Map[Long, Long] = {
     val vps = logJsonVersions(spark, table, fromV, toV)
     if (vps.isEmpty) return Map.empty
-    localActions(spark, table, vps) match {
-      case Some(acts) => acts.flatMap { case (v, node) =>
-        jnode(node, "commitInfo").flatMap(ci =>
-          jnode(ci, "inCommitTimestamp").orElse(jnode(ci, "timestamp"))
-            .map(t => v -> t.asLong()))
-      }.toMap
-      case None =>
-        val ts = coalesce(col("commitInfo.inCommitTimestamp"),
-          col("commitInfo.timestamp"))
-        logDFIn(spark, table, vps.map(_._2))
-          .where(col("commitInfo").isNotNull && ts.isNotNull)
-          .select(col("version"), ts).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    logScan(spark, table, vps) { (v, nodes) =>
+      nodes.iterator.flatMap(commitTimestampOf).map(v -> _)
+    }.toMap
   }
+
+  /** A commitInfo action's timestamp: inCommitTimestamp, else the plain
+    * timestamp. */
+  private def commitTimestampOf(
+      node: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
+    jnode(node, "commitInfo").flatMap(ci =>
+      jnode(ci, "inCommitTimestamp").orElse(jnode(ci, "timestamp")))
+      .map(_.asLong())
 
   /** Rewrite `touched` files as `rewrite(their contents)` and commit
     * removes for the old files + adds for the new ones — the shared
@@ -8329,31 +8293,31 @@ object MiniDelta {
         .filter(_.columns.contains("remove"))
         .map(_.select(col("remove.path").as("path"),
           col("remove.deletionTimestamp").cast("long").as("ts")))
-    // ONE driver parse of the (metadata-scale) JSON log serves both
-    // vacuum passes below — tombstones and DV bin de-refs were separate
-    // distributed scans over the same files (r19 opt). Logs past the
-    // size threshold keep the distributed shape; checkpoint remove rows
-    // stay a (single) parquet collect either way.
-    val localActs = localActions(spark, table, logJsonVersions(spark, table))
-    val jsonRemovePairs: Seq[(String, Long)] = localActs match {
-      case Some(acts) => acts.flatMap { case (_, node) =>
-        jnode(node, "remove").flatMap { rem =>
-          for {
+    // ONE log scan serves both vacuum passes below, merged per path
+    // (map-side on the executor arm): the path's newest tombstone
+    // (Long.MinValue = none) and the 'u' DV bins its adds named.
+    // Checkpoint remove rows stay a (single) parquet aggregate.
+    val byPath: Map[String, (Long, Set[String])] =
+      logScanMerged(spark, table, logJsonVersions(spark, table)) {
+        (_, nodes) => nodes.iterator.flatMap { node =>
+          val tombstone = jnode(node, "remove").flatMap(rem => for {
             p <- jnode(rem, "path").map(_.asText())
             t <- jnode(rem, "deletionTimestamp").map(_.asLong())
-          } yield (p, t)
+          } yield p -> (t, Set.empty[String]))
+          val bin = jnode(node, "add").flatMap { add =>
+            val rdv = jnode(add, "deletionVector")
+            if (!rdv.exists(r => jnode(r, "storageType")
+                .exists(_.asText() == "u"))) None
+            else for {
+              d <- rdv.flatMap(jnode(_, "pathOrInlineDv")).map(_.asText())
+              p <- jnode(add, "path").map(_.asText())
+            } yield p -> (Long.MinValue, Set(d))
+          }
+          tombstone.iterator ++ bin.iterator
         }
-      }
-      // aggregate BEFORE the collect (one row per distinct path): on a
-      // heavily-rewritten 10^7-file log the raw remove rows are
-      // strictly more driver memory than the per-path maxima
-      case None => logDF(spark, table)
-        .select(col("remove.path").as("path"),
-          col("remove.deletionTimestamp").cast("long").as("ts"))
-        .where(col("path").isNotNull && col("ts").isNotNull)
-        .groupBy("path").agg(max(col("ts")).as("ts"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    }
+      }((a, b) => (math.max(a._1, b._1), a._2 ++ b._2))
+    val jsonRemovePairs: Seq[(String, Long)] = byPath.toSeq.collect {
+      case (p, (ts, _)) if ts != Long.MinValue => (p, ts) }
     val cpRemovePairs: Seq[(String, Long)] = cpRemoves.fold(
         Seq.empty[(String, Long)])(
       _.where(col("path").isNotNull && col("ts").isNotNull)
@@ -8410,26 +8374,8 @@ object MiniDelta {
     val liveBins = snapRows.collect {
       case r if !r.isNullAt(1) => binOf(r.getString(1))
     }.flatten.toSet
-    val binAddPairs: Seq[(String, String)] = localActs match {
-      case Some(acts) => acts.flatMap { case (_, node) =>
-        jnode(node, "add").flatMap { add =>
-          val rdv = jnode(add, "deletionVector")
-          if (!rdv.exists(r => jnode(r, "storageType")
-              .exists(_.asText() == "u"))) None
-          else for {
-            d <- rdv.flatMap(jnode(_, "pathOrInlineDv")).map(_.asText())
-            p <- jnode(add, "path").map(_.asText())
-          } yield (d, p)
-        }
-      }
-      case None => logDF(spark, table)
-        .where(col("add").isNotNull &&
-          col("add.deletionVector.storageType") === "u")
-        .select(col("add.deletionVector.pathOrInlineDv").as("d"),
-          col("add.path").as("p"))
-        .distinct() // executor-side dedup before the collect
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    }
+    val binAddPairs: Seq[(String, String)] = byPath.toSeq.flatMap {
+      case (p, (_, bins)) => bins.map(_ -> p) }
     val binDeref: Map[String, Long] = binAddPairs
       .groupBy(r => RoaringDv.dvFileOf(table, "u", r._1)
         .stripPrefix(s"$table/"))
@@ -8963,8 +8909,6 @@ object MiniDelta {
     * commit's add/remove file counts (Delta's operationMetrics, the
     * subset this log carries). Pure log metadata, newest first. */
   def history(spark: SparkSession, table: String): DataFrame = {
-    // logDFIn, not logDF: history needs the version column (derived
-    // from each commit's file name)
     val historySchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("version",
         org.apache.spark.sql.types.LongType),
@@ -8974,45 +8918,22 @@ object MiniDelta {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("n_removed",
         org.apache.spark.sql.types.LongType)))
-    val vps = logJsonVersions(spark, table)
-    if (vps.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), historySchema)
-    // metadata-scale logs fold on the driver (r19 opt — the distributed
-    // shape was a scan + aggregation + join + sort, ~4 jobs per call)
-    localActions(spark, table, vps) match {
-      case Some(acts) =>
-        val byV = acts.groupBy(_._1)
-        import scala.jdk.CollectionConverters._
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          byV.toSeq.sortBy(-_._1).flatMap { case (v, nodes) =>
-            // match the distributed shape exactly: one row per
-            // commitInfo-bearing action (operation may be null when a
-            // third-party writer omitted it); a commit with NO
-            // commitInfo yields no row (the inner join)
-            val nAdd = java.lang.Long.valueOf(
-              nodes.count(n => jnode(n._2, "add").isDefined).toLong)
-            val nRem = java.lang.Long.valueOf(
-              nodes.count(n => jnode(n._2, "remove").isDefined).toLong)
-            nodes.flatMap(n => jnode(n._2, "commitInfo")).map { ci =>
-              org.apache.spark.sql.Row(java.lang.Long.valueOf(v),
-                jnode(ci, "operation").map(_.asText()).orNull, nAdd, nRem)
-            }
-          }.asJava
-        spark.createDataFrame(rows, historySchema)
-      case None =>
-        val log = logDFIn(spark, table, vps.map(_._2))
-        val ops = log.where(col("commitInfo").isNotNull)
-          .select(col("version"),
-            col("commitInfo.operation").as("operation"))
-        val counts = log.groupBy("version").agg(
-          sum(when(col("add").isNotNull, 1L).otherwise(0L)).as("n_added"),
-          sum(when(col("remove").isNotNull, 1L).otherwise(0L))
-            .as("n_removed"))
-        ops.join(counts, "version")
-          .select("version", "operation", "n_added", "n_removed")
-          .orderBy(col("version").desc)
+    // one row per commitInfo-bearing action (operation may be null when
+    // a third-party writer omitted it); a commit with NO commitInfo
+    // yields no row
+    val rows = logScan(spark, table, logJsonVersions(spark, table)) {
+      (v, nodes) =>
+        val nAdd = java.lang.Long.valueOf(
+          nodes.count(jnode(_, "add").isDefined).toLong)
+        val nRem = java.lang.Long.valueOf(
+          nodes.count(jnode(_, "remove").isDefined).toLong)
+        nodes.iterator.flatMap(jnode(_, "commitInfo")).map { ci =>
+          org.apache.spark.sql.Row(java.lang.Long.valueOf(v),
+            jnode(ci, "operation").map(_.asText()).orNull, nAdd, nRem)
+        }
     }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.sortBy(-_.getLong(0)).asJava, historySchema)
   }
 
   /** DESCRIBE DETAIL (Delta's table-introspection verb): one row
@@ -9466,14 +9387,8 @@ object MiniDelta {
     readableThrough.put(table, hi)
   }
 
-  /** Replay with the checkpoint base capped at `cpAtMost` (< 0 = pure
-    * JSON replay). [[writeCheckpoint]] caps at `version - 1` so
-    * re-checkpointing a version that already has a checkpoint folds from
-    * the PREVIOUS one instead of reading the very path it is about to
-    * overwrite (Spark rejects overwrite-while-reading). */
   /** The snapshot manifest's column shape — [[replaySnapshot]]'s output
-    * contract, shared by the distributed replay's final select and the
-    * driver-side [[localReplay]]. */
+    * contract on both arms. */
   private val manifestSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -9530,17 +9445,26 @@ object MiniDelta {
       : IndexedSeq[com.fasterxml.jackson.databind.JsonNode] =
     memoized(commitNodesMemo, (p, len, mtime)) {
       commitFileOpens.incrementAndGet()
-      val bytes = new Array[Byte](len.toInt)
-      val in = f.open(new Path(p))
-      try in.readFully(bytes) finally in.close()
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
       if (commitNodesMemo.size > 8192) {
         val it = commitNodesMemo.keySet.iterator
         if (it.hasNext) { it.next(); it.remove() }
       }
-      new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
-        .map(line => parseAction(om, p, line)).toIndexedSeq
+      readCommit(f, new com.fasterxml.jackson.databind.ObjectMapper(), p,
+        len)
     }
+
+  /** The first `len` bytes of commit file `p`, every non-empty line
+    * parsed through [[parseAction]]: the read behind both arms of
+    * [[scanArm]]. */
+  private def readCommit(f: org.apache.hadoop.fs.FileSystem,
+      om: com.fasterxml.jackson.databind.ObjectMapper, p: String,
+      len: Long): IndexedSeq[com.fasterxml.jackson.databind.JsonNode] = {
+    val bytes = new Array[Byte](len.toInt)
+    val in = f.open(new Path(p))
+    try in.readFully(bytes) finally in.close()
+    new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
+      .map(line => parseAction(om, p, line)).toIndexedSeq
+  }
 
   /** `memo(key)`, computed and published on a miss OUTSIDE the map's
     * bin lock: `computeIfAbsent` holds the lock for the whole
@@ -9583,7 +9507,7 @@ object MiniDelta {
 
   /** (version, path, length, mtime) of the given commit files — one
     * getFileStatus each, taken as the iterator reaches the file; it
-    * both sizes the [[localActions]] cap and fingerprints the
+    * both sizes the [[scanArm]] cap and fingerprints the
     * [[commitNodes]] key. */
   private def commitStats(f: org.apache.hadoop.fs.FileSystem,
       files: Iterator[(Long, String)]): Iterator[(Long, String, Long, Long)] =
@@ -9623,21 +9547,90 @@ object MiniDelta {
       if (newestFirst) vps.reverseIterator else vps.iterator), newestFirst)
   }
 
-  /** [[logActions]] over the given commit files, oldest first, when
-    * their total bytes fit under [[localReplayMaxBytes]] — ONE
-    * read+parse serving every metadata-scale consumer that would
-    * otherwise run its own distributed JSON scan over the same files
-    * (vacuum's three log passes, commit timestamps, the snapshot
-    * replay). None when the log is too big for the driver; callers
-    * fall back to the distributed query. */
-  private def localActions(spark: SparkSession, table: String,
-      files: Seq[(Long, String)])
-      : Option[Seq[(Long, com.fasterxml.jackson.databind.JsonNode)]] = {
+  /** Log scans that ran each arm of [[scanArm]]: on the driver over
+    * [[commitNodes]], or on executors. Specs assert the arm through
+    * them. */
+  private[graft] val driverLogScans =
+    new java.util.concurrent.atomic.AtomicLong
+  private[graft] val distributedLogScans =
+    new java.util.concurrent.atomic.AtomicLong
+
+  /** The one scan of a window of JSON commits behind every log
+    * consumer. `project` maps one commit (its version and its parsed
+    * action lines, in file order) to the consumer's values, and runs on
+    * one of two arms:
+    *  - the driver (Left, no Spark action) when `driverOk` and the
+    *    window's bytes fit under [[localReplayMaxBytes]], over the
+    *    memoized [[commitNodes]];
+    *  - executors (Right) otherwise: one `parallelize` over the sized
+    *    commit files, each read with the driver's Hadoop conf through
+    *    the same [[readCommit]], so a torn line or a legacy `dv` add
+    *    raises by name on either arm.
+    * One getFileStatus per commit ([[commitStats]]) sizes the window. */
+  private def scanArm[T: scala.reflect.ClassTag](spark: SparkSession,
+      table: String, vps: Seq[(Long, String)], driverOk: Boolean = true)
+      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+        => Iterator[T]): Either[Seq[T], org.apache.spark.rdd.RDD[T]] = {
     val f = fs(spark, table)
-    val sized = commitStats(f, files.iterator).toSeq
-    if (sized.map(_._3).sum > localReplayMaxBytes(spark)) None
-    else Some(actionsIn(f, sized.iterator, newestFirst = false).toSeq)
+    val sized = commitStats(f, vps.iterator).toIndexedSeq
+    if (driverOk && sized.map(_._3).sum <= localReplayMaxBytes(spark)) {
+      driverLogScans.incrementAndGet()
+      Left(sized.flatMap { case (v, p, len, mtime) =>
+        project(v, commitNodes(f, p, len, mtime)) })
+    } else {
+      distributedLogScans.incrementAndGet()
+      val h = org.apache.spark.sql.graft.HadoopConfBridge.handle(
+        spark.sparkContext.hadoopConfiguration)
+      val files = sized.map { case (v, p, len, _) => (v, p, len) }
+      val slices = math.max(1, math.min(files.size,
+        spark.sparkContext.defaultParallelism * 4))
+      Right(spark.sparkContext.parallelize(files, slices)
+        .mapPartitions { it =>
+          val om = new com.fasterxml.jackson.databind.ObjectMapper()
+          it.flatMap { case (v, p, len) =>
+            project(v, readCommit(new Path(p).getFileSystem(h.conf), om, p,
+              len))
+          }
+        })
+    }
   }
+
+  /** [[scanArm]]'s values, collected from executors on that arm. */
+  private def logScan[T: scala.reflect.ClassTag](spark: SparkSession,
+      table: String, vps: Seq[(Long, String)])
+      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+        => Iterator[T]): Seq[T] =
+    scanArm(spark, table, vps)(project) match {
+      case Left(ts) => ts
+      case Right(rdd) => collectNamed(rdd)
+    }
+
+  /** [[logScan]] of keyed values merged per key by the associative
+    * `merge`: folded on the driver arm, combined map-side
+    * (`reduceByKey`) before the collect on the executor arm, so the
+    * driver receives one value per key. */
+  private def logScanMerged[K: scala.reflect.ClassTag,
+      V: scala.reflect.ClassTag](spark: SparkSession, table: String,
+      vps: Seq[(Long, String)])
+      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+        => Iterator[(K, V)])(merge: (V, V) => V): Map[K, V] =
+    scanArm(spark, table, vps)(project) match {
+      case Left(kvs) => kvs.groupMapReduce(_._1)(_._2)(merge)
+      case Right(rdd) => collectNamed(rdd.reduceByKey(merge)).toMap
+    }
+
+  /** `rdd.collect()`, raising a named log refusal
+    * ([[MalformedCommitException]], [[UnsupportedTableFeatureException]])
+    * that failed a task as itself, as the driver arm raises it. */
+  private def collectNamed[T](rdd: org.apache.spark.rdd.RDD[T]): Seq[T] =
+    try rdd.collect().toSeq catch {
+      case e: org.apache.spark.SparkException =>
+        throw Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).collectFirst {
+            case n: MalformedCommitException => n
+            case n: UnsupportedTableFeatureException => n
+          }.getOrElse(e)
+    }
 
   /** Null-safe child access on a parsed action node. */
   private def jnode(n: com.fasterxml.jackson.databind.JsonNode,
@@ -9774,79 +9767,79 @@ object MiniDelta {
     }
   }
 
-  /** Driver-side fold of a JSON tail (over an optional checkpoint-base
-    * row set) into the manifest rows the distributed replay computes:
-    * latest add per path wins,
-    * minus paths whose newest remove is strictly newer than their
-    * newest add (a same-version remove+re-add keeps the add — Delta's
-    * in-commit reconciliation rule, the `rm_v <= add_v` predicate
-    * below). Returns None when the tail is over the size threshold —
-    * the caller falls through to the distributed replay. The tail comes
-    * from [[localActions]] (each commit parsed once per process); the
-    * result is a LocalRelation, so downstream manifest
-    * filters/collects are driver-local instead of multi-job queries. */
-  private def localReplay(spark: SparkSession, table: String,
-                          tail: Seq[(Long, String)],
-                          base: Seq[org.apache.spark.sql.Row] = Seq.empty)
-      : Option[DataFrame] = {
-    val acts = localActions(spark, table, tail) match {
-      case Some(a) => a
-      case None => return None
-    }
-    def strOf(n: com.fasterxml.jackson.databind.JsonNode,
-              k: String): String = {
-      val c = n.get(k)
-      if (c == null || c.isNull) null else c.asText()
-    }
-    def longOf(n: com.fasterxml.jackson.databind.JsonNode,
-               k: String): java.lang.Long = {
-      val c = n.get(k)
-      if (c == null || c.isNull) null else java.lang.Long.valueOf(c.asLong())
-    }
-    // path -> (newest add version, its manifest row); the checkpoint
-    // base seeds the fold as adds at the checkpoint's version (its
-    // rows carry `version` in the trailing column)
-    val adds = new java.util.LinkedHashMap[
-      String, (Long, org.apache.spark.sql.Row)]()
-    val removes = new java.util.HashMap[String, java.lang.Long]()
-    base.foreach { r =>
-      adds.put(r.getString(0), (r.getLong(9),
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.take(9))))
-    }
-    acts.foreach { case (v, node) =>
-      val add = node.get("add")
-      if (add != null && !add.isNull) {
-        val path = strOf(add, "path")
-        val pv = pvOfNode(add, "partitionValues")
-        // a DV descriptor rides as the same "rdv" marker the
-        // distributed replay renders ([[rdvMarkerOfNode]])
-        val dvCard: java.lang.Long = jnode(add, "deletionVector")
-          .map(r => longOf(r, "cardinality")).orNull
-        val row = org.apache.spark.sql.Row(path, pv,
-          longOf(add, "size"), longOf(add, "modificationTime"),
-          strOf(add, "stats"), rdvMarkerOfNode(add), dvCard,
-          longOf(add, "baseRowId"),
-          longOf(add, "defaultRowCommitVersion"))
-        val prev = adds.get(path)
-        if (prev == null || prev._1 <= v) adds.put(path, (v, row))
-      }
-      val rem = node.get("remove")
-      if (rem != null && !rem.isNull) {
-        val path = strOf(rem, "path")
-        val old = removes.get(path)
-        if (old == null || old.longValue() < v)
-          removes.put(path, java.lang.Long.valueOf(v))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    val live = adds.asScala.values.collect {
-      case (addV, row)
-        if Option(removes.get(row.getString(0)))
-          .forall(_.longValue() <= addV) => row
-    }.toSeq
-    Some(spark.createDataFrame(live.asJava, manifestSchema))
+  /** One path's log state in the snapshot fold: its newest add, ordered
+    * by (version, line index), with its manifest row (null while no add
+    * is seen), and its newest remove's version (`Long.MinValue` while
+    * none is seen). */
+  private final case class PathState(addV: Long, addLine: Int,
+      row: org.apache.spark.sql.Row, rmV: Long)
+
+  /** The snapshot reconciliation rule (Delta §3.2, the last action per
+    * path wins) as one associative per-path merge: the newer add and
+    * the newer remove. */
+  private def reconcile(a: PathState, b: PathState): PathState = {
+    val add = if (b.row == null || a.row != null && (a.addV > b.addV ||
+      a.addV == b.addV && a.addLine > b.addLine)) a else b
+    PathState(add.addV, add.addLine, add.row, math.max(a.rmV, b.rmV))
   }
 
+  /** The manifest row of a reconciled path that is live: it has an add
+    * and no strictly newer remove. `<=`, not `<`: a DV commit removes
+    * and RE-ADDS the same path in one version (old mask out, new mask
+    * in), and within a commit the add wins, Delta's own reconciliation
+    * rule. Operations that kill a file (CoW DML, OPTIMIZE) add
+    * different paths, so a same-version remove without a same-version
+    * re-add stays dead. */
+  private def liveRow(s: PathState): Option[org.apache.spark.sql.Row] =
+    if (s.row != null && s.rmV <= s.addV) Some(s.row) else None
+
+  /** A checkpoint base row ([[checkpointBaseDF]]: the manifest shape +
+    * the checkpoint's version) as an add at that version. */
+  private def cpPathState(r: org.apache.spark.sql.Row): (String, PathState) =
+    r.getString(0) -> PathState(r.getLong(9), -1,
+      org.apache.spark.sql.Row.fromSeq(r.toSeq.take(9)), Long.MinValue)
+
+  /** One commit's add and remove actions as path states. A DV
+    * descriptor rides the manifest as the "rdv" marker
+    * ([[rdvMarkerOfNode]]) the mask loader decodes ([[maskDF]]). */
+  private def pathStates(v: Long,
+      nodes: IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+      : Iterator[(String, PathState)] = {
+    def str(n: com.fasterxml.jackson.databind.JsonNode, k: String) =
+      jnode(n, k).map(_.asText()).orNull
+    def long(n: com.fasterxml.jackson.databind.JsonNode,
+             k: String): java.lang.Long =
+      jnode(n, k).map(c => java.lang.Long.valueOf(c.asLong())).orNull
+    nodes.iterator.zipWithIndex.flatMap { case (node, i) =>
+      jnode(node, "add").map { add =>
+        val path = str(add, "path")
+        path -> PathState(v, i, org.apache.spark.sql.Row(
+          path, pvOfNode(add, "partitionValues"),
+          long(add, "size"), long(add, "modificationTime"),
+          str(add, "stats"), rdvMarkerOfNode(add),
+          jnode(add, "deletionVector").map(long(_, "cardinality")).orNull,
+          long(add, "baseRowId"), long(add, "defaultRowCommitVersion")),
+          Long.MinValue)
+      }.iterator ++ jnode(node, "remove").map(rem =>
+        str(rem, "path") -> PathState(Long.MinValue, 0, null, v)).iterator
+    }
+  }
+
+  /** Replay with the checkpoint base capped at `cpAtMost` (< 0 = pure
+    * JSON replay). [[writeCheckpoint]] caps at `version - 1` so
+    * re-checkpointing a version that already has a checkpoint folds from
+    * the PREVIOUS one instead of reading the very path it is about to
+    * overwrite (Spark rejects overwrite-while-reading).
+    *
+    * The checkpoint IS the folded snapshot at its version: its manifest
+    * rows seed the [[reconcile]] fold as adds at that version, and only
+    * the JSON tail after it is read ([[scanArm]], O(since-checkpoint)).
+    * The same fold runs on both arms. On the driver (a tail under the
+    * byte cap over a checkpoint under the row cap, [[cpBaseRows]]) it
+    * folds into a LocalRelation, so downstream manifest filters and
+    * collects stay driver-local. Otherwise it runs as one `reduceByKey`
+    * over the checkpoint rows and the executor-read tail, and the
+    * manifest stays an RDD-backed frame on executors. */
   private def replaySnapshot(spark: SparkSession, table: String,
                              version: Long, cpAtMost: Long): DataFrame = {
     requireReadable(spark, table, version)
@@ -9859,67 +9852,29 @@ object MiniDelta {
         !fs(spark, table).exists(new Path(commitPath(table, 0L))) &&
         latestVersion(spark, table) >= 0)
       throw new HistoryCleanedException(table, version)
-    // read ONLY the tail commits: replay after a checkpoint touches
-    // O(since-last-checkpoint) log files, not every JSON in a
-    // long-lived table's history
     val tailVP = logJsonVersions(spark, table, cp.getOrElse(-1L) + 1,
       version)
-    // metadata-scale fast path (r19 opt): a tail under the size
-    // threshold folds on the DRIVER into a LocalRelation — the
-    // distributed replay below is two aggregations + two joins whose
-    // every materialization costs ~4 Spark jobs of scheduler overhead
-    // on a few KB of JSON. A checkpoint base joins the fold through
-    // [[cpBaseRows]] (one memoized collect per immutable checkpoint —
-    // the cpGates discipline). Past the thresholds the distributed
-    // replay keeps the 10^7-file manifest on executors where it
-    // belongs.
     val localBase: Option[Seq[org.apache.spark.sql.Row]] =
       cp.fold(Option(Seq.empty[org.apache.spark.sql.Row]))(
         cpBaseRows(spark, table, _))
-    if (localBase.isDefined)
-      localReplay(spark, table, tailVP, localBase.get) match {
-        case Some(df) => return df
-        case None => ()
-      }
-    val tailFiles = tailVP.map(_._2)
-    val log =
-      if (tailFiles.nonEmpty) logDFIn(spark, table, tailFiles)
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        logSchema.add("version", org.apache.spark.sql.types.LongType))
-    // the checkpoint IS the folded snapshot at cp: treat its manifest
-    // rows as adds at version cp, then replay only the tail on top
-    val base = cp.map(checkpointBaseDF(spark, table, _))
-    val jsonAdds = log.where(col("add").isNotNull)
-      .select(col("add.path").as("path"),
-        col("add.partitionValues").as("partitionValues"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("modificationTime"),
-        col("add.stats").as("stats"),
-        // a DV descriptor rides as an "rdv" marker the mask loader
-        // decodes ([[maskDF]])
-        realDvMarker.as("dv_path"),
-        col("add.deletionVector.cardinality").as("dv_card"),
-        col("add.baseRowId").as("base_row_id"),
-        col("add.defaultRowCommitVersion").as("default_row_commit"),
-        col("version"))
-    val adds = base.fold(jsonAdds)(_.unionByName(jsonAdds))
-    val addLatest = adds.groupBy("path").agg(max("version").as("add_v"))
-    val removes = log.where(col("remove").isNotNull)
-      .select(col("remove.path").as("path"), col("version"))
-      .groupBy("path").agg(max("version").as("rm_v"))
-    adds.join(addLatest, Seq("path"))
-      .where(col("version") === col("add_v"))
-      .join(removes, Seq("path"), "left")
-      // <= not <: a DV commit removes and RE-ADDS the same path in one
-      // version (old mask out, new mask in) — within a commit the add
-      // wins, Delta's own action reconciliation rule. Operations that
-      // kill a file (CoW DML, OPTIMIZE) add different paths, so a
-      // same-version remove without a same-version re-add stays dead.
-      .where(col("rm_v").isNull || col("rm_v") <= col("add_v"))
-      .select("path", "partitionValues", "size", "modificationTime",
-        "stats", "dv_path", "dv_card", "base_row_id",
-        "default_row_commit")
+    scanArm(spark, table, tailVP, driverOk = localBase.isDefined)(
+        pathStates) match {
+      case Left(tail) =>
+        val fold = new java.util.LinkedHashMap[String, PathState]()
+        (localBase.get.iterator.map(cpPathState) ++ tail).foreach {
+          case (p, st) => fold.merge(p, st,
+            (a: PathState, b: PathState) => reconcile(a, b))
+        }
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(
+          fold.values.asScala.flatMap(liveRow).toSeq.asJava, manifestSchema)
+      case Right(tail) =>
+        val all = cp.fold(tail)(v =>
+          checkpointBaseDF(spark, table, v).rdd.map(cpPathState).union(tail))
+        spark.createDataFrame(
+          all.reduceByKey(reconcile _).flatMap(kv => liveRow(kv._2)),
+          manifestSchema)
+    }
   }
 
   /** S4: current snapshot = add actions replayed in version order, minus
@@ -9951,12 +9906,12 @@ object MiniDelta {
     val cache = snapshotCache
     val df = cache.getOrElseUpdate(table) {
       val snap = snapshotFiles(spark, table)
-      // a manifest of driver rows ([[localReplay]]) stays one:
-      // persisting it would wrap it in an InMemoryRelation, hiding the
-      // rows the driver arms of pruning read in place (and wasting
-      // block-manager copies). Distributed manifests keep the persist —
-      // replaying a big log once per TTL window is the cache's whole
-      // point.
+      // a manifest of driver rows ([[replaySnapshot]]'s driver arm)
+      // stays one: persisting it would wrap it in an InMemoryRelation,
+      // hiding the rows the driver arms of pruning read in place (and
+      // wasting block-manager copies). Distributed manifests keep the
+      // persist — replaying a big log once per TTL window is the
+      // cache's whole point.
       if (DriverRows.of(snap).isDefined) snap else snap.persist()
     }
     // configureSnapshotCache may have swapped the cache mid-miss; clear
@@ -10495,7 +10450,8 @@ object MiniDelta {
   private def dvKeyOf(p: String): String =
     p.split("/").takeRight(dvKeyDepth(p)).mkString("/")
 
-  /** [[LogFile.addColumns]] of a parsed add node: the driver-arm twin. */
+  /** A parsed add node's size, modificationTime and partitionValues,
+    * the trailing columns of [[LogFile.feedSchema]]. */
   private def addScanValues(
       add: Option[com.fasterxml.jackson.databind.JsonNode]): Seq[Any] = Seq(
     add.flatMap(jnode(_, "size"))
@@ -10714,34 +10670,22 @@ object MiniDelta {
       // empty batch would crash typical aggregate-and-index handlers.
       // The CDF feed also wakes on dataChange REMOVES (pure deletes);
       // the file-level feed only on adds.
-      val hasChanges = logJsonVersions(spark, table, v, v) match {
-        case Seq() => false
-        case vps =>
-          def dc(n: com.fasterxml.jackson.databind.JsonNode,
-                 k: String): Boolean =
-            jnode(n, k).exists(a =>
-              jnode(a, "dataChange").exists(_.asBoolean()))
-          // one driver parse per polled commit (r19 opt — was a Spark
-          // job per version); oversized commits fall back
-          localActions(spark, table, vps) match {
-            case Some(acts) => acts.exists { case (_, n) =>
-              dc(n, "add") || (deliverRemoves && dc(n, "remove")) }
-            case None =>
-              val delivers =
-                col("add").isNotNull && col("add.dataChange") ||
-                (if (deliverRemoves)
-                  col("remove").isNotNull && col("remove.dataChange")
-                 else lit(false))
-              logDFIn(spark, table, vps.map(_._2))
-                .where(delivers).limit(1).collect().nonEmpty
-          }
-      }
+      val hasChanges = logScan(spark, table,
+          logJsonVersions(spark, table, v, v)) { (_, nodes) =>
+        nodes.iterator.filter(n => changesData(n, "add") ||
+          (deliverRemoves && changesData(n, "remove"))).take(1).map(_ => v)
+      }.nonEmpty
       if (hasChanges) handle(feed(v), v)
       writeMarker(v)
       last = v
     }
     latest
   }
+
+  /** Whether `node` is a `kind` action with `dataChange` set. */
+  private def changesData(node: com.fasterxml.jackson.databind.JsonNode,
+                          kind: String): Boolean =
+    jnode(node, kind).exists(a => jnode(a, "dataChange").exists(_.asBoolean()))
 
   /** Row-level change feed (Delta CDF shape): for each commit in
     * (`fromVersion`, `toVersion`], the rows that logically changed,
@@ -10798,23 +10742,13 @@ object MiniDelta {
     val tailVP = logJsonVersions(spark, table, cp.getOrElse(-1L) + 1,
       Long.MaxValue)
     // latest-commit-wins (a writer may legitimately LOWER its
-    // sequence): the newest tail entry overrides the checkpoint's.
-    // Metadata-scale tails fold on the driver (r19 opt).
-    val tail: Option[Long] =
-      if (tailVP.isEmpty) None
-      else localActions(spark, table, tailVP) match {
-        case Some(acts) => acts.reverseIterator.collectFirst {
-          case (_, node) if jnode(node, "txn").exists(t =>
-              jnode(t, "appId").exists(_.asText() == appId)) =>
-            jnode(node, "txn").flatMap(jnode(_, "version"))
-              .map(_.asLong()).getOrElse(-1L)
-        }
-        case None => logDFIn(spark, table, tailVP.map(_._2))
-          .where(col("txn.appId") === appId)
-          .orderBy(col("version").desc).limit(1)
-          .select(col("txn.version").cast("long"))
-          .collect().headOption.map(_.getLong(0))
-      }
+    // sequence): the newest tail entry (the scan is in commit order)
+    // overrides the checkpoint's.
+    val tail = logScan(spark, table, tailVP) { (_, nodes) =>
+      nodes.iterator.flatMap(jnode(_, "txn"))
+        .filter(jnode(_, "appId").exists(_.asText() == appId))
+        .map(jnode(_, "version").map(_.asLong()).getOrElse(-1L))
+    }.lastOption
     tail.getOrElse(base)
   }
 
@@ -10916,35 +10850,25 @@ object MiniDelta {
         new java.util.ArrayList[org.apache.spark.sql.Row](), s))
     val tailV = logJsonVersions(spark, table, fromVersion + 1, toVersion)
     requireFeedWindow(spark, table, fromVersion, toVersion, tailV.map(_._1))
-    val tail = tailV.map(_._2)
-    if (tail.isEmpty) return empty
-    // one census for both the changed-version screen and the adds
-    // (r18 — was two jobs per streaming micro-batch poll; r19 — a
-    // metadata-scale window folds on the DRIVER, zero jobs)
+    if (tailV.isEmpty) return empty
+    // one log scan for both the changed-version screen and the adds
     val schema = LogFile.feedSchema("version BIGINT, path STRING, " +
       "adc BOOLEAN, dv_path STRING, rdc BOOLEAN, ms STRING")
-    val acts: Array[org.apache.spark.sql.Row] =
-      localActions(spark, table, tailV) match {
-        case Some(list) => list.map { case (v, node) =>
-          val add = jnode(node, "add")
-          LogFile.feedRow(schema, Seq(
-            java.lang.Long.valueOf(v),
-            add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
-            add.flatMap(jnode(_, "dataChange"))
-              .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            add.map(rdvMarkerOfNode).orNull,
-            jnode(node, "remove").flatMap(jnode(_, "dataChange"))
-              .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
-              .map(_.asText()).orNull) ++ addScanValues(add))
-        }.toArray
-        case None => logDFIn(spark, table, tail).select(Seq(col("version"),
-            col("add.path").as("path"), col("add.dataChange").as("adc"),
-            realDvMarker.as("dv_path"),
-            col("remove.dataChange").as("rdc"),
-            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
-          .collect()
+    val acts = logScan(spark, table, tailV) { (v, nodes) =>
+      nodes.iterator.map { node =>
+        val add = jnode(node, "add")
+        LogFile.feedRow(schema, Seq(
+          java.lang.Long.valueOf(v),
+          add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
+          add.flatMap(jnode(_, "dataChange"))
+            .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
+          add.map(rdvMarkerOfNode).orNull,
+          jnode(node, "remove").flatMap(jnode(_, "dataChange"))
+            .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
+          jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
+            .map(_.asText()).orNull) ++ addScanValues(add))
       }
+    }
     // the streaming source rides this feed: a mid-window column DROP
     // (REPLACE COLUMNS / DROP COLUMN / schema overwrite) must refuse
     // loudly, never null-fill — same collect, no extra job
@@ -11022,51 +10946,38 @@ object MiniDelta {
     }
     val tailV = logJsonVersions(spark, table, fromVersion + 1, toVersion)
     requireFeedWindow(spark, table, fromVersion, toVersion, tailV.map(_._1))
-    val tail = tailV.map(_._2)
-    if (tail.isEmpty) return emptyFeed
-    // ONE census over the window's actions (r18 — this used to be
-    // five separate jobs: ops, add files, remove files, add DVs, cdc
-    // files; each cost a full job + driver gap on every CDF read.
-    // r19 — a metadata-scale window folds on the DRIVER, zero jobs).
+    if (tailV.isEmpty) return emptyFeed
+    // ONE log scan over the window's actions (this used to be five
+    // separate jobs: ops, add files, remove files, add DVs, cdc files).
     // Every log line holds one action, so the row count is unchanged.
     val schema = LogFile.feedSchema("version BIGINT, op STRING, " +
       "path STRING, adc BOOLEAN, dv_path STRING, rp STRING, rdc BOOLEAN, " +
       "cp STRING, cpv MAP<STRING, STRING>, ms STRING, csz BIGINT")
-    val acts: Array[org.apache.spark.sql.Row] =
-      localActions(spark, table, tailV) match {
-        case Some(list) => list.map { case (v, node) =>
-          val add = jnode(node, "add")
-          val rem = jnode(node, "remove")
-          val cdc = jnode(node, "cdc")
-          LogFile.feedRow(schema, Seq(
-            java.lang.Long.valueOf(v),
-            jnode(node, "commitInfo").flatMap(jnode(_, "operation"))
-              .map(_.asText()).orNull,
-            add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
-            add.flatMap(jnode(_, "dataChange"))
-              .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            add.map(rdvMarkerOfNode).orNull,
-            rem.flatMap(jnode(_, "path")).map(_.asText()).orNull,
-            rem.flatMap(jnode(_, "dataChange"))
-              .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
-            cdc.flatMap(jnode(_, "path")).map(_.asText()).orNull,
-            cdc.map(pvOfNode(_, "partitionValues")).orNull,
-            jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
-              .map(_.asText()).orNull,
-            cdc.flatMap(jnode(_, "size"))
-              .map(n => java.lang.Long.valueOf(n.asLong())).orNull) ++
-            addScanValues(add))
-        }.toArray
-        case None => logDFIn(spark, table, tail).select(Seq(col("version"),
-            col("commitInfo.operation").as("op"),
-            col("add.path").as("path"), col("add.dataChange").as("adc"),
-            realDvMarker.as("dv_path"),
-            col("remove.path").as("rp"), col("remove.dataChange").as("rdc"),
-            col("cdc.path").as("cp"), col("cdc.partitionValues").as("cpv"),
-            col("metaData.schemaString").as("ms"),
-            col("cdc.size").as("csz")) ++ LogFile.addColumns: _*)
-          .collect()
+    val acts = logScan(spark, table, tailV) { (v, nodes) =>
+      nodes.iterator.map { node =>
+        val add = jnode(node, "add")
+        val rem = jnode(node, "remove")
+        val cdc = jnode(node, "cdc")
+        LogFile.feedRow(schema, Seq(
+          java.lang.Long.valueOf(v),
+          jnode(node, "commitInfo").flatMap(jnode(_, "operation"))
+            .map(_.asText()).orNull,
+          add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
+          add.flatMap(jnode(_, "dataChange"))
+            .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
+          add.map(rdvMarkerOfNode).orNull,
+          rem.flatMap(jnode(_, "path")).map(_.asText()).orNull,
+          rem.flatMap(jnode(_, "dataChange"))
+            .map(b => java.lang.Boolean.valueOf(b.asBoolean())).orNull,
+          cdc.flatMap(jnode(_, "path")).map(_.asText()).orNull,
+          cdc.map(pvOfNode(_, "partitionValues")).orNull,
+          jnode(node, "metaData").flatMap(jnode(_, "schemaString"))
+            .map(_.asText()).orNull,
+          cdc.flatMap(jnode(_, "size"))
+            .map(n => java.lang.Long.valueOf(n.asLong())).orNull) ++
+          addScanValues(add))
       }
+    }
     // a metaData action inside the window that DROPPED columns makes
     // the end-schema render silently lossy — refuse (same collect, no
     // extra job; renames/adds/widenings pass, see [[feedLostColumns]])
@@ -11199,7 +11110,6 @@ object MiniDelta {
                   toVersion: Long = Long.MaxValue): DataFrame = {
     val tailV = logJsonVersions(spark, table, fromVersion + 1, toVersion)
     requireFeedWindow(spark, table, fromVersion, toVersion, tailV.map(_._1))
-    val tail = tailV.map(_._2)
     val declared = latestSchema(spark, table,
       if (toVersion == Long.MaxValue) Long.MaxValue else toVersion)
     def empty = {
@@ -11208,34 +11118,25 @@ object MiniDelta {
           new java.util.ArrayList[org.apache.spark.sql.Row](), s))
       base.withColumn("_commit_version", lit(null).cast("long"))
     }
-    if (tail.isEmpty) return empty
-    // one census serves both the incremental adds and the schema-loss
-    // screen (metaData rows pass the relaxed filter, dropped
-    // driver-side); metadata-scale windows fold on the DRIVER (r19)
+    if (tailV.isEmpty) return empty
+    // one log scan serves both the incremental adds and the schema-loss
+    // screen (metaData rows pass the relaxed filter, dropped after)
     val schema = LogFile.feedSchema(
       "path STRING, version BIGINT, dv_path STRING, ms STRING")
-    val acts: Array[org.apache.spark.sql.Row] =
-      localActions(spark, table, tailV) match {
-        case Some(list) => list.flatMap { case (v, node) =>
-          val add = jnode(node, "add").filter(a =>
-            jnode(a, "dataChange").exists(_.asBoolean()))
-          val ms = jnode(node, "metaData")
-            .flatMap(jnode(_, "schemaString")).map(_.asText())
-          if (add.isEmpty && ms.isEmpty) None
-          else Some(LogFile.feedRow(schema, Seq(
-            add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
-            java.lang.Long.valueOf(v),
-            add.map(rdvMarkerOfNode).orNull,
-            ms.orNull) ++ addScanValues(add)))
-        }.toArray
-        case None => logDFIn(spark, table, tail)
-          .where((col("add").isNotNull && col("add.dataChange")) ||
-            col("metaData").isNotNull)
-          .select(Seq(col("add.path").as("path"), col("version"),
-            realDvMarker.as("dv_path"),
-            col("metaData.schemaString").as("ms")) ++ LogFile.addColumns: _*)
-          .collect()
+    val acts = logScan(spark, table, tailV) { (v, nodes) =>
+      nodes.iterator.flatMap { node =>
+        val add = jnode(node, "add").filter(a =>
+          jnode(a, "dataChange").exists(_.asBoolean()))
+        val ms = jnode(node, "metaData")
+          .flatMap(jnode(_, "schemaString")).map(_.asText())
+        if (add.isEmpty && ms.isEmpty) None
+        else Some(LogFile.feedRow(schema, Seq(
+          add.flatMap(jnode(_, "path")).map(_.asText()).orNull,
+          java.lang.Long.valueOf(v),
+          add.map(rdvMarkerOfNode).orNull,
+          ms.orNull) ++ addScanValues(add)))
       }
+    }
     // same refusal as readCdf/readAppends: a mid-window column DROP
     // makes the end-schema render silently lossy
     requireFeedSchemaCompatible(spark, table, fromVersion, toVersion,

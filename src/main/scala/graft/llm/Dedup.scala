@@ -157,7 +157,7 @@ object Dedup {
     // pair producer (minhash) the planning alone dominated the loop.
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .distinct().localCheckpoint()
-    // metadata-scale fast path (r20 opt, the localReplay discipline):
+    // metadata-scale fast path (r20 opt, as the log replay's driver arm):
     // an edge list under the cap collects once and union-finds on the
     // driver — zero iterative rounds, where each distributed round is
     // ~5 jobs of scheduler overhead on a local[32] box. Dedup edge
