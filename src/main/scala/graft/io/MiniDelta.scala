@@ -1454,53 +1454,17 @@ object MiniDelta {
   }
 
   /** S5: the raw log as a DataFrame (one row per action). Reads the
-    * commit files only. A line that does not parse fails the read with
-    * [[MalformedCommitException]]: a nondeterministic filter right
-    * above the scan, so no caller's filter merges into it or moves below
-    * it to drop a torn line unseen, while callers still read only the
-    * columns they select. It names `protocol` too (cheap, null on nearly
-    * every line): Spark refuses a JSON scan of the corrupt column alone.
-    * An add carrying the legacy `dv` field fails the same way
-    * ([[legacyDvRefusal]]); the field is read only to refuse it. */
+    * commit files only, on the executor arm of the one log scan
+    * ([[executorScan]]): every line goes through [[parseAction]], so a
+    * torn line fails the read with [[MalformedCommitException]] and an
+    * add carrying the legacy `dv` field with [[legacyDvRefusal]],
+    * whatever columns or rows the caller selects. */
   def logDF(spark: SparkSession, table: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructType}
-    val files = logJsonVersions(spark, table).map(_._2)
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), logSchema)
-    val corrupt = col("_corrupt_record")
-    val version = regexp_extract(input_file_name(), "([0-9]{20})\\.json", 1)
-      .cast("long")
-    val readSchema = StructType(logSchema.map {
-      case a if a.name == "add" => a.copy(dataType =
-        a.dataType.asInstanceOf[StructType].add("dv", StringType))
-      case f => f
-    }).add("_corrupt_record", StringType)
-    spark.read
-      .schema(readSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(files.toIndexedSeq: _*)
-      .where(corrupt.isNull ||
-        malformedCommitUdf(lit(table), version, corrupt, col("protocol")))
-      .where(col("add.dv").isNull || legacyDvUdf(lit(table)))
-      .withColumn("add", col("add").dropFields("dv"))
-      .drop("_corrupt_record")
+    val lines = executorScan(spark, logJsonVersions(spark, table))(
+      (_, nodes) => nodes.map(_.toString))
+    spark.read.schema(logSchema).json(
+      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
   }
-
-  /** Raises [[MalformedCommitException]] inside the distributed log
-    * read; evaluated only for lines that failed to parse. */
-  private lazy val malformedCommitUdf =
-    udf((table: String, version: java.lang.Long, line: String,
-         _: org.apache.spark.sql.Row) =>
-      (throw new MalformedCommitException(table,
-        Option(version).fold(-1L)(_.longValue), line)): Boolean)
-      .asNondeterministic()
-
-  /** Raises [[legacyDvRefusal]] inside the distributed log read. */
-  private lazy val legacyDvUdf =
-    udf((table: String) => (throw legacyDvRefusal(table)): Boolean)
-      .asNondeterministic()
 
   /** An add action carrying `dv` (a parquet-sidecar deletion vector
     * under `_delta_log/_dv/`, the form early versions of this engine
@@ -5229,7 +5193,7 @@ object MiniDelta {
       cpPrev.getOrElse(-1L) + 1, version)
     // the tail's actions in commit order, on either log-scan arm
     val tailActions = logScan(spark, table, tailVP) { (_, nodes) =>
-      nodes.iterator.flatMap { node =>
+      nodes.flatMap { node =>
         val rem = jnode(node, "remove").flatMap(r =>
           jnode(r, "path").map(_.asText()).map(p =>
             (p, jnode(r, "deletionTimestamp").map(_.asLong()))))
@@ -6056,7 +6020,7 @@ object MiniDelta {
     // inCommitTimestamp (when a real writer recorded one) is the
     // commit's authoritative clock; the plain timestamp is the fallback.
     val hit = logScan(spark, table, vps) { (v, nodes) =>
-      nodes.iterator.flatMap(commitTimestampOf).filter(_ <= tsMs)
+      nodes.flatMap(commitTimestampOf).filter(_ <= tsMs)
         .map(_ => v)
     }.maxOption
     hit.getOrElse(throw new IllegalArgumentException(
@@ -6080,7 +6044,7 @@ object MiniDelta {
     val vps = logJsonVersions(spark, table, fromV, toV)
     if (vps.isEmpty) return Map.empty
     logScan(spark, table, vps) { (v, nodes) =>
-      nodes.iterator.flatMap(commitTimestampOf).map(v -> _)
+      nodes.flatMap(commitTimestampOf).map(v -> _)
     }.toMap
   }
 
@@ -8299,7 +8263,7 @@ object MiniDelta {
     // Checkpoint remove rows stay a (single) parquet aggregate.
     val byPath: Map[String, (Long, Set[String])] =
       logScanMerged(spark, table, logJsonVersions(spark, table)) {
-        (_, nodes) => nodes.iterator.flatMap { node =>
+        (_, nodes) => nodes.flatMap { node =>
           val tombstone = jnode(node, "remove").flatMap(rem => for {
             p <- jnode(rem, "path").map(_.asText())
             t <- jnode(rem, "deletionTimestamp").map(_.asLong())
@@ -8923,14 +8887,17 @@ object MiniDelta {
     // yields no row
     val rows = logScan(spark, table, logJsonVersions(spark, table)) {
       (v, nodes) =>
-        val nAdd = java.lang.Long.valueOf(
-          nodes.count(jnode(_, "add").isDefined).toLong)
-        val nRem = java.lang.Long.valueOf(
-          nodes.count(jnode(_, "remove").isDefined).toLong)
-        nodes.iterator.flatMap(jnode(_, "commitInfo")).map { ci =>
-          org.apache.spark.sql.Row(java.lang.Long.valueOf(v),
-            jnode(ci, "operation").map(_.asText()).orNull, nAdd, nRem)
+        // one pass: the commit's operations (newest first) and its add
+        // and remove counts
+        val (ops, nAdd, nRem) = nodes.foldLeft((List.empty[String], 0L, 0L)) {
+          case ((ops, a, r), n) =>
+            (jnode(n, "commitInfo").fold(ops)(ci =>
+              jnode(ci, "operation").map(_.asText()).orNull :: ops),
+              a + jnode(n, "add").size, r + jnode(n, "remove").size)
         }
+        ops.reverseIterator.map(op => org.apache.spark.sql.Row(
+          java.lang.Long.valueOf(v), op, java.lang.Long.valueOf(nAdd),
+          java.lang.Long.valueOf(nRem)))
     }
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.sortBy(-_.getLong(0)).asJava, historySchema)
@@ -9449,21 +9416,25 @@ object MiniDelta {
         val it = commitNodesMemo.keySet.iterator
         if (it.hasNext) { it.next(); it.remove() }
       }
-      readCommit(f, new com.fasterxml.jackson.databind.ObjectMapper(), p,
-        len)
+      val in = f.open(new Path(p))
+      try commitLines(in,
+        new com.fasterxml.jackson.databind.ObjectMapper(), p).toIndexedSeq
+      finally in.close()
     }
 
-  /** The first `len` bytes of commit file `p`, every non-empty line
-    * parsed through [[parseAction]]: the read behind both arms of
-    * [[scanArm]]. */
-  private def readCommit(f: org.apache.hadoop.fs.FileSystem,
-      om: com.fasterxml.jackson.databind.ObjectMapper, p: String,
-      len: Long): IndexedSeq[com.fasterxml.jackson.databind.JsonNode] = {
-    val bytes = new Array[Byte](len.toInt)
-    val in = f.open(new Path(p))
-    try in.readFully(bytes) finally in.close()
-    new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty)
-      .map(line => parseAction(om, p, line)).toIndexedSeq
+  /** The non-empty lines of commit file `p` read from `in`, each parsed
+    * through [[parseAction]] as the iterator reaches it: the one line
+    * reader behind both arms of [[scanArm]]. The file is never held
+    * whole, so a commit of any size streams through the executor arm in
+    * one line's memory (the driver arm materializes it, under the
+    * window's byte cap). The caller closes `in`. */
+  private[graft] def commitLines(in: java.io.InputStream,
+      om: com.fasterxml.jackson.databind.ObjectMapper, p: String)
+      : Iterator[com.fasterxml.jackson.databind.JsonNode] = {
+    val lines = new java.io.BufferedReader(new java.io.InputStreamReader(
+      in, java.nio.charset.StandardCharsets.UTF_8))
+    Iterator.continually(lines.readLine()).takeWhile(_ != null)
+      .filter(_.nonEmpty).map(parseAction(om, p, _))
   }
 
   /** `memo(key)`, computed and published on a miss OUTSIDE the map's
@@ -9562,43 +9533,60 @@ object MiniDelta {
     *  - the driver (Left, no Spark action) when `driverOk` and the
     *    window's bytes fit under [[localReplayMaxBytes]], over the
     *    memoized [[commitNodes]];
-    *  - executors (Right) otherwise: one `parallelize` over the sized
-    *    commit files, each read with the driver's Hadoop conf through
-    *    the same [[readCommit]], so a torn line or a legacy `dv` add
-    *    raises by name on either arm.
+    *  - executors (Right) otherwise ([[executorScan]]): each commit
+    *    streamed line by line through the same [[commitLines]], so a
+    *    torn line or a legacy `dv` add raises by name on either arm,
+    *    and a commit of any size never sits whole in a task.
+    * `project` sees each commit's lines once, in order, as an iterator.
     * One getFileStatus per commit ([[commitStats]]) sizes the window. */
   private def scanArm[T: scala.reflect.ClassTag](spark: SparkSession,
       table: String, vps: Seq[(Long, String)], driverOk: Boolean = true)
-      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+      (project: (Long, Iterator[com.fasterxml.jackson.databind.JsonNode])
         => Iterator[T]): Either[Seq[T], org.apache.spark.rdd.RDD[T]] = {
     val f = fs(spark, table)
     val sized = commitStats(f, vps.iterator).toIndexedSeq
     if (driverOk && sized.map(_._3).sum <= localReplayMaxBytes(spark)) {
       driverLogScans.incrementAndGet()
       Left(sized.flatMap { case (v, p, len, mtime) =>
-        project(v, commitNodes(f, p, len, mtime)) })
+        project(v, commitNodes(f, p, len, mtime).iterator) })
     } else {
-      distributedLogScans.incrementAndGet()
-      val h = org.apache.spark.sql.graft.HadoopConfBridge.handle(
-        spark.sparkContext.hadoopConfiguration)
-      val files = sized.map { case (v, p, len, _) => (v, p, len) }
-      val slices = math.max(1, math.min(files.size,
-        spark.sparkContext.defaultParallelism * 4))
-      Right(spark.sparkContext.parallelize(files, slices)
-        .mapPartitions { it =>
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          it.flatMap { case (v, p, len) =>
-            project(v, readCommit(new Path(p).getFileSystem(h.conf), om, p,
-              len))
-          }
-        })
+      Right(executorScan(spark, sized.map { case (v, p, _, _) => (v, p) })(
+        project))
+    }
+  }
+
+  /** [[scanArm]]'s executor arm: one `parallelize` over the commit
+    * files `vps`, each streamed line by line through [[commitLines]]
+    * with the driver's Hadoop conf and mapped by `project`. */
+  private def executorScan[T: scala.reflect.ClassTag](spark: SparkSession,
+      vps: Seq[(Long, String)])
+      (project: (Long, Iterator[com.fasterxml.jackson.databind.JsonNode])
+        => Iterator[T]): org.apache.spark.rdd.RDD[T] = {
+    distributedLogScans.incrementAndGet()
+    val h = org.apache.spark.sql.graft.HadoopConfBridge.handle(
+      spark.sparkContext.hadoopConfiguration)
+    val slices = math.max(1, math.min(vps.size,
+      spark.sparkContext.defaultParallelism * 4))
+    spark.sparkContext.parallelize(vps, slices).mapPartitions { it =>
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      // the commit being read: closed when the next one opens (a
+      // projection may stop early) and, the last, with the task
+      var open: Option[java.io.InputStream] = None
+      org.apache.spark.TaskContext.get()
+        .addTaskCompletionListener[Unit](_ => open.foreach(_.close()))
+      it.flatMap { case (v, p) =>
+        open.foreach(_.close())
+        val in = new Path(p).getFileSystem(h.conf).open(new Path(p))
+        open = Some(in)
+        project(v, commitLines(in, om, p))
+      }
     }
   }
 
   /** [[scanArm]]'s values, collected from executors on that arm. */
   private def logScan[T: scala.reflect.ClassTag](spark: SparkSession,
       table: String, vps: Seq[(Long, String)])
-      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+      (project: (Long, Iterator[com.fasterxml.jackson.databind.JsonNode])
         => Iterator[T]): Seq[T] =
     scanArm(spark, table, vps)(project) match {
       case Left(ts) => ts
@@ -9612,7 +9600,7 @@ object MiniDelta {
   private def logScanMerged[K: scala.reflect.ClassTag,
       V: scala.reflect.ClassTag](spark: SparkSession, table: String,
       vps: Seq[(Long, String)])
-      (project: (Long, IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+      (project: (Long, Iterator[com.fasterxml.jackson.databind.JsonNode])
         => Iterator[(K, V)])(merge: (V, V) => V): Map[K, V] =
     scanArm(spark, table, vps)(project) match {
       case Left(kvs) => kvs.groupMapReduce(_._1)(_._2)(merge)
@@ -9803,14 +9791,14 @@ object MiniDelta {
     * descriptor rides the manifest as the "rdv" marker
     * ([[rdvMarkerOfNode]]) the mask loader decodes ([[maskDF]]). */
   private def pathStates(v: Long,
-      nodes: IndexedSeq[com.fasterxml.jackson.databind.JsonNode])
+      nodes: Iterator[com.fasterxml.jackson.databind.JsonNode])
       : Iterator[(String, PathState)] = {
     def str(n: com.fasterxml.jackson.databind.JsonNode, k: String) =
       jnode(n, k).map(_.asText()).orNull
     def long(n: com.fasterxml.jackson.databind.JsonNode,
              k: String): java.lang.Long =
       jnode(n, k).map(c => java.lang.Long.valueOf(c.asLong())).orNull
-    nodes.iterator.zipWithIndex.flatMap { case (node, i) =>
+    nodes.zipWithIndex.flatMap { case (node, i) =>
       jnode(node, "add").map { add =>
         val path = str(add, "path")
         path -> PathState(v, i, org.apache.spark.sql.Row(
@@ -10672,7 +10660,7 @@ object MiniDelta {
       // the file-level feed only on adds.
       val hasChanges = logScan(spark, table,
           logJsonVersions(spark, table, v, v)) { (_, nodes) =>
-        nodes.iterator.filter(n => changesData(n, "add") ||
+        nodes.filter(n => changesData(n, "add") ||
           (deliverRemoves && changesData(n, "remove"))).take(1).map(_ => v)
       }.nonEmpty
       if (hasChanges) handle(feed(v), v)
@@ -10745,7 +10733,7 @@ object MiniDelta {
     // sequence): the newest tail entry (the scan is in commit order)
     // overrides the checkpoint's.
     val tail = logScan(spark, table, tailVP) { (_, nodes) =>
-      nodes.iterator.flatMap(jnode(_, "txn"))
+      nodes.flatMap(jnode(_, "txn"))
         .filter(jnode(_, "appId").exists(_.asText() == appId))
         .map(jnode(_, "version").map(_.asLong()).getOrElse(-1L))
     }.lastOption
@@ -10855,7 +10843,7 @@ object MiniDelta {
     val schema = LogFile.feedSchema("version BIGINT, path STRING, " +
       "adc BOOLEAN, dv_path STRING, rdc BOOLEAN, ms STRING")
     val acts = logScan(spark, table, tailV) { (v, nodes) =>
-      nodes.iterator.map { node =>
+      nodes.map { node =>
         val add = jnode(node, "add")
         LogFile.feedRow(schema, Seq(
           java.lang.Long.valueOf(v),
@@ -10954,7 +10942,7 @@ object MiniDelta {
       "path STRING, adc BOOLEAN, dv_path STRING, rp STRING, rdc BOOLEAN, " +
       "cp STRING, cpv MAP<STRING, STRING>, ms STRING, csz BIGINT")
     val acts = logScan(spark, table, tailV) { (v, nodes) =>
-      nodes.iterator.map { node =>
+      nodes.map { node =>
         val add = jnode(node, "add")
         val rem = jnode(node, "remove")
         val cdc = jnode(node, "cdc")
@@ -11124,7 +11112,7 @@ object MiniDelta {
     val schema = LogFile.feedSchema(
       "path STRING, version BIGINT, dv_path STRING, ms STRING")
     val acts = logScan(spark, table, tailV) { (v, nodes) =>
-      nodes.iterator.flatMap { node =>
+      nodes.flatMap { node =>
         val add = jnode(node, "add").filter(a =>
           jnode(a, "dataChange").exists(_.asBoolean()))
         val ms = jnode(node, "metaData")

@@ -227,4 +227,74 @@ class LogScanSpec extends AnyFunSuite {
       refused(MiniDelta.versionAtTimestamp(spark, t, Long.MaxValue))
     }
   }
+
+  test("the commit reader streams: each line parses as the reader reaches " +
+      "it") {
+    val t = freshTable()
+    MiniDelta.createTable(spark, t, Schema)
+    Files.write(commitFile(t, 1L), Seq(
+      """{"commitInfo":{"timestamp":1,"operation":"WRITE"}}""",
+      """{"txn":{"appId":"app","version":1}}""",
+      """{"remove":{"path":"part-x.parquet","dataCha""")
+      .mkString("\n").getBytes("UTF-8"))
+    val p = commitFile(t, 1L).toString
+    val in = Files.newInputStream(commitFile(t, 1L))
+    try {
+      val lines = MiniDelta.commitLines(in,
+        new com.fasterxml.jackson.databind.ObjectMapper(), p)
+      // the torn last line is not read before the lines ahead of it
+      assert(lines.next().has("commitInfo"))
+      assert(lines.next().has("txn"))
+      val e = intercept[MiniDelta.MalformedCommitException](lines.next())
+      assert(e.getMessage.contains(s"$t: commit 1 "), e.getMessage)
+    } finally in.close()
+  }
+
+  test("a many-line commit answers alike on the driver and executor arms") {
+    val t = freshTable()
+    MiniDelta.createTable(spark, t, Schema)
+    appendKeys(t, Seq(1L, 2L), Some(("app", 1L))) // v1
+    val v1File = MiniDelta.snapshotFiles(spark, t).select("path").as[String]
+      .collect().head
+    // v2: one commit of 40,000 adds (a few MB, under the default cap)
+    // that also removes v1's file
+    val n = 40000
+    Files.write(commitFile(t, 2L), (Iterator(
+      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
+        s""""operation":"WRITE"}}""",
+      s"""{"remove":{"path":"$v1File","deletionTimestamp":1,""" +
+        s""""dataChange":true}}""",
+      s"""{"txn":{"appId":"app","version":2}}""") ++
+      Iterator.tabulate(n)(i =>
+        s"""{"add":{"path":"part-$i.parquet","partitionValues":{},""" +
+          s""""size":$i,"modificationTime":$i,"dataChange":true}}"""))
+      .mkString("\n").getBytes("UTF-8"))
+    MiniDelta.invalidateSnapshot(t)
+    val future = System.currentTimeMillis() + 30L * 86400000
+    def answers(distributed: Boolean): Map[String, Any] =
+      onArm(distributed, t) {
+        Map(
+          "snapshot" -> MiniDelta.snapshotFiles(spark, t)
+            .select("path", "size").as[(String, Long)].collect().toSet,
+          "history" -> MiniDelta.history(spark, t).collect().toSeq
+            .map(_.toSeq),
+          "commitTimestamps" -> MiniDelta.commitTimestamps(spark, t, 0L, 2L),
+          "lastTxnVersion" -> MiniDelta.lastTxnVersion(spark, t, "app"),
+          "vacuum dry run" -> MiniDelta.vacuum(spark, t, nowMs = () => future,
+            dryRun = true).sorted)
+      }
+    val driver = answers(distributed = false)
+    val executors = answers(distributed = true)
+    driver.keys.foreach(k => assert(driver(k) == executors(k), k))
+    assert(driver("snapshot") ==
+      (0 until n).map(i => (s"part-$i.parquet", i.toLong)).toSet)
+    assert(driver("history").asInstanceOf[Seq[Seq[Any]]].head ==
+      Seq(2L, "WRITE", n.toLong, 1L))
+    assert(driver("lastTxnVersion") == 2L)
+    assert(driver("vacuum dry run").asInstanceOf[Seq[String]]
+      .exists(_.endsWith(v1File)))
+    // the raw log frame reads the same commit
+    assert(MiniDelta.logDF(spark, t).where(col("add").isNotNull)
+      .count() == n + 1)
+  }
 }
