@@ -8887,8 +8887,8 @@ object MiniDelta {
     // yields no row
     val rows = logScan(spark, table, logJsonVersions(spark, table)) {
       (v, nodes) =>
-        // one pass: the commit's operations (newest first) and its add
-        // and remove counts
+        // one pass over the commit: its operations and its add and
+        // remove counts
         val (ops, nAdd, nRem) = nodes.foldLeft((List.empty[String], 0L, 0L)) {
           case ((ops, a, r), n) =>
             (jnode(n, "commitInfo").fold(ops)(ci =>
