@@ -136,10 +136,9 @@ object MiniDelta {
     * into checkpoint resolution, and a missed foreign checkpoint ahead
     * of the pointer only lengthens the JSON tail, never wrongs it. */
   private def checkpointEvery(spark: SparkSession, table: String): Int =
-    scala.util.Try(tableConfig(spark, table)
-        .get("delta.checkpointInterval")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption))
-      .toOption.flatten.filter(_ > 0).getOrElse(checkpointInterval)
+    tableConfig(spark, table).get("delta.checkpointInterval")
+      .flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(checkpointInterval)
 
   /** DV storage forms this engine decodes ([[RoaringDv]]): `u` (file
     * under the table root, Z85 UUID name), `i` (inline Z85 payload),
@@ -1477,138 +1476,182 @@ object MiniDelta {
         "a form this engine no longer reads; reading past them would " +
         "resurrect deleted rows")
 
-  // memo: (table, version) -> declared schema, the [[tableConfigMemo]]
-  // twin — without it every write and read-shape build re-ran the
-  // JSON-tail collect once per consulting call site
-  private val latestSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Option[org.apache.spark.sql.types.StructType]]()
+  /** The table's protocol, metaData and domain state at one version,
+    * the metadata half of a snapshot (the file half is [[reconcile]]).
+    * Every gate and metadata reader reads fields of it:
+    *  - `protocol`: the newest protocol action, whole;
+    *  - `schemaString`, `configuration`, `partitionColumns`: each from
+    *    the newest metaData action where the field is non-null (a null
+    *    configuration is "not stated", never "empty");
+    *  - `domains`: the live domainMetadata, domain -> configuration; a
+    *    `removed: true` action retires its domain;
+    *  - `unreadableDv`: deletion-vector storage forms this engine cannot
+    *    decode, seen in the checkpoint's add rows or the tail's adds. */
+  private[graft] case class TableState(
+      protocol: Option[ProtocolAction] = None,
+      schemaString: Option[String] = None,
+      configuration: Option[Map[String, String]] = None,
+      partitionColumns: Option[Seq[String]] = None,
+      domains: Map[String, String] = Map.empty,
+      unreadableDv: Set[String] = Set.empty) {
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      schemaString.map(parseSchema)
+    def config: Map[String, String] = configuration.getOrElse(Map.empty)
+    def proto: ProtocolAction = protocol.getOrElse(basicProtocol)
 
-  /** The table's declared schema as of `atMost` — the LATEST metaData
-    * action (Delta keeps schema in the log, not in data files; old files
-    * simply lack newer columns and read as null). None before the first
-    * commit or on pre-metaData tables.
-    *
-    * Scale: resolved from the checkpoint's metaData row plus the JSON
-    * tail after it — O(since-last-checkpoint), not O(history), same as
-    * snapshot replay — and memoized per (table, effective version)
-    * like [[tableConfig]], cleared via [[invalidateSnapshot]]. */
-  def latestSchema(spark: SparkSession, table: String,
-                   atMost: Long = Long.MaxValue)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    if (!tableExists(spark, table)) return None
-    val eff = math.min(latestVersion(spark, table), atMost)
-    if (eff < 0) return None
-    memoized(latestSchemaMemo, (table, eff)) {
-      latestSchemaResolve(spark, table, eff)
+    /** This state with one more log action applied. `malformed` is the
+      * error for a protocol action missing a version field. */
+    def fold(node: com.fasterxml.jackson.databind.JsonNode,
+             malformed: => Exception): TableState = {
+      import scala.jdk.CollectionConverters._
+      def strings(n: com.fasterxml.jackson.databind.JsonNode) =
+        n.elements().asScala.map(_.asText()).toSeq
+      var s = this
+      jnode(node, "protocol").foreach { p =>
+        def version(k: String) = jnode(p, k).filter(_.canConvertToInt)
+          .map(_.asInt()).getOrElse(throw malformed)
+        def feats(k: String) = jnode(p, k).fold(Seq.empty[String])(strings)
+        s = s.copy(protocol = Some(ProtocolAction(version("minReaderVersion"),
+          version("minWriterVersion"), feats("readerFeatures"),
+          feats("writerFeatures"))))
+      }
+      jnode(node, "metaData").foreach { m =>
+        s = s.copy(
+          schemaString = jnode(m, "schemaString").map(_.asText())
+            .orElse(s.schemaString),
+          configuration = jnode(m, "configuration").map(_.properties()
+              .asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+            .orElse(s.configuration),
+          partitionColumns = jnode(m, "partitionColumns").map(strings)
+            .orElse(s.partitionColumns))
+      }
+      for (d <- jnode(node, "domainMetadata");
+           name <- jnode(d, "domain").map(_.asText()))
+        s = s.copy(domains = jnode(d, "configuration")
+          .filterNot(_ => jnode(d, "removed").exists(_.asBoolean()))
+          .fold(s.domains - name)(c => s.domains + (name -> c.asText())))
+      jnode(node, "add").flatMap(jnode(_, "deletionVector")).foreach { dv =>
+        val st = jnode(dv, "storageType").map(_.asText()).getOrElse("<absent>")
+        if (!supportedDvStorage(st))
+          s = s.copy(unreadableDv = s.unreadableDv + st)
+      }
+      s
     }
   }
 
-  private def latestSchemaResolve(spark: SparkSession, table: String,
-                                  atMost: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val cp = latestCheckpoint(spark, table, atMost)
-    val base = cp.flatMap(v => readCheckpointMetaData(spark, table, v)
-      .map(m => parseSchema(m._1)))
-    val from = if (base.isDefined) cp.get else -1L
-    // the tail is O(since-last-checkpoint) SMALL files, read on the
-    // driver through the shared commit reader (newest metaData wins;
-    // commits the replay already parsed are memo hits) — a Spark JSON
-    // job here cost ~100 ms of per-job overhead on EVERY new version's
-    // first resolve, the dominant fixed cost of the write lifecycle
-    newestMetaDataField(spark, table, from + 1, atMost, "schemaString")
-      .map(n => parseSchema(n.asText())).orElse(base)
+  // memo: (table, committed version) -> its state. The log below a
+  // committed version is immutable, so an entry never goes stale for a
+  // live table; a table REPLACED at the same path clears through
+  // [[invalidateSnapshot]].
+  private val tableStates = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), TableState]()
+
+  /** [[tableState]] folds run (memo misses) — spec seam. */
+  private[graft] val tableStateResolves =
+    new java.util.concurrent.atomic.AtomicLong
+
+  /** The [[TableState]] at committed `version`: the newest complete
+    * checkpoint at or below `cpAtMost` ([[checkpointState]]) with the
+    * JSON tail after it folded forward through [[logActions]], one pass
+    * on the driver. Memoized per (table, version) in [[tableStates]]:
+    * the state is one fact whichever checkpoint it was folded from, so
+    * `cpAtMost` only bounds what a miss may read ([[writeCheckpoint]]
+    * reads below the checkpoint it is replacing; -1 folds from v0).
+    * A checkpoint state is itself the memo entry at the checkpoint's
+    * version, so a checkpoint is read at most once per process. Nothing
+    * is memoized when the fold throws. Empty before the first commit. */
+  private[graft] def tableState(spark: SparkSession, table: String,
+      version: Long, cpAtMost: Long = Long.MaxValue): TableState =
+    if (version < 0) TableState()
+    else memoized(tableStates, (table, version)) {
+      tableStateResolves.incrementAndGet()
+      val cp = if (cpAtMost < 0) None
+               else latestCheckpoint(spark, table, math.min(cpAtMost, version))
+      val base = cp.fold(TableState()) { c =>
+        if (c == version) checkpointState(spark, table, c)
+        else tableState(spark, table, c)
+      }
+      logActions(spark, table, cp.getOrElse(-1L) + 1, version)
+        .foldLeft(base) { case (s, (v, n)) =>
+          s.fold(n, new MalformedCommitException(table, v, n.toString))
+        }
+    }
+
+  /** [[tableState]] as of `atMost`, clamped to the latest commit. */
+  private def stateAt(spark: SparkSession, table: String, atMost: Long,
+                      cpAtMost: Long = Long.MaxValue): TableState =
+    tableState(spark, table, math.min(latestVersion(spark, table), atMost),
+      cpAtMost)
+
+  /** The state checkpoint `v` carries, read in one Spark job: its
+    * protocol, metaData and domainMetadata rows, rendered as action
+    * lines and folded like the JSON tail, and the distinct DV storage
+    * forms of its add rows. A checkpoint without a protocol row raises
+    * [[MalformedCheckpointException]]; an add row with a non-null legacy
+    * `dv.path` raises [[legacyDvRefusal]] (this engine's older
+    * checkpoints carry the column all-null). A metaData field the
+    * checkpoint leaves null falls back to the log below it. */
+  private def checkpointState(spark: SparkSession, table: String,
+                              v: Long): TableState = {
+    val raw = checkpointActionDF(spark, table, v)
+    val kinds = Seq("protocol", "metaData", "domainMetadata")
+      .filter(raw.columns.contains)
+    def malformed = new MalformedCheckpointException(table, v)
+    if (!kinds.contains("protocol")) throw malformed
+    val addT = Some(raw.schema).filter(_.fieldNames.contains("add"))
+      .map(_("add").dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
+      .getOrElse(Array.empty[String])
+    val isMeta = kinds.map(col(_).isNotNull).reduce(_ || _)
+    val storage =
+      if (addT.contains("deletionVector")) col("add.deletionVector.storageType")
+      else lit(null).cast("string")
+    val legacy =
+      if (addT.contains("dv")) col("add.dv.path").isNotNull else lit(false)
+    // (action line, DV storage form, legacy dv), deduplicated per task
+    // so the add rows ship one row per form, not one per file
+    val rows = raw.where(isMeta || storage.isNotNull || legacy)
+      .select(when(isMeta, to_json(struct(kinds.map(col): _*))), storage,
+        legacy)
+      .rdd.mapPartitions(_.map(r => (Option(r.getString(0)),
+        Option(r.getString(1)), r.getBoolean(2))).toSet.iterator)
+      .collect()
+    if (rows.exists(_._3)) throw legacyDvRefusal(table)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val st = rows.flatMap(_._1).foldLeft(TableState(unreadableDv =
+        rows.flatMap(_._2).filterNot(supportedDvStorage).toSet))(
+      (s, line) => s.fold(om.readTree(line), malformed))
+    if (st.protocol.isEmpty) throw malformed
+    if (st.schemaString.isDefined && st.configuration.isDefined &&
+        st.partitionColumns.isDefined) st
+    else {
+      val below = tableState(spark, table, v - 1)
+      st.copy(
+        schemaString = st.schemaString.orElse(below.schemaString),
+        configuration = st.configuration.orElse(below.configuration),
+        partitionColumns = st.partitionColumns.orElse(below.partitionColumns))
+    }
   }
 
-  /** Newest metaData action's `field` inside the JSON tail
-    * [fromInclusive, atMost], read newest-first through [[logActions]]:
-    * None when no tail commit carries a metaData with a NON-NULL
-    * `field` (the legacy-format null-vs-stated distinction the
-    * consumers need). */
-  private def newestMetaDataField(spark: SparkSession, table: String,
-      fromInclusive: Long, atMost: Long, field: String)
-      : Option[com.fasterxml.jackson.databind.JsonNode] =
-    logActions(spark, table, fromInclusive, atMost, newestFirst = true)
-      .flatMap { case (_, n) => jnode(n, "metaData").flatMap(jnode(_, field)) }
-      .nextOption()
+  /** The table's declared schema as of `atMost`: the newest metaData
+    * action's ([[tableState]]; Delta keeps schema in the log, not in
+    * data files, and old files simply lack newer columns and read as
+    * null). None before the first commit or on pre-metaData tables. */
+  def latestSchema(spark: SparkSession, table: String,
+                   atMost: Long = Long.MaxValue)
+      : Option[org.apache.spark.sql.types.StructType] =
+    stateAt(spark, table, atMost).schema
 
   private def parseSchema(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  // a named checkpoint file is immutable, so its metaData row memoizes
-  // forever — schema/config resolution on a checkpointed table costs a
-  // hashmap lookup in steady state
-  private val cpMetaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Option[(String, Option[Map[String, String]])]]()
-
-  /** metaData row of a checkpoint (schema/config as checkpoint
-    * COLUMNS, the Delta protocol's shape): (schemaString,
-    * configuration). None when the checkpoint carries no metaData
-    * row. */
-  private def readCheckpointMetaData(spark: SparkSession, table: String,
-                                     version: Long)
-      : Option[(String, Option[Map[String, String]])] =
-    memoized(cpMetaCache, (table, version)) {
-      Some(checkpointActionDF(spark, table, version))
-        .filter(_.columns.contains("metaData"))
-        .flatMap(_.where(col("metaData.schemaString").isNotNull)
-          .select(col("metaData.schemaString"), col("metaData.configuration"))
-          .collect().headOption
-          .map(r => (r.getString(0),
-            if (r.isNullAt(1)) None
-            else Some(r.getMap[String, String](1).toMap))))
-    }
-
-  // memo: (table, version) -> resolved configuration. The log below a
-  // version is immutable, so the entry never goes stale for a live
-  // table; a table REPLACED at the same path clears through
-  // [[invalidateSnapshot]] like every other permanent memo. Without
-  // this, every commit re-resolved the config (a checkpoint read + a
-  // Spark collect over the JSON tail) once per consulting call site —
-  // the per-write fixed cost that dominated the write-lifecycle bench.
-  private val tableConfigMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Map[String, String]]()
-
-  /** The table's configuration (properties map) as of `atMost` — the
-    * latest metaData action's `configuration`, resolved like
-    * [[latestSchema]]: the checkpoint's metaData row + JSON tail,
-    * falling back to the full-history scan when the checkpoint's
-    * metaData states no configuration (a null map is "not stated",
-    * never "empty"). Memoized per
-    * (table, effective version) — the effective version pins the
-    * resolution, so repeat calls pay a hashmap lookup, not IO. */
+  /** The table's configuration (properties map) as of `atMost`: the
+    * newest metaData action that states one ([[tableState]]; a null
+    * configuration is "not stated", an explicit {} overrides). */
   def tableConfig(spark: SparkSession, table: String,
-                  atMost: Long = Long.MaxValue): Map[String, String] = {
-    if (!tableExists(spark, table)) return Map.empty
-    // resolve the open-ended form to the version it would read at, so
-    // "latest" calls share the pinned calls' memo entries
-    val eff = math.min(latestVersion(spark, table), atMost)
-    if (eff < 0) return Map.empty
-    memoized(tableConfigMemo, (table, eff)) {
-      tableConfigResolve(spark, table, eff)
-    }
-  }
-
-  private def tableConfigResolve(spark: SparkSession, table: String,
-                                 atMost: Long): Map[String, String] = {
-    val cp = latestCheckpoint(spark, table, atMost)
-    val base = cp.flatMap(v =>
-      readCheckpointMetaData(spark, table, v).flatMap(_._2))
-    val from = if (base.isDefined) cp.get else -1L
-    // a legacy-format metaData with NULL configuration is "not stated",
-    // not "explicitly empty" — treating it as empty would silently
-    // disarm CHECK constraints carried by the checkpoint/older metaData.
-    // Scan back (driver-parsed, the latestSchemaResolve discipline) to
-    // the newest metaData that CARRIES a configuration (an explicit {}
-    // still overrides; it deserializes as an empty map, not null).
-    val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
-      "configuration").map { n =>
-        import scala.jdk.CollectionConverters._
-        n.properties().asScala.map(e => e.getKey -> e.getValue.asText())
-          .toMap
-      }
-    fromTail.orElse(base).getOrElse(Map.empty)
-  }
+                  atMost: Long = Long.MaxValue): Map[String, String] =
+    stateAt(spark, table, atMost).config
 
   /** Render epoch-micros as `yyyy-MM-dd HH:mm:ss[.f…]` in `zoneId` —
     * java.sql.Timestamp.toString's shape (fraction trimmed of trailing
@@ -2033,8 +2076,7 @@ object MiniDelta {
       if (!needDv && !enablingMapping && !needIct && !needRt && !needCdf)
         Seq.empty
       else {
-        var p = resolveProtocol(spark, table, readVersion,
-          cpAtMost = readVersion).getOrElse(basicProtocol)
+        var p = tableState(spark, table, readVersion).proto
         if (needDv) p = p.withDeletionVectors
         if (enablingMapping) p = p.withColumnMapping
         if (needIct) p = p.withWriterFeature("inCommitTimestamp")
@@ -2225,8 +2267,7 @@ object MiniDelta {
     // found it (the earlier ordering had already committed the
     // property unsets / purge when the history gate threw)
     val gateVersion = latestVersion(spark, table)
-    val proto0 = resolveProtocol(spark, table, gateVersion,
-      cpAtMost = gateVersion).getOrElse(basicProtocol)
+    val proto0 = tableState(spark, table, gateVersion).proto
     require(proto0.readerFeats.contains(feature) ||
         proto0.writerFeats.contains(feature),
       s"DROP FEATURE $feature: not declared in $table's protocol " +
@@ -2291,8 +2332,7 @@ object MiniDelta {
     // ---- phase 2: the downgrade commit (the protocol re-resolves at
     // the post-phase-1 version — the gates above ran pre-mutation)
     val readVersion = latestVersion(spark, table)
-    val proto = resolveProtocol(spark, table, readVersion,
-      cpAtMost = readVersion).getOrElse(basicProtocol)
+    val proto = tableState(spark, table, readVersion).proto
     val newReader = proto.readerFeats.filterNot(_ == feature)
     val newProto = ProtocolAction(
       if (newReader.isEmpty) 1 else proto.minReader,
@@ -2554,8 +2594,7 @@ object MiniDelta {
     // feature-enabling properties upgrade the protocol exactly as a
     // CREATE would declare them (never a downgrade — the resolved
     // protocol is the floor)
-    val resolved = resolveProtocol(spark, table, readVersion,
-      cpAtMost = readVersion).getOrElse(basicProtocol)
+    val resolved = tableState(spark, table, readVersion).proto
     var p = resolved
     if (properties.get("delta.enableDeletionVectors").contains("true"))
       p = p.withDeletionVectors
@@ -2825,8 +2864,7 @@ object MiniDelta {
       val needsVariant = cols.exists(c => containsVariant(c._2.dataType))
       if (!needsGen && !needsVariant) Seq.empty
       else {
-        val cur = resolveProtocol(spark, table, readVersion,
-          cpAtMost = readVersion).getOrElse(basicProtocol)
+        val cur = tableState(spark, table, readVersion).proto
         var up = cur
         if (needsGen) {
           up = if (up.minWriter >= 7) up.withWriterFeature(
@@ -2920,8 +2958,7 @@ object MiniDelta {
     val protoLines =
       if (defaultSql.isEmpty) Seq.empty
       else {
-        val cur = resolveProtocol(spark, table, readVersion,
-          cpAtMost = readVersion).getOrElse(basicProtocol)
+        val cur = tableState(spark, table, readVersion).proto
         val up = cur.withWriterFeature("allowColumnDefaults")
         if (up == cur) Seq.empty else Seq(up.render)
       }
@@ -3048,8 +3085,7 @@ object MiniDelta {
             .putMetadataArray("delta.typeChanges",
               (prior :+ change).toArray).build()))
     }
-    val cur = resolveProtocol(spark, table, readVersion,
-      cpAtMost = readVersion).getOrElse(basicProtocol)
+    val cur = tableState(spark, table, readVersion).proto
     val up = cur.withFeature("typeWidening")
     val protoLines = if (up == cur) Seq.empty else Seq(up.render)
     writeCommit(spark, table, readVersion + 1,
@@ -3106,14 +3142,12 @@ object MiniDelta {
       requireNotInGenerated(declared, Seq(d.name), "DROP")
     }
     // same clustering guard as [[dropColumn]]: the delta.clustering
-    // domain stores PHYSICAL names and never retracts, so letting
-    // REPLACE COLUMNS shed a clustering column would leave the domain
-    // pointing at a dead physical name and break every later bare
-    // OPTIMIZE/compact. Gated on the memoized protocol, probed once
-    // for the whole dropped set.
-    if (dropped.nonEmpty && requireWritable(spark, table, readVersion)
-        .exists(_.writerFeats.contains("clustering"))) {
-      val clustered = clusteringPhysicalCols(spark, table, readVersion)
+    // domain stores PHYSICAL names, so letting REPLACE COLUMNS shed a
+    // clustering column would leave the domain pointing at a dead
+    // physical name and break every later bare OPTIMIZE/compact
+    val clustered = clusteringPhysicalCols(tableState(spark, table,
+      readVersion))
+    if (dropped.nonEmpty && clustered.nonEmpty) {
       dropped.foreach { d =>
         require(!clustered.exists(_.contains(physicalNameOf(d))),
           s"REPLACE COLUMNS cannot drop ${d.name}: it is a " +
@@ -3175,8 +3209,7 @@ object MiniDelta {
     val protoLines =
       if (!needsVariant) Seq.empty
       else {
-        val cur = resolveProtocol(spark, table, readVersion,
-          cpAtMost = readVersion).getOrElse(basicProtocol)
+        val cur = tableState(spark, table, readVersion).proto
         val up = cur.withFeature("variantType")
         if (up == cur) Seq.empty else Seq(up.render)
       }
@@ -3580,20 +3613,19 @@ object MiniDelta {
       sys.error(s"$table has no declared schema"))
     requireNotInConstraints(cfg, path, "DROP")
     requireNotInGenerated(declared, path, "DROP")
-    // the delta.clustering domain stores PHYSICAL names and never
-    // retracts: dropping a clustering column would leave the domain
-    // pointing at a dead physical name, and every later bare OPTIMIZE
-    // (and checkpoint domain carry) would target a non-existent column.
-    // Refuse (Delta's rule). Gated on the memoized protocol so the
-    // domain probe doesn't tax drops on unclustered tables. Clustering
-    // columns are top-level by construction, so nested drops skip it.
-    if (path.length == 1 && requireWritable(spark, table, readVersion)
-        .exists(_.writerFeats.contains("clustering"))) {
+    // the delta.clustering domain stores PHYSICAL names: dropping a
+    // clustering column would leave the domain pointing at a dead
+    // physical name, and every later bare OPTIMIZE (and checkpoint
+    // domain carry) would target a non-existent column. Refuse
+    // (Delta's rule). Clustering columns are top-level by construction,
+    // so nested drops skip it.
+    val clustered = clusteringPhysicalCols(tableState(spark, table,
+      readVersion))
+    if (path.length == 1 && clustered.nonEmpty) {
       val idx = declared.fields.indexWhere(_.name.equalsIgnoreCase(name))
       require(idx >= 0, s"no such column: $name")
       val physDropped = physicalNameOf(declared.fields(idx))
-      require(!clusteringPhysicalCols(spark, table, readVersion)
-          .exists(_.contains(physDropped)),
+      require(!clustered.exists(_.contains(physDropped)),
         s"DROP COLUMN $name refused: it is a clustering column — " +
           "ALTER TABLE ... CLUSTER BY a layout without it first")
     }
@@ -4773,56 +4805,6 @@ object MiniDelta {
 
   private val basicProtocol = ProtocolAction(1, 2, Nil, Nil)
 
-  /** The table's protocol contract as of `version`: the LATEST protocol
-    * action, folded from the newest checkpoint at or below `cpAtMost`
-    * plus the JSON tail after it — the same replay window snapshots
-    * use. A checkpoint without a protocol row raises
-    * [[MalformedCheckpointException]]. The tail is driver metadata,
-    * read through [[logActions]] ([[scanProtocolRange]]). */
-  private def resolveProtocol(spark: SparkSession, table: String,
-                              version: Long, cpAtMost: Long)
-      : Option[ProtocolAction] = {
-    val cp = if (cpAtMost < 0) None
-             else latestCheckpoint(spark, table, cpAtMost)
-    val base = cp.map(v =>
-      checkpointProtocol(checkpointActionDF(spark, table, v), table, v))
-    scanProtocolRange(spark, table, cp.getOrElse(-1L) + 1, version)
-      .orElse(base)
-  }
-
-  /** The protocol row of checkpoint `v`'s action rows `raw`; none
-    * raises [[MalformedCheckpointException]]. */
-  private def checkpointProtocol(raw: DataFrame, table: String,
-                                 v: Long): ProtocolAction =
-    Some(raw).filter(_.columns.contains("protocol"))
-      .flatMap(_.where(col("protocol.minReaderVersion").isNotNull)
-        .select(col("protocol.minReaderVersion").cast("int"),
-          col("protocol.minWriterVersion").cast("int"),
-          col("protocol.readerFeatures").cast("array<string>"),
-          col("protocol.writerFeatures").cast("array<string>"))
-        .collect().headOption)
-      .map(r => ProtocolAction(r.getInt(0), r.getInt(1),
-        if (r.isNullAt(2)) Nil else r.getSeq[String](2),
-        if (r.isNullAt(3)) Nil else r.getSeq[String](3)))
-      .getOrElse(throw new MalformedCheckpointException(table, v))
-
-  /** The LATEST protocol action in commit JSONs `[from, to]`, if any —
-    * read newest-first through [[logActions]], no Spark jobs. */
-  private def scanProtocolRange(spark: SparkSession, table: String,
-                                fromInclusive: Long, toInclusive: Long)
-      : Option[ProtocolAction] =
-    logActions(spark, table, fromInclusive, toInclusive, newestFirst = true)
-      .flatMap { case (_, n) => jnode(n, "protocol") }.nextOption()
-      .map { proto =>
-        def feats(k: String): Seq[String] =
-          jnode(proto, k).fold(Seq.empty[String])(a =>
-            (0 until a.size()).map(a.get(_).asText()))
-        ProtocolAction(
-          jnode(proto, "minReaderVersion").map(_.asInt()).getOrElse(1),
-          jnode(proto, "minWriterVersion").map(_.asInt()).getOrElse(2),
-          feats("readerFeatures"), feats("writerFeatures"))
-      }
-
   /** Writer features (protocol minWriterVersion 7) this engine's
     * commits honor: append-only + CDF gating happens in
     * [[writeCommit]], invariants/constraints are enforced on every
@@ -4860,33 +4842,16 @@ object MiniDelta {
     // domainMetadata per the spec)
     "rowTracking", "domainMetadata")
 
-  // memo: table -> (version checked through, protocol resolved there);
-  // protocol actions are rare, so each new commit pays ONE incremental
-  // tail scan, not a full-history resolve
-  private val writerProto = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.lang.Long, Option[ProtocolAction])]()
-
   /** The Delta writer contract, enforced before any commit: a writer
     * must check minWriterVersion and (at v7) the writerFeatures list,
     * and refuse tables whose features it cannot uphold — committing
     * anyway silently corrupts the contract for every OTHER client of
-    * the table (the write-side mirror of [[requireReadable]]). */
+    * the table (the write-side mirror of [[requireReadable]]). A pure
+    * check on the [[tableState]] at `atMost`. */
   private def requireWritable(spark: SparkSession, table: String,
                               atMost: Long): Option[ProtocolAction] = {
     if (atMost < 0) return None // v0: creating the table, no protocol yet
-    val hi = math.min(latestVersion(spark, table), atMost)
-    if (hi < 0) return None // no commits on disk yet
-    val cached = writerProto.get(table)
-    val proto: Option[ProtocolAction] =
-      if (cached != null && cached._1.longValue() >= hi) cached._2
-      else {
-        val p =
-          if (cached == null) resolveProtocol(spark, table, hi, cpAtMost = hi)
-          else scanProtocolRange(spark, table, cached._1.longValue() + 1, hi)
-            .orElse(cached._2)
-        writerProto.put(table, (java.lang.Long.valueOf(hi), p))
-        p
-      }
+    val proto = stateAt(spark, table, atMost).protocol
     proto.foreach { p =>
       if (p.minWriter > 7)
         throw new UnsupportedTableFeatureException(
@@ -5022,7 +4987,9 @@ object MiniDelta {
                       maxActionsPerPart: Int = 1000000)
       : Unit = {
     val f = fs(spark, table)
-    val cfg = tableConfig(spark, table, version)
+    // resolved below the checkpoint being written, so an idempotent
+    // re-run never reads the file it replaces
+    val st = stateAt(spark, table, version, cpAtMost = version - 1)
     val snapDF0 = replaySnapshot(spark, table, version,
       cpAtMost = version - 1)
     // count + DV probe in ONE pass; the count decides whether the bulk
@@ -5032,14 +4999,15 @@ object MiniDelta {
     val snapDF = if (mustCacheCp) snapDF0.persist() else snapDF0
     try {
       writeCheckpointInner(spark, table, version, nowMs,
-        maxActionsPerPart, f, cfg, snapDF)
+        maxActionsPerPart, f, st, snapDF)
     } finally if (mustCacheCp) { snapDF.unpersist(); () }
   }
 
   private def writeCheckpointInner(spark: SparkSession, table: String,
       version: Long, nowMs: () => Long, maxActionsPerPart: Int,
-      f: org.apache.hadoop.fs.FileSystem, cfg: Map[String, String],
+      f: org.apache.hadoop.fs.FileSystem, st: TableState,
       snapDF: DataFrame): Unit = {
+    val cfg = st.config
     val aggRow = snapDF.agg(count(lit(1)),
       max(col("dv_path").isNotNull)).collect()(0)
     val snapCount = aggRow.getLong(0)
@@ -5059,13 +5027,10 @@ object MiniDelta {
     // descriptors after the property was turned off must keep the DV
     // reader gate, or a reader trusting (1, 2) would resurrect the
     // masked rows.
-    val hasDv = hasDvProbe
-    val resolved = resolveProtocol(spark, table, version,
-      cpAtMost = version - 1).getOrElse(basicProtocol)
     val proto =
-      (if (hasDv || cfg.get("delta.enableDeletionVectors").contains("true"))
-         resolved.withDeletionVectors
-       else resolved).render
+      (if (hasDvProbe || cfg.get("delta.enableDeletionVectors").contains("true"))
+         st.proto.withDeletionVectors
+       else st.proto).render
     // partition columns: derived from the WHOLE manifest, never from
     // one sampled row — a mixed-layout snapshot (post-CONVERT debris,
     // Hive-encoded files beside pathless action-carried ones) must not
@@ -5110,42 +5075,22 @@ object MiniDelta {
         // EMPTY snapshot (all rows deleted): the layout still governs
         // future writes — carry the log's declared partitionColumns
         // instead of silently flipping the table to unpartitioned
-        metaPartitionColumns(spark, table, version).getOrElse(Seq.empty)
+        st.partitionColumns.getOrElse(Seq.empty)
       else pathSigs.headOption.map(_.split("/").toSeq).getOrElse {
         if (aggKeys.isEmpty) Seq.empty
-        else metaPartitionColumns(spark, table, version)
-          .filter(_.sorted == aggKeys.sorted)
+        else st.partitionColumns.filter(_.sorted == aggKeys.sorted)
           .getOrElse(aggKeys.sorted)
       }
-    val metaLines = latestSchema(spark, table, version)
+    val metaLines = st.schema
       .map(s => metaDataLine(table, s, parts, cfg)).toSeq
     val addLines: Seq[String] =
       if (distributed) Seq.empty[String]
       else snapRows.map(checkpointAddLine).toSeq
-    // the rowTracking high-water mark must survive log cleanup: carry
-    // the latest delta.rowTracking domainMetadata into the checkpoint
-    // (spec rule — live domain metadata is snapshot state). Gated on
-    // the resolved protocol: a rowTracking-free table has no mark to
-    // carry, and the probe driver-reads every JSON commit in the tail —
-    // an unconditional call taxes every checkpoint on every table.
-    val domainLines = {
-      val rt =
-        if (!resolved.writerFeats.contains("rowTracking")) Seq.empty
-        else {
-          val hwm = rowIdHighWaterMark(spark, table, version)
-          if (hwm < 0) Seq.empty
-          else Seq(domainMetadataLine(RowTrackingDomain,
-            s"""{"rowIdHighWaterMark":$hwm}"""))
-        }
-      // the clustering layout is snapshot state too: without the carry,
-      // log cleanup would silently turn a clustered table unclustered
-      val cl =
-        if (!resolved.writerFeats.contains("clustering")) Seq.empty
-        else clusteringPhysicalCols(spark, table, version).toSeq
-          .map(cols => domainMetadataLine(ClusteringDomain,
-            clusteringConfig(cols)))
-      rt ++ cl
-    }
+    // live domain metadata is snapshot state (the Delta rule): the
+    // rowTracking high-water mark, the clustering layout and any other
+    // writer's domain must survive log cleanup
+    val domainLines = st.domains.toSeq.sorted.map { case (d, c) =>
+      domainMetadataLine(d, c) }
     // unexpired remove tombstones ride the checkpoint (Delta classic
     // shape): without them, deleting pre-checkpoint JSON history
     // ([[cleanupLogs]]) would silently erase the horizon data vacuum
@@ -5617,14 +5562,9 @@ object MiniDelta {
     // OPTIMIZE honors the DECLARED layout — multi-column layouts
     // z-order, single-column layouts range-cluster — so `CALL
     // graft.optimize` on a clustered table does what Delta's OPTIMIZE
-    // does without the caller restating the columns. Gated on the
-    // (memoized) protocol: the domain probe driver-reads the JSON
-    // tail, and an unconditional call would tax every OPTIMIZE on
-    // every unclustered table (the writeCheckpoint rule).
+    // does without the caller restating the columns.
     val (clusterBy1, zOrderBy1) =
       if (clusterBy.nonEmpty || zOrderBy.nonEmpty) (clusterBy, zOrderBy)
-      else if (!requireWritable(spark, table, readVersion)
-          .exists(_.writerFeats.contains("clustering"))) (Nil, Nil)
       else clusteringColumns(spark, table) match {
         case Seq() => (Nil, Nil)
         case Seq(one) => (Seq(one), Nil)
@@ -5793,42 +5733,15 @@ object MiniDelta {
     s"""{"clusteringColumns":[${
       cols.map(c => s"[${jstr(c)}]").mkString(",")}]}"""
 
-  /** The configuration JSON of the newest `domain` domainMetadata
-    * action as of `atMost`, parsed: the JSON tail since the newest
-    * checkpoint read newest-first through [[logActions]], falling back
-    * to the checkpoint's domainMetadata row. None when no action
-    * names the domain. O(since-last-checkpoint). */
-  private def domainConfig(spark: SparkSession, table: String,
-      domain: String, atMost: Long)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
-    if (atMost < 0) return None
-    val cp = latestCheckpoint(spark, table, atMost)
-    logActions(spark, table, cp.getOrElse(-1L) + 1, atMost,
-        newestFirst = true)
-      .flatMap { case (_, n) => jnode(n, "domainMetadata") }
-      .find(jnode(_, "domain").exists(_.asText() == domain))
-      .flatMap(jnode(_, "configuration")).map(_.asText())
-      .orElse(cp.flatMap { v =>
-        val df = checkpointActionDF(spark, table, v)
-        if (!df.columns.contains("domainMetadata")) None
-        else df.where(col("domainMetadata").isNotNull &&
-            col("domainMetadata.domain") === domain)
-          .select("domainMetadata.configuration").collect().headOption
-          .flatMap(r => Option(r.getString(0)))
-      })
-      .map(jsonTree)
-  }
-
   private def jsonTree(json: String): com.fasterxml.jackson.databind.JsonNode =
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
 
-  /** The table's declared clustering layout at `atMost` (PHYSICAL
-    * column names, possibly empty = CLUSTER BY NONE): the newest
-    * delta.clustering domainMetadata action ([[domainConfig]]). None
-    * when the table never declared clustering. */
-  private def clusteringPhysicalCols(spark: SparkSession, table: String,
-      atMost: Long): Option[Seq[String]] =
-    domainConfig(spark, table, ClusteringDomain, atMost).map { cfg =>
+  /** The declared clustering layout in `st` (PHYSICAL column names,
+    * possibly empty = CLUSTER BY NONE): the live delta.clustering
+    * domain. None when the table never declared clustering or the
+    * domain was removed. */
+  private def clusteringPhysicalCols(st: TableState): Option[Seq[String]] =
+    st.domains.get(ClusteringDomain).map(jsonTree).map { cfg =>
       import scala.jdk.CollectionConverters._
       jnode(cfg, "clusteringColumns").toSeq
         .flatMap(_.elements().asScala).flatMap(_.elements().asScala)
@@ -5839,10 +5752,9 @@ object MiniDelta {
     * clustered or CLUSTER BY NONE) — physical names relabel back
     * through the current schema; unmapped tables are identity. */
   def clusteringColumns(spark: SparkSession, table: String): Seq[String] = {
-    val raw = clusteringPhysicalCols(spark, table,
-      latestVersion(spark, table)).getOrElse(Nil)
-    val schema = latestSchema(spark, table)
-    raw.map(pn => schema.flatMap(_.fields.find(fld =>
+    val st = stateAt(spark, table, Long.MaxValue)
+    clusteringPhysicalCols(st).getOrElse(Nil).map(pn =>
+      st.schema.flatMap(_.fields.find(fld =>
       physicalNameOf(fld) == pn)).fold(pn)(_.name))
   }
 
@@ -5865,8 +5777,7 @@ object MiniDelta {
         "are mutually exclusive (Delta's rule)")
     val phys = cols.map(c => declared.flatMap(_.fields
       .find(_.name.equalsIgnoreCase(c))).fold(c)(physicalNameOf))
-    val cur = resolveProtocol(spark, table, readVersion,
-      cpAtMost = readVersion).getOrElse(basicProtocol)
+    val cur = tableState(spark, table, readVersion).proto
     val up = cur.withWriterFeature("clustering")
       .withWriterFeature("domainMetadata")
     val protoLines = if (up == cur) Seq.empty else Seq(up.render)
@@ -5876,14 +5787,14 @@ object MiniDelta {
       "CLUSTER BY")
   }
 
-  /** The row-id high-water mark as of `atMost`: the LATEST
-    * delta.rowTracking domainMetadata action ([[domainConfig]]). -1
-    * before any assignment (the spec's initial mark; the first fresh
-    * base row id is 0). O(since-last-checkpoint). */
+  /** The row-id high-water mark as of committed `atMost`: the live
+    * delta.rowTracking domain ([[tableState]]). -1 before any
+    * assignment (the spec's initial mark; the first fresh base row id
+    * is 0). */
   private def rowIdHighWaterMark(spark: SparkSession, table: String,
                                  atMost: Long): Long =
-    domainConfig(spark, table, RowTrackingDomain, atMost)
-      .flatMap(hwmOf).getOrElse(-1L)
+    tableState(spark, table, atMost).domains.get(RowTrackingDomain)
+      .flatMap(c => hwmOf(jsonTree(c))).getOrElse(-1L)
 
   private def hwmOf(cfg: com.fasterxml.jackson.databind.JsonNode)
       : Option[Long] =
@@ -7795,8 +7706,7 @@ object MiniDelta {
     val widenProto: Seq[String] =
       if (!typeChanged) Seq.empty
       else {
-        val cur = resolveProtocol(spark, table, readVersion,
-          cpAtMost = readVersion).getOrElse(basicProtocol)
+        val cur = tableState(spark, table, readVersion).proto
         val up = cur.withFeature("typeWidening")
         if (up == cur) Seq.empty else Seq(up.render)
       }
@@ -8966,12 +8876,12 @@ object MiniDelta {
         val rows: Any =
           if (agg.getLong(3) > 0 && agg.getLong(0) > 0) null
           else agg.getLong(2) - agg.getLong(4)
-        val proto = resolveProtocol(spark, table, Long.MaxValue,
-          Long.MaxValue).getOrElse(basicProtocol)
+        val st = stateAt(spark, table, Long.MaxValue)
+        val proto = st.proto
         Row("graft-delta", table, partitionColumns(spark, table),
           clusteringColumns(spark, table),
           agg.getLong(0), agg.getLong(1), rows,
-          tableConfig(spark, table), proto.minReader, proto.minWriter,
+          st.config, proto.minReader, proto.minWriter,
           (proto.readerFeats ++ proto.writerFeats).distinct.sorted)
       }
     spark.createDataFrame(
@@ -9031,39 +8941,10 @@ object MiniDelta {
         val fromFiles = partitionColsOf(snapshotFilesCached(spark, table)
           .select("path").limit(1).collect().map(_.getString(0)))
         if (fromFiles.nonEmpty) fromFiles
-        else metaPartitionColumns(spark, table).getOrElse(Seq.empty)
+        else tableState(spark, table, eff).partitionColumns
+          .getOrElse(Seq.empty)
       }
     }
-
-  /** Latest metaData action's `partitionColumns`: the JSON tail since
-    * the last checkpoint first (newest wins), then the checkpoint's own
-    * metaData row. O(since-last-checkpoint), like [[latestSchema]]. */
-  /** The log's declared `metaData.partitionColumns`, resolved AT
-    * `atMost` (r17): a checkpoint rendered for an older version of a
-    * table whose partition layout was later re-declared must read the
-    * columns declared at the RENDERED version, not HEAD's. */
-  private def metaPartitionColumns(spark: SparkSession, table: String,
-                                   atMost: Long = Long.MaxValue)
-      : Option[Seq[String]] = {
-    val cp = latestCheckpoint(spark, table, atMost)
-    val from = cp.getOrElse(-1L)
-    // the JSON tail parses DRIVER-SIDE (r17 — [[newestMetaDataField]],
-    // the schema/config probes' discipline): a handful of small commit
-    // files never justifies a Spark job's scheduling fixed cost, and
-    // this probe runs once per SQL statement
-    val fromTail = newestMetaDataField(spark, table, from + 1, atMost,
-      "partitionColumns").map { n =>
-        import scala.jdk.CollectionConverters._
-        n.elements().asScala.map(_.asText()).toSeq
-      }
-    fromTail.orElse(cp.flatMap { v =>
-      Some(checkpointActionDF(spark, table, v))
-        .filter(_.columns.contains("metaData"))
-        .flatMap(_.where(col("metaData.partitionColumns").isNotNull)
-          .select("metaData.partitionColumns").collect().headOption
-          .map(_.getSeq[String](0)))
-    })
-  }
 
   /** Delta's `CONVERT TO DELTA`: promote a directory of raw parquet to a
     * governed table by committing a v0 whose add actions reference the
@@ -9166,7 +9047,8 @@ object MiniDelta {
             else Some((r.getLong(bridIdx),
               r.getLong(r.fieldIndex("default_row_commit")))))
       }
-    val srcCfg = tableConfig(spark, source, v)
+    val src = stateAt(spark, source, v)
+    val srcCfg = src.config
     // the clone's v0 carries the SOURCE's resolved protocol verbatim
     // (a real source at (3, timestampNtz) keeps its contract), with the
     // DV requirement UNIONED in when descriptors or the property ride
@@ -9174,37 +9056,23 @@ object MiniDelta {
     // ignore the cloned descriptors and resurrect masked rows
     val needDv = anyDv ||
       srcCfg.get("delta.enableDeletionVectors").contains("true")
-    val srcProto = resolveProtocol(spark, source, v, cpAtMost = v)
     val protoLines =
-      (if (needDv) Some(srcProto.getOrElse(basicProtocol).withDeletionVectors)
-       else srcProto.filter(_ != basicProtocol))
+      (if (needDv) Some(src.proto.withDeletionVectors)
+       else src.protocol.filter(_ != basicProtocol))
         .map(_.render).toSeq
-    val metaLines = latestSchema(spark, source, v)
+    val metaLines = src.schema
       .map(metaDataLine(target, _, partitionColsOf(firstPaths.toSeq),
         srcCfg))  // clone inherits properties
       .toSeq
     // a rowTracking source's high-water mark rides into the clone's v0
-    // — without it the clone's first append would re-assign ids already
-    // carried by the cloned files
-    val domainLines = {
-      val rt =
-        if (!srcProto.exists(_.writerFeats.contains("rowTracking")))
-          Seq.empty
-        else {
-          val hwm = rowIdHighWaterMark(spark, source, v)
-          if (hwm < 0) Seq.empty
-          else Seq(domainMetadataLine(RowTrackingDomain,
-            s"""{"rowIdHighWaterMark":$hwm}"""))
-        }
-      // a clustered source's layout rides into the clone's v0 — the
-      // clone's OPTIMIZE must honor the same declared columns
-      val cl =
-        if (!srcProto.exists(_.writerFeats.contains("clustering")))
-          Seq.empty
-        else clusteringPhysicalCols(spark, source, v).toSeq
-          .map(cols => domainMetadataLine(ClusteringDomain,
-            clusteringConfig(cols)))
-      rt ++ cl
+    // (without it the clone's first append would re-assign ids already
+    // carried by the cloned files), and a clustered source's layout
+    // (the clone's OPTIMIZE must honor the same declared columns)
+    val domainLines = Seq(RowTrackingDomain -> "rowTracking",
+        ClusteringDomain -> "clustering").collect {
+      case (d, feat) if src.proto.writerFeats.contains(feat) &&
+          src.domains.contains(d) =>
+        domainMetadataLine(d, src.domains(d))
     }
     writeCommitStreamed(spark, target, 0L,
       protoLines ++ metaLines ++ domainLines, addLinesIt, "CLONE")
@@ -9221,52 +9089,6 @@ object MiniDelta {
     replaySnapshot(spark, table, version,
       if (useCheckpoint) version else -1L)
 
-  // memo: table -> highest version whose log has passed the protocol /
-  // column-mapping / real-DV gate (capabilities only ratchet up, so a
-  // pass at v covers every earlier version)
-  private val readableThrough =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private case class CpGate(minReader: Int, feats: Seq[String],
-                            cmMode: Option[String], badDv: Set[String])
-  private val cpGates =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), CpGate]()
-
-  /** The [[requireReadable]] facts of the checkpoint at `v`: its
-    * protocol row, column-mapping mode and DV storage forms, memoized
-    * per (table, version) — a named checkpoint is immutable, so steady
-    * state pays a hashmap lookup, not Spark jobs. A checkpoint without
-    * a protocol row raises [[MalformedCheckpointException]]; one whose
-    * add rows carry a non-null legacy `dv.path` raises
-    * [[legacyDvRefusal]] (this engine's older checkpoints carry the
-    * column all-null). Neither outcome is memoized. */
-  private def cpGate(spark: SparkSession, table: String, v: Long): CpGate =
-    memoized(cpGates, (table, v)) {
-      val raw = checkpointActionDF(spark, table, v)
-      val proto = checkpointProtocol(raw, table, v)
-      val cm = readCheckpointMetaData(spark, table, v).flatMap(_._2)
-        .flatMap(_.get("delta.columnMapping.mode"))
-      val addT = Some(raw.schema).filter(_.fieldNames.contains("add"))
-        .map(_("add").dataType
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
-        .getOrElse(Array.empty[String])
-      val storage =
-        if (addT.contains("deletionVector"))
-          col("add.deletionVector.storageType")
-        else lit(null).cast("string")
-      val legacy =
-        if (addT.contains("dv")) col("add.dv.path").isNotNull else lit(false)
-      val dvRows =
-        if (!addT.contains("deletionVector") && !addT.contains("dv"))
-          Array.empty[org.apache.spark.sql.Row]
-        else raw.where(storage.isNotNull || legacy)
-          .select(storage, legacy).distinct().collect()
-      if (dvRows.exists(_.getBoolean(1))) throw legacyDvRefusal(table)
-      CpGate(proto.minReader, proto.readerFeats, cm,
-        dvRows.collect { case r if !r.isNullAt(0) => r.getString(0) }
-          .filterNot(supportedDvStorage).toSet)
-    }
-
   /** The Delta protocol's client contract, enforced before any replay:
     * a reader must check the table's `protocol` action (reader version
     * + v3 reader features), refuse column-mapped tables it cannot
@@ -9275,56 +9097,18 @@ object MiniDelta {
     * returns WRONG data, not degraded data. Tables this engine writes
     * itself never trip the gate.
     *
-    * An add carrying the legacy `dv` field, in the tail or in the
-    * checkpoint, raises [[legacyDvRefusal]]; a checkpoint without a
-    * protocol row raises [[MalformedCheckpointException]].
-    *
-    * Scale/cost: pure driver metadata. The checkpoint side parses once
-    * per (table, checkpoint version) — checkpoints are immutable once
-    * named, so [[cpGates]] memoizes it. The tail side reads the
-    * O(since-last-checkpoint) commit JSONs through [[logActions]] once
-    * per NEW version (memoized in [[readableThrough]]); each commit is
-    * parsed once per process and later readers get it from the memo,
-    * so self-written tables pay one JSON parse per commit and zero
-    * Spark jobs. */
+    * A pure check on the [[tableState]] at `atMost`, so its failures
+    * are the fold's: an add carrying the legacy `dv` field, in the tail
+    * or in the checkpoint, raises [[legacyDvRefusal]]; a checkpoint
+    * without a protocol row raises [[MalformedCheckpointException]]; a
+    * protocol action missing a version raises
+    * [[MalformedCommitException]]. Pure driver metadata: a memo hit per
+    * version already resolved. */
   private def requireReadable(spark: SparkSession, table: String,
                               atMost: Long): Unit = {
-    val hi = math.min(latestVersion(spark, table), atMost)
-    if (hi < 0) return
-    val seen = readableThrough.get(table)
-    if (seen != null && seen.longValue() >= hi) return
-    val cp = latestCheckpoint(spark, table, hi)
-    var minReader = -1
-    var readerFeats: Seq[String] = Nil
-    var cmMode: Option[String] = None
-    val badDvTypes = scala.collection.mutable.Set.empty[String]
-    cp.foreach { v =>
-      val gate = cpGate(spark, table, v)
-      minReader = gate.minReader
-      readerFeats = gate.feats
-      cmMode = gate.cmMode
-      badDvTypes ++= gate.badDv
-    }
-    logActions(spark, table, cp.getOrElse(-1L) + 1, hi).foreach {
-      case (_, node) =>
-        jnode(node, "protocol").foreach { proto =>
-          minReader = jnode(proto, "minReaderVersion")
-            .map(_.asInt()).getOrElse(minReader)
-          readerFeats = jnode(proto, "readerFeatures").fold(Seq.empty[String])(
-            rf => (0 until rf.size()).map(rf.get(_).asText()))
-        }
-        jnode(node, "add").flatMap(jnode(_, "deletionVector")).foreach { dv =>
-          val st = jnode(dv, "storageType").map(_.asText())
-            .getOrElse("<absent>")
-          if (!supportedDvStorage(st)) badDvTypes += st
-        }
-        // null configuration = legacy "not stated" (keep the prior
-        // resolution); an explicit map replaces it
-        jnode(node, "metaData").flatMap(jnode(_, "configuration"))
-          .foreach { cfg =>
-            cmMode = jnode(cfg, "delta.columnMapping.mode").map(_.asText())
-          }
-    }
+    val st = stateAt(spark, table, atMost)
+    val ProtocolAction(minReader, _, readerFeats, _) = st.proto
+    val cmMode = st.config.get("delta.columnMapping.mode")
     if (minReader > 3)
       throw new UnsupportedTableFeatureException(
         s"$table requires minReaderVersion=$minReader; " +
@@ -9346,12 +9130,11 @@ object MiniDelta {
     // real DV descriptors in the known storage forms (u/i/p) are READ
     // (roaring decode, [[RoaringDv]]); an unknown storage form cannot
     // be decoded, and ignoring it would silently resurrect deleted rows
-    if (badDvTypes.nonEmpty)
+    if (st.unreadableDv.nonEmpty)
       throw new UnsupportedTableFeatureException(
         s"$table carries deletion vectors with unsupported storageType " +
-          s"${badDvTypes.toSeq.sorted.mkString("[", ", ", "]")} — this " +
+          s"${st.unreadableDv.toSeq.sorted.mkString("[", ", ", "]")} — this " +
           "engine decodes u/i/p roaring deletion vectors only")
-    readableThrough.put(table, hi)
   }
 
   /** The snapshot manifest's column shape — [[replaySnapshot]]'s output
@@ -9664,9 +9447,9 @@ object MiniDelta {
     val addT = raw.schema("add").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // this engine's older checkpoints carry a legacy `dv` column: the
-    // gate proves it all-null or refuses (a time-travel replay may
-    // fold a checkpoint older than the one [[requireReadable]] saw)
-    if (addT.fieldNames.contains("dv")) cpGate(spark, table, v)
+    // state fold proves it all-null or refuses (a time-travel replay
+    // may fold a checkpoint older than the one [[requireReadable]] saw)
+    if (addT.fieldNames.contains("dv")) tableState(spark, table, v)
     val stats =
       if (addT.fieldNames.contains("stats")) col("add.stats")
       else lit(null).cast("string")
@@ -9700,7 +9483,7 @@ object MiniDelta {
 
   // (table, checkpoint version, file length, file mtime) -> the
   // checkpoint's manifest rows, collected ONCE (checkpoint files are
-  // immutable once named — the cpGates memo discipline). The length +
+  // immutable once named). The length +
   // mtime key components close the out-of-band replacement hole: a
   // table directory wiped and re-created at the same path and version
   // by an external process fingerprints differently and misses the
@@ -9918,16 +9701,11 @@ object MiniDelta {
     * cache's documented staleness rule. */
   def invalidateSnapshot(table: String): Unit = {
     snapshotCache.invalidate(table)
-    readableThrough.remove(table)
-    writerProto.remove(table)
-    cpGates.keySet.removeIf(_._1 == table)
+    tableStates.keySet.removeIf(_._1 == table)
     cpRowsMemo.keySet.removeIf(_._1 == table)
     // memory hygiene only — correctness rides the (len, mtime) key
     commitNodesMemo.keySet.removeIf(_._1.startsWith(table))
-    cpMetaCache.keySet.removeIf(_._1 == table)
     cpCompleteMemo.keySet.removeIf(_._1 == table)
-    tableConfigMemo.keySet.removeIf(_._1 == table)
-    latestSchemaMemo.keySet.removeIf(_._1 == table)
     partitionColsMemo.keySet.removeIf(_._1 == table)
     ()
   }

@@ -364,10 +364,20 @@ class LogFileIndexSpec extends AnyFunSuite {
     def files(): Seq[Seq[String]] = filterSets.map(fs => rowsOf(
       MiniDelta.filesForFilters(MiniDelta.snapshotFiles(spark, t), fs)
         .select("path", "dv_path", "partitionValues")))
-    val snap = MiniDelta.snapshotFiles(spark, t)
-    assert(isLocal(snap) &&
-      isLocal(MiniDelta.filesForFilters(snap, Seq(Map("p" -> "x")))))
-    val (driver, driverFiles) = (answers(), files())
+    // the driver half pins both replay caps at their defaults, so it
+    // runs the driver arm whatever caps the session was started with
+    val (driver, driverFiles) =
+      withSessionConf("spark.graft.snapshot.localReplayMaxBytes",
+          (8L * 1024 * 1024).toString) {
+        withSessionConf("spark.graft.snapshot.localReplayMaxCpRows",
+            "100000") {
+          Seq(t, m).foreach(MiniDelta.invalidateSnapshot)
+          val snap = MiniDelta.snapshotFiles(spark, t)
+          assert(isLocal(snap) &&
+            isLocal(MiniDelta.filesForFilters(snap, Seq(Map("p" -> "x")))))
+          (answers(), files())
+        }
+      }
     val (dist, distFiles) =
       withSessionConf("spark.graft.snapshot.localReplayMaxBytes", "0") {
         assert(!isLocal(MiniDelta.snapshotFiles(spark, t)))
