@@ -66,6 +66,15 @@ object Verify {
     System.err.println(s"[log-scans] driver " +
       s"${graft.io.MiniDelta.driverLogScans.get()}, distributed " +
       s"${graft.io.MiniDelta.distributedLogScans.get()}")
+    // misses of the log memos (a tableStates miss is one state fold, a
+    // commitNodes miss one commit file opened on the driver)
+    val md = graft.io.MiniDelta
+    System.err.println(s"[memos] misses: tableStates " +
+      s"${md.tableStates.misses}, commitNodes ${md.commitNodesMemo.misses}, " +
+      s"cpRows ${md.cpRowsMemo.misses}, cpComplete " +
+      s"${md.cpCompleteMemo.misses}, partitionCols " +
+      s"${md.partitionColsMemo.misses}, idReadSessions " +
+      s"${md.idReadSessions.misses}")
     spark.stop()
   }
 }

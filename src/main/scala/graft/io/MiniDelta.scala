@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.acl.PartitionAcl
-import graft.util.DriverRows
+import graft.util.{DriverRows, TtlCache}
 
 /** A minimal Delta-style transaction log: versioned JSON commits of
   * add-file actions over a Hive-partitioned parquet layout, plus a
@@ -130,7 +130,7 @@ object MiniDelta {
 
   /** The table's auto-checkpoint cadence: `delta.checkpointInterval`
     * when set (Delta's property), else [[checkpointInterval]]. Resolved
-    * through the memoized tableConfig, so the commit funnel pays
+    * through tableConfig's memo, so the commit funnel pays
     * nothing. The pointer-gallop in [[latestCheckpoint]] keeps probing
     * at the DEFAULT stride — reading the config there would recurse
     * into checkpoint resolution, and a missed foreign checkpoint ahead
@@ -183,10 +183,17 @@ object MiniDelta {
     * non-ASCII never resolve. Falls back to the raw string for inputs
     * that are not valid URIs. */
   private def decodeFileUri(abs: String): String =
-    try new java.net.URI(abs).getPath catch { case _: Exception => abs }
+    try new java.net.URI(abs).getPath
+    catch { case _: java.net.URISyntaxException => abs }
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The one key every memo files `table` under: its Hadoop-qualified
+    * root, so each spelling of a table (`/t`, `file:/t`, `file:///t/`)
+    * reads and clears the same entries. */
+  private def rootOf(spark: SparkSession, table: String): String =
+    fs(spark, table).makeQualified(new Path(table)).toString
 
   /** Resolve an add/remove action's path against the table root. The
     * Delta protocol allows ABSOLUTE paths in add actions (how shallow
@@ -371,7 +378,7 @@ object MiniDelta {
     * the compaction conflict rule, so it lands under concurrent ingest
     * without losing races. Discovery is one aggregation over the
     * snapshot manifest (metadata-scale); a no-trigger append pays one
-    * memoized config lookup and nothing else. */
+    * config lookup (a memo hit) and nothing else. */
   private def maybeAutoCompact(spark: SparkSession, table: String,
       partitionBy: Seq[String]): Unit = {
     val cfg = tableConfig(spark, table)
@@ -1539,32 +1546,27 @@ object MiniDelta {
     }
   }
 
-  // memo: (table, committed version) -> its state. The log below a
-  // committed version is immutable, so an entry never goes stale for a
-  // live table; a table REPLACED at the same path clears through
-  // [[invalidateSnapshot]].
-  private val tableStates = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), TableState]()
-
-  /** [[tableState]] folds run (memo misses) — spec seam. */
-  private[graft] val tableStateResolves =
-    new java.util.concurrent.atomic.AtomicLong
+  // memo: (table root, committed version) -> its state; a miss is one
+  // fold. The log below a committed version is immutable, so an entry
+  // never goes stale for a live table; a table REPLACED at the same
+  // path clears through [[invalidateSnapshot]].
+  private[graft] val tableStates = new TtlCache[(String, Long), TableState](
+    4096, 0L)
 
   /** The [[TableState]] at committed `version`: the newest complete
     * checkpoint at or below `cpAtMost` ([[checkpointState]]) with the
     * JSON tail after it folded forward through [[logActions]], one pass
-    * on the driver. Memoized per (table, version) in [[tableStates]]:
+    * on the driver. Kept per (table root, version) in [[tableStates]]:
     * the state is one fact whichever checkpoint it was folded from, so
     * `cpAtMost` only bounds what a miss may read ([[writeCheckpoint]]
     * reads below the checkpoint it is replacing; -1 folds from v0).
     * A checkpoint state is itself the memo entry at the checkpoint's
-    * version, so a checkpoint is read at most once per process. Nothing
-    * is memoized when the fold throws. Empty before the first commit. */
+    * version, so a checkpoint is read once while its entry stays. Nothing
+    * is kept when the fold throws. Empty before the first commit. */
   private[graft] def tableState(spark: SparkSession, table: String,
       version: Long, cpAtMost: Long = Long.MaxValue): TableState =
     if (version < 0) TableState()
-    else memoized(tableStates, (table, version)) {
-      tableStateResolves.incrementAndGet()
+    else tableStates.getOrElseUpdate((rootOf(spark, table), version)) {
       val cp = if (cpAtMost < 0) None
                else latestCheckpoint(spark, table, math.min(cpAtMost, version))
       val base = cp.fold(TableState()) { c =>
@@ -2128,7 +2130,9 @@ object MiniDelta {
           val node = om.readTree(s).get("numRecords")
           if (node == null || !node.canConvertToLong) None
           else Some(node.asLong())
-        } catch { case _: Exception => None }
+        } catch {
+          case _: com.fasterxml.jackson.core.JsonProcessingException => None
+        }
       var hwm = rowIdHighWaterMark(spark, table, readVersion)
       def bodyIt: Iterator[String] = {
         val adds = localRowIterator(snapDF).map { r =>
@@ -4199,18 +4203,8 @@ object MiniDelta {
         }
       if (created) {
         // OUTSIDE the conflict try: a failed checkpoint job must not be
-        // misread as a commit conflict (the commit itself persisted) —
-        // and a partial checkpoint is never selected: a single file is
-        // renamed into place whole, and only complete part sets count
-        // ([[checkpointComplete]])
-        if ((v + 1) % checkpointEvery(spark, table) == 0)
-          try writeCheckpoint(spark, table, v) catch {
-            case e: Exception => // non-fatal: the commit persisted and a
-              // partial checkpoint is never selected; snapshots replay
-              // from the previous checkpoint
-              System.err.println(
-                s"[minidelta] checkpoint at v=$v failed (non-fatal): $e")
-          }
+        // misread as a commit conflict (the commit itself persisted)
+        checkpointAfterCommit(spark, table, v)
         return v
       }
     }
@@ -4518,14 +4512,24 @@ object MiniDelta {
       f.delete(tmp, false); ()
     }
     streamedRenders.incrementAndGet()
-    if ((version + 1) % checkpointEvery(spark, table) == 0)
-      try writeCheckpoint(spark, table, version) catch {
-        case e: Exception =>
-          System.err.println(
-            s"[minidelta] checkpoint at v=$version failed (non-fatal): $e")
-      }
+    checkpointAfterCommit(spark, table, version)
     version
   }
+
+  /** The auto-checkpoint after committing `v`, every
+    * [[checkpointEvery]]-th version. A failure is non-fatal: the commit
+    * persisted, and a partial checkpoint is never selected (a single
+    * file is renamed into place whole, and only complete part sets
+    * count, [[checkpointComplete]]), so snapshots replay from the
+    * previous checkpoint. */
+  private def checkpointAfterCommit(spark: SparkSession, table: String,
+                                    v: Long): Unit =
+    if ((v + 1) % checkpointEvery(spark, table) == 0)
+      try writeCheckpoint(spark, table, v) catch {
+        case e: Exception =>
+          System.err.println(
+            s"[minidelta] checkpoint at v=$v failed (non-fatal): $e")
+      }
 
   private def checkpointPath(table: String, version: Long): String =
     f"${logDir(table)}%s/$version%020d.checkpoint.parquet"
@@ -4675,21 +4679,24 @@ object MiniDelta {
     * drop live files from every subsequent snapshot. A classic
     * single-file checkpoint is an atomically-renamed FILE and a v2
     * manifest one UUID-named file, complete by construction. */
-  // memo: ONLY completeness=true is recorded (a complete checkpoint
-  // is immutable until log cleanup deletes it — cleanupLogs and
-  // invalidateSnapshot both clear the table's entries). The absent
-  // case is never cached: a checkpoint can appear at any moment.
-  private val cpCompleteMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), java.lang.Boolean]()
+  // memo: (table root, version) of checkpoints found COMPLETE (a
+  // complete checkpoint is immutable until log cleanup deletes it —
+  // cleanupLogs and invalidateSnapshot both clear the table's entries).
+  // The absent case is never cached: a checkpoint can appear at any
+  // moment.
+  private[graft] val cpCompleteMemo = new TtlCache[(String, Long), Unit](
+    4096, 0L)
 
   private def checkpointComplete(spark: SparkSession, table: String,
                                  v: Long): Boolean = {
-    if (cpCompleteMemo.containsKey((table, v))) return true
-    val ok = isFile(fs(spark, table), checkpointPath(table, v)) ||
-      checkpointMultiParts(spark, table, v).nonEmpty ||
-      checkpointV2Manifest(spark, table, v).isDefined
-    if (ok) cpCompleteMemo.put((table, v), java.lang.Boolean.TRUE)
-    ok
+    val key = (rootOf(spark, table), v)
+    cpCompleteMemo.get(key).isDefined || {
+      val ok = isFile(fs(spark, table), checkpointPath(table, v)) ||
+        checkpointMultiParts(spark, table, v).nonEmpty ||
+        checkpointV2Manifest(spark, table, v).isDefined
+      if (ok) cpCompleteMemo.getOrElseUpdate(key)(())
+      ok
+    }
   }
 
   /** Latest checkpoint at or below `atMost`, if any. Steady state reads
@@ -5296,7 +5303,7 @@ object MiniDelta {
       // a crash) must never leave the version checkpoint-less — after
       // log cleanup that would make the table unreplayable
       val manifestPart = renderTmp(manifestLines, 1, v2ManifestSchema)
-      cpCompleteMemo.remove((table, version))
+      cpCompleteMemo.invalidate((rootOf(spark, table), version))
       // a crashed prior attempt may have left a same-version manifest
       // under a DIFFERENT uuid; discovery picks the lexicographic head,
       // so stale ones go right before the new one lands (the only
@@ -5343,9 +5350,9 @@ object MiniDelta {
     // undiscoverable forever; runs for the single-file retry too, or
     // the orphans would linger as permanent _delta_log garbage. The
     // completeness memo clears FIRST: a crash between the deletes and
-    // the new renames must not leave a memoized claim for a
+    // the new renames must not leave a memo entry claiming a
     // checkpoint that no longer exists on disk.
-    cpCompleteMemo.remove((table, version))
+    cpCompleteMemo.invalidate((rootOf(spark, table), version))
     val stalePrefix = f"$version%020d.checkpoint."
     val dir0 = new Path(logDir(table))
     if (f.exists(dir0))
@@ -5557,7 +5564,7 @@ object MiniDelta {
     // DV-aware: masked rows never enter the rewrite, and the rewritten
     // adds carry no DV — OPTIMIZE is how deletion vectors MATERIALIZE
     val read = readFilesWithDv(spark, table,
-      LogFile.of(current.toIndexedSeq), latestSchema(spark, table))
+      LogFile.of(current.toIndexedSeq), stateAt(spark, table, Long.MaxValue))
     // clustered table (delta.clustering domain, late r13): a bare
     // OPTIMIZE honors the DECLARED layout — multi-column layouts
     // z-order, single-column layouts range-cluster — so `CALL
@@ -5675,8 +5682,7 @@ object MiniDelta {
     * exclude the predicate never decompress), projecting only the file
     * name; the collect is metadata-scale (file paths, not rows). */
   private def matchingFiles(spark: SparkSession, table: String,
-                            pairs: Seq[LogFile],
-                            declared: Option[org.apache.spark.sql.types.StructType],
+                            pairs: Seq[LogFile], state: TableState,
                             hit: DataFrame => DataFrame)
       : Seq[LogFile] = {
     if (pairs.isEmpty) return Nil
@@ -5685,11 +5691,11 @@ object MiniDelta {
       // row must neither mark its file touched nor survive the rewrite
       // (the old refuse-and-compact-first behavior is gone; the rewrite
       // read applies the mask, Delta's own CoW-over-DV rule)
-      val fnames = hit(withRowIdentity(spark, table, pairs, declared))
+      val fnames = hit(withRowIdentity(spark, table, pairs, state.schema))
         .select("__fname").distinct().collect().map(_.getString(0)).toSet
       pairs.filter(p => fnames.contains(dvKeyOf(p.path)))
     } else {
-      val base = readFilesAs(spark, table, pairs, declared)
+      val base = readFilesAs(spark, table, pairs, state)
       require(!base.columns.contains("__file"),
         "table has a '__file' column, which collides with the " +
           "copy-on-write file-discovery temp column")
@@ -5980,8 +5986,7 @@ object MiniDelta {
     * The caller re-runs against the fresh snapshot. */
   private def copyOnWrite(spark: SparkSession, table: String,
                           readVersion: Long,
-                          touched: Seq[LogFile],
-                          declared: Option[org.apache.spark.sql.types.StructType],
+                          touched: Seq[LogFile], state: TableState,
                           rewrite: DataFrame => DataFrame,
                           partitionBy: Seq[String], operation: String,
                           statsCols: Seq[String],
@@ -6008,7 +6013,8 @@ object MiniDelta {
     // the rewrite reads UNDER the files' deletion vectors: masked rows
     // are already deleted and must not be resurrected into the
     // rewritten files (the new adds carry no DV — CoW materializes it)
-    val newData0 = rewrite(readFilesWithDv(spark, table, touched, declared))
+    val declared = state.schema
+    val newData0 = rewrite(readFilesWithDv(spark, table, touched, state))
     // Delta enforces invariants on EVERY write: an UPDATE/MERGE whose
     // new values violate a CHECK constraint must fail before commit.
     // The enforcement aggregate + the write would otherwise evaluate
@@ -6058,7 +6064,7 @@ object MiniDelta {
     if (readOnly) throw new ReadOnlyTableException(table)
     requireMappingWritable(latestSchema(spark, table), table, spark)
     val readVersion = latestVersion(spark, table)
-    val declared = latestSchema(spark, table, readVersion)
+    val state = stateAt(spark, table, readVersion)
     // DV-bearing files only (the op's blast radius by definition);
     // counted in dmlManifestRows like every other DML discovery so the
     // driver-memory audit stays uniform
@@ -6070,7 +6076,7 @@ object MiniDelta {
     // same resolution posture as OPTIMIZE: a physical rewrite never
     // depends on concurrently-appended files, so only removes of its
     // own inputs (and metadata/protocol changes) conflict
-    copyOnWrite(spark, table, readVersion, touched, declared,
+    copyOnWrite(spark, table, readVersion, touched, state,
       identity, partitionBy, "REORG", statsCols, dataChange = false,
       resolveConflicts = true, readCond = Some(lit(false)))
   }
@@ -6418,22 +6424,23 @@ object MiniDelta {
     val cfg0 = tableConfig(spark, table, readVersion)
     if (cfg0.get("delta.enableDeletionVectors").contains("true"))
       return deleteWithDv(spark, table, predicate, readVersion, partitionBy)
-    val declared = latestSchema(spark, table)
+    val state = stateAt(spark, table, Long.MaxValue)
+    val declared = state.schema
     val snap = collected(dmlCandidates(
         snapshotFilesAt(spark, table, readVersion), predicate, partitionBy,
         declared)
       .select(LogFile.columns: _*).collect().toIndexedSeq)
-    val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
+    val touched = matchingFiles(spark, table, LogFile.of(snap), state,
       _.where(predicate))
     if (touched.isEmpty) return readVersion
     // CDF: the commit's feed = exactly the deleted rows (the touched
     // files' survivors are NOT changes — the reason cdc files exist)
     val cdc =
       if (!cfg0.get("delta.enableChangeDataFeed").contains("true")) None
-      else Some(readFilesWithDv(spark, table, touched, declared)
+      else Some(readFilesWithDv(spark, table, touched, state)
         .where(coalesce(predicate, lit(false)))
         .withColumn("_change_type", lit("delete")))
-    copyOnWrite(spark, table, readVersion, touched, declared,
+    copyOnWrite(spark, table, readVersion, touched, state,
       _.where(not(coalesce(predicate, lit(false)))),
       partitionBy, "DELETE", statsCols, cdc = cdc,
       resolveConflicts = true,
@@ -6709,7 +6716,8 @@ object MiniDelta {
     if (readOnly) throw new ReadOnlyTableException(table)
     if (!tableExists(spark, table)) return -1L // nothing to update
     val readVersion = latestVersion(spark, table)
-    val declared = latestSchema(spark, table)
+    val state = stateAt(spark, table, Long.MaxValue)
+    val declared = state.schema
     requireMappingWritable(declared, table, spark)
     // an unknown assignment target is an ERROR (Delta raises an analysis
     // error) — silently dropping it would turn the update into a no-op
@@ -6741,7 +6749,7 @@ object MiniDelta {
         snapshotFilesAt(spark, table, readVersion), predicate, partitionBy,
         declared)
       .select(LogFile.columns: _*).collect().toIndexedSeq)
-    val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
+    val touched = matchingFiles(spark, table, LogFile.of(snap), state,
       _.where(predicate))
     if (touched.isEmpty) return readVersion
     // CDF: pre/post images of exactly the matched rows (the SET applied
@@ -6750,7 +6758,7 @@ object MiniDelta {
       if (!tableConfig(spark, table, readVersion)
           .get("delta.enableChangeDataFeed").contains("true")) None
       else {
-        val matched = readFilesWithDv(spark, table, touched, declared)
+        val matched = readFilesWithDv(spark, table, touched, state)
           .where(coalesce(predicate, lit(false)))
         val post = recomputeGenerated(
           matched.select(matched.columns.map(c =>
@@ -6759,7 +6767,7 @@ object MiniDelta {
           .unionByName(
             post.withColumn("_change_type", lit("update_postimage"))))
       }
-    copyOnWrite(spark, table, readVersion, touched, declared,
+    copyOnWrite(spark, table, readVersion, touched, state,
       // ONE projection: every SET expression and the predicate resolve
       // against the PRE-update row (SQL UPDATE semantics) — a sequential
       // withColumn chain would let later SETs see earlier SETs' results
@@ -6823,7 +6831,8 @@ object MiniDelta {
     if (!tableExists(spark, table))
       return append(spark, source, table, partitionBy, readOnly, statsCols)
     val readVersion = latestVersion(spark, table)
-    val declared = latestSchema(spark, table)
+    val state = stateAt(spark, table, Long.MaxValue)
+    val declared = state.schema
     requireMappingWritable(declared, table, spark)
     // schema evolution, same rule as append: source-only columns are
     // APPENDED to the declared schema (committed as a metaData action);
@@ -6909,7 +6918,7 @@ object MiniDelta {
     val (source2, idMetaLines, idTouched) = idFields.headOption match {
       case None => (source1, Seq.empty[String], None)
       case Some(f) => mergeIdentityResolve(spark, table, source1, f,
-        keys, partitionBy, readVersion, declared, snapDF, srcKeys,
+        keys, partitionBy, readVersion, state, snapDF, srcKeys,
         metaSchema = merged,
         metaCfg = evolvedCfg.getOrElse(
           tableConfig(spark, table, readVersion)),
@@ -6931,7 +6940,7 @@ object MiniDelta {
     // fused candidate read (same semi join, same DV-masked view) —
     // re-running matchingFiles would re-read every candidate file
     val touched = idTouched.getOrElse(
-      matchingFiles(spark, table, LogFile.of(snap), declared,
+      matchingFiles(spark, table, LogFile.of(snap), state,
         _.join(srcKeys, keys, "left_semi")))
     // CDF: the upsert's feed = matched target rows (update_preimage),
     // their source replacements (update_postimage), and the unmatched
@@ -6942,7 +6951,7 @@ object MiniDelta {
           .get("delta.enableChangeDataFeed").contains("true")) None
       else {
         val srcAligned = align(source2)
-        val tgt = readFilesWithDv(spark, table, touched, declared)
+        val tgt = readFilesWithDv(spark, table, touched, state)
         if (tgt.columns.isEmpty)
           Some(srcAligned.withColumn("_change_type", lit("insert")))
         else {
@@ -6964,7 +6973,7 @@ object MiniDelta {
     // their commit carries a high-water mark read at readVersion, and
     // a winner could have assigned overlapping chain values without
     // tripping any of the resolver's screens.
-    copyOnWrite(spark, table, readVersion, touched, declared,
+    copyOnWrite(spark, table, readVersion, touched, state,
       df => if (df.columns.isEmpty) align(source2) // schema-less empty
             else align(df.join(srcKeys, keys, "left_anti"))
               .unionByName(align(source2)),
@@ -7168,7 +7177,8 @@ object MiniDelta {
     require(keys.nonEmpty, "merge requires at least one key column")
     if (!tableExists(spark, table)) return -1L // nothing to delete from
     val readVersion = latestVersion(spark, table)
-    val declared = latestSchema(spark, table, readVersion)
+    val state = stateAt(spark, table, readVersion)
+    val declared = state.schema
     requireMappingWritable(declared, table, spark)
     val condC = cond.getOrElse(lit(true))
     // semi/anti joins and min/max only: duplicates change no answer
@@ -7221,14 +7231,14 @@ object MiniDelta {
     } else {
       val snap = collected(
         snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
-      val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
+      val touched = matchingFiles(spark, table, LogFile.of(snap), state,
         hit)
       if (touched.isEmpty) return readVersion
       val cdc =
         if (!cfg.get("delta.enableChangeDataFeed").contains("true")) None
-        else Some(hit(readFilesWithDv(spark, table, touched, declared))
+        else Some(hit(readFilesWithDv(spark, table, touched, state))
           .withColumn("_change_type", lit("delete")))
-      copyOnWrite(spark, table, readVersion, touched, declared,
+      copyOnWrite(spark, table, readVersion, touched, state,
         // survivors = rows on the other side of the join ∪ doomed-side
         // rows failing the condition (null cond = row survives, SQL
         // delete semantics)
@@ -7263,8 +7273,7 @@ object MiniDelta {
   private def mergeIdentityResolve(spark: SparkSession, table: String,
       source: DataFrame, f: org.apache.spark.sql.types.StructField,
       keys: Seq[String], partitionBy: Seq[String], readVersion: Long,
-      declared: Option[org.apache.spark.sql.types.StructType],
-      snapDF: DataFrame, srcKeys: DataFrame,
+      state: TableState, snapDF: DataFrame, srcKeys: DataFrame,
       // the schema/config the commit's metaData line must declare —
       // the EVOLVED schema when the merge grows the table (one line
       // carries both the evolution and the advanced mark), the
@@ -7315,8 +7324,9 @@ object MiniDelta {
     // Column-mapped / id-resolved tables keep the verbatim
     // readFilesWithDv shape ([[withRowIdentity]] reads the LOGICAL
     // schema) and let the caller run its own discovery.
+    val declared = state.schema
     val fused = declared.isDefined && !declared.exists(isColumnMapped) &&
-      !idReadMode(spark, table, declared)
+      !idReadMode(table, state)
     val (tgtIds, touched): (DataFrame,
         Option[Seq[LogFile]]) =
       if (pairs.isEmpty) (emptyIds, Some(Nil))
@@ -7330,7 +7340,7 @@ object MiniDelta {
           .agg(min(col(s"`${f.name}`")).cast(LongType).as("__tgt_id"))
         (ids, Some(pairs.filter(p => fnames.contains(dvKeyOf(p.path)))))
       } else {
-        val tgt0 = readFilesWithDv(spark, table, pairs, declared)
+        val tgt0 = readFilesWithDv(spark, table, pairs, state)
         if (tgt0.columns.isEmpty) // empty table: every row inserts
           (emptyIds, None)
         else (tgt0.join(srcKeys, keys, "left_semi")
@@ -7544,7 +7554,8 @@ object MiniDelta {
         table, partitionBy, readOnly, statsCols)
     }
     val readVersion = latestVersion(spark, table)
-    val declared = latestSchema(spark, table, readVersion)
+    val state = stateAt(spark, table, readVersion)
+    val declared = state.schema
     requireMappingWritable(declared, table, spark)
     val decl = declared.getOrElse(throw new IllegalArgumentException(
       s"general MERGE needs a declared schema; $table has none"))
@@ -7902,7 +7913,7 @@ object MiniDelta {
       // commit
       val snap = collected(
         snapDF.select(LogFile.columns: _*).collect().toIndexedSeq)
-      val touched = matchingFiles(spark, table, LogFile.of(snap), declared,
+      val touched = matchingFiles(spark, table, LogFile.of(snap), state,
         hit)
       val (insertsOpt, idMeta) =
         if (notMatched.isEmpty) (None, Seq.empty[String])
@@ -7919,7 +7930,7 @@ object MiniDelta {
           val unmatchedSrc =
             if (candPairs.isEmpty) source
             else source.join(
-              readFilesWithDv(spark, table, candPairs, declared)
+              readFilesWithDv(spark, table, candPairs, state)
                 .select(keys.map(col): _*).distinct(),
               keys, "left_anti")
           val (ins, ml) = resolveMergeInsertsIdentity(spark, table,
@@ -7937,7 +7948,7 @@ object MiniDelta {
       val cdc =
         if (!cdfOn) None
         else {
-          val jt = joined(readFilesWithDv(spark, table, touched, declared))
+          val jt = joined(readFilesWithDv(spark, table, touched, state))
           val upd =
             if (jt.columns.isEmpty) None else Some(jt.where(updateApplied))
           val parts =
@@ -7951,7 +7962,7 @@ object MiniDelta {
             insertsOpt.map(_.withColumn("_change_type", lit("insert")))
           parts.reduceOption(_.unionByName(_))
         }
-      copyOnWrite(spark, table, readVersion, touched, declared,
+      copyOnWrite(spark, table, readVersion, touched, state,
         df => {
           val base =
             if (df.columns.isEmpty) None // touched empty: inserts only
@@ -8406,8 +8417,9 @@ object MiniDelta {
         case _ => Seq.empty
       }
     }
-    // deleted checkpoints must not linger as memoized-complete
-    cpCompleteMemo.keySet.removeIf(_._1 == table)
+    // deleted checkpoints must not linger in the completeness memo
+    val root = rootOf(spark, table)
+    cpCompleteMemo.invalidateIf(_._1 == root)
     deadJson ++ deadCp
   }
 
@@ -8479,7 +8491,8 @@ object MiniDelta {
       }
       if (!exists)
         return append(spark, df, table, partitionBy, readOnly, statsCols)
-      val declared = latestSchema(spark, table, readVersion)
+      val state = stateAt(spark, table, readVersion)
+      val declared = state.schema
       val newSchema0 =
         if (overwriteSchema) df.schema
         else mergedSchema(declared, df.schema)
@@ -8636,7 +8649,7 @@ object MiniDelta {
             snapshotFilesAt(spark, table, readVersion), c, partitionBy,
             declared).select(LogFile.columns: _*).collect().toIndexedSeq)
           val touched = matchingFiles(spark, table, LogFile.of(snapRW),
-            declared, _.where(coalesce(c, lit(false))))
+            state, _.where(coalesce(c, lit(false))))
           def alignNew(d2: DataFrame): DataFrame =
             d2.select(newSchema.fields.map { f =>
               d2.columns.find(_.equalsIgnoreCase(f.name)) match {
@@ -8650,7 +8663,7 @@ object MiniDelta {
             if (!cfg.get("delta.enableChangeDataFeed").contains("true"))
               None
             else {
-              val doomed = readFilesWithDv(spark, table, touched, declared)
+              val doomed = readFilesWithDv(spark, table, touched, state)
               val ins = alignNew(df1)
                 .withColumn("_change_type", lit("insert"))
               if (doomed.columns.isEmpty) Some(ins)
@@ -8658,7 +8671,7 @@ object MiniDelta {
                 .withColumn("_change_type", lit("delete"))
                 .unionByName(ins))
             }
-          copyOnWrite(spark, table, readVersion, touched, declared,
+          copyOnWrite(spark, table, readVersion, touched, state,
             rw => if (rw.columns.isEmpty) alignNew(df1)
                   else alignNew(rw.where(!coalesce(c, lit(false))))
                     .unionByName(alignNew(df1)),
@@ -8916,13 +8929,13 @@ object MiniDelta {
       partitionSegments(_).map(_.split("=", 2)(0)).toSeq
     }
 
-  // memo: (table, version) -> partition layout — the layout is
+  // memo: (table root, version) -> partition layout — the layout is
   // version-deterministic, and the one-file path probe below is a
   // Spark job (limit(1).collect()) that used to run once or more per
   // SQL statement; cleared via [[invalidateSnapshot]] like its
   // schema/config siblings (r18)
-  private val partitionColsMemo = new java.util.concurrent
-    .ConcurrentHashMap[(String, Long), Seq[String]]()
+  private[graft] val partitionColsMemo =
+    new TtlCache[(String, Long), Seq[String]](4096, 0L)
 
   /** Declared partition layout, path-derived like every other layout
     * probe ([[partitionColsOf]]): one file path of the current snapshot
@@ -8937,7 +8950,7 @@ object MiniDelta {
     else {
       val eff = latestVersion(spark, table)
       if (eff < 0) Seq.empty
-      else memoized(partitionColsMemo, (table, eff)) {
+      else partitionColsMemo.getOrElseUpdate((rootOf(spark, table), eff)) {
         val fromFiles = partitionColsOf(snapshotFilesCached(spark, table)
           .select("path").limit(1).collect().map(_.getString(0)))
         if (fromFiles.nonEmpty) fromFiles
@@ -9121,12 +9134,10 @@ object MiniDelta {
             bad.sorted.mkString(", "))
     }
     // `name` mode reads via logical relabeling ([[readFilesAs]]); `id`
-    // mode via Spark's native parquet field-id resolution (the resolved
-    // mode rides to readFilesAs through [[cmModes]]); anything else is
-    // refused by name
+    // mode via Spark's native parquet field-id resolution
+    // ([[idReadMode]]); anything else is refused by name
     cmMode.filter(m => m != "none" && m != "name" && m != "id").foreach(m =>
       throw new ColumnMappingUnsupportedException(table, m))
-    cmModes.put(table, cmMode.getOrElse("none"))
     // real DV descriptors in the known storage forms (u/i/p) are READ
     // (roaring decode, [[RoaringDv]]); an unknown storage form cannot
     // be decoded, and ignoring it would silently resurrect deleted rows
@@ -9163,42 +9174,27 @@ object MiniDelta {
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .getOrElse(8L * 1024 * 1024)
 
-  // (commit path, file length, file mtime) -> parsed action nodes.
+  // (table root, version, file length, file mtime) -> parsed action
+  // nodes; a miss is one open + parse of the commit file on the driver.
   // Commit JSONs are immutable once named (Delta's naming contract), so
   // hot pollers (versionAtTimestamp, commitTimestamps, the feed-guard
   // loop) and the per-commit snapshot replays stop paying an open +
   // Jackson parse per immutable file per call (one getFileStatus per
   // file stays — it both sizes the fold threshold and fingerprints the
-  // key). The (len, mtime) key components are load-bearing: SQL-created
-  // tables key every engine call under Spark's QUALIFIED location
-  // ("file:/tmp/...") while gates wipe and invalidate the PLAIN path,
-  // so a table-string-keyed clear can miss — a wiped-and-recreated
-  // commit then fingerprints differently instead of serving the old
-  // run's file names. The global bound keeps a many-table session from
-  // accumulating without limit: past it, each miss evicts one entry,
-  // so the hot tails stay resident.
-  private val commitNodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long),
-    IndexedSeq[com.fasterxml.jackson.databind.JsonNode]]()
+  // key). The (len, mtime) key components detect a commit rewritten out
+  // of band (a table wiped and re-created without an invalidation):
+  // it fingerprints differently instead of serving the old run's
+  // actions. The LRU bound keeps the hot tails of a many-table session
+  // resident.
+  private[graft] val commitNodesMemo = new TtlCache[(String, Long, Long, Long),
+    IndexedSeq[com.fasterxml.jackson.databind.JsonNode]](8192, 0L)
 
-  /** Diagnostic: commit JSON files opened and parsed on the driver
-    * (misses of [[commitNodes]], the one driver reader of commit
-    * files). Specs assert each new commit is opened once per process,
-    * however many readers consult it. */
-  private[graft] val commitFileOpens =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** The parsed action nodes of one commit file, memoized per
-    * (path, len, mtime). */
-  private def commitNodes(f: org.apache.hadoop.fs.FileSystem,
-      p: String, len: Long, mtime: Long)
+  /** The parsed action nodes of commit `v` (file `p`) of the table at
+    * `root`, kept per (root, v, len, mtime) in [[commitNodesMemo]]. */
+  private def commitNodes(f: org.apache.hadoop.fs.FileSystem, root: String,
+      v: Long, p: String, len: Long, mtime: Long)
       : IndexedSeq[com.fasterxml.jackson.databind.JsonNode] =
-    memoized(commitNodesMemo, (p, len, mtime)) {
-      commitFileOpens.incrementAndGet()
-      if (commitNodesMemo.size > 8192) {
-        val it = commitNodesMemo.keySet.iterator
-        if (it.hasNext) { it.next(); it.remove() }
-      }
+    commitNodesMemo.getOrElseUpdate((root, v, len, mtime)) {
       val in = f.open(new Path(p))
       try commitLines(in,
         new com.fasterxml.jackson.databind.ObjectMapper(), p).toIndexedSeq
@@ -9218,23 +9214,6 @@ object MiniDelta {
       in, java.nio.charset.StandardCharsets.UTF_8))
     Iterator.continually(lines.readLine()).takeWhile(_ != null)
       .filter(_.nonEmpty).map(parseAction(om, p, _))
-  }
-
-  /** `memo(key)`, computed and published on a miss OUTSIDE the map's
-    * bin lock: `computeIfAbsent` holds the lock for the whole
-    * computation (often a Spark job or file IO) and so serializes every
-    * concurrent caller hashing to the same bin. The values memoized
-    * this way are facts of immutable files, so a racing duplicate
-    * computation is the cheaper cost; the first published value wins,
-    * and a computation that throws publishes nothing. */
-  private def memoized[K, V <: AnyRef](
-      memo: java.util.concurrent.ConcurrentHashMap[K, V], key: K)
-      (compute: => V): V = {
-    val hit = memo.get(key)
-    if (hit != null) return hit
-    val v = compute
-    val prev = memo.putIfAbsent(key, v)
-    if (prev != null) prev else v
   }
 
   /** One commit line as a JSON action object, or
@@ -9272,11 +9251,11 @@ object MiniDelta {
 
   /** `(version, action)` pairs of sized commit files, in the order
     * given; `newestFirst` also reverses each commit's lines. */
-  private def actionsIn(f: org.apache.hadoop.fs.FileSystem,
+  private def actionsIn(f: org.apache.hadoop.fs.FileSystem, root: String,
       sized: Iterator[(Long, String, Long, Long)], newestFirst: Boolean)
       : Iterator[(Long, com.fasterxml.jackson.databind.JsonNode)] =
     sized.flatMap { case (v, p, len, mtime) =>
-      val nodes = commitNodes(f, p, len, mtime)
+      val nodes = commitNodes(f, root, v, p, len, mtime)
       (if (newestFirst) nodes.reverseIterator else nodes.iterator)
         .map(v -> _)
     }
@@ -9297,7 +9276,7 @@ object MiniDelta {
       : Iterator[(Long, com.fasterxml.jackson.databind.JsonNode)] = {
     val f = fs(spark, table)
     val vps = logJsonVersions(spark, table, fromInclusive, toInclusive)
-    actionsIn(f, commitStats(f,
+    actionsIn(f, rootOf(spark, table), commitStats(f,
       if (newestFirst) vps.reverseIterator else vps.iterator), newestFirst)
   }
 
@@ -9315,7 +9294,7 @@ object MiniDelta {
     * one of two arms:
     *  - the driver (Left, no Spark action) when `driverOk` and the
     *    window's bytes fit under [[localReplayMaxBytes]], over the
-    *    memoized [[commitNodes]];
+    *    [[commitNodes]] memo;
     *  - executors (Right) otherwise ([[executorScan]]): each commit
     *    streamed line by line through the same [[commitLines]], so a
     *    torn line or a legacy `dv` add raises by name on either arm,
@@ -9330,8 +9309,9 @@ object MiniDelta {
     val sized = commitStats(f, vps.iterator).toIndexedSeq
     if (driverOk && sized.map(_._3).sum <= localReplayMaxBytes(spark)) {
       driverLogScans.incrementAndGet()
+      val root = rootOf(spark, table)
       Left(sized.flatMap { case (v, p, len, mtime) =>
-        project(v, commitNodes(f, p, len, mtime).iterator) })
+        project(v, commitNodes(f, root, v, p, len, mtime).iterator) })
     } else {
       Right(executorScan(spark, sized.map { case (v, p, _, _) => (v, p) })(
         project))
@@ -9481,22 +9461,23 @@ object MiniDelta {
       lit(v).as("version"))
   }
 
-  // (table, checkpoint version, file length, file mtime) -> the
+  // (table root, checkpoint version, file length, file mtime) -> the
   // checkpoint's manifest rows, collected ONCE (checkpoint files are
   // immutable once named). The length +
   // mtime key components close the out-of-band replacement hole: a
   // table directory wiped and re-created at the same path and version
   // by an external process fingerprints differently and misses the
   // memo. None = over the row cap; the distributed replay stays in
-  // charge for that checkpoint.
-  private val cpRowsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Long), Option[Seq[org.apache.spark.sql.Row]]]()
+  // charge for that checkpoint. Each entry may hold up to
+  // [[localReplayMaxCpRows]] rows, hence the small bound.
+  private[graft] val cpRowsMemo = new TtlCache[(String, Long, Long, Long),
+    Option[Seq[org.apache.spark.sql.Row]]](64, 0L)
 
   /** (total length, newest mtime) of the file(s) backing the checkpoint
     * at `v` — the invalidation fingerprint for [[cpRowsMemo]]. Single
     * classic file, complete multi-part set, or v2 manifest; (0, 0) when
-    * nothing is found (the memoized replay result is then keyed purely
-    * on (table, version), the pre-hardening behavior). */
+    * nothing is found (the [[cpRowsMemo]] entry is then keyed purely
+    * on (table root, version), the pre-hardening behavior). */
   private def cpFingerprint(spark: SparkSession, table: String,
       v: Long): (Long, Long) = {
     val f = fs(spark, table)
@@ -9525,13 +9506,13 @@ object MiniDelta {
       .getOrElse(100000)
 
   /** The checkpoint base as driver rows (manifest shape + version),
-    * memoized per immutable (table, version, length, mtime); None when
-    * the checkpoint is too big for the driver fold. The collect runs
-    * outside the map's bin lock ([[memoized]]). */
+    * kept per immutable (table root, version, length, mtime); None
+    * when the checkpoint is too big for the driver fold. The collect
+    * runs outside the memo's lock. */
   private def cpBaseRows(spark: SparkSession, table: String,
       v: Long): Option[Seq[org.apache.spark.sql.Row]] = {
     val (len, mtime) = cpFingerprint(spark, table, v)
-    memoized(cpRowsMemo, (table, v, len, mtime)) {
+    cpRowsMemo.getOrElseUpdate((rootOf(spark, table), v, len, mtime)) {
       val cap = localReplayMaxCpRows(spark)
       val rows = checkpointBaseDF(spark, table, v).limit(cap + 1).collect()
       if (rows.length > cap) None else Some(rows.toIndexedSeq)
@@ -9675,7 +9656,7 @@ object MiniDelta {
     * pruning queries replay the log once per 120 s, not per query. */
   def snapshotFilesCached(spark: SparkSession, table: String): DataFrame = {
     val cache = snapshotCache
-    val df = cache.getOrElseUpdate(table) {
+    val df = cache.getOrElseUpdate(rootOf(spark, table)) {
       val snap = snapshotFiles(spark, table)
       // a manifest of driver rows ([[replaySnapshot]]'s driver arm)
       // stays one: persisting it would wrap it in an InMemoryRelation,
@@ -9691,23 +9672,24 @@ object MiniDelta {
     df
   }
 
-  /** Drop every memo held for `table`: the TTL'd snapshot AND the
-    * permanent protocol-gate / checkpoint-metaData memos. The
-    * permanent memos are safe for append-only logs (commit files and
-    * named checkpoints are immutable), but a table REPLACED at the
-    * same path (deleted and re-created by an external process) would
-    * otherwise be served the old table's gate verdict and schema —
-    * call this after any out-of-band replacement, like the snapshot
-    * cache's documented staleness rule. */
+  /** Drop every memo held for `table`, under any spelling of its root
+    * ([[rootOf]]): the TTL'd snapshot AND the per-version memos (table
+    * states, parsed commits, checkpoint rows and completeness,
+    * partition layouts). The per-version memos are safe for
+    * append-only logs (commit files and named checkpoints are
+    * immutable), but a table REPLACED at the same path (deleted and
+    * re-created by an external process) would otherwise be served the
+    * old table's gate verdict and schema — call this after any
+    * out-of-band replacement, like the snapshot cache's documented
+    * staleness rule. */
   def invalidateSnapshot(table: String): Unit = {
-    snapshotCache.invalidate(table)
-    tableStates.keySet.removeIf(_._1 == table)
-    cpRowsMemo.keySet.removeIf(_._1 == table)
-    // memory hygiene only — correctness rides the (len, mtime) key
-    commitNodesMemo.keySet.removeIf(_._1.startsWith(table))
-    cpCompleteMemo.keySet.removeIf(_._1 == table)
-    partitionColsMemo.keySet.removeIf(_._1 == table)
-    ()
+    val root = rootOf(SparkSession.active, table)
+    snapshotCache.invalidate(root)
+    tableStates.invalidateIf(_._1 == root)
+    cpRowsMemo.invalidateIf(_._1 == root)
+    commitNodesMemo.invalidateIf(_._1 == root)
+    cpCompleteMemo.invalidateIf(_._1 == root)
+    partitionColsMemo.invalidateIf(_._1 == root)
   }
 
   /** Data skipping on per-file min/max stats: keep only files whose
@@ -9765,12 +9747,6 @@ object MiniDelta {
     * id-mode contract, served by the built-in vectorized reader. */
   private val ParquetFieldIdKey = "parquet.field.id"
 
-  /** Resolved `delta.columnMapping.mode` per table root, recorded by the
-    * read gate ([[requireReadable]]) so [[readFilesAs]] picks name- vs
-    * id-resolution without re-reading config. Absent = unmapped. */
-  private val cmModes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** First (dotted) field path at ANY nesting depth that lacks a
     * `delta.columnMapping.id` — id mode must refuse it by name: a
     * nested struct field without an id would silently fall back to
@@ -9791,20 +9767,17 @@ object MiniDelta {
     }
   }
 
-  /** id-mode read posture for `table`: true when the read gate resolved
-    * `delta.columnMapping.mode=id`. Throws on a malformed id mapping
+  /** id-mode read posture of a read resolved at `state`: true when its
+    * `delta.columnMapping.mode` is `id`, the same state the read's
+    * declared schema comes from. Throws on a malformed id mapping
     * (any TOP-LEVEL OR NESTED field lacking its id — name matching
-    * could silently mis-resolve, so refuse by name). The mode is
-    * resolved at the gate's latest-checked version; sound for compliant
-    * tables because id mode can only be set at table CREATION
-    * (delta-spark enforces this), so every historical schema of an id
-    * table carries ids too. Field-id resolution itself is enabled
-    * PER-READ by [[readFilesAs]] (a DataFrameReader option), never
-    * session-wide — see [[FieldIdReadKey]]. */
-  private def idReadMode(spark: SparkSession, table: String,
-      declared: Option[org.apache.spark.sql.types.StructType]): Boolean = {
-    val im = cmModes.getOrDefault(table, "none") == "id"
-    if (im) declared match {
+    * could silently mis-resolve, so refuse by name). Field-id
+    * resolution itself is enabled PER-READ by [[readFilesAs]] (a
+    * DataFrameReader option), never session-wide — see
+    * [[FieldIdReadKey]]. */
+  private def idReadMode(table: String, state: TableState): Boolean = {
+    val im = state.config.get("delta.columnMapping.mode").contains("id")
+    if (im) state.schema match {
       case None => throw new ColumnMappingUnsupportedException(table,
         "id (no declared schema to carry delta.columnMapping.id)")
       case Some(st) => missingIdField(st).foreach(fieldPath =>
@@ -9832,14 +9805,8 @@ object MiniDelta {
   // would be a session leak); 64 live caller sessions per JVM is far
   // past any realistic concurrent-session count, and an evicted entry
   // just re-clones on next use.
-  private val idReadSessionCap = 64
-  private val idReadSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, SparkSession](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, SparkSession]): Boolean =
-          size() > idReadSessionCap
-      })
+  private[graft] val idReadSessions = new TtlCache[String, SparkSession](
+    64, 0L)
 
   /** The session id-mode scans read through: a CLONE of the caller's
     * session (same SparkContext, shared cache, a copy of the caller's
@@ -9847,18 +9814,17 @@ object MiniDelta {
     * scan's HadoopFsRelation captures this session, so the flag rides
     * exactly the id-mode relations — frames remain freely usable
     * (joins, unions) from the caller's session, whose own conf stays
-    * untouched. One clone per caller session, created lazily; each USE
+    * untouched. One clone per caller session, created lazily (racing
+    * first uses may both clone; one is kept); each USE
     * re-syncs the clone's conf and function registry from the caller,
     * so session changes made after the clone (timeZone, ANSI mode, new
     * UDFs) apply to id-mode frames exactly as to every other table. */
   private def idReadSession(spark: SparkSession): SparkSession = {
-    val c = idReadSessions.synchronized {
-      idReadSessions.computeIfAbsent(
-        org.apache.spark.sql.graft.SessionBridge.sessionUUID(spark), _ => {
-        val s = org.apache.spark.sql.graft.SessionBridge.cloneSession(spark)
-        s.conf.set(FieldIdReadKey, "true")
-        s
-      })
+    val c = idReadSessions.getOrElseUpdate(
+        org.apache.spark.sql.graft.SessionBridge.sessionUUID(spark)) {
+      val s = org.apache.spark.sql.graft.SessionBridge.cloneSession(spark)
+      s.conf.set(FieldIdReadKey, "true")
+      s
     }
     org.apache.spark.sql.graft.SessionBridge.syncSessionState(
       spark, c, except = Set(FieldIdReadKey))
@@ -9894,11 +9860,9 @@ object MiniDelta {
     * servers call this when a session closes; otherwise the LRU bound
     * caps retention). Safe no-op when no clone exists. */
   def releaseIdReadSession(spark: SparkSession): Unit = {
-    idReadSessions.remove(
-      org.apache.spark.sql.graft.SessionBridge.sessionUUID(spark)); ()
+    idReadSessions.invalidate(
+      org.apache.spark.sql.graft.SessionBridge.sessionUUID(spark))
   }
-
-  private[graft] def idReadSessionCount: Int = idReadSessions.size()
 
   /** Strip `parquet.field.id` metadata from every (nested) field: the
     * engine's unmapped reads must match file columns BY NAME even after
@@ -10086,10 +10050,11 @@ object MiniDelta {
     * against id-less files. Id mode reads on the flag-enabled CLONED
     * session, so the caller's conf never changes. */
   private def scanShape(spark: SparkSession, table: String,
-      declared: Option[org.apache.spark.sql.types.StructType])
+      state: TableState)
       : (Option[org.apache.spark.sql.types.StructType],
          Option[org.apache.spark.sql.types.StructType], SparkSession) = {
-    val idMode = idReadMode(spark, table, declared)
+    val declared = state.schema
+    val idMode = idReadMode(table, state)
     val mapped = declared.filter(st => isColumnMapped(st) || idMode)
     val readSchema = mapped.map(physicalStruct(_, idMode))
       .orElse(declared.map(dropFieldIds))
@@ -10105,16 +10070,16 @@ object MiniDelta {
     * file sets keep the declared schema so downstream projections still
     * resolve. */
   private def readFilesAs(spark: SparkSession, table: String,
-                          files: Seq[LogFile],
-                          declared: Option[org.apache.spark.sql.types.StructType])
+                          files: Seq[LogFile], state: TableState)
       : DataFrame =
     if (files.isEmpty)
-      declared.fold(spark.emptyDataFrame)(s =>
+      state.schema.fold(spark.emptyDataFrame)(s =>
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s))
     else {
-      val (readSchema, mapped, session) = scanShape(spark, table, declared)
+      val (readSchema, mapped, session) = scanShape(spark, table, state)
       val out = LogFileIndex.scan(session, table, files, readSchema)
-      attachGenMetadata(mapped.fold(out)(restoreLogical(out, _)), declared)
+      attachGenMetadata(mapped.fold(out)(restoreLogical(out, _)),
+        state.schema)
     }
 
   /** Re-attach `delta.generationExpression` field metadata to a read
@@ -10148,13 +10113,14 @@ object MiniDelta {
     * it exact). The scan touches only stats-surviving files. */
   def readRange(spark: SparkSession, table: String, statCol: String,
                 lo: Double, hi: Double): DataFrame = {
-    val declared = latestSchema(spark, table)
+    val state = stateAt(spark, table, Long.MaxValue)
+    val declared = state.schema
     // mapped table: the stats JSON keys are physical — prune under the
     // physical name, filter under the logical one (the relabeled frame)
     val statPhys = physicalColOf(declared.filter(isColumnMapped), statCol)
     val files = LogFile.ofFrame(
       filesForRange(snapshotFiles(spark, table), statPhys, lo, hi))
-    val base = readFilesWithDv(spark, table, files, declared)
+    val base = readFilesWithDv(spark, table, files, state)
     if (files.isEmpty) base // zero files: the predicate is vacuous (and
     else base.where(col(statCol) >= lo && col(statCol) <= hi) // may not resolve)
   }
@@ -10304,13 +10270,12 @@ object MiniDelta {
     * join keys are the appended __fname/__ri, untouched by the
     * relabel). */
   private def readFilesWithDv(spark: SparkSession, table: String,
-                              files: Seq[LogFile],
-                              declared: Option[org.apache.spark.sql.types.StructType])
+                              files: Seq[LogFile], state: TableState)
       : DataFrame = {
     val (plain, dvd) = files.partition(_.dv.isEmpty)
-    val base = readFilesAs(spark, table, plain, declared)
+    val base = readFilesAs(spark, table, plain, state)
     if (dvd.isEmpty) return base
-    val (readSchema, mapped, session) = scanShape(spark, table, declared)
+    val (readSchema, mapped, session) = scanShape(spark, table, state)
     val dv = maskDF(spark, table, dvd.map(f => (f.path, f.dv.get)))
     val masked = scanWithIdentity(session, table, dvd, readSchema)
     val visible0 = masked.join(dv,
@@ -10318,7 +10283,7 @@ object MiniDelta {
           masked("__ri") === dv("__dv_ri"), "left_anti")
       .drop("__fname", "__ri")
     val visible = mapped.fold(visible0)(restoreLogical(visible0, _))
-    if (plain.isEmpty && declared.isEmpty) visible
+    if (plain.isEmpty && state.schema.isEmpty) visible
     else base.unionByName(visible)
   }
 
@@ -10349,8 +10314,9 @@ object MiniDelta {
       versionAsOf.getOrElse(Long.MaxValue))
     // time travel reads under the schema AS OF that version (a column
     // appended later must not appear), current reads under the latest
-    val declared = latestSchema(spark, table,
+    val state = stateAt(spark, table,
       versionAsOf.getOrElse(Long.MaxValue))
+    val declared = state.schema
     // name-mode column mapping keys partitionValues by PHYSICAL names
     // — filters arrive in logical names, so probe under the mapping or
     // every file would silently fail the element_at and vanish
@@ -10359,7 +10325,7 @@ object MiniDelta {
       filters.map(_.map { case (k, v) => (m.getOrElse(k, k), v) })
     }
     val files = LogFile.ofFrame(filesForFilters(snap, physFilters))
-    readFilesWithDv(spark, table, files, declared)
+    readFilesWithDv(spark, table, files, state)
   }
 
   /** Exactly-once micro-batch consumption of the change feed: invokes
@@ -10609,8 +10575,9 @@ object MiniDelta {
   def readAppends(spark: SparkSession, table: String, fromVersion: Long,
                   toVersion: Long = Long.MaxValue,
                   skipChangeCommits: Boolean = false): DataFrame = {
-    val declared = latestSchema(spark, table,
+    val state = stateAt(spark, table,
       if (toVersion == Long.MaxValue) Long.MaxValue else toVersion)
+    val declared = state.schema
     def empty = declared.fold(spark.emptyDataFrame)(s =>
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), s))
@@ -10653,7 +10620,7 @@ object MiniDelta {
         !r.isNullAt(2) && r.getBoolean(2) && !changed(r.getLong(0)))
       .toIndexedSeq)
     if (adds.isEmpty) empty
-    else readFilesWithDv(spark, table, adds, declared)
+    else readFilesWithDv(spark, table, adds, state)
   }
 
   /** The change-data files of cdc-served version `v`: the data columns
@@ -10694,15 +10661,16 @@ object MiniDelta {
 
   def readCdf(spark: SparkSession, table: String, fromVersion: Long,
               toVersion: Long = Long.MaxValue): DataFrame = {
-    val declared = latestSchema(spark, table,
+    val state = stateAt(spark, table,
       if (toVersion == Long.MaxValue) Long.MaxValue else toVersion)
+    val declared = state.schema
     val fields = declared.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
     require(!fields.exists(_.startsWith("__cdf_")),
       "table columns collide with the __cdf_ temp namespace")
     // column-mapped table: cdc-bearing commits' change-data files use
     // the physical schema exactly like the data files — resolve the
     // read shape once for every cdc-served version in the window
-    lazy val cdcShape = scanShape(spark, table, declared)
+    lazy val cdcShape = scanShape(spark, table, state)
     def emptyFeed = {
       val base = declared.fold(spark.emptyDataFrame)(s =>
         spark.createDataFrame(
@@ -10817,14 +10785,14 @@ object MiniDelta {
         snapshotFilesAt(spark, table, v - 1))
         .map(lf => lf.path -> lf).toMap
       def readAdds(paths: Seq[String]) = readFilesWithDv(spark, table,
-        paths.map(p => addFiles((v, p))), declared)
+        paths.map(p => addFiles((v, p))), state)
       def readRems(paths: Seq[String]) = {
         // a path the prior snapshot lacks has no add to plan from: the
         // index stats it
         val files = paths.map(p =>
           prior.getOrElse(p, LogFile(p, None, None, None, Map.empty)))
         requireDvRefs(files.flatMap(_.dv))
-        readFilesWithDv(spark, table, files, declared)
+        readFilesWithDv(spark, table, files, state)
       }
       val (preLabel, postLabel) = ops.getOrElse(v, "WRITE") match {
         case "DELETE" => ("delete", "insert")
@@ -10876,8 +10844,9 @@ object MiniDelta {
                   toVersion: Long = Long.MaxValue): DataFrame = {
     val tailV = logJsonVersions(spark, table, fromVersion + 1, toVersion)
     requireFeedWindow(spark, table, fromVersion, toVersion, tailV.map(_._1))
-    val declared = latestSchema(spark, table,
+    val state = stateAt(spark, table,
       if (toVersion == Long.MaxValue) Long.MaxValue else toVersion)
+    val declared = state.schema
     def empty = {
       val base = declared.fold(spark.emptyDataFrame)(s =>
         spark.createDataFrame(
@@ -10930,7 +10899,7 @@ object MiniDelta {
     // "rewrites re-deliver survivors" contract documented for CoW DML
     changed.groupBy(_.getLong(1)).toSeq.sortBy(_._1).map { case (v, rows) =>
       readFilesWithDv(spark, table,
-        LogFile.of(rows.toIndexedSeq), declared)
+        LogFile.of(rows.toIndexedSeq), state)
         .withColumn("_commit_version", lit(v))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }

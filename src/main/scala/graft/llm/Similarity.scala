@@ -1,8 +1,9 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.operators.TopKPerGroup
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -42,6 +43,12 @@ object Similarity {
   def cosineR(a: Column, b: Column, scale: Int = 4): Column =
     round(cosine(a, b), scale)
 
+  /** The `k` best `cand_id`s per `query_id` of `scored`, ranked `rk` by
+    * rounded `cos_sim` desc, then `cand_id` asc (a total order). */
+  private def byCosine(scored: DataFrame, k: Int): DataFrame =
+    TopKPerGroup(scored, Seq(col("query_id")),
+      Seq(col("cos_sim").desc, col("cand_id").asc), k)
+
   /** Brute-force cosine top-k: for each query vector, the k nearest other
     * vectors, ranked by rounded score desc then vec_id (deterministic).
     * `queryPred` selects the (small, broadcastable) query side.
@@ -59,11 +66,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"),
         round(safeCosine(dot(col("qv"), col("cv")),
           col("qnorm"), col("cnorm")), 4).as("cos_sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-      .orderBy("query_id", "rk")
+    byCosine(scored, k).orderBy("query_id", "rk")
   }
 
   /** Candidate→rerank funnel: the int8-quantized dot ([[quantizedTopK]])
@@ -97,13 +100,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"),
         round(safeCosine(dot(col("qv"), col("cv")),
           col("qnorm"), col("cnorm")), 4).as("cos_sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    exact.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-      .select(col("query_id"), col("cand_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("query_id", "rk")
+    byCosine(exact, k).orderBy("query_id", "rk")
   }
 
   /** IVF-style near-duplicate pairs: only pairs within the same coarse
@@ -244,32 +241,24 @@ object Similarity {
     val q = emb.where(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         norm2(col("embedding")).as("qnorm"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("pscore").desc, col("cent_id").asc)
-    val probes = broadcast(q).crossJoin(broadcast(cents))
+    val probes = TopKPerGroup(broadcast(q).crossJoin(broadcast(cents))
       .select(col("query_id"), col("cent_id"),
         round(safeCosine(dot(col("qv"), col("cv")),
-          col("qnorm"), col("cnorm")), 4).as("pscore"))
-      .withColumn("prk", row_number().over(pw))
-      .where(col("prk") <= nprobe)
+          col("qnorm"), col("cnorm")), 4).as("pscore")),
+      Seq(col("query_id")), Seq(col("pscore").desc, col("cent_id").asc),
+      nprobe, "prk")
       .select(col("query_id"), col("cent_id").as("cell"))
     val cand = ivfAssign(emb, k)
       .join(emb.select(col("vec_id"), col("embedding").as("cand_v"),
         norm2(col("embedding")).as("cnorm2")), "vec_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    broadcast(probes.join(q, "query_id")).join(cand, "cell")
+    // a candidate can sit in several probed cells only if duplicated;
+    // cells partition vectors, so (query_id, cand_id) is unique here
+    val scored = broadcast(probes.join(q, "query_id")).join(cand, "cell")
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"), col("cell"),
         round(safeCosine(dot(col("qv"), col("cand_v")),
           col("qnorm"), col("cnorm2")), 4).as("cos_sim"))
-      // a candidate can sit in several probed cells only if duplicated;
-      // cells partition vectors, so (query_id, cand_id) is unique here
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= topk)
-      .select(col("query_id"), col("cand_id"), col("cell"),
-        col("cos_sim"), col("rk").cast("long").as("rk"))
-      .orderBy("query_id", "rk")
+    byCosine(scored, topk).orderBy("query_id", "rk")
   }
 
   /** Distributed Lloyd k-means over the embedding column — the trained
@@ -380,16 +369,11 @@ object Similarity {
     val q = qemb.where(queryPred)
       .select(col("vec_id").as("query_id"), col("qv").as("qq"))
     val cand = qemb.select(col("vec_id").as("cand_id"), col("qv").as("qc"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qdot").desc, col("cand_id").asc)
-    broadcast(q).crossJoin(cand)
+    TopKPerGroup(broadcast(q).crossJoin(cand)
       .where(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        dot(col("qq"), col("qc")).cast("long").as("qdot"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-      .select(col("query_id"), col("cand_id"), col("qdot"),
-        col("rk").cast("long").as("rk"))
+        dot(col("qq"), col("qc")).cast("long").as("qdot")),
+      Seq(col("query_id")), Seq(col("qdot").desc, col("cand_id").asc), k)
       .orderBy("query_id", "rk")
   }
 

@@ -12,9 +12,12 @@ package graft.util
   * (pure LRU, the DB-perms flavor). The clock is injectable for tests.
   *
   * Driver-side metadata memoization only (alias resolutions, permission
-  * rows, resolved file lists) — never a data-plane cache, so a plain
-  * synchronized LinkedHashMap is plenty: entry counts are bounded at
-  * 20-100 and lookups happen once per query plan, not per row.
+  * rows, resolved file lists, and every `MiniDelta` memo of immutable
+  * log facts: per-version table states, parsed commits, checkpoint
+  * rows) — never a data-plane cache, so a plain synchronized
+  * LinkedHashMap is plenty: lookups happen per query plan or per log
+  * file, not per row, and each cache's constant capacity (20 to a few
+  * thousand entries) bounds its heap.
   */
 class TtlCache[K, V](maxEntries: Int, ttlMillis: Long,
                      clock: () => Long = () => System.currentTimeMillis(),
@@ -26,6 +29,8 @@ class TtlCache[K, V](maxEntries: Int, ttlMillis: Long,
   // access-order LinkedHashMap = LRU order for free
   private val map = new java.util.LinkedHashMap[K, Entry](16, 0.75f, true)
 
+  private var missCount = 0L
+
   private def expired(e: Entry, now: Long): Boolean =
     ttlMillis > 0 && now - e.insertedAt >= ttlMillis
 
@@ -34,7 +39,8 @@ class TtlCache[K, V](maxEntries: Int, ttlMillis: Long,
     * lookups for unrelated keys. Two racing misses on the SAME key may
     * both compute; the loser's value is discarded through onEvict
     * (moka dedupes per key; for driver-side metadata memos the rare
-    * duplicate compute is cheaper than a per-key latch). */
+    * duplicate compute is cheaper than a per-key latch). A `compute`
+    * that throws publishes nothing. */
   def getOrElseUpdate(key: K)(compute: => V): V = {
     synchronized {
       val hit = map.get(key)
@@ -43,6 +49,7 @@ class TtlCache[K, V](maxEntries: Int, ttlMillis: Long,
         map.remove(key)
         onEvict(hit.value)
       }
+      missCount += 1
     }
     val v = compute
     synchronized {
@@ -78,10 +85,23 @@ class TtlCache[K, V](maxEntries: Int, ttlMillis: Long,
     if (e != null) onEvict(e.value)
   }
 
+  /** Drop every entry whose key satisfies `p`, each through onEvict. */
+  def invalidateIf(p: K => Boolean): Unit = synchronized {
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e.getKey)) { it.remove(); onEvict(e.getValue.value) }
+    }
+  }
+
   def clear(): Unit = synchronized {
     map.values().forEach(e => onEvict(e.value))
     map.clear()
   }
 
   def size: Int = synchronized(map.size)
+
+  /** [[getOrElseUpdate]] calls that ran `compute` (a raced duplicate
+    * counts: it computed too). */
+  def misses: Long = synchronized(missCount)
 }

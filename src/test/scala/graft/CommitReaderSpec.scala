@@ -120,15 +120,15 @@ class CommitReaderSpec extends AnyFunSuite {
     val t = freshTable()
     MiniDelta.append(spark, Seq((1L, "a")).toDF("id", "v"), t, Seq.empty)
     MiniDelta.readFiltered(spark, t, Seq.empty).collect()
-    val before = MiniDelta.commitFileOpens.get()
+    val before = MiniDelta.commitNodesMemo.misses
     MiniDelta.append(spark, Seq((2L, "b")).toDF("id", "v"), t, Seq.empty)
     assert(MiniDelta.readFiltered(spark, t, Seq.empty).count() == 2L)
     assert(MiniDelta.latestSchema(spark, t).exists(_.fieldNames.contains("v")))
     MiniDelta.tableConfig(spark, t)
-    assert(MiniDelta.commitFileOpens.get() - before == 1L)
+    assert(MiniDelta.commitNodesMemo.misses - before == 1L)
     MiniDelta.append(spark, Seq((3L, "c")).toDF("id", "v"), t, Seq.empty)
     assert(MiniDelta.readFiltered(spark, t, Seq.empty).count() == 3L)
     assert(MiniDelta.latestSchema(spark, t).isDefined)
-    assert(MiniDelta.commitFileOpens.get() - before == 2L)
+    assert(MiniDelta.commitNodesMemo.misses - before == 2L)
   }
 }

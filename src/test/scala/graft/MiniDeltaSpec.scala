@@ -2686,9 +2686,9 @@ class MiniDeltaSpec extends AnyFunSuite {
 
     // a dedicated caller session so release can't disturb other specs
     val caller = spark.newSession()
-    val n0 = MiniDelta.idReadSessionCount
+    val n0 = MiniDelta.idReadSessions.size
     assert(MiniDelta.readFiltered(caller, t, Seq.empty).count() == 2)
-    assert(MiniDelta.idReadSessionCount == n0 + 1,
+    assert(MiniDelta.idReadSessions.size == n0 + 1,
       "id-mode read did not create the caller's clone")
     // conf set AFTER the clone was created must reach id-mode frames:
     // each use re-syncs the clone from the caller
@@ -2705,7 +2705,7 @@ class MiniDeltaSpec extends AnyFunSuite {
     // release drops the cache entry — a closing multi-session server
     // does not retain the session pair
     MiniDelta.releaseIdReadSession(caller)
-    assert(MiniDelta.idReadSessionCount == n0,
+    assert(MiniDelta.idReadSessions.size == n0,
       "releaseIdReadSession left the clone cached")
   }
 

@@ -11,7 +11,8 @@ import graft.io.MiniDelta
 /** The table's metadata state (protocol, metaData fields, live domains)
   * is one fold per version, `MiniDelta.tableState`, read by every gate
   * and metadata reader: the fold from a checkpoint equals the fold from
-  * v0, a version folds once however many readers ask, a domain
+  * v0, a version folds once however many readers ask, every spelling
+  * of a table's root reads and clears the same memo entries, a domain
   * tombstone retires its domain, a checkpoint carries every live
   * domain, and a protocol action missing a version fails by name on
   * reads and writes. */
@@ -95,17 +96,67 @@ class TableStateSpec extends AnyFunSuite {
       MiniDelta.clusteringColumns(spark, t)
       MiniDelta.latestSchema(spark, t)
     }
-    val before = MiniDelta.tableStateResolves.get()
+    val before = MiniDelta.tableStates.misses
     readers()
-    assert(MiniDelta.tableStateResolves.get() - before == 1)
+    assert(MiniDelta.tableStates.misses - before == 1)
     // the append's writer gate reads the state it was planned at, and
     // the new version folds once for every reader after it
-    val mid = MiniDelta.tableStateResolves.get()
+    val mid = MiniDelta.tableStates.misses
     MiniDelta.append(spark, Seq((3L, "z")).toDF("id", "v"), t, Seq.empty)
     readers()
-    assert(MiniDelta.tableStateResolves.get() - mid == 1)
+    assert(MiniDelta.tableStates.misses - mid == 1)
     readers()
-    assert(MiniDelta.tableStateResolves.get() - mid == 1)
+    assert(MiniDelta.tableStates.misses - mid == 1)
+  }
+
+  test("a table replaced at its path reads fresh under either spelling, " +
+      "invalidated by either spelling") {
+    for (invalidateAs <- Seq[String => String](identity, "file:" + _)) {
+      val t = freshTable()
+      val spellings = Seq(t, "file:" + t)
+      def seen(s: String) = (
+        MiniDelta.latestSchema(spark, s).map(_.fieldNames.toSeq),
+        MiniDelta.tableConfig(spark, s).get("k"),
+        MiniDelta.partitionColumns(spark, s),
+        MiniDelta.snapshotFiles(spark, s).count(),
+        MiniDelta.readFiltered(spark, s, Seq.empty).collect()
+          .map(r => String.valueOf(r.get(0))).toSeq)
+      MiniDelta.createTable(spark, t, StructType(Seq(
+        StructField("a", LongType), StructField("p", StringType))),
+        partitionBy = Seq("p"), properties = Map("k" -> "old"))
+      MiniDelta.append(spark, Seq((1L, "x")).toDF("a", "p").coalesce(1), t,
+        Seq("p"))
+      spellings.foreach(s => assert(seen(s) == (Some(Seq("a", "p")),
+        Some("old"), Seq("p"), 1L, Seq("1")), s"before, read as $s"))
+      // replaced out of band: wiped, invalidated, re-created
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
+      MiniDelta.invalidateSnapshot(invalidateAs(t))
+      MiniDelta.createTable(spark, t,
+        StructType(Seq(StructField("b", StringType))),
+        properties = Map("k" -> "new"))
+      MiniDelta.append(spark, Seq("y").toDF("b").coalesce(1), t, Seq.empty)
+      spellings.foreach(s => assert(seen(s) == (Some(Seq("b")), Some("new"),
+        Seq.empty, 1L, Seq("y")),
+        s"after, read as $s, invalidated as ${invalidateAs(t)}"))
+    }
+  }
+
+  test("a version folds once and a commit opens once, whichever " +
+      "spelling reads it") {
+    val t = freshTable()
+    val spellings = Seq(t, "file:" + t)
+    MiniDelta.append(spark, Seq((1L, "a")).toDF("id", "v"), t, Seq.empty)
+    spellings.foreach(MiniDelta.readFiltered(spark, _, Seq.empty).collect())
+    val folds = MiniDelta.tableStates.misses
+    val opens = MiniDelta.commitNodesMemo.misses
+    MiniDelta.append(spark, Seq((2L, "b")).toDF("id", "v"), t, Seq.empty)
+    spellings.foreach { s =>
+      assert(MiniDelta.readFiltered(spark, s, Seq.empty).count() == 2L)
+      assert(MiniDelta.latestSchema(spark, s).isDefined)
+      MiniDelta.tableConfig(spark, s)
+    }
+    assert(MiniDelta.tableStates.misses - folds == 1)
+    assert(MiniDelta.commitNodesMemo.misses - opens == 1)
   }
 
   test("a removed domain is retired: a tombstoned clustering layout " +

@@ -64,6 +64,35 @@ class TtlCacheSpec extends AnyFunSuite {
     assert(evicted.toSeq == Seq(5) && c.get("k").isEmpty)
   }
 
+  test("misses count the computes: a hit runs none, a raced duplicate " +
+      "runs one") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val c = new TtlCache[String, Int](10, 0L, onEvict = evicted += _)
+    c.getOrElseUpdate("k")(1) // miss
+    c.getOrElseUpdate("k")(2) // hit
+    assert(c.misses == 1)
+    // a second miss on "r" publishes while the first still computes:
+    // both computed, the first published value wins, the loser evicts
+    val got = c.getOrElseUpdate("r") { c.getOrElseUpdate("r")(3); 4 }
+    assert(got == 3 && c.get("r").contains(3) && evicted.toSeq == Seq(4))
+    assert(c.misses == 3)
+    // a compute that throws publishes nothing
+    intercept[IllegalStateException](
+      c.getOrElseUpdate("x")(throw new IllegalStateException("boom")))
+    assert(c.get("x").isEmpty && c.misses == 4)
+  }
+
+  test("invalidateIf drops every matching entry through onEvict") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val c = new TtlCache[(String, Long), Int](10, 0L, onEvict = evicted += _)
+    c.getOrElseUpdate(("a", 1L))(1)
+    c.getOrElseUpdate(("b", 1L))(2)
+    c.getOrElseUpdate(("a", 2L))(3)
+    c.invalidateIf(_._1 == "a")
+    assert(evicted.sorted.toSeq == Seq(1, 3))
+    assert(c.size == 1 && c.get(("b", 1L)).contains(2))
+  }
+
   test("AclCaches memoize file lists and perms under user:table keys") {
     AclCaches.clearAll()
     val spark = TestSpark.spark
